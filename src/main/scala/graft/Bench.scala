@@ -20,186 +20,15 @@ import org.apache.spark.sql.SparkSession
   *    idle rerun of the same code — pure contention noise); the
   *    per-query min of two interleaved passes is robust to load spikes
   *    because a spike must hit the SAME query in BOTH passes to show;
-  *  - queries run in sorted-name order (stable across rounds).
+  *  - queries run in sorted-name order (stable across rounds);
+  *  - the full record (target/bench_last.json) also carries each entry's
+  *    pass-2 plan vector (exchanges, broadcasts, scans, shuffle and
+  *    stream counts). Regressions are judged on that vector against the
+  *    committed PLAN_BASELINE.json (`tools/bench_compare.py`, exit 1 on
+  *    a plan regression) and, for wall-clock claims, on perfbench's
+  *    interleaved parent/change pairs.
   */
 object Bench {
-  /** Heavy-control pins (see the RE-PIN POLICY comment at the use
-    * site): isolated idle minima of three CPU-saturating live entries,
-    * pinned r14. Object-level so [[heavyRefPlanPin]]'s enforcement spec
-    * can cross-check them.
-    *
-    * dd_components re-pinned r19 (the lean jaccardSim verify, the only
-    * pinned-entry code change since r14): no idle window existed on the
-    * throttled session host, so the new pin is the r14 idle pin scaled
-    * by the same-window interleaved worktree ratio — old 3.075 s vs new
-    * 2.679 s min-of-3 (every new rep under every old rep, same host,
-    * alternating runs) ⇒ 2.69 × (2.679/3.075) = 2.34. The ratio method
-    * keeps the pin on the r14 idle scale instead of importing this
-    * session's throttle into it. */
-  val heavyRef: Map[String, Double] = Map(
-    "dd_components" -> 2.34, "gr_pagerank" -> 2.54, "ml_stack" -> 2.07)
-
-  /** RE-PIN POLICY, ENFORCED (r15, VERDICT r14 #1): the deterministic
-    * plan vector of each heavy-pin entry AT PIN TIME, copied from the
-    * PLAN_BASELINE.json the pin run produced. `HeavyPinSpec` asserts
-    * the committed PLAN_BASELINE.json still carries exactly these
-    * values — so a code change to a pinned entry (which changes its
-    * plan vector, and which bench_compare's exit-1 gate forces into a
-    * refreshed baseline) FAILS THE TEST SUITE until `heavyRef` is
-    * re-measured and BOTH maps are updated together. Without this, a
-    * regressed pin entry silently inflates host_factor_heavy and
-    * launders its own delta into "weather" — the exact failure mode
-    * the r13→r14 adjudication diagnosed for the light pins. Fields are
-    * the exact-deterministic subset (counts + shuffle rows at the
-    * pinned sf0.1); bytes are excluded (codec-sensitive). */
-  val heavyRefPlanPin: Map[String, Map[String, Long]] = Map(
-    "dd_components" -> Map(
-      "exchanges" -> 15L, "broadcasts" -> 6L, "scans" -> 9L,
-      "shuffle_rows" -> 37378L),
-    "gr_pagerank" -> Map(
-      "exchanges" -> 10L, "broadcasts" -> 8L, "scans" -> 4L,
-      "shuffle_rows" -> 351435L),
-    "ml_stack" -> Map(
-      "exchanges" -> 2L, "broadcasts" -> 1L, "scans" -> 0L,
-      "shuffle_rows" -> 15001L))
-
-  /** Source-digest pins (r16, VERDICT r15 #6): the plan-vector pin
-    * above is blind to edits that don't move the vector — a UDF body
-    * tweak, an MLlib hyperparameter, a constant inside an unchanged
-    * plan shape — yet those still shift a pinned entry's wall time for
-    * non-host reasons and would launder into "weather". Each heavy-pin
-    * entry therefore ALSO pins a SHA-256 of the comment- and
-    * whitespace-stripped source of its defining units (whole engine
-    * files; `file#valName` = that Entry declaration's slice of a
-    * shared registry file, so unrelated sibling entries don't trip
-    * it). HeavyPinSpec recomputes these from the working tree: any
-    * behavior-adjacent edit to a pinned entry's code fails the suite
-    * until heavyRef is re-measured and ALL pin maps move together.
-    * Comment stripping means doc-only edits never force a re-pin. */
-  val heavyRefSourceUnits: Map[String, Seq[String]] = Map(
-    "dd_components" -> Seq(
-      "src/main/scala/graft/operators/Components.scala",
-      "src/main/scala/graft/QueriesPipeline.scala#ddComponents",
-      "src/main/scala/graft/QueriesPipeline.scala#chainCorpus",
-      // r19: the edge-verify path was behavior-adjacent but un-pinned —
-      // the lean-jaccardSim land showed dupEdges + the verify UDF shift
-      // this entry's wall time without moving its plan vector
-      "src/main/scala/graft/QueriesPipeline.scala#dupEdges",
-      "src/main/scala/graft/operators/Dedup.scala#jaccardSim",
-      "src/main/scala/graft/operators/Dedup.scala#shingleSet"),
-    "gr_pagerank" -> Seq(
-      "src/main/scala/graft/operators/PageRank.scala",
-      "src/main/scala/graft/QueriesGraph.scala#grPageRank",
-      "src/main/scala/graft/QueriesGraph.scala#tradingPairs",
-      "src/main/scala/graft/QueriesGraph.scala#grFixture",
-      "src/main/scala/graft/QueriesGraph.scala#sqlEdges"),
-    "ml_stack" -> Seq(
-      "src/main/scala/graft/QueriesMl.scala#mlStack",
-      "src/main/scala/graft/QueriesMl.scala#stackScores",
-      "src/main/scala/graft/Model.scala",
-      "src/main/scala/graft/Ensemble.scala"))
-
-  /** Pin-time digests of [[heavyRefSourceUnits]], snapshotted at r16
-    * HEAD. The r14-pinned heavyRef minima remain the measured base: no
-    * pinned entry's DEFINING code changed since that pin (plan vectors
-    * held through r15/r16; the r16 edits inside unit FILES — the
-    * quality classifier, the gr_triangles oracle MATERIALIZED fix —
-    * are sibling members outside every pinned slice, which is why the
-    * units are slices). From here on, ANY unit edit moves a digest and
-    * forces the full re-pin dance. dd_components re-digested r19 with
-    * the lean-jaccardSim land + the unit-list extension above (heavyRef
-    * re-measured the same commit — see its ratio-method note). */
-  val heavyRefSourceDigest: Map[String, String] = Map(
-    "dd_components" -> "65f511599ce5ff576328d0366780fed78a94ea84b4901d9bd852cad7279be623",
-    "gr_pagerank" -> "9be28a74d0006feec7a0067249db342f5d001a9e8ba98a47e3eb6332cf2723de",
-    "ml_stack" -> "2e00a86420686b787a87def0bc6c5ff88a5aaf20b7cbdc862310beab52ae4178")
-
-  /** Comment- and whitespace-stripped Scala source: line + (nested)
-    * block comments removed, string literals ("…", """…""") and char
-    * literals preserved verbatim, every whitespace char outside
-    * literals dropped. Good enough for a digest tripwire — it only
-    * needs to be DETERMINISTIC and blind to comments/formatting, not a
-    * full lexer. */
-  private[graft] def stripScala(src: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    val n = src.length
-    while (i < n) {
-      if (src.startsWith("//", i)) {
-        while (i < n && src.charAt(i) != '\n') i += 1
-      } else if (src.startsWith("/*", i)) {
-        var depth = 1; i += 2
-        while (i < n && depth > 0) {
-          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
-          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
-          else i += 1
-        }
-      } else if (src.startsWith("\"\"\"", i)) {
-        sb.append("\"\"\""); i += 3
-        while (i < n && !src.startsWith("\"\"\"", i)) { sb.append(src.charAt(i)); i += 1 }
-        if (i < n) { sb.append("\"\"\""); i += 3 }
-      } else if (src.charAt(i) == '"') {
-        sb.append('"'); i += 1
-        var done = false
-        while (i < n && !done) {
-          val c = src.charAt(i)
-          if (c == '\\' && i + 1 < n) { sb.append(c).append(src.charAt(i + 1)); i += 2 }
-          else { sb.append(c); i += 1; if (c == '"') done = true }
-        }
-      } else if (src.charAt(i) == '\'' && i + 2 < n &&
-          src.charAt(i + 1) != '\\' && src.charAt(i + 2) == '\'') {
-        sb.append(src, i, i + 3); i += 3 // char literal 'x'
-      } else if (src.charAt(i) == '\'' && i + 3 < n &&
-          src.charAt(i + 1) == '\\' && src.charAt(i + 3) == '\'') {
-        sb.append(src, i, i + 4); i += 4 // escaped char literal '\n'
-      } else {
-        val c = src.charAt(i)
-        if (!c.isWhitespace) sb.append(c)
-        i += 1
-      }
-    }
-    sb.toString
-  }
-
-  /** The named member's declaration slice of a shared registry file —
-    * a `val <name>: Entry = Entry(…)` OR any two-space-indented
-    * `val`/`def` helper (r16: pinned entries' in-file helpers like
-    * `stackScores`/`tradingPairs` are part of the pinned behavior;
-    * whole-file digests over-trip on sibling-entry edits, as the
-    * gr_triangles oracle fix demonstrated day one). The slice runs
-    * from the declaration line to the next two-space-indented member
-    * declaration (or closing brace). Residual: a pinned entry gaining
-    * a NEW in-file helper needs that helper added to its unit list —
-    * the plan-vector pin still watches for what the digest misses. */
-  private[graft] def entrySlice(fileText: String, valName: String): String = {
-    val lines = fileText.split("\n", -1)
-    val decl =
-      raw"^  (private(\[\w+\])? )?(lazy )?(val|def)\s+$valName\b".r
-    val next = raw"^  (private(\[\w+\])? )?(lazy )?(val|def|object)\s|^\}".r
-    val start = lines.indexWhere(l => decl.findFirstIn(l).isDefined)
-    require(start >= 0, s"entrySlice: no `$valName` member declaration found")
-    val endRel = lines.drop(start + 1).indexWhere(l => next.findFirstIn(l).isDefined)
-    val end = if (endRel < 0) lines.length else start + 1 + endRel
-    lines.slice(start, end).mkString("\n")
-  }
-
-  /** Recompute one heavy-pin entry's source digest from the working
-    * tree (test JVMs run with cwd = repo root). */
-  private[graft] def sourceDigestOf(units: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    units.foreach { u =>
-      val (path, frag) = u.indexOf('#') match {
-        case -1 => (u, None)
-        case ix => (u.substring(0, ix), Some(u.substring(ix + 1)))
-      }
-      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      val unitText = frag.fold(text)(entrySlice(text, _))
-      md.update((u + "\u0000" + stripScala(unitText) + "\u0000")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -215,9 +44,7 @@ object Bench {
       // unit — per-query mins were carrying janino time, not query
       // time. Sized to hold the whole suite's units once.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // overridable for local A/B profiling only (the driver never sets it)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -232,17 +59,6 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     Verify.quietDeliberateWindowWarn()
 
-    // Untimed full GC before each query (JMH-style iteration hygiene;
-    // SPARK_GRAFT_GC=0 disables for A/B). Measured misattribution
-    // without it: ml_cv_logloss ran 4.4 s after a 26-entry prefix vs
-    // 1.9-2.1 s isolated OR with this GC — the driver-compute-heavy
-    // LBFGS loop was paying the garbage debt of earlier entries'
-    // localCheckpoint blocks (ContextCleaner frees them on GC of the
-    // pinned frames; a 32 GiB heap otherwise defers collection into
-    // whichever entry next stresses the driver). Per-query times
-    // should measure the QUERY, not its predecessors' garbage.
-    val gcBetween = !sys.env.get("SPARK_GRAFT_GC").contains("0")
-
     // Deterministic plan metrics (VERDICT r12 #1): every SQL action an
     // entry runs reports its executed plan's exchange/shuffle/spill
     // numbers via QueryExecutionListener; sums are attributed to the
@@ -251,14 +67,9 @@ object Bench {
     // exchange, 10x shuffle growth) exactly, before seconds move.
     // Recorded from PASS 2 only: pass 1 carries one-time fixture
     // builds and memo warms that are not the entry's steady plan.
-    // A/B kill-switch (r13 slowdown adjudication): SPARK_GRAFT_PLANMETRICS=0
-    // skips listener registration AND the per-entry bus drain, so a
-    // with/without pair on the same host isolates the listener's cost.
-    // The driver never sets it — full records always carry the plan map.
-    val planMetricsOn = !sys.env.get("SPARK_GRAFT_PLANMETRICS").contains("0")
     val planAgg = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
     val currentQ = new java.util.concurrent.atomic.AtomicReference[String](null)
-    if (planMetricsOn) spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
         val n = currentQ.get()
@@ -272,7 +83,16 @@ object Bench {
     })
 
     def runOnce(name: String): (Double, Option[String]) = {
-      if (gcBetween) { System.gc(); Thread.sleep(50) }
+      // Untimed full GC before each query (JMH-style iteration
+      // hygiene). Measured misattribution without it: ml_cv_logloss ran
+      // 4.4 s after a 26-entry prefix vs 1.9-2.1 s isolated OR with this
+      // GC — the driver-compute-heavy LBFGS loop was paying the garbage
+      // debt of earlier entries' localCheckpoint blocks (ContextCleaner
+      // frees them on GC of the pinned frames; a 32 GiB heap otherwise
+      // defers collection into whichever entry next stresses the
+      // driver). Per-query times should measure the QUERY, not its
+      // predecessors' garbage.
+      System.gc(); Thread.sleep(50)
       currentQ.set(name)
       val r = try {
         val t0 = System.nanoTime()
@@ -285,17 +105,15 @@ object Bench {
       }
       // flush the async listener bus OUTSIDE the timer so a trailing
       // onSuccess can't book this entry's metrics to the next name
-      if (planMetricsOn) {
-        try org.apache.spark.sql.GraftPlanBridge.drainListenerBus(spark.sparkContext)
-        catch { case _: Throwable => () }
-        // streaming vectors (r14, VERDICT r13 #4): the st_stream_*
-        // entries enqueue one vector per completed streaming query on
-        // their own call stack — attribution is synchronous, no bus
-        graft.streaming.StreamMetrics.drainPending().foreach { v =>
-          planAgg.merge(name, graft.plans.PlanMetrics.ofStreamVector(v),
-            (a, b) => graft.plans.PlanMetrics.add(a, b))
-        }
-      } else graft.streaming.StreamMetrics.drainPending(): Unit
+      try org.apache.spark.sql.GraftPlanBridge.drainListenerBus(spark.sparkContext)
+      catch { case _: Throwable => () }
+      // streaming vectors (r14, VERDICT r13 #4): the st_stream_*
+      // entries enqueue one vector per completed streaming query on
+      // their own call stack — attribution is synchronous, no bus
+      graft.streaming.StreamMetrics.drainPending().foreach { v =>
+        planAgg.merge(name, graft.plans.PlanMetrics.ofStreamVector(v),
+          (a, b) => graft.plans.PlanMetrics.add(a, b))
+      }
       currentQ.set(null)
       r
     }
@@ -369,72 +187,6 @@ object Bench {
       else String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(t))
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val nErr = results.count(_._2._2.isDefined)
-    // Host-drift controls (VERDICT r9 #2): three stable queries spanning
-    // the suite's shapes (cube agg / window / broadcast semi-join),
-    // pinned to their idle minima under THIS harness. host_factor =
-    // current min-sum / pinned sum ≈ how much slower this run's host is
-    // than the pin-time idle host — carried in the record so a round
-    // verdict can separate code from VM weather mechanically (r9 did it
-    // with ad-hoc worktree A/Bs). RE-PIN POLICY: the pins are only
-    // comparable while measurement mechanics stay fixed — any harness
-    // change that speeds the controls up for non-host reasons (r10:
-    // codegen-cache sizing + relation cache) requires re-pinning to
-    // fresh idle minima, or the factor launders harness wins into
-    // "weather". Pinned r10 post-cache idle (sum 2.165 s); MUST match
-    // tools/bench_compare.py CONTROL_REF. The later r10 GC-hygiene
-    // default did NOT move these pins: the controlled 30-entry A/B
-    // measured the controls flat across it (g_cube 1.13→1.24,
-    // w_distribution 0.86→0.94, j2 ~flat — light scans carry no
-    // meaningful garbage debt; the GC effect is confined to
-    // driver-compute-heavy entries), so no re-base was owed.
-    // r16 RE-PIN (w_distribution only): its gate moved to the exact
-    // integer-ppm spelling (sf10 midpoint-rounding fix), changing the
-    // timed plan — per the policy the pin was re-measured: isolated
-    // min 0.843 s over 2 runs whose sibling pins read the residual
-    // host at ≈1.34× idle (rehearsal compares still draining), so
-    // 0.843 is an UPPER bound on the true idle minimum — a
-    // conservative pin (it can only UNDERSTATE host_factor and
-    // inflate normalized totals against us). Tighten at true idle
-    // next round if the slack matters.
-    val controlRef = Map(
-      "g_cube" -> 0.912, "w_distribution" -> 0.843, "j2_semi_join" -> 0.265)
-    val resultMap = results.toMap
-    val ctl = controlRef.keys.toSeq.sorted
-      .flatMap(k => resultMap.get(k).map(_._1).filter(_ >= 0).map(k -> _))
-    val hostFactor: Option[Double] =
-      if (ctl.size == controlRef.size) Some(ctl.map(_._2).sum / controlRef.values.sum)
-      else None
-    // Heavy-control pins (r14 ADVICE med): the three light pins are
-    // sub-second scans that leave the CPU mostly idle, so under
-    // SUSTAINED burst-credit throttle they read ~flat while iterative /
-    // driver-compute-heavy entries run 1.3-1.7x (the r13->r14
-    // adjudication: heavy outliers at 1.3-1.7x against a light-hf drift
-    // of 1.69->1.73). A second factor over pinned CPU-SATURATING
-    // entries bounds that regime mechanically: light flat + heavy
-    // elevated = sustained throttle; both elevated = general host
-    // slowdown; both flat but seconds moved = read the plan vector.
-    // The three span the heavy shapes: checkpointed shuffle iteration
-    // (dd_components), iterative self-join rounds (gr_pagerank),
-    // concurrent driver-side MLlib fits (ml_stack). RE-PIN POLICY: the
-    // light-pin policy PLUS any code change to a pinned entry re-pins
-    // it — these are live suite entries, not frozen controls, so a
-    // round that touches one must re-measure its isolated minimum or
-    // the factor launders that entry's own win/regression into
-    // weather. Since r15 the policy is ENFORCED: HeavyPinSpec pins each
-    // entry's PLAN_BASELINE.json vector to heavyRefPlanPin (above), so
-    // a plan-changing edit to a pinned entry fails `sbt test` until the
-    // pin is re-measured. Pinned r14: per-entry min over 3 isolated
-    // runs x min-of-two-passes (SPARK_GRAFT_ONLY with the light pins
-    // riding along) on a near-idle host window — the same runs' light
-    // pins read hf 1.02/1.12/1.02 against the r10 idle base, so these
-    // minima are within ~2% of true idle (BASELINE.md r14 row).
-    // (heavyRef itself is object-level, above main.)
-    val heavyCtl = heavyRef.keys.toSeq.sorted
-      .flatMap(k => resultMap.get(k).map(_._1).filter(_ >= 0).map(k -> _))
-    val heavyFactor: Option[Double] =
-      if (heavyCtl.size == heavyRef.size)
-        Some(heavyCtl.map(_._2).sum / heavyRef.values.sum)
-      else None
     val errs = results.collect { case (k, (_, Some(e))) => s"${q(k)}:${q(e)}" }
       .mkString("{", ",", "}")
     def passTotal(p: Map[String, (Double, Option[String])]) =
@@ -460,26 +212,7 @@ object Bench {
       val extra = (if (ckptLeak > 0) s""","ckpt_leak":$ckptLeak""" else "") +
         (if (nErr > 0 || full) s""","errors":$errs""" else "") +
         (if (full) s""","passes":[${passTotal(pass1)},${passTotal(pass2)}]""" else "") +
-        (if (full) s""","plan":$planJson""" else "") +
-        (if (full) hostFactor.fold("") { h =>
-          val cs = ctl.map { case (k, t) => s"${q(k)}:${fmt(t, 3)}" }
-            .mkString("{", ",", "}")
-          // control_ref carries the pins INSIDE the record (r10 advice):
-          // tools/bench_compare.py reads them from here instead of a
-          // duplicated literal that could silently drift after a re-pin
-          val cr = controlRef.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${q(k)}:${fmt(v, 3)}" }
-            .mkString("{", ",", "}")
-          s""","host_factor":${fmt(h, 2)},"host_controls":$cs,"control_ref":$cr"""
-        } else hostFactor.fold("")(h => s""","host_factor":${fmt(h, 2)}""")) +
-        (if (full) heavyFactor.fold("") { h =>
-          val cs = heavyCtl.map { case (k, t) => s"${q(k)}:${fmt(t, 3)}" }
-            .mkString("{", ",", "}")
-          val cr = heavyRef.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${q(k)}:${fmt(v, 3)}" }
-            .mkString("{", ",", "}")
-          s""","host_factor_heavy":${fmt(h, 2)},"heavy_controls":$cs,"heavy_ref":$cr"""
-        } else heavyFactor.fold("")(h => s""","hf_heavy":${fmt(h, 2)}"""))
+        (if (full) s""","plan":$planJson""" else "")
       s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"n_queries":${results.size},"n_errors":$nErr$extra,"sf":"$sfDir"}"""
     }
     try {
@@ -508,9 +241,7 @@ object Bench {
         val qs = slowest.take(k)
           .map { case (n, (t, _)) => s"${q(n)}:${fmt(t, 1)}" }
           .mkString("{", ",", "}")
-        val hf = hostFactor.fold("")(h => s""","host_factor":${fmt(h, 2)}""") +
-          heavyFactor.fold("")(h => s""","hf_heavy":${fmt(h, 2)}""")
-        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"queries_shown":$k,"n_queries":${results.size},"n_errors":$nErr$hf,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"queries_shown":$k,"n_queries":${results.size},"n_errors":$nErr,"sf":"$sfDir"}"""
       }
       (40 to 0 by -1).map(lineK).find(_.length <= 1900).getOrElse(lineK(0))
     }

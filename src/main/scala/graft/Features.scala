@@ -47,8 +47,4 @@ object Features {
     if (!valid) compute.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
-
-  val scalarFeatureCols: Seq[String] = Seq(
-    "inc_angle", "b1_mean", "b1_std", "b1_max", "b1_min",
-    "b2_mean", "b2_std", "b2_max", "b2_min", "iso1", "iso2", "size1", "size2")
 }

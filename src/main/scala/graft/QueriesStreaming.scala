@@ -127,12 +127,8 @@ object QueriesStreaming {
     // (session-window, parity-session, stream-join, stream-minhash):
     // 2 → 9.99 s, 4 → 8.18 s, 8 → 8.56 s; the 8 small-state entries
     // read flat 2 vs 4 (7.41 vs 7.29 s) — 4 is the measured knee.
-    // Production sizes this to stream rate, not a constant; the env
-    // override is a LOCAL PROFILING aid only (the driver never sets
-    // it), kept so the A/B stays reproducible.
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(partitions)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    // Production sizes this to stream rate, not a constant.
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // Spark 4.x writes a sidecar checksum file per checkpoint file
     // (offset log, commit log, every state delta/snapshot) — literally
     // 2× the checkpoint file count per micro-batch. Checksums guard

@@ -87,7 +87,4 @@ object ArrayOps {
     * engine-parity contract the sim_* oracles rely on). */
   def l2Sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  /** Round every element — used to pin float results for the oracle hash. */
-  def roundArray(a: Column, s: Int = 6): Column = transform(a, x => round(x, s))
 }

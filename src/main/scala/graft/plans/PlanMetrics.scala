@@ -5,14 +5,14 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Deterministic per-execution plan metrics (VERDICT r12 #1): the
-  * bench record's wall-times ride host weather (r9–r12: host_factor
-  * 1.26→1.69 forced per-query-min archaeology every round), but WHAT a
-  * plan did — how many exchanges it ran, how many rows/bytes crossed
-  * them, whether anything spilled — is a property of code + data, not
-  * of the VM's burst credits. [[graft.Bench]] folds these per entry
-  * into the full bench record so `tools/bench_compare.py` can flag a
-  * plan regression (a new exchange, a shuffle that grew 10×) EXACTLY,
-  * before any seconds-based signal and immune to host drift.
+  * bench record's wall-times move with host load, but WHAT a plan did
+  * — how many exchanges it ran, how many rows/bytes crossed them,
+  * whether anything spilled — is a property of code + data. A run
+  * beside a CPU burner moves the seconds and leaves these counts
+  * unchanged. [[graft.Bench]] folds them per entry into the full bench
+  * record so `tools/bench_compare.py` can flag a plan regression (a new
+  * exchange, a shuffle that grew 10×) against the committed
+  * PLAN_BASELINE.json EXACTLY, before any seconds-based signal.
   *
   * Collection is a read of the executed plan's own SQLMetric values
   * after each action (QueryExecutionListener.onSuccess) — zero extra

@@ -123,15 +123,6 @@ object StreamMetrics {
     * process — cleared by Bench at pass boundaries). */
   def drainAndRecord(q: StreamingQuery): Unit = {
     q.processAllAvailable()
-    // local profiling aid (never set by the driver): per-batch duration
-    // breakdown — where a micro-batch spends its trigger (planning, WAL
-    // commits, state commit, addBatch) — for overhead attribution
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROFILE").contains("1")) {
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-profile] ${q.name} batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-      }
-    }
     pending.add(vectorOf(q)): Unit
   }
 

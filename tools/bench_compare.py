@@ -15,39 +15,6 @@ def load(path):
     return json.loads(line[line.index("{"):])
 
 
-# set when the mixed heavy-pin divergence check fires; main() exits 3
-_mixed_pin_tripped = False
-
-
-# Idle minima of the pinned control queries under the r10 harness.
-# Since r11 the bench record carries its own pins ("control_ref"), so
-# this literal is only the fallback for r10-harness records written
-# before that field existed. Records from before the r10 harness change
-# (codegen/relation caches sped the controls up for non-host reasons)
-# are NOT factor-comparable — the fallback is gated on the record
-# having the r10-harness query count (>= 180) so a pre-r10 pair prints
-# "not factor-comparable" instead of laundering harness wins into
-# host weather (r10 advice).
-CONTROL_REF = {"g_cube": 0.912, "w_distribution": 0.988, "j2_semi_join": 0.265}
-
-
-def host_factor(rec, ref):
-    """Control-min sum of `rec` against the pin set `ref`. The factor is
-    recomputed from the record's own control-query times rather than
-    trusting rec["host_factor"]: two records written under DIFFERENT
-    pin bases (a future re-pin) carry stored factors that are not
-    mutually comparable, so a comparison must rebase both on ONE ref
-    (r11 review: the stored-field shortcut made control_ref dead code
-    and would have laundered a re-pin into 'host weather')."""
-    q = rec["queries"]
-    n = rec.get("n_queries", len(q))
-    if "control_ref" not in rec and "host_factor" not in rec and n < 180:
-        return None  # pre-r10 harness: controls not comparable
-    if all(k in q for k in ref):
-        return sum(q[k] for k in ref) / sum(ref.values())
-    return None
-
-
 def plan_diff(pa, pb):
     """Diff two per-entry plan-metric maps (old -> new). Exchange /
     broadcast / scan counts flag on ANY change; shuffle volume flags on
@@ -138,8 +105,8 @@ def main():
     a, b = load(sys.argv[1]), load(sys.argv[2])
     # the STDOUT bench line truncates `queries` to the top-40 so the
     # driver's ~2000-char tail capture stays parseable; a compare fed
-    # that line reports ~150 phantom "removed" entries and loses the
-    # control queries. The full record is target/bench_last.json.
+    # that line reports ~150 phantom "removed" entries. The full record
+    # is target/bench_last.json.
     for rec, tag in ((a, sys.argv[1]), (b, sys.argv[2])):
         if rec.get("queries_shown", 0) and \
                 rec["queries_shown"] < rec.get("n_queries", 0):
@@ -150,68 +117,6 @@ def main():
           f"queries: {a.get('n_queries', len(a['queries']))} -> "
           f"{b.get('n_queries', len(b['queries']))} | "
           f"errors: {a.get('n_errors', '?')} -> {b.get('n_errors', '?')}")
-    # one COMMON pin base for both records: prefer the newer record's
-    # in-record pins, then the older record's, then the r10 literal —
-    # and SAY which was chosen (r11 advice: the label claimed "r10 idle
-    # pins" even when a record's own control_ref was the base)
-    if "control_ref" in b:
-        ref, src = b["control_ref"], "newer record's control_ref"
-    elif "control_ref" in a:
-        ref, src = a["control_ref"], "older record's control_ref"
-    else:
-        ref, src = CONTROL_REF, "r10 idle-pin literal"
-    ha, hb = host_factor(a, ref), host_factor(b, ref)
-    if ha and hb:
-        print(f"host_factor (vs {src}): {ha:.2f} -> {hb:.2f} | "
-              f"raw ratio {b['value'] / a['value']:.2f}x, "
-              f"control-normalized {b['value'] / hb * ha / a['value']:.2f}x")
-        # heavy pins (r14): CPU-saturating controls that DO see sustained
-        # burst-credit throttle the light scans miss. Same rebase
-        # discipline: one common heavy_ref for both records. light flat +
-        # heavy elevated = sustained throttle; both flat but seconds
-        # moved = read the plan diff below.
-        href = b.get("heavy_ref") or a.get("heavy_ref")
-        if href:
-            hha, hhb = host_factor(a, href), host_factor(b, href)
-            if hha and hhb:
-                print(f"host_factor_heavy: {hha:.2f} -> {hhb:.2f} | "
-                      f"heavy-normalized {b['value'] / hhb * hha / a['value']:.2f}x"
-                      + ("  [sustained-throttle regime: heavy/light drift "
-                         f"{(hhb / hb) / (hha / ha):.2f}x]"
-                         if (hhb / hb) / (hha / ha) > 1.15 else ""))
-            # mixed-pin signal (r14 ADVICE): host weather moves all three
-            # heavy pins TOGETHER; ONE pin diverging sharply from its
-            # siblings means that entry's own code/plan changed — the
-            # factor is laundering a real per-entry delta into "weather"
-            # and heavyRef must be re-pinned (Bench.scala RE-PIN POLICY;
-            # HeavyPinSpec enforces the plan-vector side of the chain).
-            for rec, tag in ((a, sys.argv[1]), (b, sys.argv[2])):
-                rr = {k: rec["queries"][k] / href[k] for k in href
-                      if rec.get("queries", {}).get(k, -1) > 0}
-                if len(rr) == len(href) >= 2:
-                    hi, lo = max(rr.values()), min(rr.values())
-                    if lo > 0 and hi / lo > 1.5:
-                        print(f"ERROR: mixed heavy-pin signal in {tag}: "
-                              + ", ".join(f"{k}={v:.2f}x"
-                                          for k, v in sorted(rr.items()))
-                              + " — one pin diverges from its siblings; that"
-                              " is a code/plan change IN the pin, not host"
-                              " weather. Re-pin per Bench.scala RE-PIN"
-                              " POLICY before trusting host_factor_heavy."
-                              " (exit 3; BENCH_ALLOW_MIXED_PINS=1 to"
-                              " downgrade for a forensic read)")
-                        global _mixed_pin_tripped
-                        _mixed_pin_tripped = True
-    else:
-        print("host_factor: not factor-comparable (pre-r10 record without pins)")
-        # a stored factor we can't rebase is IGNORED, not trusted —
-        # surface that instead of silently printing nothing (r11 advice)
-        for rec, tag in ((a, "old"), (b, "new")):
-            if "host_factor" in rec and host_factor(rec, ref) is None:
-                print(f"  note: {tag} record stores host_factor="
-                      f"{rec['host_factor']} but its queries map lacks the "
-                      f"control queries — stored factor ignored (not "
-                      f"rebase-able on {src})")
     qa, qb = a["queries"], b["queries"]
     common = sorted(set(qa) & set(qb), key=lambda k: qa[k] - qb[k])
     regressions = [(qb[k] - qa[k], k) for k in common if qb[k] > qa[k] * 1.3 and qb[k] - qa[k] > 0.3]
@@ -244,12 +149,6 @@ def main():
               + ", ".join(f"{k}={v:.2f}" for k, v in sorted(added.items())))
     if removed:
         print("removed: " + ", ".join(removed))
-    # a tripped mixed-pin signal exits nonzero BY DEFAULT (r16, VERDICT
-    # r15 #6): a pin diverging >1.5x from its siblings is never weather,
-    # and a warning nobody reads defeats the whole pin chain
-    import os
-    if _mixed_pin_tripped and os.environ.get("BENCH_ALLOW_MIXED_PINS") != "1":
-        sys.exit(3)
 
 
 if __name__ == "__main__":

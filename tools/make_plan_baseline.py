@@ -6,18 +6,11 @@ Defaults: target/bench_last.json, "<record> (local close run)".
 
 Guard rails:
 - refuses a record without a plan map (truncated stdout line);
-- refuses a record with errors (a failed entry's plan row is partial);
-- prints the heavy-pin entries' vectors so the operator can eyeball
-  them against Bench.heavyRefPlanPin — if one CHANGED, HeavyPinSpec
-  will fail until Bench.heavyRef is re-measured and both maps updated
-  together (the enforced RE-PIN POLICY).
+- refuses a record with errors (a failed entry's plan row is partial).
 """
 import json
 import os
 import sys
-
-HEAVY_PINS = ("dd_components", "gr_pagerank", "ml_stack")
-
 
 def main():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,13 +41,6 @@ def main():
     dst = os.path.join(root, "PLAN_BASELINE.json")
     json.dump(out, open(dst, "w"), indent=1, sort_keys=True)
     print(f"wrote {dst}: {out['n_entries']} entries at {out['sf']}")
-    for k in HEAVY_PINS:
-        v = plan.get(k, {})
-        print(f"  heavy pin {k}: exchanges={v.get('exchanges')} "
-              f"broadcasts={v.get('broadcasts')} scans={v.get('scans')} "
-              f"shuffle_rows={v.get('shuffle_rows')}")
-    print("cross-check the three vectors against Bench.heavyRefPlanPin "
-          "(HeavyPinSpec enforces equality).")
 
 
 if __name__ == "__main__":
