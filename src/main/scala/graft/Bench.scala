@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall times at
   * SPARK_GRAFT_SF_DIR (driver default sf0.1).
   *
@@ -31,33 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Verify.quietDeliberateWindowWarn() // BEFORE the session: NativeCodeLoader logs at startup
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // STATIC conf; default 100. The suite compiles several hundred
-      // distinct whole-stage-codegen units (180 plans × 2-5 units), so
-      // the default LRU thrashes and even pass 2 recompiles ~every
-      // unit — per-query mins were carrying janino time, not query
-      // time. Sized to hold the whole suite's units once.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // wide geometry plans (640 slice refs in a_native_tencrop's
-      // analyzed plan) trip the default 25-field toString truncation
-      // WARN; the plan text is debug-only either way
-      .config("spark.sql.debug.maxToStringFields", "1000")
-      // memory-sink streaming entries serialize results to the driver;
-      // rehearsal SFs cross the 1g default (Verify.scala rationale)
-      .config("spark.driver.maxResultSize", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Verify.quietDeliberateWindowWarn()
+    val spark = Verify.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // Deterministic plan metrics (VERDICT r12 #1): every SQL action an
     // entry runs reports its executed plan's exchange/shuffle/spill

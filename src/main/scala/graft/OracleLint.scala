@@ -168,10 +168,6 @@ object OracleLint {
       oracles: Map[String, String] = SparkEntry.oracleSql): Map[String, String] = {
     val v = violations(oracles)
     val dump = new java.io.File(s"$outDir/$GuardKey")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     if (v.nonEmpty) {
       System.err.println(s"[verify] ORACLE LINT: ${v.size} multiply-" +
         "referenced CTE(s) without AS MATERIALIZED — materialize at birth " +
@@ -183,7 +179,7 @@ object OracleLint {
       Map(GuardKey ->
         "SELECT CAST(0 AS BIGINT) AS cte_violations, TRUE AS lint_ok")
     } else {
-      rm(dump)
+      Tables.deleteRecursively(dump)
       Map.empty
     }
   }

@@ -403,10 +403,6 @@ object Queries {
     }
     if (!s.catalog.tableExists(t)) {
       val whDir = whDir0
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
       val staleMs = System.currentTimeMillis() - 3600L * 1000
       // family-wide reap (any version incl. legacy v1): our own exact
       // name (a partial write) plus dirs whose OWNING PROCESS is dead —
@@ -434,7 +430,7 @@ object Queries {
           (f.getName == t ||
             (ownerDead(f.getName) && f.lastModified() < staleMs) ||
             f.lastModified() < hardMs))
-        .foreach(rm))
+        .foreach(Tables.deleteRecursively))
       df.write.bucketBy(8, "k").sortBy("k").saveAsTable(t)
     }
     s.table(t)

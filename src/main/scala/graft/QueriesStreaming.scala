@@ -151,16 +151,50 @@ object QueriesStreaming {
     s
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   /** Drop a finished query's single-use checkpoint: the on-disk dir
     * (default manager) AND the RAM footprint (ephemeral manager). */
   private def dropCheckpoint(path: String): Unit = {
-    deleteRecursively(new java.io.File(path))
+    Tables.deleteRecursively(new java.io.File(path))
     graft.streaming.EphemeralCheckpointFileManager.purge(path)
+  }
+
+  /** Run `out` as a real micro-batch stream into a memory sink and
+    * return the sink table — the one protocol every single-run
+    * streaming entry shares:
+    *  - the sink name `<tag>_<pid>_<seq>` is unique per JVM AND per
+    *    run: the memory sink cannot recover from an existing
+    *    checkpoint, so a stale dir from a previous process must never
+    *    be reused;
+    *  - an explicit checkpoint dir (vs the "temporary location
+    *    created" WARN + leaked /tmp dir a default checkpoint brings);
+    *  - [[graft.streaming.StreamMetrics.drainAndRecord]] runs the
+    *    stream to completion and records its streaming vector;
+    *  - `minDataBatches > 0` requires at least that many micro-batches
+    *    that read data, so a cross-batch state path cannot silently
+    *    collapse into one batch;
+    *  - stop and checkpoint drop run in `finally`, so no entry can
+    *    leak single-use RAM checkpoint bytes for the JVM lifetime,
+    *    on success or on failure. */
+  private[graft] def runToMemory(s: org.apache.spark.sql.SparkSession, tag: String,
+      out: org.apache.spark.sql.Dataset[_], mode: String,
+      minDataBatches: Int = 0): org.apache.spark.sql.DataFrame = {
+    val name = s"${tag}_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
+    val ckpt = s"target/tmp/ckpt_$name"
+    val q = out.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", ckpt)
+      .outputMode(mode).start()
+    try {
+      graft.streaming.StreamMetrics.drainAndRecord(q)
+      if (minDataBatches > 0) {
+        val fed = q.recentProgress.count(_.numInputRows > 0)
+        require(fed >= minDataBatches,
+          s"$tag: expected >=$minDataBatches data micro-batches, saw $fed")
+      }
+    } finally {
+      q.stop()
+      dropCheckpoint(ckpt)
+    }
+    s.table(name)
   }
 
   /** FileStreamSource needs a DIRECTORY; the testdata tables are single
@@ -211,26 +245,13 @@ object QueriesStreaming {
     (outer, d) => {
       val s = sizedStreamSession(outer, 4)
       val stream = stagedEventsStream(s, d)
-      // name unique per JVM AND per run: the memory sink cannot recover
-      // from an existing checkpoint, so a stale dir from a previous
-      // process must never be reused
-      val name = s"st_stream_exec_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = StreamingOps.tumbling(stream, col("ts"), col("event_type"),
-          col("value"), "1 hour")
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("sum_v"))
-        .writeStream.format("memory").queryName(name)
-        // explicit checkpoint dir (vs the "temporary location created"
-        // WARN + leaked /tmp dir a default checkpoint brings)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("complete").start()
-      try graft.streaming.StreamMetrics.drainAndRecord(q) finally {
-        q.stop()
-        // the checkpoint is single-use (name is per-run unique): drop it
-        // so repeated bench/verify runs don't accumulate dirs
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      s.table(name).orderBy("window_start", "event_type")
+      runToMemory(s, "st_stream_exec",
+        StreamingOps.tumbling(stream, col("ts"), col("event_type"),
+            col("value"), "1 hour")
+          .select(col("window.start").as("window_start"), col("event_type"),
+            col("n"), col("sum_v")),
+        "complete")
+        .orderBy("window_start", "event_type")
     },
     Some(s"""SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
       | count(*) AS n, ${sqlDsum("value")} AS sum_v
@@ -258,18 +279,8 @@ object QueriesStreaming {
         .select(col("user_id").cast("long").as("userId"), col("ts").as("eventTime"))
         .withWatermark("eventTime", "0 seconds")
         .as[StreamingOps.SessionEvent]
-      val name = s"st_sess_exec_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = StreamingOps.sessionizeWithState(events, gapMs = 8L * 3600 * 1000)
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try graft.streaming.StreamMetrics.drainAndRecord(q) finally {
-        q.stop()
-        // the checkpoint is single-use (name is per-run unique): drop it
-        // so repeated bench/verify runs don't accumulate dirs
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      s.table(name)
+      runToMemory(s, "st_sess_exec",
+          StreamingOps.sessionizeWithState(events, gapMs = 8L * 3600 * 1000), "append")
         .select(col("userId").as("user_id"), col("startMs").as("start_ms"),
           col("endMs").as("end_ms"), col("n"))
         .orderBy("user_id", "start_ms")
@@ -323,11 +334,12 @@ object QueriesStreaming {
 
   /** Stage a sequence of frames as single parquet files in one
     * directory, ordered for FileStreamSource: distinct ascending mtimes
-    * (the source sorts by modification time) + maxFilesPerTrigger=1 on
-    * the reader give one deterministic micro-batch per part. Load-if-
-    * exists behind a _READY marker (S5 semantics); parts are written to
-    * temp dirs and atomically moved, marker last, so a killed run can't
-    * leave a half-staged dir that later exists()-checks trust. */
+    * (the source sorts by modification time) + one file per trigger on
+    * the reader ([[stagedBatches]]) give one deterministic micro-batch
+    * per part. Load-if-exists behind a _READY marker (S5 semantics);
+    * parts are written to temp dirs and atomically moved, marker last,
+    * so a killed run can't leave a half-staged dir that later
+    * exists()-checks trust. */
   private def stageBatchFiles(family: String, d: String, ver: String,
       parts: => Seq[(String, org.apache.spark.sql.DataFrame)]): String = {
     // naming + superseded-version reap owned by the shared contract
@@ -346,7 +358,7 @@ object QueriesStreaming {
           try java.nio.file.Files.move(part, dst,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          deleteRecursively(tmp.toFile)
+          Tables.deleteRecursively(tmp.toFile)
         }
         // pin part i strictly before part i+1 so batch order (and
         // therefore what crosses the state boundary) is deterministic,
@@ -364,6 +376,15 @@ object QueriesStreaming {
     }
     stage.toAbsolutePath.toString
   }
+
+  /** File-source stream over a [[stageBatchFiles]] dir, one staged part
+    * per micro-batch; the schema comes from the `first` part. */
+  private def stagedBatches(s: org.apache.spark.sql.SparkSession, stage: String,
+      first: String = "b0"): org.apache.spark.sql.DataFrame =
+    s.readStream
+      .schema(s.read.parquet(s"$stage/$first.parquet").schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(stage)
 
   /** The incremental-ingestion fixture: batch file b0 = the base
     * documents, b1 = planted exact copies (doc_id+100000 for
@@ -410,31 +431,16 @@ object QueriesStreaming {
       val known = textDistinctDocs(s, d).where(col("doc_id") % 3 === 0)
         .select(xxhash64(col("text")).as("k_digest"),
           length(col("text")).cast("long").as("k_tlen"))
-      val incoming = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-      val name = s"st_stream_dedup_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = incoming
+      val out = stagedBatches(s, stage)
         .select(col("doc_id"), xxhash64(col("text")).as("digest"),
           length(col("text")).cast("long").as("tlen"))
         .join(known, col("digest") === col("k_digest") &&
           col("tlen") === col("k_tlen"), "left_anti")
         .dropDuplicates("digest", "tlen")
         .select(col("doc_id"), col("tlen"))
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch dedup state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      s.table(name).orderBy("doc_id")
+      // >= 2 data batches: cross-batch dedup state
+      runToMemory(s, "st_stream_dedup", out, "append", minDataBatches = 2)
+        .orderBy("doc_id")
     },
     Some(s"""WITH $sqlTextDistinctBase
       |SELECT doc_id, length(text) AS tlen FROM base
@@ -498,11 +504,7 @@ object QueriesStreaming {
     * st_batch_parity_join. */
   private def runStreamIntervalJoin(s: org.apache.spark.sql.SparkSession,
       stage: String, tag: String): org.apache.spark.sql.DataFrame = {
-    val raw = s.readStream
-      .schema(s.read.parquet(s"$stage/e0.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-    val stream = Tables.normalizeTs(raw)
+    val stream = Tables.normalizeTs(stagedBatches(s, stage, "e0"))
     val clicks = stream.where(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -511,25 +513,13 @@ object QueriesStreaming {
       .select(col("user_id").as("buy_user"), col("ts").as("buy_ts"),
         col("event_id").as("buy_id"), col("value").as("buy_value"))
       .withWatermark("buy_ts", "0 seconds")
-    val name = s"${tag}_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-    val q = clicks.join(buys,
+    val out = clicks.join(buys,
         col("user_id") === col("buy_user") &&
           col("buy_ts") >= col("click_ts") &&
           col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
       .select(col("user_id"), col("click_id"), col("buy_id"), col("buy_value"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
-      .outputMode("append").start()
-    try {
-      graft.streaming.StreamMetrics.drainAndRecord(q)
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      require(fed >= 2,
-        s"expected >=2 data micro-batches (cross-batch join state), saw $fed")
-    } finally {
-      q.stop()
-      dropCheckpoint(s"target/tmp/ckpt_$name")
-    }
-    s.table(name)
+    // >= 2 data batches: cross-batch join state
+    runToMemory(s, tag, out, "append", minDataBatches = 2)
   }
 
   val stStreamJoin: Entry = Entry("st_stream_join_exec",
@@ -654,7 +644,7 @@ object QueriesStreaming {
       Option(root.toFile.listFiles()).foreach(_.filter(f =>
         f.getName.startsWith("recovery_") && f.getName != s"recovery_$runId" &&
           (f.getName.startsWith(s"recovery_${pid}_") || f.lastModified() < staleMs))
-        .foreach(deleteRecursively))
+        .foreach(Tables.deleteRecursively))
       val base = root.resolve(s"recovery_$runId")
       val srcDir = base.resolve("in")
       val outDir = base.resolve("out")
@@ -769,27 +759,12 @@ object QueriesStreaming {
     * entries below. */
   private def runStreamWmDedup(s: org.apache.spark.sql.SparkSession,
       stage: String, tag: String): org.apache.spark.sql.DataFrame = {
-    val name = s"${tag}_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-    val q = s.readStream
-      .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
+    val out = stagedBatches(s, stage)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("doc_id")
       .select(col("doc_id"), (unix_timestamp(col("ts")) * 1000).as("t_ms"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
-      .outputMode("append").start()
-    try {
-      graft.streaming.StreamMetrics.drainAndRecord(q)
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      require(fed >= 4,
-        s"expected >=4 data micro-batches (cross-batch eviction), saw $fed")
-    } finally {
-      q.stop()
-      dropCheckpoint(s"target/tmp/ckpt_$name")
-    }
-    s.table(name)
+    // >= 4 data batches: cross-batch eviction
+    runToMemory(s, tag, out, "append", minDataBatches = 4)
   }
 
   val stStreamWmDedup: Entry = Entry("st_stream_wm_dedup",
@@ -949,27 +924,13 @@ object QueriesStreaming {
       val s = sizedStreamSession(outer, 4)
       import graft.operators.MultiModal
       val stage = mmDedupStage(outer, d)
-      val name = s"st_mmdd_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val out = stagedBatches(s, stage)
         .select(col("id"), MultiModal.dHash64Udf(MultiModal.encodeBmpMixedUdf(
           col("src"), col("w"), col("w"), col("pert"))).as("ph"))
         .dropDuplicates("ph")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch dedup state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      s.table(name).orderBy("id")
+      // >= 2 data batches: cross-batch dedup state
+      runToMemory(s, "st_mmdd", out, "append", minDataBatches = 2)
+        .orderBy("id")
     },
     Some(s"""WITH $sqlMmCorpusDocs,
       |corpus AS (
@@ -1047,27 +1008,13 @@ object QueriesStreaming {
       val s = sizedStreamSession(outer, 4)
       import graft.operators.{Dedup, MultiModal}
       val stage = mmDedupStage(outer, d)
-      val name = s"st_mm_e2e_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val admitted = stagedBatches(s, stage)
         .select(col("id"), MultiModal.dHash64Udf(MultiModal.encodeBmpMixedUdf(
           col("src"), col("w"), col("w"), col("pert"))).as("ph"))
         .dropDuplicates("ph")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch dedup state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      val survivors = s.table(name).select(col("id"), col("ph"))
+      // >= 2 data batches: cross-batch dedup state
+      val survivors = runToMemory(s, "st_mm_e2e", admitted, "append", minDataBatches = 2)
+        .select(col("id"), col("ph"))
       val nearDrops = Dedup.hammingBandPairs(survivors, maxHamming = 6)
         .groupBy(col("id_b").as("id")).agg(min(col("id_a")).as("nd_canon"))
       val allIds = s.read.parquet(stage).select(col("id"))
@@ -1180,27 +1127,12 @@ object QueriesStreaming {
             "b1" -> docs.where(col("doc_id") % 2 =!= 0)
               .unionByName(docs.where(col("doc_id") % 6 === 0)))
         })
-      val name = s"st_qgate_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val incoming = QueriesMl.qualityFeatures(s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage))
-      val q = Model.prob1(model.transform(incoming))
+      val incoming = QueriesMl.qualityFeatures(stagedBatches(s, stage))
+      val out = Model.prob1(model.transform(incoming))
         .select(col("doc_id"), col("label"), col("pred"))
         .dropDuplicates("doc_id")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch admission state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      val scored = s.table(name)
+      // >= 2 data batches: cross-batch admission state
+      val scored = runToMemory(s, "st_qgate", out, "append", minDataBatches = 2)
       val stagedN = s.read.parquet(stage).agg(count(lit(1)).as("n_staged"))
       val agg = scored.agg(count(lit(1)).as("n_unique"),
         sum(when(col("pred") >= 0.5, 1L).otherwise(0L)).as("n_admitted"),
@@ -1250,33 +1182,19 @@ object QueriesStreaming {
           Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
             "b1" -> docs.where(col("doc_id") % 2 =!= 0))
         })
-      val name = s"st_qtl_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val incoming = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val incoming = stagedBatches(s, stage)
         .select(col("lang"), col("n_chars").cast("double")).as[(String, Double)]
-      val q = StreamingOps.quantilePerKey(incoming, qs)
+      val out = StreamingOps.quantilePerKey(incoming, qs)
         .map { case (lang, n, e) => (lang, n, e(0), e(1), e(2), e(3)) }
         .toDF("lang", "n_sketch", "e25", "e50", "e75", "e95")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("update").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch sketch state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
+      // >= 2 data batches: cross-batch sketch state
+      val emitted = runToMemory(s, "st_qtl", out, "update", minDataBatches = 2)
       // update-mode memory sink keeps every per-batch emission; the
       // final answer per key is the one with the highest count (counts
       // strictly grow when a batch touches the key)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("lang").orderBy(col("n_sketch").desc)
-      val fin = s.table(name)
+      val fin = emitted
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
       val bks = tbl(s, d, "documents").groupBy("lang").agg(
         count(lit(1)).as("n_exact"),
@@ -1344,29 +1262,15 @@ object QueriesStreaming {
     * memory sink. Shared engine of the two entries below. */
   private def runStreamSessionWindow(s: org.apache.spark.sql.SparkSession,
       stage: String, tag: String): org.apache.spark.sql.DataFrame = {
-    val name = s"${tag}_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-    val q = s.readStream
-      .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
+    val out = stagedBatches(s, stage)
       .withWatermark("ts", "40 days")
       .groupBy(session_window(col("ts"), "8 hours"), col("user_id"))
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"), col("n"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
-      .outputMode("append").start()
-    try {
-      graft.streaming.StreamMetrics.drainAndRecord(q)
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      require(fed >= 4,
-        s"expected >=4 data micro-batches (cross-batch session merge + flush), saw $fed")
-    } finally {
-      q.stop()
-      dropCheckpoint(s"target/tmp/ckpt_$name")
-    }
-    s.table(name).where(col("user_id") >= 0)
+    // >= 4 data batches: cross-batch session merge + flush
+    runToMemory(s, tag, out, "append", minDataBatches = 4)
+      .where(col("user_id") >= 0)
   }
 
   val stStreamSessionWindow: Entry = Entry("st_stream_session_window",
@@ -1472,33 +1376,19 @@ object QueriesStreaming {
           Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
             "b1" -> docs.where(col("doc_id") % 2 =!= 0))
         })
-      val name = s"st_topk_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val incoming = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val incoming = stagedBatches(s, stage)
         .select(col("lang"), col("source")).as[(String, String)]
-      val q = StreamingOps.topKPerKey(incoming, k = 3, capacity = 64)
+      val out = StreamingOps.topKPerKey(incoming, k = 3, capacity = 64)
         .map { case (lang, tot, ks, cs, _) => (lang, tot, ks, cs) }
         .toDF("lang", "n_seen", "top_sources", "top_cnts")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("update").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch top-k state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
+      // >= 2 data batches: cross-batch top-k state
+      val emitted = runToMemory(s, "st_topk", out, "update", minDataBatches = 2)
       // update-mode memory sink keeps every per-batch emission; the
       // final answer per key is the one with the highest n_seen (totals
       // strictly grow when a batch touches the key)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("lang").orderBy(col("n_seen").desc)
-      s.table(name)
+      emitted
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("lang"), col("n_seen"),
           posexplode(arrays_zip(col("top_sources"), col("top_cnts"))))
@@ -1546,17 +1436,13 @@ object QueriesStreaming {
           Seq("b0" -> ev.where(col("event_id") % 2 === 0),
             "b1" -> ev.where(col("event_id") % 2 =!= 0))
         })
-      val name = s"st_cdc_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val incoming = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val incoming = stagedBatches(s, stage)
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
             .cast("long"),
           (col("event_type") === "error").as("del"))
         .as[(Long, Long, Long, Boolean)]
-      val q = incoming.groupByKey(_._1)
+      val out = incoming.groupByKey(_._1)
         .mapGroupsWithState[(Long, Long, Boolean), (Long, Long, Long, Boolean)](
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
           (uid: Long, rows: Iterator[(Long, Long, Long, Boolean)],
@@ -1569,23 +1455,13 @@ object QueriesStreaming {
             (uid, seq, v, del)
         }
         .toDF("user_id", "last_seq", "cents", "deleted")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("update").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch CDC state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
+      // >= 2 data batches: cross-batch CDC state
+      val emitted = runToMemory(s, "st_cdc", out, "update", minDataBatches = 2)
       // update-mode memory sink keeps every per-batch emission; the
       // final materialized row per key is the highest-seq one
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("last_seq").desc)
-      s.table(name)
+      emitted
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1 && !col("deleted"))
         .select(col("user_id"), col("last_seq"), col("cents"))
@@ -1632,40 +1508,26 @@ object QueriesStreaming {
           val base = QueriesPipeline.minhashBaseDocs(outer, d)
           Seq("b0" -> base, "b1" -> QueriesPipeline.nearDupVariants(base))
         })
-      val name = s"st_mh_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val incoming = s.readStream
-        .schema(s.read.parquet(s"$stage/b0.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+      val incoming = stagedBatches(s, stage)
         .select(col("id"), col("text"),
           explode(graft.operators.Dedup.bandKeysUdf(
             col("text"), lit(6), lit(3))).as("bk"))
         .select(concat_ws(":", col("bk._1"), col("bk._2")).as("bucket"),
           col("id"), col("text"))
         .as[(String, Long, String)]
-      val q = StreamingOps.minHashIndexPairs(incoming,
+      val out = StreamingOps.minHashIndexPairs(incoming,
           threshold = 0.4, bucketCap = 64)
         .toDF("id_a", "id_b", "jaccard_dist")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("append").start()
-      try {
-        graft.streaming.StreamMetrics.drainAndRecord(q)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        require(fed >= 2,
-          s"expected >=2 data micro-batches (cross-batch index state), saw $fed")
-      } finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
+      // >= 2 data batches: cross-batch index state
+      val pairs = runToMemory(s, "st_mh", out, "append", minDataBatches = 2)
       // the cap must not bind on gate data: a refusal would silently
       // lose pairs vs the oracle — the operator emits it as a sentinel
       // (id_a = -1), so assert loudly instead of hash-failing obscurely
-      val refused = s.table(name).where(col("id_a") < 0).count()
+      val refused = pairs.where(col("id_a") < 0).count()
       require(refused == 0, s"minhash bucketCap refused docs on gate data ($refused audit rows)")
       // a pair can collide in >1 band (distinct groups emit the same
       // pair with the same dist) — same dedup as the batch operator
-      s.table(name).where(col("id_a") >= 0).dropDuplicates("id_a", "id_b")
+      pairs.where(col("id_a") >= 0).dropDuplicates("id_a", "id_b")
         .select(col("id_a"), col("id_b"),
           round(col("jaccard_dist"), 6).as("jaccard_dist"))
         .orderBy("id_a", "id_b")
@@ -1691,19 +1553,12 @@ object QueriesStreaming {
     (outer, d) => {
       val s = sizedStreamSession(outer, 4)
       val stream = stagedEventsStream(s, d)
-      val name = s"st_batch_parity_${ProcessHandle.current().pid()}_${execSeq.incrementAndGet()}"
-      val q = StreamingOps.tumbling(stream, col("ts"), col("event_type"),
-          col("value"), "1 hour")
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n").as("n_s"), col("sum_v").as("sum_s"))
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"target/tmp/ckpt_$name")
-        .outputMode("complete").start()
-      try graft.streaming.StreamMetrics.drainAndRecord(q) finally {
-        q.stop()
-        dropCheckpoint(s"target/tmp/ckpt_$name")
-      }
-      val streamRes = s.table(name)
+      val streamRes = runToMemory(s, "st_batch_parity",
+        StreamingOps.tumbling(stream, col("ts"), col("event_type"),
+            col("value"), "1 hour")
+          .select(col("window.start").as("ws"), col("event_type"),
+            col("n").as("n_s"), col("sum_v").as("sum_s")),
+        "complete")
       val batchRes = StreamingOps.tumbling(ev(s, d), col("ts"),
           col("event_type"), col("value"), "1 hour")
         .select(col("window.start").as("ws"), col("event_type"),

@@ -183,20 +183,22 @@ object Tables {
     "target/tmp/" + name
   }
 
+  /** Delete a file or a directory tree; a missing path is a no-op. */
+  def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
+  }
+
   private[graft] def reapStaleSiblings(prefix: String, keep: String): Unit = {
     val base = new java.io.File("target/tmp")
     val staleMs = System.currentTimeMillis() - 3600L * 1000
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     Option(base.listFiles()).foreach(_.filter(f =>
       // the pre-dataVer generation named dirs exactly the family (no
       // version suffix) — `startsWith(prefix)` alone never matched
       // them (r9 advice), leaking one dir per family forever
       (f.getName.startsWith(prefix) || f.getName == prefix.stripSuffix("_")) &&
         f.getName != keep && f.lastModified() < staleMs)
-      .foreach(rm))
+      .foreach(deleteRecursively))
   }
 
   /** One-time reap of LEGACY fixture layouts that no current prefix can
@@ -209,13 +211,9 @@ object Tables {
     val staleMs = System.currentTimeMillis() - 3600L * 1000
     val legacy =
       "^(part_sink|schema_evo|csv_rt|csv_prov|fold_stack)_[0-9a-f]{1,8}_.*".r
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     Option(base.listFiles()).foreach(_.filter(f =>
       legacy.matches(f.getName) && f.lastModified() < staleMs)
-      .foreach(rm))
+      .foreach(deleteRecursively))
   }
 
   /** Exact sum of a ~2-decimal double column: cast to DECIMAL (exact in

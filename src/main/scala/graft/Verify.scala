@@ -77,7 +77,7 @@ object Verify {
         val fresh = new LoggerConfig(dag, null, true)
         cfg.addLogger(dag, fresh); fresh
     }
-    // guard the install: both mains call this twice (pre-session for
+    // guard the install: callers invoke this twice (pre-session for
     // startup WARNs, post-session in case init reloaded the config), and
     // addFilter ACCUMULATES into a CompositeFilter — only the DENY filter
     // needs the once-per-config check; setLevel above is idempotent
@@ -88,21 +88,20 @@ object Verify {
     ctx.updateLoggers()
   }
 
-  def main(args: Array[String]): Unit = {
-    // driver contract: (sfDir, outDir). An optional third arg — a regex
-    // over query names — is local-iteration tooling only (dump a few
-    // entries + oracle_sql.json for tools/verify_local.py).
-    val Array(sfDir, outDir, rest @ _*) = args: @unchecked
-    val nameFilter = rest.headOption.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The local session both mains (Verify, Bench) run on, with the log
+    * quieting of [[quietDeliberateWindowWarn]] applied around it. */
+  def session(cpus: String): SparkSession = {
     quietDeliberateWindowWarn() // BEFORE the session: NativeCodeLoader logs at startup
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // static conf, sized to hold every suite plan's codegen units
-      // (default-100 LRU thrashes across 180 entries — see Bench)
+      // STATIC conf; default 100. The suite compiles several hundred
+      // distinct whole-stage-codegen units (180 plans × 2-5 units), so
+      // the default LRU thrashes and even pass 2 recompiles ~every
+      // unit — per-query mins were carrying janino time, not query
+      // time. Sized to hold the whole suite's units once.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.adaptive.enabled", "true")
       // Non-ANSI: cast yields null on garbage (pandas to_numeric coerce
@@ -127,6 +126,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietDeliberateWindowWarn()
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    // driver contract: (sfDir, outDir). An optional third arg — a regex
+    // over query names — is local-iteration tooling only (dump a few
+    // entries + oracle_sql.json for tools/verify_local.py).
+    val Array(sfDir, outDir, rest @ _*) = args: @unchecked
+    val nameFilter = rest.headOption.map(_.r)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // harness setup: the SAR fixture some oracle SQL reads by absolute
     // path must exist before ANY phase (Spark or DuckDB) runs
@@ -145,11 +154,7 @@ object Verify {
         // delete any PREVIOUS dump of this entry (r11 lesson: a rerun
         // into a reused outDir otherwise compares the stale parquet and
         // masks the failure as green)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        Tables.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -242,10 +247,6 @@ object Verify {
       outDir: String): Map[String, String] = {
     val leaked = graft.streaming.EphemeralCheckpointFileManager.totalFiles
     val dump = new java.io.File(s"$outDir/$LeakGuardKey")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     if (leaked > 0) {
       System.err.println(s"[verify] LEAK: $leaked RAM-checkpoint files " +
         "still tracked after all entries — some streaming entry skipped " +
@@ -257,7 +258,7 @@ object Verify {
       Map(LeakGuardKey ->
         "SELECT CAST(0 AS BIGINT) AS leaked_files, TRUE AS leak_ok")
     } else {
-      rm(dump)
+      Tables.deleteRecursively(dump)
       Map.empty
     }
   }

@@ -149,8 +149,8 @@ object EphemeralCheckpointFileManager {
   }
 
   /** Drop every file/dir under `pathPrefix` — a finished query's
-    * checkpoint footprint. Mirror of the entries' on-disk
-    * deleteRecursively. */
+    * checkpoint footprint. Mirror of the on-disk
+    * [[graft.Tables.deleteRecursively]]. */
   def purge(pathPrefix: String): Unit = {
     // entries pass the RELATIVE checkpointLocation they configured;
     // Spark stored keys under the resolved absolute path

@@ -13,8 +13,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rows, sink rows) is the streaming-native equivalent of a plan
   * vector — code+data properties, immune to host drift.
   *
-  * Flow: entries drain their query through [[drainAndRecord]] (instead
-  * of calling `processAllAvailable()` directly); the vector lands in a
+  * Flow: every streaming query drains through [[drainAndRecord]]
+  * (instead of a bare `processAllAvailable()`); the vector lands in a
   * pending queue that [[graft.Bench]] empties after the entry returns,
   * attributing it to the entry by name — the same synchronous-
   * attribution contract as the plan-metric listener, minus the bus
@@ -117,10 +117,11 @@ object StreamMetrics {
   }
 
   /** `processAllAvailable()` + enqueue this query's vector for the
-    * bench harness. Entries call this exactly where they used to call
-    * `processAllAvailable()`; outside Bench the queue is simply
-    * drained never (bounded: one 4-long array per streaming query per
-    * process — cleared by Bench at pass boundaries). */
+    * bench harness. Called by the memory-sink runner
+    * ([[graft.QueriesStreaming.runToMemory]]) and by st_stream_recovery's
+    * two legs; outside Bench the queue is simply drained never
+    * (bounded: one 4-long array per streaming query per process —
+    * cleared by Bench at pass boundaries). */
   def drainAndRecord(q: StreamingQuery): Unit = {
     q.processAllAvailable()
     pending.add(vectorOf(q)): Unit

@@ -133,6 +133,27 @@ class EphemeralCkptSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("runToMemory failure path: a short stream throws by tag, stops and purges") {
+    // the whole-family test above covers runs that succeed; this one
+    // drives the runner's require failure (one staged file = one data
+    // micro-batch < minDataBatches) and checks the finally still stops
+    // the query and drops its RAM checkpoint
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[EphemeralCheckpointFileManager].getName)
+    val stage = java.nio.file.Files.createTempDirectory("eck_short").toString
+    s.range(10).toDF("id").coalesce(1).write.mode("overwrite").parquet(stage)
+    val stream = s.readStream.schema(s.read.parquet(stage).schema).parquet(stage)
+    val before = EphemeralCheckpointFileManager.totalFiles
+    val e = the[IllegalArgumentException] thrownBy
+      QueriesStreaming.runToMemory(s, "eck_short_run", stream, "append", minDataBatches = 2)
+    e.getMessage should include("eck_short_run")
+    s.streams.active shouldBe empty
+    EphemeralCheckpointFileManager.totalFiles shouldBe before
+    Tables.deleteRecursively(new java.io.File(stage))
+  }
+
   test("trip test: a planted non-purged checkpoint turns the Verify round RED via the guard row") {
     // VERDICT r15 #3 done-criterion: a non-purging entry must turn a
     // round red. Plant exactly what such an entry leaves behind (a
