@@ -92,7 +92,6 @@ object Bench {
 
     // harness setup: file fixtures written before anything is timed
     SarFixture.ensure()
-    Tables.reapLegacyFixtures() // pre-r10 ver-first fixture dirs, one-time
     try Queries.ensureBucketedFixtures(spark, sfDir)
     catch { case _: Throwable => () } // the entry rebuilds on demand
     // warmup, untimed: one SQL-path query + one tiny MLlib fit

@@ -6,8 +6,8 @@ import graft.functions.ArrayOps._
 
 /** SURVEY.md §2.3: the reference's feature-engineering stage (main.py:63-115,
   * main-newInput.py:66-97) as one lazy column pipeline: band algebra →
-  * per-image normalize → scalar features, with a parquet materialization
-  * replacing the pickle cache (S5).
+  * per-image normalize → scalar features. The pickle cache (S5) is
+  * [[Tables.fixture]].
   */
 object Features {
 
@@ -33,18 +33,4 @@ object Features {
       .withColumn("iso2", arrayMean(isoMask(col("band_2"))))
       .withColumn("size1", sizeFeature(col("band_1"), -5.0))
       .withColumn("size2", sizeFeature(col("band_2"), -5.0))
-
-  /** S5: materialized-intermediate cache — parquet replaces pickle
-    * (main.py:92-115): load-if-exists else compute + write. The fold loop
-    * re-reads this K× without recompute. */
-  def cached(compute: => DataFrame, path: String): DataFrame = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Hadoop FS (works on HDFS/S3, not just local disk) + the _SUCCESS
-    // marker so a partial/failed write is recomputed, not trusted.
-    val valid = fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    if (!valid) compute.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
-  }
 }

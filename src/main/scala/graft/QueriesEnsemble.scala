@@ -35,28 +35,16 @@ object QueriesEnsemble {
   private val Ms = Seq(37, 71, 113) // ensemble members
   private val BaseK = 53 // the "best base" submission
 
-  /** Cache-key version for the target/tmp CSV fixtures below: the
-    * cached bytes are a pure function of (d) AND of the generating
-    * constants, so those constants fold into the directory name —
-    * changing Ms/BaseK (or bumping `gen` when the member/submission
+  /** The [[Tables.fixture]] store for the target/tmp fixtures below:
+    * the cached bytes are a pure function of (d) AND of the generating
+    * constants, so those constants form the formula — changing
+    * Ms/BaseK (or bumping the leading `g1` when the member/submission
     * FORMULA code itself changes) retargets the cache instead of
     * silently serving stale fixtures against an updated oracle. */
-  private def fixtureVer(d: String): String = {
-    val gen = 1 // bump on any change to the pm/stack/fold write formulas
-    // data-versioned (r8 lesson): a regenerated testdata dir must
-    // retarget every derived fixture, so the sources' mtime+length
-    // join the formula constants in the key
-    val sig = s"g$gen;Ms=${Ms.mkString("_")};B=$BaseK;K=3;fmt=6;" +
-      Tables.dataVer(d, "orders", "customer", "nation")
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
-  }
-
-  /** family-first fixture dir (<family>_<dirslug>_<ver>, r9 advice):
-    * version LAST so [[Tables.reapStaleSiblings]] can reap the dirs a
-    * testdata regen or formula bump orphans — the old ver-first names
-    * (`part_sink_<ver>_<dir>`) had no stable prefix to reap by. */
-  private def fixtureDir(family: String, d: String): String =
-    Tables.fixturePath(family, d, fixtureVer(d))
+  private def fixture(family: String, d: String)(
+      build: java.nio.file.Path => Unit): String =
+    Tables.fixture(family, d, Seq("orders", "customer", "nation"),
+      s"g1;Ms=${Ms.mkString("_")};B=$BaseK;K=3;fmt=6")(build)
 
   /** P5: the member scores + preds array frame (the reference's
     * concat-on-index, P4/P5). r18 optimization: this was spelled as a
@@ -175,11 +163,11 @@ object QueriesEnsemble {
     * the table. */
   val s5PartitionedPrune: Entry = Entry("s5_partitioned_prune",
     (s, d) => {
-      val out = fixtureDir("part_sink", d)
-      if (!new java.io.File(s"$out/_SUCCESS").isFile)
+      val out = fixture("part_sink", d) { tmp =>
         tbl(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-          .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
+          .write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp.toString)
+      }
       s.read.parquet(out)
         .where(col("o_orderpriority") === "1-URGENT")
         .groupBy("o_orderpriority")
@@ -212,17 +200,16 @@ object QueriesEnsemble {
     * (the merge IS the evolved schema here: 2 footers). */
   val s6SchemaEvolution: Entry = Entry("s6_schema_evolution",
     (s, d) => {
-      val out = fixtureDir("schema_evo", d)
       val tier = when(col("c_acctbal") >= 5000, "gold")
         .when(col("c_acctbal") >= 0, "std").otherwise("neg")
-      if (!new java.io.File(s"$out/v1/_SUCCESS").isFile)
+      val out = fixture("schema_evo", d) { tmp =>
         tbl(s, d, "customer").where(col("c_custkey") % 2 === 0)
           .select(col("c_custkey"), col("c_acctbal"))
-          .write.mode("overwrite").parquet(s"$out/v1")
-      if (!new java.io.File(s"$out/v2/_SUCCESS").isFile)
+          .write.mode("overwrite").parquet(s"$tmp/v1")
         tbl(s, d, "customer").where(col("c_custkey") % 2 =!= 0)
           .select(col("c_custkey"), col("c_acctbal"), tier.as("c_tier"))
-          .write.mode("overwrite").parquet(s"$out/v2")
+          .write.mode("overwrite").parquet(s"$tmp/v2")
+      }
       s.read.option("mergeSchema", "true").parquet(s"$out/v1", s"$out/v2")
         .groupBy(coalesce(col("c_tier"), lit("pre_evolution")).as("tier"))
         .agg(count(lit(1)).as("n"), Tables.dsum(col("c_acctbal")).as("bal"))
@@ -243,17 +230,17 @@ object QueriesEnsemble {
     * oracle checks the full sink→scan loop including the formatting. */
   val s4CsvRoundtrip: Entry = Entry("s4_csv_roundtrip",
     (s, d) => {
-      val out = fixtureDir("csv_rt", d)
       // S5 load-if-exists (main.py:93): the submission CSV is a pure
-      // function of (d); once a complete write exists (_SUCCESS), later
-      // runs — the second bench pass, repeated verifies — time the
-      // sink→scan READBACK this entry exists to prove, not the rewrite
-      if (!new java.io.File(s"$out/_SUCCESS").isFile)
+      // function of (d); once it is published, later runs — the second
+      // bench pass, repeated verifies — time the sink→scan READBACK
+      // this entry exists to prove, not the rewrite
+      val out = fixture("csv_rt", d) { tmp =>
         predsFrame(s, d)
           .select(col("o_orderkey").cast("string").as("id"),
             format_number(Ensemble.stack("mean", col("preds"), col("base")), 6).as("is_iceberg"))
           .coalesce(1)
-          .write.mode("overwrite").option("header", "true").csv(out)
+          .write.mode("overwrite").option("header", "true").csv(tmp.toString)
+      }
       // read the concrete output dir, not a "/*.csv" glob: the glob made
       // Spark's FileStreamSink metadata probe log a FileNotFoundException
       // stack trace at WARN on every readback (benign but judge-visible);
@@ -277,12 +264,12 @@ object QueriesEnsemble {
     * lost or doubled through the sink→scan loop — both oracle-stable. */
   val s3Provenance: Entry = Entry("s3_provenance",
     (s, d) => {
-      val out = fixtureDir("csv_prov", d)
       // S5 load-if-exists: input fixture, same rationale as s4CsvRoundtrip
-      if (!new java.io.File(s"$out/_SUCCESS").isFile)
+      val out = fixture("csv_prov", d) { tmp =>
         tbl(s, d, "nation").select(col("n_nationkey"), col("n_name"))
           .repartition(3) // several part files = several "submissions"
-          .write.mode("overwrite").option("header", "true").csv(out)
+          .write.mode("overwrite").option("header", "true").csv(tmp.toString)
+      }
       // concrete dir, not a glob — same dir listing, no metadata-probe
       // stack trace (see s4CsvRoundtrip)
       s.read.schema("n_nationkey STRING, n_name STRING") // fixed format, no header probe
@@ -319,25 +306,21 @@ object QueriesEnsemble {
     }
     Entry("ens_fold_dirs",
       (s, d) => {
-        val base = fixtureDir("fold_stack", d)
         // SETUP — the upstream per-fold submission writers the reference
         // assumes already ran: fold_<f>/m<i> member CSVs, 6-dp formatted.
         // S5 load-if-exists (main.py:93): each member is a pure function
-        // of (d, f, i), so a COMPLETE prior write (_SUCCESS marker per
-        // member dir) is byte-identical to a fresh one — skip the 9
-        // coalesce(1) writes and let the timed path be the tested
-        // listing→join→stack loop, not fixture construction (this write
-        // was ~6 s, ~11% of the whole r5 bench)
-        val done = (0 until K).forall(f => Ms.indices.forall(i =>
-          new java.io.File(s"$base/fold_$f/m$i/_SUCCESS").isFile))
-        if (!done) {
+        // of (d, f, i), so a published prior write is byte-identical to
+        // a fresh one — skip the 9 coalesce(1) writes and let the timed
+        // path be the tested listing→join→stack loop, not fixture
+        // construction (this write was ~6 s, ~11% of the whole r5 bench)
+        val base = fixture("fold_stack", d) { tmp =>
           val o = tbl(s, d, "orders")
           for (f <- 0 until K; i <- Ms.indices) {
             o.select(col("o_orderkey").cast("string").as("id"),
                 format_number(((col("o_orderkey") * (Ms(i) + f)) % 1000) / lit(1000.0), 6)
                   .as("is_iceberg"))
               .coalesce(1)
-              .write.mode("overwrite").option("header", "true").csv(s"$base/fold_$f/m$i")
+              .write.mode("overwrite").option("header", "true").csv(s"$tmp/fold_$f/m$i")
           }
         }
         // the tested loop: DISCOVER each fold dir's members by listing

@@ -57,14 +57,13 @@ object QueriesGraph {
     * is an equi-join + partially-aggregated groupBy per
     * [[graft.operators.PageRank]]'s contract; the final top-20 is
     * TakeOrderedAndProject (per-partition heaps, no global sort). */
-  /** Family-first S5 fixture helper (dataVer-keyed, stale siblings
-    * reaped): the pinned/bucketed derived tables a production graph
-    * stack keeps next to its facts. */
-  private def grFixture(d: String, family0: String, tables: Seq[String])(
-      compute: => org.apache.spark.sql.DataFrame) = {
-    Features.cached(compute,
-      Tables.fixturePath(family0, d, Tables.dataVer(d, tables: _*)))
-  }
+  /** S5 parquet fixture through [[Tables.fixture]]: the pinned/bucketed
+    * derived tables a production graph stack keeps next to its facts. */
+  private def parquetFixture(s: org.apache.spark.sql.SparkSession, d: String,
+      family: String, tables: Seq[String])(compute: => org.apache.spark.sql.DataFrame) =
+    s.read.parquet(Tables.fixture(family, d, tables, "") { tmp =>
+      compute.write.mode("overwrite").parquet(tmp.toString)
+    })
 
   /** S5-materialized distinct trading pairs (customer, offset
     * supplier): the 1.2 M-row join + distinct was 2.5 s of
@@ -72,7 +71,7 @@ object QueriesGraph {
     * exactly the pinned/bucketed edge table a production graph stack
     * keeps. Shared by gr_pagerank and gr_label_prop. */
   private def tradingPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    grFixture(d, "gr_edges_v1", Seq("lineitem", "orders")) {
+    parquetFixture(s, d, "gr_edges_v1", Seq("lineitem", "orders")) {
       tbl(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(tbl(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -86,7 +85,7 @@ object QueriesGraph {
     * gr_bfs_hops share; rebuilt per entry it was ~1.5 s of re-derivable
     * join+distinct in each (r9 verdict #1). */
   private def sparsePairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    grFixture(d, "gr_spairs_v1", Seq("lineitem", "orders")) {
+    parquetFixture(s, d, "gr_spairs_v1", Seq("lineitem", "orders")) {
       tbl(s, d, "lineitem")
         .where(col("l_quantity") > 45)
         .select(col("l_orderkey"), col("l_suppkey"))
@@ -99,7 +98,7 @@ object QueriesGraph {
   /** The distinct (order, part) basket table — the market-basket
     * fixture gr_copurchase_lift and gr_triangles both project from. */
   private def basket(s: org.apache.spark.sql.SparkSession, d: String) =
-    grFixture(d, "gr_basket_v1", Seq("lineitem")) {
+    parquetFixture(s, d, "gr_basket_v1", Seq("lineitem")) {
       tbl(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()
     }
@@ -110,7 +109,7 @@ object QueriesGraph {
     * is re-derivable state (a production stack materializes its
     * co-occurrence edge table), the census over it stays timed. */
   private def strongEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    grFixture(d, "gr_sep_v1", Seq("lineitem")) {
+    parquetFixture(s, d, "gr_sep_v1", Seq("lineitem")) {
       val a = basket(s, d)
       a.select(col("ok"), col("p").as("u"))
         .join(a.select(col("ok"), col("p").as("v")), Seq("ok"))

@@ -508,27 +508,19 @@ object QueriesPipeline {
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Materialized component map (S5 load-if-exists, main.py:93 — the
+  /** Materialized component map ([[Tables.fixture]] — the
     * ens_fold_dirs precedent): the assignment is a pure function of
-    * (d) and the generating constants, which fold into the cache key.
+    * (d) and the generating constants, which form the formula.
     * dd_components always computes live (the iteration IS its tested
     * claim); downstream consumers like pl_canonical_docs test the step
     * AFTER clustering, so they load the upstream map the way a real
-    * pipeline reads its previous stage's output. */
-  private def compAssignVer(d: String): String = {
-    val gen = 2 // bump on any change to chainCorpus/dupEdges/assignment
-    // data-versioned: documents.parquet mtime+length joins the formula
-    // constants so a testdata regen retargets the cache (r8 lesson)
-    val sig = s"g$gen;blk=2w;tau=0.55;chain=7_14;pfx=7_10;" +
-      s"cap=$ComponentsOracleCap;" + Tables.dataVer(d, "documents")
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
-  }
-  private def componentAssignCached(s: SparkSession, d: String): DataFrame = {
-    val out = Tables.fixturePath("comp_assign", d, compAssignVer(d))
-    if (!new java.io.File(s"$out/_SUCCESS").isFile)
-      componentAssign(s, d).write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
-  }
+    * pipeline reads its previous stage's output. The leading `g2`
+    * bumps on any change to chainCorpus/dupEdges/assignment. */
+  private def componentAssignCached(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Tables.fixture("comp_assign", d, Seq("documents"),
+        s"g2;blk=2w;tau=0.55;chain=7_14;pfx=7_10;cap=$ComponentsOracleCap") {
+      out => componentAssign(s, d).write.mode("overwrite").parquet(out.toString)
+    })
 
   // DuckDB twin of `prefix` over a list column named `l`.
   private def sqlPrefix(l: String) = s"array_to_string($l[1:(7*len($l)+9)//10], ' ')"
@@ -3092,18 +3084,15 @@ object QueriesPipeline {
     * [[txUnigramEncode]] (VERDICT r11 #7: each entry used to re-run
     * seed+EM internally). The memoized value is
     * [[UnigramLm.trainCensus]]'s passable artifact — vocabulary-
-    * bounded maps, so retention is metadata-sized; keyed like
-    * Tables.tblSchemaCache (latest dataVer per dir only, a testdata
-    * regen retargets instead of leaking superseded censuses). */
-  private val ulmMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Seq[String], Map[String, Long]))]()
+    * bounded maps, so retention is metadata-sized; a
+    * [[Tables.VersionedMemo]] per dir (a testdata regen retargets
+    * instead of leaking superseded censuses). */
+  private val ulmMemo =
+    new Tables.VersionedMemo[String, (Seq[String], Map[String, Long])]
   private def ulmTrained(s: org.apache.spark.sql.SparkSession,
-      d: String): (Seq[String], Map[String, Long]) = {
-    val ver = Tables.dataVer(d, "documents")
-    ulmMemo.compute(d, (_, cur) =>
-      if (cur != null && cur._1 == ver) cur
-      else (ver, UnigramLm.trainCensus(ulmWordFreq(s, d))))._2
-  }
+      d: String): (Seq[String], Map[String, Long]) =
+    ulmMemo(d, Tables.dataVer(d, "documents"))(
+      UnigramLm.trainCensus(ulmWordFreq(s, d)))
 
   val txUnigramLm: Entry = Entry("tx_unigram_lm",
     (s, d) => {

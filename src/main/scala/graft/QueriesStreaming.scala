@@ -198,32 +198,20 @@ object QueriesStreaming {
   }
 
   /** FileStreamSource needs a DIRECTORY; the testdata tables are single
-    * parquet files, so stage a byte-identical copy once (load-if-exists,
-    * S5 semantics; temp-file + atomic move so a killed run can't leave a
-    * truncated copy that later exists()-checks trust) and return the
-    * ts-normalized streaming frame — the same [[Tables.normalizeTs]]
-    * the batch side applies. private[graft]: StreamingSpec drives the same
-    * staged source, so one helper owns the copy+rebuild invariants. */
+    * parquet files, so stage a byte-identical copy once through
+    * [[Tables.fixture]] and return the ts-normalized streaming frame —
+    * the same [[Tables.normalizeTs]] the batch side applies.
+    * private[graft]: StreamingSpec drives the same staged source, so one
+    * helper owns the copy+rebuild invariants. */
   private[graft] def stagedEventsStream(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val src = java.nio.file.Paths.get(s"$d/events.parquet")
-    val stage = java.nio.file.Paths.get(
-      Tables.fixturePath("stream_src", d, Tables.dataVer(d, "events")))
-    java.nio.file.Files.createDirectories(stage)
-    val dst = stage.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(dst)) {
-      val tmp = stage.resolve(s"events.parquet.tmp.${ProcessHandle.current().pid()}")
-      java.nio.file.Files.copy(src, tmp,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      try java.nio.file.Files.move(tmp, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp): Unit
-      }
+    val stage = Tables.fixture("stream_src", d, Seq("events"), "") { tmp =>
+      java.nio.file.Files.copy(src, tmp.resolve("events.parquet")): Unit
     }
     val raw = s.readStream
       .schema(s.read.parquet(src.toString).schema)
-      .parquet(stage.toAbsolutePath.toString)
+      .parquet(new java.io.File(stage).getAbsolutePath)
     Tables.normalizeTs(raw)
   }
 
@@ -303,17 +291,6 @@ object QueriesStreaming {
       |WHERE rn > 1 OR end_ms < maxm
       |ORDER BY user_id, start_ms""".stripMargin))
 
-  /** Cache-key version for the staged two-batch document stream below:
-    * the staged bytes are a pure function of (d) and the slice formulas
-    * (dup offset, copy modulus), so those fold into the directory name —
-    * changing them retargets the cache instead of serving stale files
-    * against an updated oracle. */
-  private val docStreamVer: String = {
-    val gen = 2 // bump on any change to the slice/staging formulas
-    val sig = s"g$gen;dup=7;off=100000;files=2;base=text-distinct"
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
-  }
-
   /** Text-distinct base docs (min doc_id per text): the synthetic
     * documents table stops being text-unique past sf0.01 (sf0.1 holds
     * 4992 distinct texts over 5000 rows), and the dedup-stream
@@ -333,49 +310,29 @@ object QueriesStreaming {
     "base AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text)"
 
   /** Stage a sequence of frames as single parquet files in one
-    * directory, ordered for FileStreamSource: distinct ascending mtimes
-    * (the source sorts by modification time) + one file per trigger on
-    * the reader ([[stagedBatches]]) give one deterministic micro-batch
-    * per part. Load-if-exists behind a _READY marker (S5 semantics);
-    * parts are written to temp dirs and atomically moved, marker last,
-    * so a killed run can't leave a half-staged dir that later
-    * exists()-checks trust. */
-  private def stageBatchFiles(family: String, d: String, ver: String,
-      parts: => Seq[(String, org.apache.spark.sql.DataFrame)]): String = {
-    // naming + superseded-version reap owned by the shared contract
-    val stage = java.nio.file.Paths.get(Tables.fixturePath(family, d, ver))
-    val ready = stage.resolve("_READY")
-    if (!java.nio.file.Files.exists(ready)) {
-      java.nio.file.Files.createDirectories(stage)
+    * [[Tables.fixture]] directory keyed by (`source` table, `formula`),
+    * ordered for FileStreamSource: distinct ascending mtimes (the
+    * source sorts by modification time) + one file per trigger on the
+    * reader ([[stagedBatches]]) give one deterministic micro-batch per
+    * part. Returns the absolute directory path. */
+  private def stageBatchFiles(family: String, d: String, source: String,
+      formula: String)(parts: => Seq[(String, org.apache.spark.sql.DataFrame)]): String =
+    new java.io.File(Tables.fixture(family, d, Seq(source), formula) { stage =>
       parts.zipWithIndex.foreach { case ((nm, df), i) =>
+        val tmp = stage.resolve(s"$nm.tmp")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.toFile.listFiles().filter(p =>
+          p.getName.startsWith("part-") && p.getName.endsWith(".parquet")).head
         val dst = stage.resolve(s"$nm.parquet")
-        if (!java.nio.file.Files.exists(dst)) {
-          val tmp = stage.resolve(s"$nm.tmp.${ProcessHandle.current().pid()}")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = java.nio.file.Files.list(tmp).filter(p =>
-            p.getFileName.toString.startsWith("part-") &&
-              p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-          try java.nio.file.Files.move(part, dst,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          Tables.deleteRecursively(tmp.toFile)
-        }
+        java.nio.file.Files.move(part.toPath, dst)
+        Tables.deleteRecursively(tmp.toFile)
         // pin part i strictly before part i+1 so batch order (and
         // therefore what crosses the state boundary) is deterministic,
         // not copy-timing luck
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
-      val tmp = stage.resolve(s"_READY.tmp.${ProcessHandle.current().pid()}")
-      java.nio.file.Files.writeString(tmp, "ok")
-      try java.nio.file.Files.move(tmp, ready,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp): Unit
-      }
-    }
-    stage.toAbsolutePath.toString
-  }
+    }).getAbsolutePath
 
   /** File-source stream over a [[stageBatchFiles]] dir, one staged part
     * per micro-batch; the schema comes from the `first` part. */
@@ -392,14 +349,16 @@ object QueriesStreaming {
     * so the dedup state genuinely crosses a batch boundary. */
   private def stagedDocBatches(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    stageBatchFiles("stream_docs", d,
-      docStreamVer + "_" + Tables.dataVer(d, "documents"), {
-        val docs = textDistinctDocs(s, d)
-        Seq(
-          "b0" -> docs,
-          "b1" -> docs.where(col("doc_id") % 7 === 0)
-            .select((col("doc_id") + 100000).as("doc_id"), col("text")))
-      })
+    // formula: bump the leading g2 on any change to the slice/staging
+    // formulas (dup offset, copy modulus)
+    stageBatchFiles("stream_docs", d, "documents",
+        "g2;dup=7;off=100000;files=2;base=text-distinct") {
+      val docs = textDistinctDocs(s, d)
+      Seq(
+        "b0" -> docs,
+        "b1" -> docs.where(col("doc_id") % 7 === 0)
+          .select((col("doc_id") + 100000).as("doc_id"), col("text")))
+    }
 
   /** Incremental corpus-ingestion dedup under REAL streaming execution
     * — the pattern a production pipeline runs when new crawl drops land
@@ -456,33 +415,29 @@ object QueriesStreaming {
     * exactly what the join itself compares), so the reader below needs
     * no per-generation branch. The scalar aggs here are fixture
     * staging (once per cache key), not the measured operator. */
-  private val eventHalvesVer: String = {
-    val gen = 3 // bump on any change to the split formula
-    val sig = s"g$gen;split=median-straddle-buy;files=2;ts=normalized"
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
-  }
   private def stagedEventHalves(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    stageBatchFiles("stream_ev2", d,
-      eventHalvesVer + "_" + Tables.dataVer(d, "events"), {
-        val raw = tbl(s, d, "events")
-        val us = raw.withColumn("us", unix_micros(col("ts")))
-        val c = us.where(col("event_type") === "click")
-          .select(col("user_id").as("u"), col("us").as("cus"))
-        val p = us.where(col("event_type") === "purchase")
-          .select(col("user_id").as("pu"), col("us").as("pus"))
-        val pairs = c.join(p, col("u") === col("pu") &&
-          col("pus") > col("cus") && col("pus") <= col("cus") + 3600L * 1000000L)
-        val Array(row) = pairs
-          .agg(percentile_approx(col("pus"), lit(0.5), lit(100000))).collect()
-        val boundaryUs = row.getLong(0)
-        val straddle = pairs
-          .where(col("cus") < boundaryUs && col("pus") >= boundaryUs).count()
-        require(straddle >= 1,
-          s"event split must leave >=1 attribution pair straddling the boundary, got $straddle")
-        val bnd = unix_micros(col("ts")) < boundaryUs
-        Seq("e0" -> raw.where(bnd), "e1" -> raw.where(!bnd))
-      })
+    // formula: bump the leading g3 on any change to the split formula
+    stageBatchFiles("stream_ev2", d, "events",
+        "g3;split=median-straddle-buy;files=2;ts=normalized") {
+      val raw = tbl(s, d, "events")
+      val us = raw.withColumn("us", unix_micros(col("ts")))
+      val c = us.where(col("event_type") === "click")
+        .select(col("user_id").as("u"), col("us").as("cus"))
+      val p = us.where(col("event_type") === "purchase")
+        .select(col("user_id").as("pu"), col("us").as("pus"))
+      val pairs = c.join(p, col("u") === col("pu") &&
+        col("pus") > col("cus") && col("pus") <= col("cus") + 3600L * 1000000L)
+      val Array(row) = pairs
+        .agg(percentile_approx(col("pus"), lit(0.5), lit(100000))).collect()
+      val boundaryUs = row.getLong(0)
+      val straddle = pairs
+        .where(col("cus") < boundaryUs && col("pus") >= boundaryUs).count()
+      require(straddle >= 1,
+        s"event split must leave >=1 attribution pair straddling the boundary, got $straddle")
+      val bnd = unix_micros(col("ts")) < boundaryUs
+      Seq("e0" -> raw.where(bnd), "e1" -> raw.where(!bnd))
+    }
 
   /** Stream-STREAM interval join under real incremental execution — the
     * attribution shape: each purchase matched to every click by the
@@ -689,13 +644,6 @@ object QueriesStreaming {
       |SELECT doc_id, length(text) AS tlen FROM base
       |ORDER BY doc_id""".stripMargin))
 
-  /** Cache-key version for the watermark-dedup fixture below. */
-  private val wmDedupVer: String = {
-    val gen = 2 // bump on any change to the fixture time layout
-    val sig = s"g$gen;t0=10:00;drv=20:00;re=19:30;delay=1h;files=4"
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
-  }
-
   /** `dropDuplicatesWithinWatermark` under REAL two-micro-batch
     * execution — the BOUNDED-retention dedup (vs [[stStreamRecovery]]'s
     * unbounded dropDuplicates): state for a key is evicted once the
@@ -738,19 +686,20 @@ object QueriesStreaming {
   private def stagedWmDedupFixture(outer: org.apache.spark.sql.SparkSession,
       d: String): String = {
     def at(t: String) = lit(s"2030-01-01 $t").cast("timestamp")
-    stageBatchFiles("stream_wmdd", d,
-      wmDedupVer + "_" + Tables.dataVer(d, "documents"), {
-        val ids = tbl(outer, d, "documents").select(col("doc_id"))
-        val driver = ids.limit(1)
-          .select(lit(-1L).as("doc_id"), at("20:00:00").as("ts"))
-        Seq(
-          "b0" -> ids.select(col("doc_id"), at("10:00:00").as("ts")),
-          "b1" -> driver,
-          "b2" -> driver, // presence-dup; its end sweeps the doc keys
-          "b3" -> ids.where(col("doc_id") % 7 === 0)
-            .select(col("doc_id"), at("19:30:00").as("ts"))
-            .unionByName(driver))
-      })
+    // formula: bump the leading g2 on any change to the time layout
+    stageBatchFiles("stream_wmdd", d, "documents",
+        "g2;t0=10:00;drv=20:00;re=19:30;delay=1h;files=4") {
+      val ids = tbl(outer, d, "documents").select(col("doc_id"))
+      val driver = ids.limit(1)
+        .select(lit(-1L).as("doc_id"), at("20:00:00").as("ts"))
+      Seq(
+        "b0" -> ids.select(col("doc_id"), at("10:00:00").as("ts")),
+        "b1" -> driver,
+        "b2" -> driver, // presence-dup; its end sweeps the doc keys
+        "b3" -> ids.where(col("doc_id") % 7 === 0)
+          .select(col("doc_id"), at("19:30:00").as("ts"))
+          .unionByName(driver))
+    }
   }
 
   /** Run dropDuplicatesWithinWatermark over the staged fixture under
@@ -895,29 +844,28 @@ object QueriesStreaming {
     * fingerprints per perturbed doc and keeps the survivors. */
   /** The "stream_mmdd" staged fixture shared by [[stStreamMmDedup]]
     * and [[mmDedupEndToEnd]] — ONE definition because the two entries
-    * share the fixture cache key and [[stageBatchFiles]] short-
-    * circuits on _READY: whichever entry runs first stages for both,
+    * share the fixture cache key and [[Tables.fixture]] returns an
+    * existing dir as is: whichever entry runs first stages for both,
     * so a second, independently-maintained copy of the parts could
     * silently feed the other entry stale data if one copy were ever
     * edited (ADVICE r17 #1). Any future content change to this corpus
-    * must bump the version prefix below in lockstep. */
+    * must bump the formula ("v2") below in lockstep. */
   private def mmDedupStage(outer: org.apache.spark.sql.SparkSession,
       d: String): String =
-    stageBatchFiles("stream_mmdd", d,
-      "v2_" + Tables.dataVer(d, "documents"), {
-        val base = mmCorpusDocs(outer, d).select(col("doc_id"),
-          (col("doc_id") % 8 + 16).cast("int").as("w"))
-        Seq(
-          "b0" -> base.select(col("doc_id").as("id"),
-            col("doc_id").as("src"), col("w"), lit(false).as("pert")),
-          "b1" -> base.where(col("doc_id") % 11 === 0)
-            .select((col("doc_id") + 100000).as("id"),
-              col("doc_id").as("src"), col("w"), lit(false).as("pert"))
-            .unionByName(base
-              .where(col("doc_id") % 7 === 0 && col("doc_id") % 11 =!= 0)
-              .select((col("doc_id") + 300000).as("id"),
-                col("doc_id").as("src"), col("w"), lit(true).as("pert"))))
-      })
+    stageBatchFiles("stream_mmdd", d, "documents", "v2") {
+      val base = mmCorpusDocs(outer, d).select(col("doc_id"),
+        (col("doc_id") % 8 + 16).cast("int").as("w"))
+      Seq(
+        "b0" -> base.select(col("doc_id").as("id"),
+          col("doc_id").as("src"), col("w"), lit(false).as("pert")),
+        "b1" -> base.where(col("doc_id") % 11 === 0)
+          .select((col("doc_id") + 100000).as("id"),
+            col("doc_id").as("src"), col("w"), lit(false).as("pert"))
+          .unionByName(base
+            .where(col("doc_id") % 7 === 0 && col("doc_id") % 11 =!= 0)
+            .select((col("doc_id") + 300000).as("id"),
+              col("doc_id").as("src"), col("w"), lit(true).as("pert"))))
+    }
 
   val stStreamMmDedup: Entry = Entry("st_stream_mm_dedup",
     (outer, d) => {
@@ -1119,14 +1067,13 @@ object QueriesStreaming {
       val s = sizedStreamSession(outer, 4)
       val model = QueriesMl.qualityModel(
         QueriesMl.qualityFeatures(tbl(outer, d, "documents")))
-      val stage = stageBatchFiles("stream_qgate", d,
-        "v1_" + Tables.dataVer(d, "documents"), {
-          val docs = tbl(outer, d, "documents").select(col("doc_id"), col("text"))
-          Seq(
-            "b0" -> docs.where(col("doc_id") % 2 === 0),
-            "b1" -> docs.where(col("doc_id") % 2 =!= 0)
-              .unionByName(docs.where(col("doc_id") % 6 === 0)))
-        })
+      val stage = stageBatchFiles("stream_qgate", d, "documents", "v1") {
+        val docs = tbl(outer, d, "documents").select(col("doc_id"), col("text"))
+        Seq(
+          "b0" -> docs.where(col("doc_id") % 2 === 0),
+          "b1" -> docs.where(col("doc_id") % 2 =!= 0)
+            .unionByName(docs.where(col("doc_id") % 6 === 0)))
+      }
       val incoming = QueriesMl.qualityFeatures(stagedBatches(s, stage))
       val out = Model.prob1(model.transform(incoming))
         .select(col("doc_id"), col("label"), col("pred"))
@@ -1175,13 +1122,12 @@ object QueriesStreaming {
       import graft.operators.KllSketch.stateEncoder
       val eps = 0.02
       val qs = Seq(0.25, 0.5, 0.75, 0.95)
-      val stage = stageBatchFiles("stream_qdoc", d,
-        "v1_" + Tables.dataVer(d, "documents"), {
-          val docs = tbl(outer, d, "documents")
-            .select(col("doc_id"), col("lang"), col("n_chars"))
-          Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
-            "b1" -> docs.where(col("doc_id") % 2 =!= 0))
-        })
+      val stage = stageBatchFiles("stream_qdoc", d, "documents", "v1") {
+        val docs = tbl(outer, d, "documents")
+          .select(col("doc_id"), col("lang"), col("n_chars"))
+        Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
+          "b1" -> docs.where(col("doc_id") % 2 =!= 0))
+      }
       val incoming = stagedBatches(s, stage)
         .select(col("lang"), col("n_chars").cast("double")).as[(String, Double)]
       val out = StreamingOps.quantilePerKey(incoming, qs)
@@ -1240,20 +1186,19 @@ object QueriesStreaming {
   private def stagedSessionWindowFixture(outer: org.apache.spark.sql.SparkSession,
       d: String): String = {
     def at(t: String) = lit(s"2031-01-01 $t").cast("timestamp")
-    stageBatchFiles("stream_sesswin", d,
-      "v1_" + Tables.dataVer(d, "events"), {
-        val base = tbl(outer, d, "events")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val driver1 = base.limit(1)
-          .select(lit(-1L).as("user_id"), at("00:00:00").as("ts"))
-        val driver2 = base.limit(1)
-          .select(lit(-1L).as("user_id"), at("16:00:00").as("ts"))
-        Seq(
-          "b0" -> base.where(col("event_id") % 2 === 0).select(col("user_id"), col("ts")),
-          "b1" -> base.where(col("event_id") % 2 =!= 0).select(col("user_id"), col("ts")),
-          "b2" -> driver1,
-          "b3" -> driver2)
-      })
+    stageBatchFiles("stream_sesswin", d, "events", "v1") {
+      val base = tbl(outer, d, "events")
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val driver1 = base.limit(1)
+        .select(lit(-1L).as("user_id"), at("00:00:00").as("ts"))
+      val driver2 = base.limit(1)
+        .select(lit(-1L).as("user_id"), at("16:00:00").as("ts"))
+      Seq(
+        "b0" -> base.where(col("event_id") % 2 === 0).select(col("user_id"), col("ts")),
+        "b1" -> base.where(col("event_id") % 2 =!= 0).select(col("user_id"), col("ts")),
+        "b2" -> driver1,
+        "b3" -> driver2)
+    }
   }
 
   /** Run the native session_window aggregation over the staged fixture
@@ -1369,13 +1314,12 @@ object QueriesStreaming {
       val s = sizedStreamSession(outer, 4)
       import s.implicits._
       import graft.operators.HeavyHitters.ssStateEncoder
-      val stage = stageBatchFiles("stream_topk", d,
-        "v1_" + Tables.dataVer(d, "documents"), {
-          val docs = tbl(outer, d, "documents").select(col("doc_id"),
-            col("lang"), col("source"))
-          Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
-            "b1" -> docs.where(col("doc_id") % 2 =!= 0))
-        })
+      val stage = stageBatchFiles("stream_topk", d, "documents", "v1") {
+        val docs = tbl(outer, d, "documents").select(col("doc_id"),
+          col("lang"), col("source"))
+        Seq("b0" -> docs.where(col("doc_id") % 2 === 0),
+          "b1" -> docs.where(col("doc_id") % 2 =!= 0))
+      }
       val incoming = stagedBatches(s, stage)
         .select(col("lang"), col("source")).as[(String, String)]
       val out = StreamingOps.topKPerKey(incoming, k = 3, capacity = 64)
@@ -1429,13 +1373,12 @@ object QueriesStreaming {
     (outer, d) => {
       val s = sizedStreamSession(outer, 4)
       import s.implicits._
-      val stage = stageBatchFiles("stream_cdc", d,
-        "v1_" + Tables.dataVer(d, "events"), {
-          val ev = tbl(outer, d, "events")
-            .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-          Seq("b0" -> ev.where(col("event_id") % 2 === 0),
-            "b1" -> ev.where(col("event_id") % 2 =!= 0))
-        })
+      val stage = stageBatchFiles("stream_cdc", d, "events", "v1") {
+        val ev = tbl(outer, d, "events")
+          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+        Seq("b0" -> ev.where(col("event_id") % 2 === 0),
+          "b1" -> ev.where(col("event_id") % 2 =!= 0))
+      }
       val incoming = stagedBatches(s, stage)
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
@@ -1502,12 +1445,11 @@ object QueriesStreaming {
       // (a no-op at shipped SFs; bounds the O(N²) oracle above them —
       // v2→v3 folds the r14 %k→head sample-shape change into the
       // stage key, which dataVer alone can't see)
-      val stage = stageBatchFiles("stream_mh", d,
-        "v3_" + Tables.dataVer(d, "documents"), {
-          // the SAME base + plant rule as dd_minhash_lsh, by reference
-          val base = QueriesPipeline.minhashBaseDocs(outer, d)
-          Seq("b0" -> base, "b1" -> QueriesPipeline.nearDupVariants(base))
-        })
+      val stage = stageBatchFiles("stream_mh", d, "documents", "v3") {
+        // the SAME base + plant rule as dd_minhash_lsh, by reference
+        val base = QueriesPipeline.minhashBaseDocs(outer, d)
+        Seq("b0" -> base, "b1" -> QueriesPipeline.nearDupVariants(base))
+      }
       val incoming = stagedBatches(s, stage)
         .select(col("id"), col("text"),
           explode(graft.operators.Dedup.bandKeysUdf(

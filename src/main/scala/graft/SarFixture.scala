@@ -50,8 +50,10 @@ object SarFixture {
 
   /** Load-if-exists write (S5 semantics): repeated calls — bench
     * passes, verify, tests — cost one stat(2) after the first. The
-    * write goes through a temp file + ATOMIC_MOVE: a bare writeString
-    * is not atomic, so a run killed mid-write would otherwise leave a
+    * path is fixed (oracle SQL embeds it), so this is a single file,
+    * not a [[Tables.fixture]] dir; the write goes to a temp file and
+    * [[Tables.publish]] renames it into place — a bare writeString is
+    * not atomic, so a run killed mid-write would otherwise leave a
     * truncated fixture that every later exists()-check trusts. */
   def ensure(): Unit = {
     val p = Paths.get(path)
@@ -59,10 +61,7 @@ object SarFixture {
       Files.createDirectories(p.getParent)
       val tmp = p.resolveSibling(p.getFileName.toString + s".tmp.${ProcessHandle.current().pid()}")
       Files.writeString(tmp, gen())
-      try Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { // lost a concurrent race: the winner's bytes are identical
-        case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp): Unit
-      }
+      Tables.publish(tmp, p)
     }
   }
 

@@ -42,6 +42,23 @@ object Tables {
       case _ => df
     }
 
+  /** A JVM memo that keeps, per key, only the value for the latest data
+    * version: a testdata regen (new [[dataVer]]) replaces the entry
+    * instead of serving it stale or leaking the superseded one.
+    * get-then-put, NOT compute(): values here are Spark jobs, and CHM's
+    * contract requires mapping functions to be short — compute would
+    * hold the bin lock for the whole job, blocking concurrent callers on
+    * colliding keys (r13 ADVICE). Racing duplicates are harmless: both
+    * compute the same value for the same version. */
+  private[graft] final class VersionedMemo[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[K, (String, V)]()
+    def apply(key: K, ver: String)(value: => V): V = {
+      val cur = m.get(key)
+      if (cur != null && cur._1 == ver) cur._2
+      else { val v = value; m.put(key, (ver, v)); v }
+    }
+  }
+
   /** Base-table SCHEMA cache: `spark.read.parquet` re-reads footers to
     * infer the schema on EVERY call, and the suite resolves each base
     * table hundreds of times per bench run (180 entries × 2 passes ×
@@ -55,15 +72,12 @@ object Tables {
     * hundred bytes with no session reference. Schemas are JVM-stable
     * across sessions here because every builder pins the same parquet
     * confs (nanosAsLong, session TZ). */
-  private val tblSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, org.apache.spark.sql.types.StructType)]()
+  private val tblSchemaCache = new VersionedMemo[(String, String), StructType]
 
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val ver = dataVer(dir, name)
     val path = s"$dir/$name.parquet"
-    val schema = tblSchemaCache.compute((dir, name), (_, cur) =>
-      if (cur != null && cur._1 == ver) cur
-      else (ver, spark.read.parquet(path).schema))._2
+    val schema = tblSchemaCache((dir, name), dataVer(dir, name))(
+      spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeTs(df) else df
   }
@@ -99,31 +113,15 @@ object Tables {
     * Parquet count() is footer metadata, but it is still a Spark ACTION;
     * entries calling it at plan-construction time paid one job per
     * invocation and raced a mid-run testdata regen. */
-  private val tblCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, Long)]()
+  private val tblCountCache = new VersionedMemo[(String, String), Long]
 
   private[graft] def tableCount(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val ver = dataVer(dir, name)
-    // get-then-put, NOT compute(): a count() is a distributed job and
-    // CHM's contract requires mapping functions to be short — compute
-    // would hold the bin lock for the whole job, blocking concurrent
-    // callers on colliding keys (r13 ADVICE). Racing duplicates are
-    // harmless: both compute the same value for the same ver.
-    val key = (dir, name)
-    val cur = tblCountCache.get(key)
-    if (cur != null && cur._1 == ver) cur._2
-    else {
-      val v = (ver, tbl(spark, dir, name).count())
-      tblCountCache.put(key, v)
-      v._2
-    }
-  }
+      name: String): Long =
+    tblCountCache((dir, name), dataVer(dir, name))(tbl(spark, dir, name).count())
 
-  /** Memoized max of a key column — [[tableCount]]'s twin, same
-    * get-then-put discipline. Exists for DATA-DERIVED key lifts: an
-    * entry that plants "new" rows at `key + CONSTANT` stops being
-    * injective the moment a bigger corpus reaches the constant (the
+  /** Memoized max of a key column — [[tableCount]]'s twin. Exists for
+    * DATA-DERIVED key lifts: an entry that plants "new" rows at
+    * `key + CONSTANT` stops being injective the moment a bigger corpus reaches the constant (the
     * r14 sf1.0 rehearsal: o_upsert/o_cdc_apply's +1e6/+2e6 plants
     * landed on the 10× corpus's real custkeys, and the collision
     * tie-breaks diverged between engines). Lifting by a multiple of
@@ -131,57 +129,74 @@ object Tables {
     * SF and is the identity at shipped SFs (max < constant there);
     * the oracle replays it as a scalar subquery. Parquet max(col) is
     * footer metadata — cheap, but still an action, hence the memo. */
-  private val tblMaxCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (String, Long)]()
+  private val tblMaxCache = new VersionedMemo[(String, String, String), Long]
 
   private[graft] def tableMax(spark: SparkSession, dir: String,
-      name: String, column: String): Long = {
-    val ver = dataVer(dir, name)
-    val key = (dir, name, column)
-    val cur = tblMaxCache.get(key)
-    if (cur != null && cur._1 == ver) cur._2
-    else {
-      val v = (ver, tbl(spark, dir, name)
-        .agg(org.apache.spark.sql.functions.max(column)).head().getLong(0))
-      tblMaxCache.put(key, v)
-      v._2
-    }
-  }
+      name: String, column: String): Long =
+    tblMaxCache((dir, name, column), dataVer(dir, name))(
+      tbl(spark, dir, name).agg(max(column)).head().getLong(0))
 
   /** Data-version token for derived-fixture cache keys: mtime+length of
     * the source parquet files. Folding this into every `target/tmp`
-    * fixture path makes a regenerated testdata dir retarget the cache
+    * fixture key makes a regenerated testdata dir retarget the cache
     * instead of serving stale bytes against a fresh oracle (the r8
     * near-miss: fixtures survived a testdata rewrite on key alone). */
-  def dataVer(dir: String, names: String*): String = {
-    val sig = names.sorted.map { n =>
+  def dataVer(dir: String, names: String*): String =
+    hex(names.sorted.map { n =>
       val f = new java.io.File(s"$dir/$n.parquet")
       s"$n:${f.lastModified}:${f.length}"
-    }.mkString(";")
-    (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffff).toHexString
+    }.mkString(";"))
+
+  private def hex(s: String): String =
+    (scala.util.hashing.MurmurHash3.stringHash(s) & 0x7fffffff).toHexString
+
+  private val fixtureSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** THE derived-fixture store (S5, main.py:92-115: load-if-exists else
+    * compute + dump), one contract for every `target/tmp` fixture:
+    *  - path: `target/tmp/<family>_<dirslug>_<key>`, key =
+    *    hex(MurmurHash3(formula + ";" + [[dataVer]](d, sources))) — a
+    *    formula bump or a testdata regen moves the fixture to a new dir;
+    *    family-first so [[reapStaleSiblings]] reaps the orphaned ones;
+    *  - complete means the directory exists: it is returned at once,
+    *    with no marker probe;
+    *  - otherwise `build` writes a fresh sibling `<path>.tmp.<pid>_<seq>`
+    *    and [[publish]] renames it into place. A killed run leaves only
+    *    a temp dir (same family prefix, so the hour-cold reap takes it),
+    *    never a half-built `path`; a throwing build deletes its temp dir
+    *    and rethrows; a lost race keeps the winner's dir.
+    * `formula` names the generating constants: bump it whenever the
+    * fixture's content formula changes. */
+  def fixture(family: String, d: String, sources: Seq[String], formula: String)(
+      build: java.nio.file.Path => Unit): String = {
+    val fam = family + "_" + d.replaceAll("[^0-9a-zA-Z]", "_") + "_"
+    val name = fam + hex(formula + ";" + dataVer(d, sources: _*))
+    reapStaleSiblings(fam, name)
+    val out = "target/tmp/" + name
+    val dst = java.nio.file.Paths.get(out)
+    if (!java.nio.file.Files.isDirectory(dst)) {
+      val tmp = dst.resolveSibling(dst.getFileName.toString +
+        s".tmp.${ProcessHandle.current().pid()}_${fixtureSeq.incrementAndGet()}")
+      java.nio.file.Files.createDirectories(tmp)
+      try build(tmp)
+      catch { case e: Throwable => deleteRecursively(tmp.toFile); throw e }
+      publish(tmp, dst)
+    }
+    out
   }
 
-  /** Reap SUPERSEDED fixture cache dirs: same family prefix, different
-    * version suffix — the dirs a testdata regen (new [[dataVer]]) or a
-    * formula bump orphans under target/tmp. Without this, every regen
-    * leaks the full fixture footprint forever. Only dirs untouched for
-    * an hour are removed (same guard as the bucketed-table reaper): a
-    * CONCURRENT process on the same key set writes the same new name,
-    * and nothing legitimately reads an hour-cold dir whose source
-    * changed. Call right before using `keep`. */
-  /** THE derived-fixture path contract, in one place (r10 review: four
-    * near-identical inline copies meant a layout change needed four
-    * edits): `target/tmp/<family>_<dirslug>_<ver>` — family-first so
-    * superseded versions share a stable reapable prefix, version LAST
-    * so a testdata regen / formula bump orphans (and [[reapStaleSiblings]]
-    * reaps) the old dir. Callers own the build/load step; this owns
-    * naming + reap. */
-  private[graft] def fixturePath(family: String, d: String, ver: String): String = {
-    val fam = family + "_" + d.replaceAll("[^0-9a-zA-Z]", "_") + "_"
-    val name = fam + ver
-    reapStaleSiblings(fam, name)
-    "target/tmp/" + name
-  }
+  /** Publish a finished `tmp` (file or directory) at `dst` in one atomic
+    * rename. If `dst` already exists a concurrent builder won: its bytes
+    * stay (both are the same pure function of the key) and `tmp` is
+    * deleted. The exists probe matters for files — rename(2) silently
+    * replaces a file, while it refuses a non-empty target directory. */
+  private[graft] def publish(tmp: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+    try {
+      if (!java.nio.file.Files.exists(dst))
+        java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case _: java.nio.file.FileSystemException if java.nio.file.Files.exists(dst) => ()
+    } finally deleteRecursively(tmp.toFile)
 
   /** Delete a file or a directory tree; a missing path is a no-op. */
   def deleteRecursively(f: java.io.File): Unit = {
@@ -189,6 +204,14 @@ object Tables {
     f.delete(): Unit
   }
 
+  /** Reap SUPERSEDED fixture cache dirs: same family prefix, different
+    * version suffix — the dirs a testdata regen (new [[dataVer]]) or a
+    * formula bump orphans under target/tmp, plus the temp dirs of killed
+    * builds. Without this, every regen leaks the full fixture footprint
+    * forever. Only dirs untouched for an hour are removed (same guard as
+    * the bucketed-table reaper): a CONCURRENT process on the same key set
+    * writes the same new name, and nothing legitimately reads an
+    * hour-cold dir whose source changed. Call right before using `keep`. */
   private[graft] def reapStaleSiblings(prefix: String, keep: String): Unit = {
     val base = new java.io.File("target/tmp")
     val staleMs = System.currentTimeMillis() - 3600L * 1000
@@ -198,21 +221,6 @@ object Tables {
       // them (r9 advice), leaking one dir per family forever
       (f.getName.startsWith(prefix) || f.getName == prefix.stripSuffix("_")) &&
         f.getName != keep && f.lastModified() < staleMs)
-      .foreach(deleteRecursively))
-  }
-
-  /** One-time reap of LEGACY fixture layouts that no current prefix can
-    * match: the ensemble family's pre-r10 ver-FIRST names
-    * (`part_sink_<8hex>_<dirslug>`; r10 renamed them family-first so
-    * [[reapStaleSiblings]] works). Same hour-cold guard. Called from
-    * Verify/Bench setup (untimed); cheap no-op once clean. */
-  private[graft] def reapLegacyFixtures(): Unit = {
-    val base = new java.io.File("target/tmp")
-    val staleMs = System.currentTimeMillis() - 3600L * 1000
-    val legacy =
-      "^(part_sink|schema_evo|csv_rt|csv_prov|fold_stack)_[0-9a-f]{1,8}_.*".r
-    Option(base.listFiles()).foreach(_.filter(f =>
-      legacy.matches(f.getName) && f.lastModified() < staleMs)
       .foreach(deleteRecursively))
   }
 

@@ -140,7 +140,6 @@ object Verify {
     // harness setup: the SAR fixture some oracle SQL reads by absolute
     // path must exist before ANY phase (Spark or DuckDB) runs
     SarFixture.ensure()
-    Tables.reapLegacyFixtures() // pre-r10 ver-first fixture dirs, one-time
     try Queries.ensureBucketedFixtures(spark, sfDir)
     catch { case _: Throwable => () } // the entry rebuilds on demand
     SparkEntry.queries

@@ -109,7 +109,9 @@ object Components {
     }
   }
 
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
+  private val MaxRounds = 25
+
+  def connectedComponents(edges: DataFrame): DataFrame = {
     var (cur, curChk) = pinWithChecksum(edges
       .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
       .where(col("u") =!= col("v"))
@@ -117,14 +119,14 @@ object Components {
       .distinct())
     var rounds = 0
     var converged = false
-    while (!converged && rounds < maxRounds) {
+    while (!converged && rounds < MaxRounds) {
       val (next, nextChk) = pinWithChecksum(smallStar(largeStar(cur)), Some(cur))
       converged = nextChk == curChk
       cur = next
       curChk = nextChk
       rounds += 1
     }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
+    require(converged, s"connectedComponents did not converge in $MaxRounds rounds")
     // Fixed point of the star rounds: every edge is (member, root) with
     // root = min id of the component. Roots name their own component.
     cur.select(col("u").as("id"), col("v").as("component"))

@@ -35,12 +35,12 @@ object LabelProp {
     * with no in-edges keep their own id (feed a bidirected graph if
     * every node must hear its neighbors, as the gate entry does).
     * `assumeDistinct` as in [[PageRank.pageRank]]: an already-deduped
-    * edge frame skips the defensive full-edge shuffle. `pinEvery` as in
-    * [[PageRank.pageRank]]: the label lineage is linear (each round
-    * references the previous labels once), so a few rounds chain into
-    * one job; the last round always pins. */
+    * edge frame skips the defensive full-edge shuffle. Pins on
+    * [[PageRank.PinEvery]]'s cadence: the label lineage is linear (each
+    * round references the previous labels once), so a few rounds chain
+    * into one job; the last round always pins. */
   def labelPropagate(edges: DataFrame, rounds: Int,
-      assumeDistinct: Boolean = false, pinEvery: Int = 6): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     val e0 = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val e = graft.Graft.pin(if (assumeDistinct) e0 else e0.distinct())
@@ -60,7 +60,7 @@ object LabelProp {
           nodes("node") === col("anode"), "left")
         .select(nodes("node"),
           coalesce(col("label"), nodes("node")).as("label"))
-      labels = if (i % pinEvery == 0 || i == rounds) {
+      labels = if (i % PageRank.PinEvery == 0 || i == rounds) {
         val p = graft.Graft.pin(next, release = lastPin)
         lastPin = Some(p); p
       } else next

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *  - overflow safety by construction: total rank mass is
   *    n_nodes × 10^12 and the damping multiply is ×85, so values stay
   *    < 2^63 for any graph under ~10^5 billion-node... i.e. ~10^5 nodes
-  *    per 10^12 scale unit — at larger n, drop `scale` a decade per
-  *    decade of nodes (rank resolution stays ~12 digits relative).
+  *    per 10^12 scale unit — at larger n, [[safeScale]] drops the
+  *    scale a decade per decade of nodes (rank resolution stays ~12
+  *    digits relative).
   *
   * 100 TB plan shape: one equi-join (edges ⨝ ranks on src) + one
   * partially-aggregated groupBy(dst) per iteration — map-side combine
@@ -29,11 +30,27 @@ import org.apache.spark.sql.functions._
   * on a cluster this is the cached/bucketed edge table every production
   * PageRank keeps pinned. The rank frame (one row per NODE — orders of
   * magnitude smaller than the edge set) broadcasts into each round's
-  * join and pins on the `pinEvery` cadence (see [[pageRank]]): its
+  * join and pins every [[PinEvery]] rounds (see [[pageRank]]): its
   * lineage is linear, so a handful of rounds chain into one job, and
   * the final round always pins so callers get a shallow frame.
   */
 object PageRank {
+
+  // damping factor 85/100
+  private val DampNum = 85L
+  private val DampDen = 100L
+  // the 12-digit relative resolution small graphs enjoy
+  private val MaxScale = 1000000000000L
+
+  /** Rank-frame pin cadence. The rank lineage is LINEAR (each round
+    * references the previous rank once), so chaining a few rounds into
+    * one job is safe; with the rank side broadcast, the r10 measurement
+    * at sf0.1 flipped the r6 one — fully-lazy 5 rounds run 1.6× faster
+    * than per-round pinning (one job vs five materializations; AQE
+    * absorbs the deeper plan's planning cost). The LAST round always
+    * pins so callers get a shallow frame. Deep runs (tens of rounds)
+    * would want a smaller cadence to bound re-planning depth. */
+  private[operators] val PinEvery = 6
 
   /** Largest power of ten that keeps the damping multiply inside a
     * BIGINT for a graph of `nNodes` vertices: total rank mass is
@@ -44,10 +61,10 @@ object PageRank {
     * no float log10 at the boundary. Caps at 10^12 (the 12-digit
     * relative resolution small graphs enjoy); fails loudly below 10^4
     * (~5·10^13 nodes — past any real graph) rather than wrap. */
-  def safeScale(nNodes: Long, maxScale: Long = 1000000000000L): Long = {
-    val cap = 4611686018427387904L / (85L * math.max(nNodes, 1L))
+  def safeScale(nNodes: Long): Long = {
+    val cap = 4611686018427387904L / (DampNum * math.max(nNodes, 1L))
     val fit = Iterator.iterate(10000L)(_ * 10).takeWhile(p =>
-      p <= maxScale && p <= cap).toSeq
+      p <= MaxScale && p <= cap).toSeq
     require(fit.nonEmpty,
       s"graph too large for scaled-BIGINT PageRank: $nNodes nodes")
     fit.last
@@ -55,11 +72,10 @@ object PageRank {
 
   /** Ranks after `iters` power iterations over the directed edge list
     * `edges` (columns src: long, dst: long; duplicates removed).
-    * Returns (node, rank) where rank is scaled by `scale` — pass 0
-    * (the default) to derive the overflow-safe [[safeScale]] from the
-    * node count, a free `count()` on the already-checkpointed node
-    * frame (small graphs derive the same 10^12 the old fixed default
-    * used). Node ranges over every vertex appearing in an edge.
+    * Returns (node, rank) where rank is scaled by the overflow-safe
+    * [[safeScale]] of the node count (10^12 for small graphs), a free
+    * `count()` on the already-checkpointed node frame. Node ranges
+    * over every vertex appearing in an edge.
     * Dangling nodes (out-degree 0) lose their mass — callers wanting
     * the classic redistribute-dangling variant should add reverse
     * edges or a sink; the gate entry feeds a bidirected graph so none
@@ -68,22 +84,9 @@ object PageRank {
     * `assumeDistinct`: callers whose edge frame is already deduped (the
     * gate's S5-cached trading-pairs fixture materializes the distinct)
     * skip the defensive full-edge-set shuffle — at 100 TB that is a
-    * whole extra pass over the fact-scale frame for a no-op.
-    *
-    * `pinEvery`: rank-frame pin cadence. The rank lineage is LINEAR
-    * (each round references the previous rank once), so chaining a few
-    * rounds into one job is safe; with the rank side broadcast, the
-    * r10 measurement at sf0.1 flipped the r6 one — fully-lazy 5 rounds
-    * run 1.6× faster than per-round pinning (one job vs five
-    * materializations; AQE absorbs the deeper plan's planning cost).
-    * The LAST round always pins so callers get a shallow frame. Deep
-    * runs (tens of rounds) should pass a small cadence to bound
-    * re-planning depth. */
+    * whole extra pass over the fact-scale frame for a no-op. */
   def pageRank(edges: DataFrame, iters: Int,
-               scale: Long = 0L,
-               dampNum: Long = 85, dampDen: Long = 100,
-               assumeDistinct: Boolean = false,
-               pinEvery: Int = 6): DataFrame = {
+               assumeDistinct: Boolean = false): DataFrame = {
     val e0 = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val e = if (assumeDistinct) e0 else e0.distinct()
@@ -98,8 +101,8 @@ object PageRank {
     val nodes = graft.Graft.pin(ed.select(col("src").as("node"))
       .union(ed.select(col("dst").as("node"))).distinct())
 
-    val sc = if (scale > 0) scale else safeScale(nodes.count())
-    val teleport = (sc / dampDen) * (dampDen - dampNum)
+    val sc = safeScale(nodes.count())
+    val teleport = (sc / DampDen) * (DampDen - DampNum)
     var rank = nodes.select(col("node"), lit(sc).as("rank"))
     var lastPin: Option[DataFrame] = None // superseded-round release (persist mode)
     for (i <- 1 to iters) {
@@ -109,9 +112,9 @@ object PageRank {
       val next = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(teleport) +
-            expr(s"($dampNum * coalesce(csum, CAST(0 AS BIGINT))) div $dampDen"))
+            expr(s"($DampNum * coalesce(csum, CAST(0 AS BIGINT))) div $DampDen"))
             .as("rank"))
-      rank = if (i % pinEvery == 0 || i == iters) {
+      rank = if (i % PinEvery == 0 || i == iters) {
         val p = graft.Graft.pin(next, release = lastPin)
         lastPin = Some(p); p
       } else next

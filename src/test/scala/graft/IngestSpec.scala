@@ -59,13 +59,4 @@ class IngestSpec extends SparkSpec {
     r2.getDouble(0) shouldBe 0.0
     r2.getDouble(1) shouldBe 0.0
   }
-
-  test("S5 cached: computes once, then reads the parquet materialization") {
-    val path = Files.createTempDirectory("cache").toFile.getAbsolutePath + "/feat"
-    var computes = 0
-    def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("k", "v") }
-    Features.cached(compute, path).count() shouldBe 2
-    Features.cached(compute, path).count() shouldBe 2
-    computes shouldBe 1
-  }
 }
