@@ -134,14 +134,7 @@ object Bench {
       }
       n -> (t, if (t1 < 0 && t2 < 0) e1.orElse(e2) else None)
     }
-    // escape ALL control chars — an exception message echoing raw input
-    // bytes would otherwise break the driver's JSON parse of this line
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Verify.jsonString
     // The driver captures only the LAST ~2000 output chars (minus sbt's
     // trailing "[success] ..." line), so the printed JSON line must fit
     // that budget or its HEAD — "{"metric":"total","value":… — is cut
@@ -158,7 +151,8 @@ object Bench {
       else String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(t))
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val nErr = results.count(_._2._2.isDefined)
-    val errs = results.collect { case (k, (_, Some(e))) => s"${q(k)}:${q(e)}" }
+    val errs = results
+      .collect { case (k, (_, Some(e))) => s"${jsonString(k)}:${jsonString(e)}" }
       .mkString("{", ",", "}")
     def passTotal(p: Map[String, (Double, Option[String])]) =
       fmt(p.values.map(_._1).filter(_ >= 0).sum, 3)
@@ -170,12 +164,12 @@ object Bench {
     def planJson: String = names.flatMap { n =>
       Option(planAgg.get(n)).map { m =>
         val fields = graft.plans.PlanMetrics.Keys.zipWithIndex
-          .map { case (k, i) => s"${q(k)}:${if (i < m.length) m(i) else 0L}" }
-        s"${q(n)}:{${fields.mkString(",")}}"
+          .map { case (k, i) => s"${jsonString(k)}:${if (i < m.length) m(i) else 0L}" }
+        s"${jsonString(n)}:{${fields.mkString(",")}}"
       }
     }.mkString("{", ",", "}")
     def line(dec: Int, full: Boolean): String = {
-      val qs = results.map { case (k, (t, _)) => s"${q(k)}:${fmt(t, dec)}" }
+      val qs = results.map { case (k, (t, _)) => s"${jsonString(k)}:${fmt(t, dec)}" }
         .mkString("{", ",", "}")
       // ckpt_leak only when nonzero (r16, mirror of Verify's RED row):
       // a leaking entry surfaces in the driver-read record itself, not
@@ -210,7 +204,7 @@ object Bench {
       val slowest = results.sortBy(-_._2._1)
       def lineK(k: Int): String = {
         val qs = slowest.take(k)
-          .map { case (n, (t, _)) => s"${q(n)}:${fmt(t, 1)}" }
+          .map { case (n, (t, _)) => s"${jsonString(n)}:${fmt(t, 1)}" }
           .mkString("{", ",", "}")
         s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"queries_shown":$k,"n_queries":${results.size},"n_errors":$nErr,"sf":"$sfDir"}"""
       }

@@ -330,6 +330,24 @@ object QueriesPipeline {
       | TRUE AS recall_ok
       |FROM d""".stripMargin))
 
+  /** The incremental-dedup ledger shared by `dd_incremental_minhash`
+    * and the `mm_incremental_*` entries: one row per delta id
+    * (`deltaIds`, column new_id) with its count of matched base items
+    * (`pairs`, one row per (delta_id, base) match) and its status —
+    * dropped when any base item matched, else kept. */
+  private def incrementalLedger(deltaIds: DataFrame, pairs: DataFrame): DataFrame = {
+    val counts = pairs
+      .groupBy("delta_id").agg(count(lit(1)).as("n_base_dups"))
+      .withColumnRenamed("delta_id", "new_id")
+    deltaIds
+      .join(counts, Seq("new_id"), "left")
+      .select(col("new_id"),
+        coalesce(col("n_base_dups"), lit(0L)).as("n_base_dups"))
+      .withColumn("status",
+        when(col("n_base_dups") > 0, "dropped").otherwise("kept"))
+      .orderBy("new_id")
+  }
+
   /** Incremental near-dup ingest — the BATCH tier of delta-vs-base
     * dedup (st_stream_minhash is the per-micro-batch tier): a new
     * crawl increment is near-dup-checked against the ACCUMULATED
@@ -387,17 +405,9 @@ object QueriesPipeline {
         .unionByName(base.where(col("id") % 7 === 3)
           .select((col("id") + 500000L).as("id"),
             concat_ws(" ", reverse(split(col("text"), " "))).as("text")))
-      val counts = Dedup.minHashPairsAgainst(delta, base, threshold = 0.4,
-          bands = 9, rowsPerBand = 2)
-        .groupBy("delta_id").agg(count(lit(1)).as("n_base_dups"))
-        .withColumnRenamed("delta_id", "new_id")
-      delta.select(col("id").as("new_id"))
-        .join(counts, Seq("new_id"), "left")
-        .select(col("new_id"),
-          coalesce(col("n_base_dups"), lit(0L)).as("n_base_dups"))
-        .withColumn("status",
-          when(col("n_base_dups") > 0, "dropped").otherwise("kept"))
-        .orderBy("new_id")
+      incrementalLedger(delta.select(col("id").as("new_id")),
+        Dedup.minHashPairsAgainst(delta, base, threshold = 0.4,
+          bands = 9, rowsPerBand = 2))
     },
     Some(s"""WITH basedocs AS MATERIALIZED (
       | SELECT doc_id AS id, text FROM documents
@@ -2305,16 +2315,8 @@ object QueriesPipeline {
         .unionByName(withW.where(col("doc_id") % 9 === 0)
           .select((col("doc_id") + m * 2).as("id"),
             hashed(col("doc_id") + m * 3, pert = false)))
-      val counts = Dedup.hammingBandPairsAgainst(delta, base, maxHamming = 6)
-        .groupBy("delta_id").agg(count(lit(1)).as("n_base_dups"))
-        .withColumnRenamed("delta_id", "new_id")
-      delta.select(col("id").as("new_id"))
-        .join(counts, Seq("new_id"), "left")
-        .select(col("new_id"),
-          coalesce(col("n_base_dups"), lit(0L)).as("n_base_dups"))
-        .withColumn("status",
-          when(col("n_base_dups") > 0, "dropped").otherwise("kept"))
-        .orderBy("new_id")
+      incrementalLedger(delta.select(col("id").as("new_id")),
+        Dedup.hammingBandPairsAgainst(delta, base, maxHamming = 6))
     },
     Some("""WITH mx AS MATERIALIZED (SELECT max(doc_id) + 1 AS m FROM documents),
       |corpus AS MATERIALIZED (
@@ -2402,17 +2404,8 @@ object QueriesPipeline {
         .unionByName(withM.where(col("doc_id") % 9 === 0)
           .select((col("doc_id") + mf * 2).as("id"),
             hashed(col("doc_id") + mf * 3, pert = false)))
-      val counts = Dedup
-        .hammingBandPairsAgainst(delta, base, maxHamming = 6, MediaBandGeom)
-        .groupBy("delta_id").agg(count(lit(1)).as("n_base_dups"))
-        .withColumnRenamed("delta_id", "new_id")
-      delta.select(col("id").as("new_id"))
-        .join(counts, Seq("new_id"), "left")
-        .select(col("new_id"),
-          coalesce(col("n_base_dups"), lit(0L)).as("n_base_dups"))
-        .withColumn("status",
-          when(col("n_base_dups") > 0, "dropped").otherwise("kept"))
-        .orderBy("new_id")
+      incrementalLedger(delta.select(col("id").as("new_id")),
+        Dedup.hammingBandPairsAgainst(delta, base, maxHamming = 6, MediaBandGeom))
     },
     Some(s"""WITH mx AS MATERIALIZED (SELECT max(doc_id) + 1 AS mf FROM documents),
       |corpus AS MATERIALIZED (
@@ -2503,18 +2496,9 @@ object QueriesPipeline {
           col("doc_id") + mf, col("doc_id"), pert = true)
         .unionByName(framedOf(withG.where(col("doc_id") % 9 === 0),
           col("doc_id") + mf * 2, col("doc_id") + mf * 3, pert = false))
-      val counts = Dedup
-        .hammingBandPairsFramedAgainst(delta, base, maxHamming = 6,
-          MediaBandGeom)
-        .groupBy("delta_id").agg(count(lit(1)).as("n_base_dups"))
-        .withColumnRenamed("delta_id", "new_id")
-      delta.select(col("id").as("new_id")).distinct()
-        .join(counts, Seq("new_id"), "left")
-        .select(col("new_id"),
-          coalesce(col("n_base_dups"), lit(0L)).as("n_base_dups"))
-        .withColumn("status",
-          when(col("n_base_dups") > 0, "dropped").otherwise("kept"))
-        .orderBy("new_id")
+      incrementalLedger(delta.select(col("id").as("new_id")).distinct(),
+        Dedup.hammingBandPairsFramedAgainst(delta, base, maxHamming = 6,
+          MediaBandGeom))
     },
     Some(s"""WITH mx AS MATERIALIZED (SELECT max(doc_id) + 1 AS mf FROM documents),
       |corpus AS MATERIALIZED (
@@ -2692,20 +2676,20 @@ object QueriesPipeline {
     // sorted parallel arrays: binary-search probes, allocation-free
     val keys = lmRows.map(_._1)
     val cnts = lmRows.map(_._2)
-    val bc = spark.sparkContext.broadcast((keys, cnts))
-    val scoreU = udf((text: String) => {
-      val (ks, cs) = bc.value
-      val n = math.max(text.length - 1, 0)
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        val k = (text.charAt(i).toLong << 16) | text.charAt(i + 1).toLong
-        // every bigram of every doc is in the census by construction
-        sum += cs(java.util.Arrays.binarySearch(ks, k))
-        i += 1
-      }
-      (n.toLong, sum)
-    }).withName("bigram_lm_score")
+    val scoreU = Probe.udf(spark, "bigram_lm_score", (keys, cnts)) {
+      (census, text: String) =>
+        val (ks, cs) = census
+        val n = math.max(text.length - 1, 0)
+        var sum = 0L
+        var i = 0
+        while (i < n) {
+          val k = (text.charAt(i).toLong << 16) | text.charAt(i + 1).toLong
+          // every bigram of every doc is in the census by construction
+          sum += cs(java.util.Arrays.binarySearch(ks, k))
+          i += 1
+        }
+        (n.toLong, sum)
+    }
     dd.select(col("doc_id"), scoreU(col("text")).as("r"))
       .where(col("r._1") > 0)
       .select(col("doc_id"), col("r._1").as("n_bigrams"),
@@ -3337,7 +3321,7 @@ object QueriesPipeline {
     * materializes N·|eval| rows (74M at the sf3 rung) through the
     * round + partial agg; this is the argminDoubleUdf pattern instead —
     * the eval matrix is driver-collected (small by nature — the
-    * benchmark suite) and explicitly broadcast, and ONE tight JVM loop
+    * benchmark suite) and shipped through [[Probe.udf]], and ONE tight JVM loop
     * per corpus vector computes (max_cos, n_hits): one row per vector,
     * no expansion, no agg exchange. Value-identical by construction:
     *  - per-pair cosine is the same left-to-right dot/na/nb fold as
@@ -3366,50 +3350,50 @@ object QueriesPipeline {
       while (p < w.length) { nb += w(p) * w(p); p += 1 }
       nb
     }
-    val bc = spark.sparkContext.broadcast((evs, evNorms))
-    val scoreU = udf((v: Array[Double]) => {
-      val (es, ns) = bc.value
-      var na = 0.0
-      var p = 0
-      while (p < v.length) { na += v(p) * v(p); p += 1 }
-      var maxRaw = Double.NegativeInfinity
-      var nanSeen = false
-      var any = false
-      var hits = 0L
-      var e = 0
-      while (e < es.length) {
-        val w = es(e)
-        if (w.length == v.length) {
-          var dot = 0.0
-          p = 0
-          while (p < v.length) { dot += v(p) * w(p); p += 1 }
-          val denom = math.sqrt(na) * math.sqrt(ns(e))
-          if (denom != 0.0) {
-            val c = dot / denom
-            any = true
-            if (java.lang.Double.isNaN(c)) nanSeen = true
-            else {
-              if (c > maxRaw) maxRaw = c
-              if (c >= 0.99 + 1e-5) hits += 1L
-              else if (c > 0.99 - 1e-5) {
-                val r = java.math.BigDecimal.valueOf(c)
-                  .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-                if (r >= 0.99) hits += 1L
+    val scoreU = Probe.udf(spark, "decon_semantic_score", (evs, evNorms)) {
+      (evalSet, v: Array[Double]) =>
+        val (es, ns) = evalSet
+        var na = 0.0
+        var p = 0
+        while (p < v.length) { na += v(p) * v(p); p += 1 }
+        var maxRaw = Double.NegativeInfinity
+        var nanSeen = false
+        var any = false
+        var hits = 0L
+        var e = 0
+        while (e < es.length) {
+          val w = es(e)
+          if (w.length == v.length) {
+            var dot = 0.0
+            p = 0
+            while (p < v.length) { dot += v(p) * w(p); p += 1 }
+            val denom = math.sqrt(na) * math.sqrt(ns(e))
+            if (denom != 0.0) {
+              val c = dot / denom
+              any = true
+              if (java.lang.Double.isNaN(c)) nanSeen = true
+              else {
+                if (c > maxRaw) maxRaw = c
+                if (c >= 0.99 + 1e-5) hits += 1L
+                else if (c > 0.99 - 1e-5) {
+                  val r = java.math.BigDecimal.valueOf(c)
+                    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+                  if (r >= 0.99) hits += 1L
+                }
               }
             }
           }
+          e += 1
         }
-        e += 1
-      }
-      if (!any) null
-      else {
-        val m = if (nanSeen) Double.NaN
-          else if (java.lang.Double.isInfinite(maxRaw)) maxRaw
-          else java.math.BigDecimal.valueOf(maxRaw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        (m, hits)
-      }
-    }).withName("decon_semantic_score")
+        if (!any) null
+        else {
+          val m = if (nanSeen) Double.NaN
+            else if (java.lang.Double.isInfinite(maxRaw)) maxRaw
+            else java.math.BigDecimal.valueOf(maxRaw)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+          (m, hits)
+        }
+    }
     corpus.select(col("vec_id"), scoreU(col("v")).as("m"))
       .select(col("vec_id"), col("m._1").as("max_cos"), col("m._2").as("n_hits"))
       .where(col("max_cos") >= 0.99)

@@ -129,6 +129,20 @@ object Verify {
     spark
   }
 
+  /** `s` as a quoted JSON string. Escapes backslash, quote and ALL
+    * control chars (< 0x20): a tab or CR in an oracle's SQL, or raw
+    * input bytes echoed by an exception message, would otherwise break
+    * the JSON parse of oracle_sql.json and of Bench's result line. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir). An optional third arg — a regex
     // over query names — is local-iteration tooling only (dump a few
@@ -156,18 +170,6 @@ object Verify {
         Tables.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The dumped oracle map covers every entry whose parquet dump is
     // PRESENT in outDir, plus the entries this run (re)dumped, plus
     // every key the PREVIOUS on-disk oracle_sql.json carried. All
@@ -218,7 +220,7 @@ object Verify {
       .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) ||
         new java.io.File(s"$outDir/$k/_SUCCESS").isFile || priorKeys(k) }
       ++ guardPairs)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

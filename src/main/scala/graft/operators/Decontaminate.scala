@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Probe
 
 /** Eval-set decontamination — the pretraining-pipeline pass that drops
   * (or flags) training documents sharing a long word n-gram with a
@@ -56,25 +57,24 @@ object Decontaminate {
     val evs = evalGrams.select(col("gram")).collect().map(_.getString(0))
     val set = new java.util.HashSet[String](math.max(8, evs.length * 2))
     evs.foreach(set.add)
-    val bc = docs.sparkSession.sparkContext.broadcast(set)
-    val flagU = udf((text: String) => {
-      if (text == null) 0
-      else {
-        val s = bc.value
-        val w = text.split(" ", -1)
-        var found = 0
-        var i = 0
-        val last = w.length - n
-        while (i <= last && found == 0) {
-          val sb = new java.lang.StringBuilder(w(i))
-          var j = 1
-          while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
-          if (s.contains(sb.toString)) found = 1
-          i += 1
+    val flagU = Probe.udf(docs.sparkSession, "contaminated_scan", set) {
+      (s, text: String) =>
+        if (text == null) 0
+        else {
+          val w = text.split(" ", -1)
+          var found = 0
+          var i = 0
+          val last = w.length - n
+          while (i <= last && found == 0) {
+            val sb = new java.lang.StringBuilder(w(i))
+            var j = 1
+            while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
+            if (s.contains(sb.toString)) found = 1
+            i += 1
+          }
+          found
         }
-        found
-      }
-    }).withName("contaminated_scan")
+    }
     docs.select(col(idCol), flagU(col(textCol)).as("contaminated"))
   }
 

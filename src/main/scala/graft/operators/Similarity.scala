@@ -3,8 +3,11 @@ package graft.operators
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import graft.Probe
 import graft.functions.ArrayOps
 
 /** Similarity search over an embedding column (array<float>).
@@ -39,23 +42,22 @@ object Similarity {
   }
 
   /** Nearest-centroid argmin as ONE tight JVM loop per vector over a
-    * driver-collected, explicitly-broadcast k×dim centroid matrix —
-    * the scan-stage E-step shape (r18, found AT the sf30 rung once
-    * k ∝ N landed): the old broadcast-cross-join + partial-agg-argmin
-    * spelling materializes N·k rows of interpreted HOF arithmetic
-    * before its map-side combine — 918M rows at 686k vectors ×
-    * k=1340, measured ~45 min per assign — where this is one row per
-    * vector end to end, no expansion, no exchange, k·dim codegen-free
-    * flops in a while loop. Bit-exact contract preserved: the inner
-    * sum is the same left-to-right fold as [[ArrayOps.l2Sq]] (resp.
-    * the integer fold), and iterating cids ASCENDING with strict <
-    * reproduces `min(struct(d2, cid))`'s lexicographic tie-break.
-    * Centroid state is k·dim values through an explicit broadcast —
-    * the sketch-coordinator pattern, the same driver-state class the
-    * Lloyd training loop already holds. */
-  private def argminDoubleUdf(e: DataFrame,
-      cents: Array[(Long, Array[Double])]) = {
-    val bc = e.sparkSession.sparkContext.broadcast(cents)
+    * driver-collected k×dim centroid matrix ([[centroidTable]]) shipped
+    * through [[graft.Probe.udf]] — the scan-stage E-step shape (r18,
+    * found AT the sf30 rung once k ∝ N landed): the old
+    * broadcast-cross-join + partial-agg-argmin spelling materializes
+    * N·k rows of interpreted HOF arithmetic before its map-side
+    * combine — 918M rows at 686k vectors × k=1340, measured ~45 min
+    * per assign — where this is one row per vector end to end, no
+    * expansion, no exchange, k·dim codegen-free flops in a while loop.
+    * Bit-exact contract preserved: the inner sum is the same
+    * left-to-right fold as [[ArrayOps.l2Sq]] (resp. the integer fold),
+    * and iterating cids ASCENDING with strict < reproduces
+    * `min(struct(d2, cid))`'s lexicographic tie-break. Centroid state
+    * is k·dim values — the sketch-coordinator pattern, the same
+    * driver-state class the Lloyd training loop already holds. */
+  private def argminDoubleUdf(spark: SparkSession,
+      cents: Array[(Long, Array[Double])]) =
     // Array param, not Seq (r19): a Seq[Double] UDF param deserializes
     // as immutable.List — v(i) in the inner loop is an O(i) walk plus
     // per-element boxing, i.e. O(dim²) list traffic per centroid where
@@ -65,8 +67,7 @@ object Similarity {
     // win the strict-< argmin — (bestC, bestD) is bit-identical, and
     // the ascending-cid tie-break is untouched (an equal-distance
     // centroid still loses to the earlier cid either way).
-    udf((v: Array[Double]) => {
-      val cs = bc.value
+    Probe.udf(spark, "argmin_double", cents) { (cs, v: Array[Double]) =>
       var bestC = 0L
       var bestD = Double.PositiveInfinity
       var j = 0
@@ -81,17 +82,14 @@ object Similarity {
         j += 1
       }
       (bestC, bestD)
-    })
-  }
+    }
 
-  private def argminLongUdf(e: DataFrame,
-      cents: Array[(Long, Array[Long])]) = {
-    val bc = e.sparkSession.sparkContext.broadcast(cents)
+  private def argminLongUdf(spark: SparkSession,
+      cents: Array[(Long, Array[Long])]) =
     // Array param + monotone early-exit: see argminDoubleUdf. Integer
     // squares are non-negative and overflow-audited (kmeansLloyd
     // scaladoc), so the partial-sum prefix argument holds exactly.
-    udf((v: Array[Long]) => {
-      val cs = bc.value
+    Probe.udf(spark, "argmin_long", cents) { (cs, v: Array[Long]) =>
       var bestC = 0L
       var bestD = Long.MaxValue
       var j = 0
@@ -106,7 +104,19 @@ object Similarity {
         j += 1
       }
       (bestC, bestD)
-    })
+    }
+
+  /** The driver table the argmin kernels walk: a (cid, cv) centroid
+    * frame collected in ASCENDING cid — the order their strict-< walk
+    * needs for the (d2, cid) tie-break. An empty table would send every
+    * vector to cluster 0 at distance +Inf (one corpus-sized cluster
+    * downstream), so it fails here, naming `caller`. */
+  private def centroidTable[T: ClassTag](centroids: DataFrame,
+      caller: String): Array[(Long, Array[T])] = {
+    val cs = centroids.select(col("cid"), col("cv")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[T](1).toArray).sortBy(_._1)
+    require(cs.nonEmpty, s"$caller: empty centroid table")
+    cs
   }
 
   /** Nearest-centroid assignment — the k-means E-step, and the shape of
@@ -116,9 +126,8 @@ object Similarity {
     * scan-stage loop: one row per vector regardless of K×N. */
   def kmeansAssign(emb: DataFrame, centroids: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"), ArrayOps.asDouble(col("embedding")).as("v"))
-    val cs = centroids.select(col("cid"), col("cv")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    e.select(col("vec_id"), argminDoubleUdf(e, cs)(col("v")).as("m"))
+    val cs = centroidTable[Double](centroids, "kmeansAssign")
+    e.select(col("vec_id"), argminDoubleUdf(e.sparkSession, cs)(col("v")).as("m"))
       .select(col("vec_id"), col("m._1").as("cluster"),
         round(sqrt(col("m._2")), 6).as("dist"))
   }
@@ -139,13 +148,13 @@ object Similarity {
     * loop ([[argminDoubleUdf]]'s long twin — one row per vector, no
     * N·k expansion, r18); the M-step posexplodes members to
     * (cluster, dim, x) where map-side combine collapses to k·dim rows
-    * before ONE exchange, and the k·dim-long state frame is collected
-    * to the driver (the sketch-coordinator pattern — what crosses to
-    * the driver is centroids, never vectors), then re-broadcast as
-    * next round's literal frame, which also keeps lineage flat across
-    * iterations (no growing plan, no checkpoint needed). At 100 TB
-    * the same shape holds: per-iteration cost is two fact scans and
-    * two partial-agg exchanges; k·dim is metadata-sized.
+    * before ONE exchange, and the k·dim-long state is collected to the
+    * driver (the sketch-coordinator pattern — what crosses to the
+    * driver is centroids, never vectors) and handed to the next
+    * round's argmin as its driver table, which also keeps lineage flat
+    * across iterations (no growing plan, no checkpoint needed). At
+    * 100 TB the same shape holds: per-iteration cost is two fact scans
+    * and two partial-agg exchanges; k·dim is metadata-sized.
     *
     * Overflow audit (embeddings testdata, |x| ≤ 0.53, scale 1e6):
     * scaled |v| ≤ 5.3e5, diff² ≤ 1.2e12, d2 ≤ 7.2e13, per-dim member
@@ -155,17 +164,16 @@ object Similarity {
       transform(ArrayOps.asDouble(col("embedding")),
         x => floor(x * lit(scale.toDouble) + lit(0.5)).cast("long")).as("v"))
 
-  private def lloydAssign(e: DataFrame, cents: DataFrame): DataFrame = {
-    // scan-stage argmin over the collected centroid matrix (see
+  private def lloydAssign(e: DataFrame,
+      cents: Array[(Long, Array[Long])]): DataFrame =
+    // scan-stage argmin over the driver centroid table (see
     // argminDoubleUdf's scaladoc) — exact integer arithmetic, so the
     // only determinism concern is the (d2, cid) tie-break, preserved
     // by the ascending-cid strict-< walk
-    val cs = cents.select(col("cid"), col("cv")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
-    e.select(col("vec_id"), col("v"), argminLongUdf(e, cs)(col("v")).as("m"))
+    e.select(col("vec_id"), col("v"),
+        argminLongUdf(e.sparkSession, cents)(col("v")).as("m"))
       .select(col("vec_id"), col("m._1").as("cluster"),
         col("m._2").as("d2"), col("v"))
-  }
 
   /** The Lloyd TRAINING loop alone: returns the final centroid frame
     * (cid, cv: Array[Long] at `scale`) — the handoff [[semDedupWith]]
@@ -174,7 +182,8 @@ object Similarity {
     * bit-exact integer arithmetic and driver-state shape as
     * [[kmeansLloyd]] (k·dim longs — the sketch-coordinator pattern). */
   def kmeansLloydTrain(emb: DataFrame, k: Int, iters: Int,
-      scale: Long = 1000000L): DataFrame =
+      scale: Long = 1000000L): DataFrame = {
+    val spark = emb.sparkSession
     // pin the scaled corpus ONCE (r18 optimization): the train
     // loop below scans it iters+1 times, and without the pin every
     // iteration re-ran the parquet decode + the interpreted per-element
@@ -183,40 +192,41 @@ object Similarity {
     // every run, nothing persists across runs. Routed through
     // Graft.pin (r19, VERDICT r18 #2): local mode still
     // localCheckpoints; off local mode the pin survives executor loss.
-    trainScaled(graft.Graft.pin(lloydScaled(emb, scale)), k, iters)
+    val cents = trainScaled(graft.Graft.pin(lloydScaled(emb, scale)), k, iters)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        cents.toSeq.map { case (c, a) => Row(c, a.toSeq) }, 1),
+      StructType(Seq(StructField("cid", LongType),
+        StructField("cv", ArrayType(LongType)))))
+  }
 
-  private def trainScaled(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+  /** The Lloyd loop over a pinned scaled corpus; returns the final
+    * centroid table in ascending cid, ready for [[lloydAssign]]. */
+  private def trainScaled(e: DataFrame, k: Int,
+      iters: Int): Array[(Long, Array[Long])] = {
     // pinned initial centroids — the k LOWEST vec_ids (rank-based, r18:
     // `vec_id < k` equals this only on a dense id domain and silently
     // under-seeds on the rehearsal fixtures' block-spaced ids once
     // k ∝ N outgrows a block) — k×dim longs driver-side
-    var cents: Map[Long, Array[Long]] = e.orderBy(col("vec_id")).limit(k)
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-    require(cents.size == k, s"k-means rank seeding needs >= $k distinct vec_ids")
-    def centsDF: DataFrame = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cents.toSeq.sortBy(_._1).map { case (c, a) => Row(c, a.toSeq) }, 1),
-      StructType(Seq(StructField("cid", LongType),
-        StructField("cv", ArrayType(LongType)))))
+    var cents = centroidTable[Long](e.orderBy(col("vec_id")).limit(k)
+      .select(col("vec_id").as("cid"), col("v").as("cv")), "k-means seeding")
+    require(cents.length == k, s"k-means rank seeding needs >= $k distinct vec_ids")
     for (_ <- 1 to iters) {
-      val sums = lloydAssign(e, centsDF)
+      val sums = lloydAssign(e, cents)
         .select(col("cluster"), posexplode(col("v")).as(Seq("p", "x")))
         .groupBy("cluster", "p")
         .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
         .collect()
-      val upd = sums.groupBy(_.getLong(0)).map { case (c, rs) =>
-        val dim = cents(c).length
-        val arr = new Array[Long](dim)
-        rs.foreach(r => arr(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
-        c -> arr
+        .groupBy(_.getLong(0))
+      cents = cents.map { case (c, old) =>
+        c -> sums.get(c).fold(old) { rs =>
+          val arr = new Array[Long](old.length)
+          rs.foreach(r => arr(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
+          arr
+        }
       }
-      cents = cents.map { case (c, old) => c -> upd.getOrElse(c, old) }
     }
-    centsDF
+    cents
   }
 
   def kmeansLloyd(emb: DataFrame, k: Int, iters: Int,
@@ -322,10 +332,9 @@ object Similarity {
     // scan-stage argmin over the collected centroid matrix (see
     // argminDoubleUdf): one row per vector, no N·k expansion — the
     // binding cost at rehearsal scale once k ∝ N landed
-    val cs = centroids.select(col("cid"), col("cv")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+    val cs = centroidTable[Double](centroids, "semDedupWith")
     val assigned = e
-      .select(col("vec_id"), col("v"), argminDoubleUdf(e, cs)(col("v")).as("m"))
+      .select(col("vec_id"), col("v"), argminDoubleUdf(spark, cs)(col("v")).as("m"))
       .select(col("vec_id"), col("m._1").as("cluster"), col("m._2").as("d2"),
         col("v"))
     // Array[Double] in the typed tuple (r19): the Seq encoder
@@ -536,11 +545,11 @@ object Similarity {
     * the PQ faithfulness contract, not a loose recall bound.
     *
     * Scale shape: codebook (ksub rows) and distance table (m·ksub
-    * doubles) are driver-built and closure-broadcast; the corpus scan
-    * is ONE pass with no shuffle except the global top-k
-    * (TakeOrderedAndProject). Composes with [[ivfTopK]]'s cell pruning
-    * as classic IVF-PQ: IVF prunes WHICH vectors are scanned, PQ
-    * compresses HOW each is scored. */
+    * doubles) are driver-built and shipped through [[graft.Probe.udf]];
+    * the corpus scan is ONE pass with no shuffle except the global
+    * top-k (TakeOrderedAndProject). Composes with [[ivfTopK]]'s cell
+    * pruning as classic IVF-PQ: IVF prunes WHICH vectors are scanned,
+    * PQ compresses HOW each is scored. */
   def pqTopK(emb: DataFrame, probeId: Long, k: Int,
       m: Int = 8, ksub: Int = 16): DataFrame = {
     val base = emb.select(col("vec_id"), ArrayOps.asDouble(col("embedding")).as("v"))
@@ -554,7 +563,6 @@ object Similarity {
     * code assignment — while the scored rows come from `cand`. */
   private def adcTopK(cbSource: DataFrame, cand: DataFrame, probeId: Long,
       k: Int, m: Int, ksub: Int): DataFrame = {
-    val base = cand
     // ksub-row codebook fetch + 1-row probe fetch (same driver-side
     // contract as ivfTopK's probe): tiny by construction
     val cb: Array[Array[Double]] = cbSource.where(col("vec_id") < ksub)
@@ -575,26 +583,28 @@ object Similarity {
       Array.tabulate(m, ksub)((mi, ci) => sliceD2(pv, cb(ci), mi))
     // JVM loops (not HOF lambdas) for the hot path; left-to-right sums
     // match the oracle's list_sum fold order
-    val adcU = udf((v: Array[Double]) => {
+    val spark = cand.sparkSession
+    val adcU = Probe.udf(spark, "pq_adc_d2", (cb, dt)) { (tbl, v: Array[Double]) =>
+      val (book, adc) = tbl
       var acc = 0.0; var mi = 0
       while (mi < m) {
         var best = 0; var bestD = Double.MaxValue; var ci = 0
         while (ci < ksub) {
-          val s = sliceD2(v, cb(ci), mi)
+          val s = sliceD2(v, book(ci), mi)
           if (s < bestD) { bestD = s; best = ci } // tie → lowest code
           ci += 1
         }
-        acc += dt(mi)(best)
+        acc += adc(mi)(best)
         mi += 1
       }
       acc
-    })
-    val trueU = udf((v: Array[Double]) => {
+    }
+    val trueU = Probe.udf(spark, "pq_true_dist", pv) { (probe, v: Array[Double]) =>
       var s = 0.0; var j = 0
-      while (j < dim && j < v.length) { val dd = v(j) - pv(j); s += dd * dd; j += 1 }
+      while (j < dim && j < v.length) { val dd = v(j) - probe(j); s += dd * dd; j += 1 }
       math.sqrt(s)
-    })
-    base.select(col("vec_id"), adcU(col("v")).as("adc_raw"), trueU(col("v")).as("td"))
+    }
+    cand.select(col("vec_id"), adcU(col("v")).as("adc_raw"), trueU(col("v")).as("td"))
       .orderBy(col("adc_raw"), col("vec_id")).limit(k)
       .select(col("vec_id"), round(sqrt(col("adc_raw")), 6).as("adc_dist"),
         round(col("td"), 6).as("true_dist"))
@@ -611,8 +621,8 @@ object Similarity {
     * assignment, ADC fold — is a pure function an oracle replays
     * bit-for-bit: the faithfulness gate extends to the composition.
     *
-    * Scale shape: cell assignment is one broadcast-expand + partial-agg
-    * argmin exchange (one row per vector); the candidate filter is
+    * Scale shape: cell assignment is the scan-stage argmin loop (one
+    * row per vector, no exchange); the candidate filter is
     * map-side against the driver-picked nProbe cell ids; ADC scans
     * ~nProbe/nLists of the corpus with the driver-built distance
     * table; TakeOrderedAndProject closes. Driver-side state: nLists +
@@ -621,9 +631,8 @@ object Similarity {
       nLists: Int = 16, nProbe: Int = 4, m: Int = 8,
       ksub: Int = 16): DataFrame = {
     val base = emb.select(col("vec_id"), ArrayOps.asDouble(col("embedding")).as("v"))
-    val cents: Array[(Long, Array[Double])] = base.where(col("vec_id") < nLists)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val cents = centroidTable[Double](base.where(col("vec_id") < nLists)
+      .select(col("vec_id").as("cid"), col("v").as("cv")), "ivfPqTopK")
     require(cents.length == nLists, s"coarse cells need vec_ids 0..${nLists - 1}")
     val pv: Array[Double] = base.where(col("vec_id") === probeId)
       .collect().head.getSeq[Double](1).toArray
@@ -645,7 +654,8 @@ object Similarity {
     // strict-< walk reproduces min(struct)'s (d2, cid) tie-break. One
     // row per vector, no expansion, no exchange.
     val assigned = base
-      .select(col("vec_id"), col("v"), argminDoubleUdf(base, cents)(col("v")).as("m"))
+      .select(col("vec_id"), col("v"),
+        argminDoubleUdf(base.sparkSession, cents)(col("v")).as("m"))
       .select(col("vec_id"), col("m._1").as("cell"), col("v"))
     val cand = assigned
       .where(col("cell").isin(probeCells.map(java.lang.Long.valueOf).toSeq: _*))

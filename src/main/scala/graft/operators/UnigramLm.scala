@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Probe
 
 /** Unigram-LM (SentencePiece-style) tokenizer training (Kudo 2018,
   * "Subword Regularization: Improving Neural Network Translation
@@ -95,10 +96,12 @@ object UnigramLm {
 
   /** One E+M round: Viterbi-segment the distinct-word table under
     * `scores`, then re-count pieces weighted by word frequency.
-    * `scores` rides the UDF closure (metadata-sized by the Zipf
-    * argument above). Output: (piece, cnt) for every USED piece. */
+    * `scores` is the [[graft.Probe.udf]] table (metadata-sized by the
+    * Zipf argument above). Output: (piece, cnt) for every USED piece. */
   def emRound(wordFreq: DataFrame, scores: Map[String, Long], t: Long): DataFrame = {
-    val segU = udf((w: String) => segment(w, scores.get, t))
+    val segU = Probe.udf(wordFreq.sparkSession, "ulm_segment", scores) {
+      (sc, w: String) => segment(w, sc.get, t)
+    }
     wordFreq
       .select(explode(segU(col("word"))).as("piece"), col("freq"))
       .groupBy("piece").agg(sum(col("freq")).as("cnt"))
@@ -173,9 +176,10 @@ object UnigramLm {
     * is the CALLER's step ([[trainCensus]] → [[deploy]]) so one
     * trained model serves any number of encode passes. */
   def encode(wordFreq: DataFrame, model: Model): DataFrame = {
-    val segU = udf { (w: String) =>
-      val ps = segment(w, model.scores.get, model.t)
-      (ps.mkString(" "), ps.length.toLong)
+    val segU = Probe.udf(wordFreq.sparkSession, "ulm_encode", model) {
+      (md, w: String) =>
+        val ps = segment(w, md.scores.get, md.t)
+        (ps.mkString(" "), ps.length.toLong)
     }
     wordFreq
       .select(col("word"), col("freq"), segU(col("word")).as("seg"))

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.ArrayOps._
 import java.nio.file.Files
 
 /** S1/P2/P3 on the real SAR input shape: a FIXTURES.md §1 mini fixture
@@ -44,9 +46,34 @@ class IngestSpec extends SparkSpec {
     filled.toSeq shouldBe Seq(39.5, 39.5, 40.25, 40.25)
   }
 
+  /** SURVEY.md §2.3: the reference's feature-engineering stage
+    * (main.py:63-115, main-newInput.py:66-97) as one lazy column
+    * pipeline. A2-A6: derived channels from the two SAR bands
+    * (main.py:65-72). */
+  private def addDerivedBands(df: DataFrame): DataFrame =
+    df.withColumn("band_avg", bandAvg(col("band_1"), col("band_2")))
+      .withColumn("band_absdiff", bandAbsDiff(col("band_1"), col("band_2")))
+      .withColumn("band_max", bandMax(col("band_1"), col("band_2")))
+      .withColumn("band_min", bandMin(col("band_1"), col("band_2")))
+
+  /** A7 + A9/A10 + per-image stats: the scalar feature vector. */
+  private def addScalarFeatures(df: DataFrame): DataFrame =
+    df.withColumn("b1_mean", arrayMean(col("band_1")))
+      .withColumn("b1_std", arrayStd(col("band_1")))
+      .withColumn("b1_max", array_max(col("band_1")))
+      .withColumn("b1_min", array_min(col("band_1")))
+      .withColumn("b2_mean", arrayMean(col("band_2")))
+      .withColumn("b2_std", arrayStd(col("band_2")))
+      .withColumn("b2_max", array_max(col("band_2")))
+      .withColumn("b2_min", array_min(col("band_2")))
+      .withColumn("iso1", arrayMean(isoMask(col("band_1"))))
+      .withColumn("iso2", arrayMean(isoMask(col("band_2"))))
+      .withColumn("size1", sizeFeature(col("band_1"), -5.0))
+      .withColumn("size2", sizeFeature(col("band_2"), -5.0))
+
   test("feature stage: derived bands + scalar features on the fixture") {
-    val df = Features.addScalarFeatures(
-      Features.addDerivedBands(Ingest.coerce(Ingest.readSarJson(spark, fixturePath))))
+    val df = addScalarFeatures(
+      addDerivedBands(Ingest.coerce(Ingest.readSarJson(spark, fixturePath))))
     val r1 = df.where(col("id") === "r1")
       .select("band_avg", "b1_mean", "b1_std", "b1_max", "b1_min").head()
     r1.getSeq[Double](0) shouldBe Seq(2.5, 2.5, 2.5, 2.5)

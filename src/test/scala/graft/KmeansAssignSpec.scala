@@ -39,6 +39,19 @@ class KmeansAssignSpec extends SparkSpec {
     r.toSeq shouldBe Seq(2L)
   }
 
+  test("an empty centroid table fails loudly, naming the caller") {
+    // without the guard every vector lands in cluster 0 at distance
+    // +Inf, and semDedupWith runs one corpus-sized quadratic cluster
+    val vecs = df(Seq((1L, Seq(0.5f, 0.5f)), (2L, Seq(1.0f, 0.0f))))
+    val none = Seq.empty[(Long, Seq[Double])].toDF("cid", "cv")
+    val assign = intercept[IllegalArgumentException](
+      Similarity.kmeansAssign(vecs, none))
+    assign.getMessage should include ("kmeansAssign")
+    val dedup = intercept[IllegalArgumentException](
+      Similarity.semDedupWith(vecs, none, tau = 0.9, Int.MaxValue))
+    dedup.getMessage should include ("semDedupWith")
+  }
+
   test("kmeansLloyd matches a driver-side integer-Lloyd replay (r11)") {
     // independent replay of the exact recurrence: scaled-long vectors,
     // integer argmin with (d2, cid) tie-break, floorDiv centroid means,

@@ -12,13 +12,16 @@ import json
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench_compare import load  # noqa: E402  (one parser for the Bench record)
+
+
 def main():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     rec_path = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.join(root, "target", "bench_last.json")
     label = sys.argv[2] if len(sys.argv) > 2 else f"{os.path.basename(rec_path)} (local close run)"
-    line = open(rec_path).read()
-    rec = json.loads(line[line.index("{"):])
+    rec = load(rec_path)
     plan = rec.get("plan")
     if not plan:
         sys.exit("ERROR: record carries no plan map — use target/bench_last.json, "
