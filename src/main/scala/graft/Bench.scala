@@ -138,11 +138,11 @@ object Bench {
     // The driver captures only the LAST ~2000 output chars (minus sbt's
     // trailing "[success] ..." line), so the printed JSON line must fit
     // that budget or its HEAD — "{"metric":"total","value":… — is cut
-    // and the whole line fails to parse. At 84 queries the 3-decimal
-    // spelling is already at 1956 chars: emit ADAPTIVELY, degrading
-    // per-query precision (3 → 2 → 1 decimals) until the line fits
-    // 1900; the full 3-decimal line always lands in
-    // target/bench_last.json for local tooling (tools/bench_compare.py).
+    // and the whole line fails to parse. The 3-decimal per-query line
+    // is printed only when it fits 1900 chars (small SPARK_GRAFT_ONLY
+    // runs); otherwise [[totalOnly]]. The full 3-decimal line always
+    // lands in target/bench_last.json for local tooling
+    // (tools/bench_compare.py).
     // Locale.ROOT: the default-locale overload renders a comma decimal
     // separator under e.g. LANG=de_DE, corrupting the JSON line AND
     // bench_last.json
@@ -157,8 +157,8 @@ object Bench {
     def passTotal(p: Map[String, (Double, Option[String])]) =
       fmt(p.values.map(_._1).filter(_ >= 0).sum, 3)
     // printed line: errors dict only when non-empty, pass totals only in
-    // the file — every byte spent on always-empty fields narrows the
-    // per-query precision the 1900-char budget can afford
+    // the file — every byte spent on always-empty fields narrows what
+    // the 1900-char budget can carry
     // per-entry deterministic plan metrics (pass-2 sums) — full record
     // only; the stdout line's 1900-char budget can't carry them
     def planJson: String = names.flatMap { n =>
@@ -168,8 +168,8 @@ object Bench {
         s"${jsonString(n)}:{${fields.mkString(",")}}"
       }
     }.mkString("{", ",", "}")
-    def line(dec: Int, full: Boolean): String = {
-      val qs = results.map { case (k, (t, _)) => s"${jsonString(k)}:${fmt(t, dec)}" }
+    def line(full: Boolean): String = {
+      val qs = results.map { case (k, (t, _)) => s"${jsonString(k)}:${fmt(t, 3)}" }
         .mkString("{", ",", "}")
       // ckpt_leak only when nonzero (r16, mirror of Verify's RED row):
       // a leaking entry surfaces in the driver-read record itself, not
@@ -189,12 +189,13 @@ object Bench {
       // overwritten bench_last.json before the copy)
       val out = if (only.isDefined) "bench_only.json" else "bench_last.json"
       java.nio.file.Files.write(dir.resolve(out),
-        line(3, full = true).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        line(full = true).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
-    // Last-resort fallback (r6 defect: at 119 queries even the 1-dp line
-    // was ~2400 chars, so the driver's ~2000-char tail capture cut the
-    // HEAD — including "metric":"total" — and the round lost its
-    // recorded total): when no full per-query spelling fits, print the
+    // Fallback (r6 defect: at 119 queries even a 1-dp line was ~2400
+    // chars, so the ~2000-char tail capture cut the HEAD — including
+    // "metric":"total" — and the round lost its recorded total; the
+    // full 227-entry suite needs ~5.2k chars at 3 dp and ~4.8k at
+    // 1 dp): when the per-query line does not fit, print the
     // total plus only the SLOWEST queries that fit the budget, with an
     // explicit "queries_shown" count so the partial map can never be
     // mistaken (or summed) as the full suite. The full 3-dp detail
@@ -210,8 +211,7 @@ object Bench {
       }
       (40 to 0 by -1).map(lineK).find(_.length <= 1900).getOrElse(lineK(0))
     }
-    println(Seq(3, 2, 1).map(line(_, full = false)).find(_.length <= 1900)
-      .getOrElse(totalOnly))
+    println(Some(line(full = false)).filter(_.length <= 1900).getOrElse(totalOnly))
     spark.stop()
   }
 }

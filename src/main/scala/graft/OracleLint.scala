@@ -228,18 +228,14 @@ object OracleLint {
     // touch (r18 k-∝-N edit) and deleted per the shrink-on-touch rule
     "pl_suffix_dedup" -> "w",
     "sim_ann_ivf" -> "base", "sim_ann_ivf" -> "e",
-    "sim_ann_ivfpq" -> "e", "sim_ann_ivfpq" -> "p", "sim_ann_ivfpq" -> "cand",
-    "sim_ann_ivfpq" -> "cc",
+    "sim_ann_ivfpq" -> "e",
     "sim_ann_lsh" -> "base", "sim_ann_lsh" -> "e",
-    "sim_ann_pq" -> "e", "sim_ann_pq" -> "cb", "sim_ann_pq" -> "p",
-    "sim_ann_recall_audit" -> "e", "sim_ann_recall_audit" -> "p",
-    "sim_ann_recall_audit" -> "truth", "sim_ann_recall_audit" -> "dt",
-    "sim_ann_recall_audit" -> "cb",
+    "sim_ann_pq" -> "e",
+    "sim_ann_recall_audit" -> "e", "sim_ann_recall_audit" -> "truth",
     "sim_kmeans_assign" -> "e",
     "sim_rrf_fusion" -> "e", "sim_rrf_fusion" -> "tok",
     "sim_topk" -> "e",
     "st_stream_minhash" -> "basedocs", "st_stream_minhash" -> "sh",
-    "st_stream_mm_dedup" -> "vals", "st_stream_mm_dedup" -> "ph",
     "st_stream_session_exec" -> "e",
     "st_stream_topk" -> "c",
     "tx_bigram_lm" -> "bg",

@@ -113,14 +113,12 @@ object QueriesPipeline {
       | SELECT doc_id + 100000 AS id, text || ' qq17' AS text
       | FROM basedocs WHERE doc_id % 11 = 0),
       |sh AS (
-      | SELECT id, list_distinct(list_transform(range(1, len(w) - 1),
-      |     i -> array_to_string(w[i:i+2], ' '))) AS s
+      | SELECT id, ${Dedup.sqlShingles3("w")} AS s
       | FROM (SELECT id, string_split(text, ' ') AS w FROM corpus)
       | WHERE len(w) >= 3),
       |p AS (
       | SELECT a.id AS id_a, b.id AS id_b,
-      |   1.0 - (CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |          len(list_distinct(list_concat(a.s, b.s)))) AS dist
+      |   1.0 - ${Dedup.sqlJaccard("a.s", "b.s")} AS dist
       | FROM sh a JOIN sh b ON a.id < b.id)
       |SELECT id_a, id_b, round(dist, 6) AS jaccard_dist
       |FROM p WHERE dist <= 0.4 ORDER BY id_a, id_b""".stripMargin
@@ -169,18 +167,16 @@ object QueriesPipeline {
         // identical quotient, minus the interpreted-HOF cost
         round(Dedup.jaccardText(col("text"), concat(col("text"), lit(" qq17"))), 6).as("jac"))
       .orderBy("doc_id"),
-    Some("""WITH v AS (
+    Some(s"""WITH v AS (
       | SELECT doc_id, string_split(text, ' ') AS w,
       |        string_split(text || ' qq17', ' ') AS wv
       | FROM documents WHERE doc_id % 11 = 0),
       |sh AS (SELECT doc_id,
-      | list_distinct(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))) AS sa,
-      | list_distinct(list_transform(range(1, len(wv) - 1), i -> array_to_string(wv[i:i+2], ' '))) AS sb
+      | ${Dedup.sqlShingles3("w")} AS sa,
+      | ${Dedup.sqlShingles3("wv")} AS sb
       | FROM v)
       |SELECT doc_id,
-      | round(coalesce(
-      |   CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(list_distinct(list_concat(sa, sb))),
-      |   0.0), 6) AS jac
+      | round(${Dedup.sqlJaccard("sa", "sb")}, 6) AS jac
       |FROM sh ORDER BY doc_id""".stripMargin))
 
   /** Asymmetric shingle containment beside [[ddNgramJaccard]]'s
@@ -213,22 +209,20 @@ object QueriesPipeline {
         round(col("st._3").cast("double") /
           (col("st._1") + col("st._2") - col("st._3")), 6).as("jac"))
       .orderBy("doc_id"),
-    Some("""WITH v AS (
+    Some(s"""WITH v AS (
       | SELECT doc_id, string_split(text, ' ') AS w,
       |        string_split(text || ' qq17 qq18 qq19', ' ') AS wv
       | FROM documents WHERE doc_id % 11 = 0),
       |sh AS (SELECT doc_id,
-      | list_distinct(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))) AS sa,
-      | list_distinct(list_transform(range(1, len(wv) - 1), i -> array_to_string(wv[i:i+2], ' '))) AS sb
+      | ${Dedup.sqlShingles3("w")} AS sa,
+      | ${Dedup.sqlShingles3("wv")} AS sb
       | FROM v)
       |SELECT doc_id,
       | round(CASE WHEN len(sa) = 0 THEN 0.0 ELSE
       |   CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sa) END, 6) AS cont_fwd,
       | round(CASE WHEN len(sb) = 0 THEN 0.0 ELSE
       |   CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(sb) END, 6) AS cont_rev,
-      | round(coalesce(
-      |   CAST(len(list_intersect(sa, sb)) AS DOUBLE) / len(list_distinct(list_concat(sa, sb))),
-      |   0.0), 6) AS jac
+      | round(${Dedup.sqlJaccard("sa", "sb")}, 6) AS jac
       |FROM sh ORDER BY doc_id""".stripMargin))
 
   /** MinHash+LSH near-dup pairs, RECALL-PROOF: the oracle is the
@@ -316,14 +310,10 @@ object QueriesPipeline {
       |       j -> ' zq' || id || 'x' || j), ''), ' ') AS wv
       | FROM basedocs WHERE id % 3 = 0),
       |sh AS (SELECT id,
-      | list_distinct(list_transform(range(1, len(w) - 1),
-      |   i -> array_to_string(w[i:i+2], ' '))) AS sa,
-      | list_distinct(list_transform(range(1, len(wv) - 1),
-      |   i -> array_to_string(wv[i:i+2], ' '))) AS sb
+      | ${Dedup.sqlShingles3("w")} AS sa,
+      | ${Dedup.sqlShingles3("wv")} AS sb
       | FROM pl),
-      |d AS (SELECT id, 1.0 - coalesce(
-      |   CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
-      |   len(list_distinct(list_concat(sa, sb))), 0.0) AS dist
+      |d AS (SELECT id, 1.0 - ${Dedup.sqlJaccard("sa", "sb")} AS dist
       | FROM sh)
       |SELECT CAST(count(*) AS BIGINT) AS n_planted,
       | CAST(sum(CASE WHEN dist <= 0.4 THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
@@ -422,19 +412,16 @@ object QueriesPipeline {
       |   array_to_string(list_reverse(string_split(text, ' ')), ' ') AS text
       | FROM basedocs WHERE id % 7 = 3),
       |shb AS MATERIALIZED (
-      | SELECT id, list_distinct(list_transform(range(1, len(w) - 1),
-      |     i -> array_to_string(w[i:i+2], ' '))) AS s
+      | SELECT id, ${Dedup.sqlShingles3("w")} AS s
       | FROM (SELECT id, string_split(text, ' ') AS w FROM basedocs)
       | WHERE len(w) >= 3),
       |shd AS MATERIALIZED (
-      | SELECT new_id, list_distinct(list_transform(range(1, len(w) - 1),
-      |     i -> array_to_string(w[i:i+2], ' '))) AS s
+      | SELECT new_id, ${Dedup.sqlShingles3("w")} AS s
       | FROM (SELECT new_id, string_split(text, ' ') AS w FROM delta)
       | WHERE len(w) >= 3),
       |cnt AS (
       | SELECT d.new_id, count(*) AS n FROM shd d JOIN shb b
-      |   ON 1.0 - (CAST(len(list_intersect(d.s, b.s)) AS DOUBLE) /
-      |             len(list_distinct(list_concat(d.s, b.s)))) <= 0.4
+      |   ON 1.0 - ${Dedup.sqlJaccard("d.s", "b.s")} <= 0.4
       | GROUP BY d.new_id)
       |SELECT new_id, CAST(coalesce(n, 0) AS BIGINT) AS n_base_dups,
       | CASE WHEN coalesce(n, 0) > 0 THEN 'dropped' ELSE 'kept' END AS status
@@ -558,14 +545,11 @@ object QueriesPipeline {
         |  string_split(x.text, ' ') AS wa, string_split(y.text, ' ') AS wb
         | FROM blk x JOIN blk y ON x.b = y.b AND x.id < y.id),
         |sh AS (SELECT ia, ib,
-        |  list_distinct(list_transform(range(1, len(wa) - 1),
-        |    i -> array_to_string(wa[i:i+2], ' '))) AS sa,
-        |  list_distinct(list_transform(range(1, len(wb) - 1),
-        |    i -> array_to_string(wb[i:i+2], ' '))) AS sb
+        |  ${Dedup.sqlShingles3("wa")} AS sa,
+        |  ${Dedup.sqlShingles3("wb")} AS sb
         | FROM cand),
         |edges AS (SELECT ia AS u, ib AS v FROM sh
-        | WHERE coalesce(CAST(len(list_intersect(sa, sb)) AS DOUBLE)
-        |   / len(list_distinct(list_concat(sa, sb))), 0.0) >= 0.55),
+        | WHERE ${Dedup.sqlJaccard("sa", "sb")} >= 0.55),
         |bid AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
         |reach(u, r) AS (
         | SELECT u, v FROM bid
@@ -1111,17 +1095,22 @@ object QueriesPipeline {
           transform(col("embedding"), x => x + col("j") * lit(0.002)).as("embedding"))
       Similarity.annTopK(base.unionByName(planted), probeId = 0, k = 10)
     },
-    Some("""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    Some(plantedTop10Sql(200000, "0.002")))
+
+  /** Oracle of the planted-neighbor ANN entries: the exact L2 top-10
+    * around probe vec 0 over the embeddings plus 12 planted neighbors
+    * (ids idBase + j, the probe + j·off on every component). */
+  private def plantedTop10Sql(idBase: Int, off: String): String =
+    s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |planted AS (
-      | SELECT 200000 + t.j AS vec_id, list_transform(p.v, x -> x + t.j * 0.002) AS v
+      | SELECT $idBase + t.j AS vec_id, list_transform(p.v, x -> x + t.j * $off) AS v
       | FROM base p, range(1, 13) t(j) WHERE p.vec_id = 0),
       |e AS (SELECT vec_id, v FROM base UNION ALL SELECT vec_id, v FROM planted),
       |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
       |c AS (SELECT vec_id,
-      |  round(sqrt(list_sum(list_transform(list_zip(v, pv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2])))), 6) AS dist
+      |  round(sqrt(${Similarity.sqlL2Sq("v", "pv")}), 6) AS dist
       | FROM e, p)
-      |SELECT vec_id, dist FROM c ORDER BY dist, vec_id LIMIT 10""".stripMargin))
+      |SELECT vec_id, dist FROM c ORDER BY dist, vec_id LIMIT 10""".stripMargin
 
   /** ANN via IVF (k-means inverted file, nProbe cell search) — the
     * data-adaptive counterpart to sim_ann_lsh's RP buckets; oracle =
@@ -1144,17 +1133,7 @@ object QueriesPipeline {
           transform(col("embedding"), x => x + col("j") * lit(0.0025)).as("embedding"))
       Similarity.ivfTopK(base.unionByName(planted), probeId = 0, k = 10)
     },
-    Some("""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |planted AS (
-      | SELECT 300000 + t.j AS vec_id, list_transform(p.v, x -> x + t.j * 0.0025) AS v
-      | FROM base p, range(1, 13) t(j) WHERE p.vec_id = 0),
-      |e AS (SELECT vec_id, v FROM base UNION ALL SELECT vec_id, v FROM planted),
-      |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
-      |c AS (SELECT vec_id,
-      |  round(sqrt(list_sum(list_transform(list_zip(v, pv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2])))), 6) AS dist
-      | FROM e, p)
-      |SELECT vec_id, dist FROM c ORDER BY dist, vec_id LIMIT 10""".stripMargin))
+    Some(plantedTop10Sql(300000, "0.0025")))
 
   /** ANN via Product Quantization + ADC ([[Similarity.pqTopK]]) — the
     * compressed-domain scale path next to sim_ann_lsh (bucket pruning)
@@ -1168,33 +1147,33 @@ object QueriesPipeline {
     * quantizer, not a loose quality bound. */
   val simAnnPq: Entry = Entry("sim_ann_pq",
     (s, d) => Similarity.pqTopK(emb(s, d), probeId = 0, k = 10),
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
-      |cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |sd AS (SELECT e.vec_id, t.m, cb.cid,
-      |  list_sum(list_transform(
-      |    list_zip(e.v[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, range(0, 8) t(m), cb),
-      |asg AS (SELECT vec_id, m, cid,
-      |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid) AS rn
-      | FROM sd),
-      |dt AS (SELECT cb.cid, t.m,
-      |  list_sum(list_transform(
-      |    list_zip(p.pv[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS pd2
-      | FROM p, range(0, 8) t(m), cb),
-      |adc AS (SELECT a.vec_id, list_sum(list(dt.pd2 ORDER BY a.m)) AS adc_raw
-      | FROM asg a JOIN dt ON a.m = dt.m AND a.cid = dt.cid
-      | WHERE a.rn = 1 GROUP BY a.vec_id),
-      |td AS (SELECT e.vec_id,
-      |  sqrt(list_sum(list_transform(list_zip(e.v, p.pv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2])))) AS td
-      | FROM e, p)
+    Some(pqTop10Sql(ivf = false)))
+
+  /** The pinned-quantizer ANN oracles' inputs: decoded vectors `e`, the
+    * probe `p` (vec 0), the codebook and coarse centroids `cb` (the 16
+    * lowest vec_ids), and with `ivf` the IVF-pruned vectors `ce`. */
+  private def pqOracleInputs(ivf: Boolean): String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |p AS MATERIALIZED (SELECT v AS pv FROM e WHERE vec_id = 0),
+      |cb AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16)""".stripMargin +
+      (if (!ivf) "" else s""",
+      |ce AS MATERIALIZED (SELECT vec_id, v FROM e
+      | JOIN ${Similarity.sqlIvfCandidates("e", "p", "cb")} cand USING (vec_id))""".stripMargin)
+
+  /** Oracle of sim_ann_pq (`ivf` false) and sim_ann_ivfpq: the replayed
+    * ADC top-10 of every vector, or of the IVF-pruned `ce`, with each
+    * one's exact L2 to the probe. */
+  private def pqTop10Sql(ivf: Boolean): String = {
+    val scored = if (ivf) "ce" else "e"
+    s"""${pqOracleInputs(ivf)},
+      |${Similarity.sqlPqAdc("", scored, "p", "cb")},
+      |td AS (SELECT e.vec_id, sqrt(${Similarity.sqlL2Sq("e.v", "p.pv")}) AS td
+      | FROM $scored e, p)
       |SELECT a.vec_id, round(sqrt(a.adc_raw), 6) AS adc_dist,
       | round(t.td, 6) AS true_dist
       |FROM adc a JOIN td t ON a.vec_id = t.vec_id
-      |ORDER BY a.adc_raw, a.vec_id LIMIT 10""".stripMargin))
+      |ORDER BY a.adc_raw, a.vec_id LIMIT 10""".stripMargin
+  }
 
   /** Classic IVF-PQ ([[Similarity.ivfPqTopK]]): the composition the
     * two standalone ANN entries document — IVF cell pruning (PINNED
@@ -1206,48 +1185,7 @@ object QueriesPipeline {
     * not a recall bound. */
   val simAnnIvfPq: Entry = Entry("sim_ann_ivfpq",
     (s, d) => Similarity.ivfPqTopK(emb(s, d), probeId = 0, k = 10),
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
-      |cc AS (SELECT vec_id AS ccid, v AS ccv FROM e WHERE vec_id < 16),
-      |cd AS (SELECT e.vec_id, cc.ccid,
-      |  list_sum(list_transform(list_zip(e.v, cc.ccv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, cc),
-      |ca AS (SELECT vec_id, ccid AS cell,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, ccid) AS rn
-      | FROM cd),
-      |pcd AS (SELECT cc.ccid,
-      |  list_sum(list_transform(list_zip(p.pv, cc.ccv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM p, cc),
-      |pc AS (SELECT ccid FROM pcd ORDER BY d2, ccid LIMIT 4),
-      |cand AS (SELECT ca.vec_id FROM ca JOIN pc ON ca.cell = pc.ccid
-      | WHERE ca.rn = 1),
-      |cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |sd AS (SELECT e.vec_id, t.m, cb.cid,
-      |  list_sum(list_transform(
-      |    list_zip(e.v[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e JOIN cand USING (vec_id), range(0, 8) t(m), cb),
-      |asg AS (SELECT vec_id, m, cid,
-      |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid) AS rn
-      | FROM sd),
-      |dt AS (SELECT cb.cid, t.m,
-      |  list_sum(list_transform(
-      |    list_zip(p.pv[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS pd2
-      | FROM p, range(0, 8) t(m), cb),
-      |adc AS (SELECT a.vec_id, list_sum(list(dt.pd2 ORDER BY a.m)) AS adc_raw
-      | FROM asg a JOIN dt ON a.m = dt.m AND a.cid = dt.cid
-      | WHERE a.rn = 1 GROUP BY a.vec_id),
-      |td AS (SELECT e.vec_id,
-      |  sqrt(list_sum(list_transform(list_zip(e.v, p.pv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2])))) AS td
-      | FROM e JOIN cand USING (vec_id), p)
-      |SELECT a.vec_id, round(sqrt(a.adc_raw), 6) AS adc_dist,
-      | round(t.td, 6) AS true_dist
-      |FROM adc a JOIN td t ON a.vec_id = t.vec_id
-      |ORDER BY a.adc_raw, a.vec_id LIMIT 10""".stripMargin))
+    Some(pqTop10Sql(ivf = true)))
 
   /** Recall@10 observability for the four ANN paths (VERDICT r12 #3,
     * the [[Queries.jFuzzyCapAudit]] companion-audit pattern): each
@@ -1314,55 +1252,13 @@ object QueriesPipeline {
           Similarity.pqTopK(base, probeId = 0, k = 10), truth10(base)))
         .orderBy("method")
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
+    Some(s"""${pqOracleInputs(ivf = true)},
       |truth AS (SELECT vec_id FROM (
-      |  SELECT vec_id, round(sqrt(list_sum(list_transform(list_zip(v, pv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2])))), 6) AS dist
+      |  SELECT vec_id, round(sqrt(${Similarity.sqlL2Sq("v", "pv")}), 6) AS dist
       |  FROM e, p) ORDER BY dist, vec_id LIMIT 10),
-      |cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |sd AS (SELECT e.vec_id, t.m, cb.cid,
-      |  list_sum(list_transform(
-      |    list_zip(e.v[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, range(0, 8) t(m), cb),
-      |asg AS (SELECT vec_id, m, cid,
-      |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid) AS rn
-      | FROM sd),
-      |dt AS (SELECT cb.cid, t.m,
-      |  list_sum(list_transform(
-      |    list_zip(p.pv[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS pd2
-      | FROM p, range(0, 8) t(m), cb),
-      |adc AS (SELECT a.vec_id, list_sum(list(dt.pd2 ORDER BY a.m)) AS adc_raw
-      | FROM asg a JOIN dt ON a.m = dt.m AND a.cid = dt.cid
-      | WHERE a.rn = 1 GROUP BY a.vec_id),
+      |${Similarity.sqlPqAdc("", "e", "p", "cb")},
       |pq10 AS (SELECT vec_id FROM adc ORDER BY adc_raw, vec_id LIMIT 10),
-      |cd AS (SELECT e.vec_id, cb.cid AS ccid,
-      |  list_sum(list_transform(list_zip(e.v, cb.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, cb),
-      |ca AS (SELECT vec_id, ccid AS cell,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, ccid) AS rn
-      | FROM cd),
-      |pcd AS (SELECT cb.cid AS ccid,
-      |  list_sum(list_transform(list_zip(p.pv, cb.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM p, cb),
-      |pc AS (SELECT ccid FROM pcd ORDER BY d2, ccid LIMIT 4),
-      |cand AS (SELECT ca.vec_id FROM ca JOIN pc ON ca.cell = pc.ccid
-      | WHERE ca.rn = 1),
-      |sd2 AS (SELECT e.vec_id, t.m, cb.cid,
-      |  list_sum(list_transform(
-      |    list_zip(e.v[t.m*8+1 : t.m*8+8], cb.cv[t.m*8+1 : t.m*8+8]),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e JOIN cand USING (vec_id), range(0, 8) t(m), cb),
-      |asg2 AS (SELECT vec_id, m, cid,
-      |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid) AS rn
-      | FROM sd2),
-      |adc2 AS (SELECT a.vec_id, list_sum(list(dt.pd2 ORDER BY a.m)) AS adc_raw
-      | FROM asg2 a JOIN dt ON a.m = dt.m AND a.cid = dt.cid
-      | WHERE a.rn = 1 GROUP BY a.vec_id),
+      |${Similarity.sqlPqAdc("2", "ce", "p", "cb")},
       |ivfpq10 AS (SELECT vec_id FROM adc2 ORDER BY adc_raw, vec_id LIMIT 10)
       |SELECT * FROM (
       | SELECT 'ivf' AS method, CAST(10 AS BIGINT) AS recall10
@@ -1390,15 +1286,10 @@ object QueriesPipeline {
           graft.functions.ArrayOps.asDouble(col("embedding")).as("cv"))
       Similarity.kmeansAssign(e, centroids).orderBy("vec_id")
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |d AS (SELECT e.vec_id, c.cid,
-      |  list_sum(list_transform(list_zip(e.v, c.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, c),
-      |r AS (SELECT vec_id, cid, d2,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn FROM d)
-      |SELECT vec_id, cid AS cluster, round(sqrt(d2), 6) AS dist
+      |r AS ${Similarity.sqlNearest("e", "c")}
+      |SELECT vec_id, cluster, round(sqrt(d2), 6) AS dist
       |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin))
 
   /** One Lloyd iteration as oracle CTEs (E-step distances + argmin,
@@ -1415,13 +1306,7 @@ object QueriesPipeline {
     * (pl_semdedup_trained IO-error abort at sf10). Materializing each
     * round's frames pins one execution; results are identical. */
   private def lloydIterSql(i: Int): String =
-    s"""d$i AS MATERIALIZED (SELECT e.vec_id, c.cid,
-       |  list_sum(list_transform(list_zip(e.v, c.cv),
-       |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-       | FROM e, c${i - 1} c),
-       |a$i AS MATERIALIZED (SELECT vec_id, cid AS cluster, d2,
-       |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-       | FROM d$i),
+    s"""a$i AS MATERIALIZED ${Similarity.sqlNearest("e", s"c${i - 1}")},
        |s$i AS MATERIALIZED (SELECT a.cluster, t.p,
        |  CAST(sum(e.v[t.p + 1]) AS BIGINT) AS s, count(*) AS n
        | FROM a$i a JOIN e ON a.vec_id = e.vec_id AND a.rn = 1,
@@ -1434,6 +1319,14 @@ object QueriesPipeline {
        | FROM c${i - 1} c LEFT JOIN u$i u USING (cid))""".stripMargin
 
   private val LloydIters = 2
+
+  /** The Lloyd training CTEs over scaled vectors `e`: the k ∝ N
+    * lowest-vec_id seeds `c0`, then [[LloydIters]] rounds of
+    * [[lloydIterSql]] ending in the trained centroids `c<LloydIters>`. */
+  private def lloydTrainSql: String =
+    s"""c0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id
+      | LIMIT (SELECT greatest(8, (count(*) + 511) // 512) FROM e)),
+      |${(1 to LloydIters).map(lloydIterSql).mkString(",\n")}""".stripMargin
 
   /** Full Lloyd k-means training ([[Similarity.kmeansLloyd]]) — the
     * iterative M-step the sim_kmeans_assign E-step was missing
@@ -1460,16 +1353,8 @@ object QueriesPipeline {
       |  list_transform(CAST(embedding AS DOUBLE[]),
       |    x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS v
       | FROM embeddings),
-      |c0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id
-      | LIMIT (SELECT greatest(8, (count(*) + 511) // 512) FROM e)),
-      |${(1 to LloydIters).map(lloydIterSql).mkString(",\n")},
-      |df AS (SELECT e.vec_id, c.cid,
-      |  list_sum(list_transform(list_zip(e.v, c.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, c$LloydIters c),
-      |af AS (SELECT vec_id, cid AS cluster, d2,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      | FROM df)
+      |$lloydTrainSql,
+      |af AS ${Similarity.sqlNearest("e", s"c$LloydIters")}
       |SELECT vec_id, cluster,
       | round(sqrt(CAST(d2 AS DOUBLE)) / 1000000, 6) AS dist
       |FROM af WHERE rn = 1 ORDER BY vec_id""".stripMargin))
@@ -1548,7 +1433,7 @@ object QueriesPipeline {
       Similarity.semDedup(corpus, k = Similarity.clustersFor(corpus.count()),
         tau = 0.9).orderBy("vec_id")
     },
-    Some("""WITH base AS MATERIALIZED (SELECT vec_id,
+    Some(s"""WITH base AS MATERIALIZED (SELECT vec_id,
       |  CAST(embedding AS DOUBLE[]) AS v
       | FROM embeddings),
       |e AS MATERIALIZED (SELECT vec_id, v FROM base
@@ -1558,23 +1443,24 @@ object QueriesPipeline {
       | FROM base WHERE vec_id % 7 = 0),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id
       | LIMIT (SELECT greatest(8, (count(*) + 511) // 512) FROM e)),
-      |d AS (SELECT e.vec_id, c.cid, e.v,
-      |  list_sum(list_transform(list_zip(e.v, c.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM e, c),
-      |a AS (SELECT vec_id, cid AS cluster, d2, v,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      | FROM d),
-      |m AS MATERIALIZED (SELECT vec_id, cluster, d2, v,
-      |  row_number() OVER (PARTITION BY cluster ORDER BY d2 DESC, vec_id) AS pr
-      | FROM a WHERE rn = 1),
+      |${semDedupOracleTail("e", "c")}""".stripMargin))
+
+  /** SemDeDup's replay over vectors `vecs`(vec_id, v) and centroids
+    * `cents`(cid, cv): the argmin assignment, the d2-descending
+    * keep-priority rank per cluster, and the upper-triangular 6-dp
+    * cosine cut at 0.9 — the final SELECT of both pl_semdedup oracles. */
+  private def semDedupOracleTail(vecs: String, cents: String): String =
+    s"""a AS ${Similarity.sqlNearest(vecs, cents)},
+      |m AS MATERIALIZED (SELECT a.vec_id, a.cluster, a.d2, e.v,
+      |  row_number() OVER (PARTITION BY a.cluster ORDER BY a.d2 DESC, a.vec_id) AS pr
+      | FROM a JOIN $vecs e ON a.vec_id = e.vec_id WHERE a.rn = 1),
       |rm AS (SELECT DISTINCT hi.vec_id
       | FROM m lo JOIN m hi ON lo.cluster = hi.cluster AND lo.pr < hi.pr
       | WHERE round(list_cosine_similarity(lo.v, hi.v), 6) >= 0.9)
       |SELECT m.vec_id, m.cluster, round(sqrt(m.d2), 6) AS dist,
       | rm.vec_id IS NULL AS kept
       |FROM m LEFT JOIN rm ON m.vec_id = rm.vec_id
-      |ORDER BY m.vec_id""".stripMargin))
+      |ORDER BY m.vec_id""".stripMargin
 
   /** SemDeDup fed by TRAINED centroids — the composed
     * `sim_kmeans_lloyd → pl_semdedup` handoff (VERDICT r12 #5): the
@@ -1616,29 +1502,11 @@ object QueriesPipeline {
       |e AS MATERIALIZED (SELECT vec_id,
       |  list_transform(v, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS v
       | FROM ed),
-      |c0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id
-      | LIMIT (SELECT greatest(8, (count(*) + 511) // 512) FROM e)),
-      |${(1 to LloydIters).map(lloydIterSql).mkString(",\n")},
+      |$lloydTrainSql,
       |cd AS (SELECT cid,
       |  list_transform(cv, x -> CAST(x AS DOUBLE) / 1000000) AS cv
       | FROM c$LloydIters),
-      |d AS (SELECT ed.vec_id, cd.cid, ed.v,
-      |  list_sum(list_transform(list_zip(ed.v, cd.cv),
-      |    s -> (s[1] - s[2]) * (s[1] - s[2]))) AS d2
-      | FROM ed, cd),
-      |a AS (SELECT vec_id, cid AS cluster, d2, v,
-      |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      | FROM d),
-      |m AS MATERIALIZED (SELECT vec_id, cluster, d2, v,
-      |  row_number() OVER (PARTITION BY cluster ORDER BY d2 DESC, vec_id) AS pr
-      | FROM a WHERE rn = 1),
-      |rm AS (SELECT DISTINCT hi.vec_id
-      | FROM m lo JOIN m hi ON lo.cluster = hi.cluster AND lo.pr < hi.pr
-      | WHERE round(list_cosine_similarity(lo.v, hi.v), 6) >= 0.9)
-      |SELECT m.vec_id, m.cluster, round(sqrt(m.d2), 6) AS dist,
-      | rm.vec_id IS NULL AS kept
-      |FROM m LEFT JOIN rm ON m.vec_id = rm.vec_id
-      |ORDER BY m.vec_id""".stripMargin))
+      |${semDedupOracleTail("ed", "cd")}""".stripMargin))
 
   /** Hard-negative mining for contrastive training (the DPR/SimCSE
     * data-prep step): for each probe in a bounded suite, the k
@@ -2055,36 +1923,13 @@ object QueriesPipeline {
       Dedup.hammingBandPairs(hashed, maxHamming = 6)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH corpus AS (
+    Some(s"""WITH corpus AS (
       | SELECT doc_id AS id, doc_id AS src, FALSE AS pert FROM documents
       | UNION ALL
       | SELECT doc_id + 100000, doc_id, TRUE FROM documents WHERE doc_id % 11 = 0),
       |g AS (SELECT id, src, pert, CAST(16 + src % 8 AS BIGINT) AS w FROM corpus),
-      |s AS (SELECT id, src, pert, w, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p
-      | FROM g, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, w, y, x, p,
-      |   (src * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, w, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, w, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, w, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS MATERIALIZED (SELECT id, y, x,
-      |   CASE WHEN pert AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.y = n.y AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS (SELECT id, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id),
-      |bands AS MATERIALIZED (SELECT id, ph, t.b, (ph >> (b * 16)) & 65535 AS k
-      | FROM ph, range(0, 4) t(b)),
+      |${MultiModal.sqlDHash("g")},
+      |${Dedup.bandSqlCte("ph")},
       |cand AS (SELECT DISTINCT a.id AS id_a, a.ph AS pa, c.id AS id_b, c.ph AS pb
       | FROM bands a JOIN bands c ON a.b = c.b AND a.k = c.k AND a.id < c.id)
       |SELECT id_a, id_b, CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
@@ -2156,35 +2001,8 @@ object QueriesPipeline {
       |  WHERE doc_id % 11 = 0),
       |g AS (SELECT id, src, pert, CAST(16 + src % 8 AS BIGINT) AS w,
       |   CAST(2 + src % 3 AS BIGINT) AS nf FROM corpus),
-      |fr AS (SELECT id, src, pert, w, nf, CAST(t0.f AS BIGINT) AS f
-      | FROM g, range(0, 4) t0(f) WHERE t0.f < nf),
-      |s AS (SELECT id, pert, w, nf, f, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p,
-      |   src * 131 + f * 997 + 1 AS seed
-      | FROM fr, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, w, nf, f, y, x, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, w, nf, f, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, w, nf, f, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, w, nf, f, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS MATERIALIZED (SELECT id, nf, f, y, x,
-      |   CASE WHEN pert AND f = 0 AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.nf, a.f, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.f = n.f AND a.y = n.y AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS MATERIALIZED (SELECT id, nf, f, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id, nf, f),
-      |bands AS MATERIALIZED (SELECT id, nf, f, ph, t.b,
-      |   ${Dedup.bandSqlKey("ph")} AS k
-      | FROM ph, ${Dedup.bandSqlValues(MediaBandGeom)}),
+      |${MultiModal.sqlDHash("g", framed = true)},
+      |${Dedup.bandSqlCte("ph", Seq("nf", "f"), MediaBandGeom)},
       |cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
       | FROM bands a JOIN bands c ON a.f = c.f AND a.b = c.b AND a.k = c.k
       |   AND a.id < c.id AND a.nf = c.nf),
@@ -2230,36 +2048,13 @@ object QueriesPipeline {
       Dedup.hammingBandPairs(hashed, maxHamming = 6)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH corpus AS (
+    Some(s"""WITH corpus AS (
       | SELECT doc_id AS id, doc_id AS src, FALSE AS pert FROM documents
       | UNION ALL
       | SELECT doc_id + 200000, doc_id, TRUE FROM documents WHERE doc_id % 13 = 0),
-      |g AS (SELECT id, src, pert, CAST(4 + src % 3 AS BIGINT) AS m,
-      |   src * 37 + 5 AS seed FROM corpus),
-      |sm AS (SELECT id, pert, m, seed, t1.w, t1.w * m + t2.j AS p
-      | FROM g, range(0, 65) t1(w), range(0, 6) t2(j) WHERE t2.j < m),
-      |v0 AS (SELECT id, pert, w, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM sm),
-      |v1 AS (SELECT id, pert, w, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, w, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, w, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 - 128 AS s0 FROM v2),
-      |vals AS (SELECT id, w,
-      |   CASE WHEN pert AND w = 0 THEN s0 + 64 ELSE s0 END AS s FROM v3),
-      |en AS MATERIALIZED (SELECT id, w, CAST(sum(s * s) AS BIGINT) AS e
-      | FROM vals GROUP BY 1, 2),
-      |bits AS (SELECT a.id, a.w AS x,
-      |   CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
-      | FROM en a JOIN en n ON a.id = n.id AND n.w = a.w + 1
-      | WHERE a.w < 64),
-      |ph AS (SELECT id, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << x END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id),
-      |bands AS MATERIALIZED (SELECT id, ph, t.b, (ph >> (b * 16)) & 65535 AS k
-      | FROM ph, range(0, 4) t(b)),
+      |g AS (SELECT id, src, pert, CAST(4 + src % 3 AS BIGINT) AS m FROM corpus),
+      |${MultiModal.sqlEnergyHash("g")},
+      |${Dedup.bandSqlCte("ph")},
       |cand AS (SELECT DISTINCT a.id AS id_a, a.ph AS pa, c.id AS id_b, c.ph AS pb
       | FROM bands a JOIN bands c ON a.b = c.b AND a.k = c.k AND a.id < c.id)
       |SELECT id_a, id_b, CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
@@ -2318,7 +2113,7 @@ object QueriesPipeline {
       incrementalLedger(delta.select(col("id").as("new_id")),
         Dedup.hammingBandPairsAgainst(delta, base, maxHamming = 6))
     },
-    Some("""WITH mx AS MATERIALIZED (SELECT max(doc_id) + 1 AS m FROM documents),
+    Some(s"""WITH mx AS MATERIALIZED (SELECT max(doc_id) + 1 AS m FROM documents),
       |corpus AS MATERIALIZED (
       | SELECT doc_id AS id, doc_id AS src, doc_id AS wsrc, FALSE AS pert,
       |        0 AS side FROM documents
@@ -2330,32 +2125,8 @@ object QueriesPipeline {
       |  FROM documents, mx WHERE doc_id % 9 = 0),
       |g AS (SELECT id, src, pert, side, CAST(16 + wsrc % 8 AS BIGINT) AS w
       | FROM corpus),
-      |s AS (SELECT id, pert, side, w, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p, src AS seed
-      | FROM g, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, side, w, y, x, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, side, w, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, side, w, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, side, w, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS MATERIALIZED (SELECT id, side, y, x,
-      |   CASE WHEN pert AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.side, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.y = n.y AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS (SELECT id, side, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id, side),
-      |bands AS MATERIALIZED (SELECT id, side, ph, t.b,
-      |   (ph >> (b * 16)) & 65535 AS k
-      | FROM ph, range(0, 4) t(b)),
+      |${MultiModal.sqlDHash("g", carry = Seq("side"))},
+      |${Dedup.bandSqlCte("ph", Seq("side"))},
       |cand AS (SELECT DISTINCT d.id AS new_id, b.id AS base_id,
       |   d.ph AS pd, b.ph AS pb
       | FROM bands d JOIN bands b ON d.b = b.b AND d.k = b.k
@@ -2417,34 +2188,10 @@ object QueriesPipeline {
       | UNION ALL
       | SELECT doc_id + 2 * mf, doc_id + 3 * mf, doc_id, FALSE, 1
       |  FROM documents, mx WHERE doc_id % 9 = 0),
-      |g AS (SELECT id, src, pert, side, CAST(4 + wsrc % 3 AS BIGINT) AS m,
-      |   src * 37 + 5 AS seed FROM corpus),
-      |sm AS (SELECT id, pert, side, m, seed, t1.w, t1.w * m + t2.j AS p
-      | FROM g, range(0, 65) t1(w), range(0, 6) t2(j) WHERE t2.j < m),
-      |v0 AS (SELECT id, pert, side, w, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM sm),
-      |v1 AS (SELECT id, pert, side, w, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, side, w, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, side, w, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 - 128 AS s0 FROM v2),
-      |vals AS (SELECT id, side, w,
-      |   CASE WHEN pert AND w = 0 THEN s0 + 64 ELSE s0 END AS s FROM v3),
-      |en AS MATERIALIZED (SELECT id, side, w, CAST(sum(s * s) AS BIGINT) AS e
-      | FROM vals GROUP BY 1, 2, 3),
-      |bits AS (SELECT a.id, a.side, a.w AS x,
-      |   CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
-      | FROM en a JOIN en n ON a.id = n.id AND a.side = n.side
-      |   AND n.w = a.w + 1
-      | WHERE a.w < 64),
-      |ph AS (SELECT id, side, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << x END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id, side),
-      |bands AS MATERIALIZED (SELECT id, side, ph, t.b,
-      |   ${Dedup.bandSqlKey("ph")} AS k
-      | FROM ph, ${Dedup.bandSqlValues(MediaBandGeom)}),
+      |g AS (SELECT id, src, pert, side, CAST(4 + wsrc % 3 AS BIGINT) AS m
+      | FROM corpus),
+      |${MultiModal.sqlEnergyHash("g", carry = Seq("side"))},
+      |${Dedup.bandSqlCte("ph", Seq("side"), MediaBandGeom)},
       |cand AS (SELECT DISTINCT d.id AS new_id, b.id AS base_id,
       |   d.ph AS pd, b.ph AS pb
       | FROM bands d JOIN bands b ON d.b = b.b AND d.k = b.k
@@ -2512,37 +2259,8 @@ object QueriesPipeline {
       |  FROM documents, mx WHERE doc_id % 9 = 0),
       |g AS (SELECT id, src, pert, side, CAST(16 + wsrc % 8 AS BIGINT) AS w,
       |   CAST(2 + wsrc % 3 AS BIGINT) AS nf FROM corpus),
-      |fr AS (SELECT id, src, pert, side, w, nf, CAST(t0.f AS BIGINT) AS f
-      | FROM g, range(0, 4) t0(f) WHERE t0.f < nf),
-      |s AS (SELECT id, pert, side, w, nf, f, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p,
-      |   src * 131 + f * 997 + 1 AS seed
-      | FROM fr, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, side, w, nf, f, y, x, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, side, w, nf, f, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, side, w, nf, f, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, side, w, nf, f, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS MATERIALIZED (SELECT id, side, nf, f, y, x,
-      |   CASE WHEN pert AND f = 0 AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.side, a.nf, a.f, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.side = n.side AND a.f = n.f AND a.y = n.y
-      |   AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS MATERIALIZED (SELECT id, side, nf, f,
-      |   CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id, side, nf, f),
-      |bands AS MATERIALIZED (SELECT id, side, nf, f, ph, t.b,
-      |   ${Dedup.bandSqlKey("ph")} AS k
-      | FROM ph, ${Dedup.bandSqlValues(MediaBandGeom)}),
+      |${MultiModal.sqlDHash("g", carry = Seq("side"), framed = true)},
+      |${Dedup.bandSqlCte("ph", Seq("side", "nf", "f"), MediaBandGeom)},
       |cand AS (SELECT DISTINCT d.id AS new_id, b.id AS base_id
       | FROM bands d JOIN bands b ON d.f = b.f AND d.b = b.b AND d.k = b.k
       |   AND d.nf = b.nf

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.{Dedup, MultiModal}
 import graft.streaming.StreamingOps
 import Queries.Entry
 import Tables._
@@ -870,7 +871,6 @@ object QueriesStreaming {
   val stStreamMmDedup: Entry = Entry("st_stream_mm_dedup",
     (outer, d) => {
       val s = sizedStreamSession(outer, 4)
-      import graft.operators.MultiModal
       val stage = mmDedupStage(outer, d)
       val out = stagedBatches(s, stage)
         .select(col("id"), MultiModal.dHash64Udf(MultiModal.encodeBmpMixedUdf(
@@ -888,29 +888,7 @@ object QueriesStreaming {
       |  WHERE doc_id % 7 = 0 AND doc_id % 11 <> 0),
       |g AS (SELECT id, src, pert, bt, CAST(16 + src % 8 AS BIGINT) AS w
       | FROM corpus),
-      |s AS (SELECT id, pert, bt, w, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p, src AS seed
-      | FROM g, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS (SELECT id, pert, bt, y, x,
-      |   CASE WHEN pert AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.pert, a.bt, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.y = n.y AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS (SELECT id, pert, bt, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY 1, 2, 3),
+      |${MultiModal.sqlDHash("g", carry = Seq("bt"))},
       |orig AS (SELECT id AS src, ph FROM ph WHERE bt = 0)
       |SELECT p.id, p.ph FROM ph p
       |WHERE p.bt = 0
@@ -954,7 +932,6 @@ object QueriesStreaming {
   val mmDedupEndToEnd: Entry = Entry("mm_dedup_end_to_end",
     (outer, d) => {
       val s = sizedStreamSession(outer, 4)
-      import graft.operators.{Dedup, MultiModal}
       val stage = mmDedupStage(outer, d)
       val admitted = stagedBatches(s, stage)
         .select(col("id"), MultiModal.dHash64Udf(MultiModal.encodeBmpMixedUdf(
@@ -989,36 +966,13 @@ object QueriesStreaming {
       |  WHERE doc_id % 7 = 0 AND doc_id % 11 <> 0),
       |g AS (SELECT id, src, pert, bt, CAST(16 + src % 8 AS BIGINT) AS w
       | FROM corpus),
-      |s AS (SELECT id, pert, bt, w, t1.y, t2.x,
-      |   ((y * w) // 8) * w + ((x * w) // 9) AS p, src AS seed
-      | FROM g, range(0, 8) t1(y), range(0, 9) t2(x)),
-      |v0 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM s),
-      |v1 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (t1 * 2654435761) % 2147483648 AS t2 FROM v0),
-      |v2 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM v1),
-      |v3 AS (SELECT id, pert, bt, w, y, x, p,
-      |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM v2),
-      |vals AS MATERIALIZED (SELECT id, pert, bt, y, x,
-      |   CASE WHEN pert AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
-      |        THEN (vv + 128) % 256 ELSE vv END AS val FROM v3),
-      |bits AS (SELECT a.id, a.bt, a.y, a.x,
-      |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-      | FROM vals a JOIN vals n
-      |   ON a.id = n.id AND a.y = n.y AND n.x = a.x + 1
-      | WHERE a.x < 8),
-      |ph AS MATERIALIZED (SELECT id, bt, CAST(sum(CASE WHEN bit = 1 THEN
-      |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
-      |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
-      | FROM bits GROUP BY id, bt),
+      |${MultiModal.sqlDHash("g", carry = Seq("bt"))},
       |surv AS MATERIALIZED (
       | SELECT p.id, p.ph FROM ph p WHERE p.bt = 0
       | UNION ALL
       | SELECT p.id, p.ph FROM ph p WHERE p.bt = 1
       |   AND NOT EXISTS (SELECT 1 FROM ph o WHERE o.bt = 0 AND o.ph = p.ph)),
-      |bands AS MATERIALIZED (SELECT id, ph, t.b, (ph >> (b * 16)) & 65535 AS k
-      | FROM surv, range(0, 4) t(b)),
+      |${Dedup.bandSqlCte("surv")},
       |cand AS (SELECT DISTINCT a.id AS id_a, a.ph AS pa, c.id AS id_b, c.ph AS pb
       | FROM bands a JOIN bands c ON a.b = c.b AND a.k = c.k AND a.id < c.id),
       |nd AS (SELECT id_b AS id, min(id_a) AS nd_canon FROM cand

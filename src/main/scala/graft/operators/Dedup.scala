@@ -95,6 +95,21 @@ object Dedup {
     }
   }
 
+  /** DuckDB spelling of [[shingleSet]] over a word-list expression `w`
+    * (a `string_split(text, ' ')`): the distinct word 3-shingles —
+    * DuckDB slices are 1-based and inclusive, so `w[i:i+2]` is three
+    * words — and the empty list below 3 words. One spelling for every
+    * oracle that replays the shingle kernel. */
+  def sqlShingles3(w: String): String =
+    s"list_distinct(list_transform(range(1, len($w) - 1), i -> array_to_string($w[i:i+2], ' ')))"
+
+  /** DuckDB spelling of [[jaccardSim]] over two shingle lists:
+    * |A∩B| / |A∪B| as one double division of integer set sizes, and 0
+    * for two empty sets. */
+  def sqlJaccard(a: String, b: String): String =
+    s"coalesce(CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
+      s"len(list_distinct(list_concat($a, $b))), 0.0)"
+
   /** n minhashes of a shingle set. One base hash per shingle, then n
     * cheap avalanche mixes — the standard trick. A UDF rather than
     * aggregate/zip_with builtins: higher-order-function lambdas
@@ -412,8 +427,10 @@ object Dedup {
   }
 
   /** The legacy 4×16 single-block geometry (B=4, k=3) — the default
-    * everywhere; its table keys equal [[simHashBand]] exactly, so the
-    * shipped oracles' `(ph >> 16b) & 65535` replay is unchanged.
+    * everywhere; its table keys equal [[simHashBand]] exactly. The
+    * fixed-band media oracles replay it through [[bandSqlCte]], whose
+    * [[bandSqlValues]] rows for this geometry are the single-block
+    * bands `(ph >> 16b) & 65535` (pinned in BandGeometrySpec).
     * Right up to ~65k items; larger corpora size up via
     * [[geometryFor]]. */
   val Geometry4x16: BandGeometry = BandGeometry(Seq(16, 16, 16, 16), 3)
@@ -491,6 +508,15 @@ object Dedup {
   def bandSqlKey(ph: String): String =
     s"((($ph >> t.o0) & t.m0) * t.f0 + (($ph >> t.o1) & t.m1) * t.f1" +
       s" + (($ph >> t.o2) & t.m2) * t.f2)"
+
+  /** The media oracles' band rows: CTE `bands`(id, keys…, ph, b, k),
+    * one row per fingerprint of `from`(id, keys…, ph) and table of
+    * `g` — the SQL twin of [[hammingBandPairs]]' blocking keys. */
+  def bandSqlCte(from: String, keys: Seq[String] = Nil,
+      g: BandGeometry = Geometry4x16): String =
+    s"""bands AS MATERIALIZED (SELECT id, ${keys.map(_ + ", ").mkString}ph, t.b,
+       |   ${bandSqlKey("ph")} AS k
+       | FROM $from, ${bandSqlValues(g)})""".stripMargin
 
   /** Candidate pairs sharing at least one 16-bit band, verified by
     * hamming distance (bit_count of XOR) ≤ maxHamming. The band join is

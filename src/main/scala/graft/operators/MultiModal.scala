@@ -103,7 +103,9 @@ object MultiModal {
     * without overflow (DuckDB errors on 64-bit wrap, so a full-width
     * multiply mix would not be oracle-spellable). Measured on the
     * sf0.1 corpus: max band-bucket size 7, zero non-planted pairs
-    * within Hamming 6. */
+    * within Hamming 6. The oracles replay it through one SQL spelling,
+    * [[sqlPxMix]], inside [[sqlDHash]] (images, video frames) and
+    * [[sqlEnergyHash]] (audio). */
   @inline private[graft] def pxMix(docId: Long, p: Long): Int = {
     val t1 = (docId * 7919L + p * 104729L + 12345L) % 2097152L
     val t2 = (t1 * 2654435761L) % 2147483648L
@@ -578,4 +580,95 @@ object MultiModal {
   val encodeWavMixedUdf = udf((docId: Long, winLen: Int, perturb: Boolean) =>
     encodeWavMixed(docId, winLen, perturb))
   val wavEnergyHash64Udf = udf((b: Array[Byte]) => wavEnergyHash64(b))
+
+  // ------------------------------------- DuckDB replays for the oracles
+  // Each generator states its kernel's integer arithmetic in its own
+  // SQL literals — it reads none of the constants above, so an oracle
+  // built from it stays an independent check of the Scala kernel.
+
+  /** DuckDB replay of [[pxMix]]: CTEs `mix0`…`mix2` and `mix` over
+    * `from`, whose rows carry `seed` and `p`; `mix` keeps `cols` and
+    * adds `vv` = pxMix(seed, p). Every intermediate stays under 2^62,
+    * so DuckDB BIGINT arithmetic never overflows. */
+  private def sqlPxMix(from: String, cols: Seq[String]): String = {
+    val c = cols.mkString(", ")
+    s"""mix0 AS (SELECT $c,
+       |   (seed * 7919 + p * 104729 + 12345) % 2097152 AS t1 FROM $from),
+       |mix1 AS (SELECT $c, (t1 * 2654435761) % 2147483648 AS t2 FROM mix0),
+       |mix2 AS (SELECT $c,
+       |   (xor(t2, t2 // 32768) * 1597334677) % 2147483648 AS t4 FROM mix1),
+       |mix AS (SELECT $c,
+       |   (xor(t4, t4 // 65536) // 512) % 256 AS vv FROM mix2)""".stripMargin
+  }
+
+  /** DuckDB replay of the image fingerprint
+    * `dHash64(decode(encodeBmpMixed(src, w, w, pert)))`, or with
+    * `framed` of the video fingerprints
+    * `decodeY4mFrameHashes(encodeY4mMixed(src, w, w, nf, pert))`.
+    * `corpus` rows carry (id, src, pert, w), the `carry` columns, and
+    * `nf` (≤ 4 frames) when framed. Emits CTEs ending in
+    * `ph`(id, carry…, [nf, f,] ph): one 64-bit hash per image, or per
+    * frame f. The chain: the 8×9 sample grid, pxMix pixels (frame
+    * seeds src·131 + f·997 + 1), the planted +128 pixel (frame 0
+    * only), threshold bits, and the 64-bit pack (bit 63 via the signed
+    * literal: DuckDB errors on 1 << 63). */
+  private[graft] def sqlDHash(corpus: String, carry: Seq[String] = Nil,
+      framed: Boolean = false): String = {
+    val keys = carry ++ (if (framed) Seq("nf", "f") else Nil)
+    val k = keys.map(_ + ", ").mkString
+    val (from, seed, pert) =
+      if (framed) ("fr", "src * 131 + f * 997 + 1", "pert AND f = 0")
+      else (corpus, "src", "pert")
+    val frames =
+      if (framed) s"""fr AS (SELECT c.*, CAST(t0.f AS BIGINT) AS f
+         | FROM $corpus c, range(0, 4) t0(f) WHERE t0.f < c.nf),
+         |""".stripMargin
+      else ""
+    s"""${frames}px AS (SELECT id, pert, w, ${k}t1.y, t2.x,
+       |   ((y * w) // 8) * w + ((x * w) // 9) AS p, $seed AS seed
+       | FROM $from, range(0, 8) t1(y), range(0, 9) t2(x)),
+       |${sqlPxMix("px", Seq("id", "pert", "w") ++ keys ++ Seq("y", "x", "p"))},
+       |vals AS MATERIALIZED (SELECT id, ${k}y, x,
+       |   CASE WHEN $pert AND p = ((3 * w) // 8) * w + ((4 * w) // 9)
+       |        THEN (vv + 128) % 256 ELSE vv END AS val FROM mix),
+       |bits AS (SELECT a.id, ${keys.map("a." + _ + ", ").mkString}a.y, a.x,
+       |   CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
+       | FROM vals a JOIN vals n
+       |   ON a.id = n.id${if (framed) " AND a.f = n.f" else ""} AND a.y = n.y
+       |   AND n.x = a.x + 1
+       | WHERE a.x < 8),
+       |ph AS MATERIALIZED (SELECT id, ${k}CAST(sum(CASE WHEN bit = 1 THEN
+       |   (CASE WHEN y * 8 + x = 63 THEN -9223372036854775808
+       |         ELSE 1::BIGINT << (y * 8 + x) END) ELSE 0 END) AS BIGINT) AS ph
+       | FROM bits GROUP BY ${("id" +: keys).mkString(", ")})""".stripMargin
+  }
+
+  /** DuckDB replay of the audio fingerprint
+    * `wavEnergyHash64(encodeWavMixed(src, m, pert))`. `corpus` rows
+    * carry (id, src, pert, m) and the `carry` columns. Emits CTEs
+    * ending in `ph`(id, carry…, ph): 65 windows of m pxMix samples
+    * (seed src·37 + 5, recentred by −128; the planted copy adds +64 to
+    * window 0), exact BIGINT window energies Σs², bit x = E(x+1) >
+    * E(x), and the 64-bit pack. */
+  private[graft] def sqlEnergyHash(corpus: String, carry: Seq[String] = Nil): String = {
+    val k = carry.map(_ + ", ").mkString
+    val grp = ("id" +: carry).mkString(", ")
+    s"""px AS (SELECT id, pert, ${k}t1.w, t1.w * m + t2.j AS p,
+       |   src * 37 + 5 AS seed
+       | FROM $corpus, range(0, 65) t1(w), range(0, 6) t2(j) WHERE t2.j < m),
+       |${sqlPxMix("px", Seq("id", "pert") ++ carry ++ Seq("w", "p"))},
+       |en AS MATERIALIZED (SELECT $grp, w, CAST(sum(s * s) AS BIGINT) AS e
+       | FROM (SELECT id, ${k}w,
+       |   CASE WHEN pert AND w = 0 THEN vv - 128 + 64 ELSE vv - 128 END AS s
+       |   FROM mix)
+       | GROUP BY $grp, w),
+       |bits AS (SELECT a.id, ${carry.map("a." + _ + ", ").mkString}a.w AS x,
+       |   CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
+       | FROM en a JOIN en n ON a.id = n.id AND n.w = a.w + 1
+       | WHERE a.w < 64),
+       |ph AS MATERIALIZED (SELECT $grp, CAST(sum(CASE WHEN bit = 1 THEN
+       |   (CASE WHEN x = 63 THEN -9223372036854775808
+       |         ELSE 1::BIGINT << x END) ELSE 0 END) AS BIGINT) AS ph
+       | FROM bits GROUP BY $grp)""".stripMargin
+  }
 }

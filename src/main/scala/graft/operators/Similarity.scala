@@ -723,4 +723,56 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(l2(col("va"), col("vb")), 6).as("l2_dist"))
       .where(col("l2_dist") <= maxL2)
   }
+
+  // ------------------------------------- DuckDB replays for the oracles
+  // Each generator states its kernel's arithmetic in its own SQL
+  // literals — it reads none of the defaults above, so an oracle built
+  // from it stays an independent check of the Scala kernel.
+
+  /** Squared L2 of two list expressions as a left-to-right fold —
+    * DuckDB's `list_sum` adds in list order, the same order as the
+    * kernels' (x − y)² loops, so the doubles are bit-identical. */
+  def sqlL2Sq(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), s -> (s[1] - s[2]) * (s[1] - s[2])))"
+
+  /** DuckDB replay of nearest-centroid assignment ([[kmeansAssign]],
+    * the Lloyd E-step, [[ivfPqTopK]]'s coarse cells): a subquery of
+    * (vec_id, cluster, d2, rn) over every (vector, centroid) pair of
+    * `vecs`(vec_id, v) × `cents`(cid, cv); rn = 1 marks the argmin
+    * under the (d2, cid) total order. */
+  def sqlNearest(vecs: String, cents: String): String =
+    s"""(SELECT vec_id, cid AS cluster, d2,
+       |  row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+       | FROM (SELECT e.vec_id, c.cid, ${sqlL2Sq("e.v", "c.cv")} AS d2
+       |  FROM $vecs e, $cents c))""".stripMargin
+
+  /** DuckDB replay of [[ivfPqTopK]]'s coarse-cell prune: a subquery of
+    * the vec_ids of `vecs` whose nearest centroid of `cents` is one of
+    * the 4 centroids nearest the probe `probe`(pv). */
+  def sqlIvfCandidates(vecs: String, probe: String, cents: String): String =
+    s"""(SELECT a.vec_id FROM ${sqlNearest(vecs, cents)} a
+       | JOIN (SELECT c.cid FROM $probe p, $cents c
+       |   ORDER BY ${sqlL2Sq("p.pv", "c.cv")}, c.cid LIMIT 4) pc
+       |   ON a.cluster = pc.cid
+       | WHERE a.rn = 1)""".stripMargin
+
+  /** DuckDB replay of [[adcTopK]]'s scoring: CTEs ending in
+    * `adc<sfx>`(vec_id, adc_raw). Each vector of `vecs`(vec_id, v) is
+    * coded per 8-dim subspace (8 of them) to its (d2, cid)-nearest
+    * entry of `codebook`(cid, cv), and scored by the subspace-ordered
+    * sum of the probe↔code squared distances from `probe`(pv). */
+  def sqlPqAdc(sfx: String, vecs: String, probe: String, codebook: String): String = {
+    def sub(l: String) = s"$l[t.m*8+1 : t.m*8+8]"
+    s"""asg$sfx AS (SELECT vec_id, m, cid,
+       |  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid) AS rn
+       | FROM (SELECT e.vec_id, t.m, cb.cid,
+       |   ${sqlL2Sq(sub("e.v"), sub("cb.cv"))} AS d2
+       |  FROM $vecs e, range(0, 8) t(m), $codebook cb)),
+       |dt$sfx AS (SELECT cb.cid, t.m,
+       |  ${sqlL2Sq(sub("p.pv"), sub("cb.cv"))} AS pd2
+       | FROM $probe p, range(0, 8) t(m), $codebook cb),
+       |adc$sfx AS (SELECT a.vec_id, list_sum(list(dt.pd2 ORDER BY a.m)) AS adc_raw
+       | FROM asg$sfx a JOIN dt$sfx dt ON a.m = dt.m AND a.cid = dt.cid
+       | WHERE a.rn = 1 GROUP BY a.vec_id)""".stripMargin
+  }
 }

@@ -113,6 +113,13 @@ class BandGeometrySpec extends AnyFunSuite {
     assert(sql.endsWith("t(b, o0, m0, f0, o1, m1, f1, o2, m2, f2)"))
     assert(sql.count(_ == '(') == 2 + g.nTables) // VALUES + rows + t(cols)
     assert(Dedup.bandSqlKey("ph").contains("(ph >> t.o0) & t.m0"))
+    // the 4×16 rows ARE the single-block bands (ph >> 16b) & 65535:
+    // one unit-factor slot per table, the other two masked to 0
+    val rows4x16 = "\\((\\d+(?:, \\d+)*)\\)".r
+      .findAllMatchIn(Dedup.bandSqlValues(Dedup.Geometry4x16))
+      .map(_.group(1).split(", ").map(_.toLong).toSeq).toSeq
+    assert(rows4x16 == (0 until 4).map(b =>
+      Seq[Long](b, 16L * b, 65535, 1, 0, 0, 0, 0, 0, 0)))
     intercept[IllegalArgumentException] {
       Dedup.bandSqlValues(Dedup.geometryFor(1L << 40)) // B=8: 5-block keys
     }

@@ -11,6 +11,7 @@ reported up front as [FAIL-miss] and counted into the combined fail
 tally — they belong to no shard), runs one verify_local per shard
 concurrently, streams
 their logs to <outDir>_shard<i>.log, and prints the combined tally.
+The shards' per-entry timings are merged into <outDir>/verify_times.json.
 Resource bounds per shard via the verify_local envs (defaults here:
 memory_limit = 80GB/nShards, threads = 24/nShards, shared temp dir) —
 the r15 lesson: unbounded concurrent spills can fill the disk and
@@ -115,13 +116,20 @@ def main():
              sf_dir, sd], stdout=log, stderr=subprocess.STDOUT, env=env), sd))
         print(f"shard{i}: {len(names)} entries -> {sd}.log")
     ok, fail = 0, len(missing)
+    times = {}
     for p, sd in procs:
         p.wait()
+        try:
+            times.update(json.load(open(os.path.join(sd, "verify_times.json"))))
+        except (OSError, ValueError):
+            pass  # shard died before writing it; its log says why
         txt = open(f"{sd}.log").read()
         ok += len(re.findall(r"\[OK[^\]]*\]", txt))
         fail += len(re.findall(r"\[FAIL", txt))
         if p.returncode != 0:
             print(f"WARNING: {sd} exited {p.returncode} (DuckDB abort? check its log)")
+    with open(os.path.join(out_dir, "verify_times.json"), "w") as f:
+        json.dump(dict(sorted(times.items())), f, indent=1)
     print(f"== combined: {ok} ok, {fail} fail "
           f"across {len(dirs) + len(missing)} entries"
           + (f" ({len(missing)} FAIL-miss: oracle with no dump)" if missing else ""))

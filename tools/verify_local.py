@@ -9,6 +9,14 @@ ints/strings, bitwise for floats — the strictest plausible driver compare).
 
 Usage: python3 tools/verify_local.py <sfDir> <outDir>
 
+Timing: <outDir>/verify_times.json maps each compared entry to its
+wall seconds in three parts — fetch_s (reading the Spark dump: row
+count, rows or digest), oracle_s (running the oracle SQL in DuckDB and
+fetching its rows or digest; 0 when an identical oracle's result is
+reused) and canon_s (canonicalizing and comparing both row sets).
+tools/shard_compare.py merges its shards' timing files into the same
+<outDir>/verify_times.json.
+
 Giant-result fast path (r16, ADVICE #1): the python tuple canon is
 O(rows) RAM and wall — a 45M-row result is a multi-hour single-threaded
 compare holding ~20 GB. For results past VERIFY_FASTPATH_ROWS
@@ -32,7 +40,7 @@ also runs at. Self-test: tools/fastpath_selftest.py proves tally
 parity vs the python path on a full gate dump plus planted-mismatch
 trips.
 """
-import json, math, sys, glob, os
+import json, math, sys, glob, os, time
 import duckdb
 
 # ---------------------------------------------------------------- fast path
@@ -128,11 +136,16 @@ def _describe(con, src_sql):
     return [(r[0], r[1]) for r in
             con.execute(f"DESCRIBE ({src_sql})").fetchall()]
 
-def _fast_compare(con, name, spark_src, sql, memo, uses):
+def _fast_compare(con, name, spark_src, sql, memo, uses, times=None):
     """Digest compare for a giant result. Returns True (OK) / False
     (FAIL, already printed) / None (not eligible or errored -> caller
-    falls back to the python tuple compare)."""
+    falls back to the python tuple compare). Adds the spark-side and
+    oracle-side digest seconds to times["fetch_s"] / times["oracle_s"]
+    when a times dict is given."""
+    if times is None:
+        times = {"fetch_s": 0.0, "oracle_s": 0.0}
     try:
+        t0 = time.perf_counter()
         gct = _describe(con, spark_src)
         if _digest_exprs(gct) is None:
             print(f"  [fastpath ] {name}: unsupported spark column type -> python compare")
@@ -147,12 +160,15 @@ def _fast_compare(con, name, spark_src, sql, memo, uses):
             uses[sql] -= 1
             return False
         dg = _digest(con, spark_src, gct)
+        t1 = time.perf_counter()
+        times["fetch_s"] += t1 - t0
         if sql in memo:
             de = memo[sql]
         else:
             de = _digest(con, sql, ect)
             if uses[sql] > 1:
                 memo[sql] = de
+        times["oracle_s"] += time.perf_counter() - t1
         uses[sql] -= 1
         if sql in memo and uses[sql] <= 0:
             del memo[sql]
@@ -238,6 +254,7 @@ def main():
     sql_uses = Counter(v for k, v in oracle.items() if k in dumped_names)
     oracle_memo = {}
     digest_memo = {}
+    entry_times = {}
     fast_rows = int(os.environ.get("VERIFY_FASTPATH_ROWS", "1000000"))
     refuse_rows = int(os.environ.get("VERIFY_REFUSE_ROWS", "1000000"))
     for qdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
@@ -245,14 +262,17 @@ def main():
         if not os.path.isdir(qdir):
             continue
         spark_src = f"SELECT * FROM read_parquet('{qdir}/*.parquet')"
+        times = entry_times[name] = {"fetch_s": 0.0, "oracle_s": 0.0, "canon_s": 0.0}
+        t0 = time.perf_counter()
         nrows = con.execute(f"SELECT count(*) FROM ({spark_src})").fetchone()[0]
+        times["fetch_s"] += time.perf_counter() - t0
         if name not in oracle:
             print(f"  [rows-only] {name}: {nrows} rows")
             n_noracle += 1
             continue
         if nrows >= fast_rows:
             res = _fast_compare(con, name, spark_src, oracle[name],
-                                digest_memo, sql_uses)
+                                digest_memo, sql_uses, times)
             if res is not None:
                 if res:
                     n_ok += 1
@@ -276,9 +296,12 @@ def main():
                 sql_uses[oracle[name]] -= 1
                 n_fail += 1
                 continue
+        t0 = time.perf_counter()
         got = con.execute(spark_src)
         gcols = [d[0] for d in got.description]
         grows = got.fetchall()
+        t1 = time.perf_counter()
+        times["fetch_s"] += t1 - t0
         try:
             sql = oracle[name]
             if sql in oracle_memo:
@@ -300,6 +323,8 @@ def main():
             print(f"  [FAIL-sql ] {name}: oracle error: {str(e)[:200]}")
             n_fail += 1
             continue
+        finally:
+            times["oracle_s"] += time.perf_counter() - t1
         if sorted(gcols) != sorted(ecols):
             print(f"  [FAIL-cols] {name}: spark={sorted(gcols)} duckdb={sorted(ecols)}")
             n_fail += 1
@@ -308,9 +333,11 @@ def main():
             print(f"  [FAIL-rows] {name}: spark={len(grows)} duckdb={len(erows)}")
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         g, e = canon(grows, gcols), canon(erows, ecols)
         # compare both order-sensitively and as multisets
         mismatch = [i for i, (a, b) in enumerate(zip(g, e)) if a != b]
+        times["canon_s"] += time.perf_counter() - t0
         if mismatch:
             i = mismatch[0]
             print(f"  [FAIL-vals] {name}: {len(mismatch)}/{len(g)} rows differ; first @{i}:")
@@ -328,6 +355,9 @@ def main():
     for name in sorted(set(oracle) - dumped):
         print(f"  [FAIL-miss] {name}: no spark dump (query failed?)")
         n_fail += 1
+    with open(os.path.join(out_dir, "verify_times.json"), "w") as f:
+        json.dump({k: {m: round(v, 3) for m, v in t.items()}
+                   for k, t in sorted(entry_times.items())}, f, indent=1)
     print(f"== {n_ok} ok, {n_fail} fail, {n_noracle} rows-only")
     sys.exit(1 if n_fail else 0)
 
