@@ -12,10 +12,12 @@ import Tables._
   * st* streaming-shaped, dd* dedup, sim* similarity, tx* text, mm*
   * multimodal, ml* MLlib).
   *
-  * Determinism contract (SURVEY.md §5.1): exact DECIMAL for double
-  * aggregation, round(…,6) for per-row float math, total-order ORDER BY
-  * with unique tie-break in BOTH engines, no engine RNG in any oracle'd
-  * query (randomness = explicit integer LCG arithmetic).
+  * Determinism contract (SURVEY.md §5.1): money and quantity doubles sum
+  * exactly at their DECIMAL(18,2) value (`Tables.dsum`/`davg`/`dsumProd`,
+  * one native cents-sum aggregate), round(…,6) for per-row float math,
+  * total-order ORDER BY with unique tie-break in BOTH engines, no engine
+  * RNG in any oracle'd query (randomness = explicit integer LCG
+  * arithmetic).
   */
 object Queries {
   type Q = (SparkSession, String) => DataFrame

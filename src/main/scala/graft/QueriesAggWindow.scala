@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.plans.CentsSum
 import Queries.Entry
 import Tables._
 
@@ -79,9 +80,11 @@ object QueriesAggWindow {
     * IEEE doubles and the final formulas are bit-stable (a direct
     * `corr()` is a parallel float fold — order-sensitive, not
     * oracle-able). The moments are one partial-aggregatable pass; the
-    * formulas are driver-free scalar math. Decimal(18,2/4) is exact for
-    * these columns at any SF whose sums stay under 2^53 — the same
-    * contract every dsum in the gate already relies on. */
+    * formulas are driver-free scalar math. The sums are exact at any
+    * SF: Σ price² already passes 2^63 units at sf0.1, where the kernel's
+    * long moves into its decimal carry. What stays inexact is each
+    * sum's final cast to DOUBLE (one rounding), far below the round(…,6)
+    * of the formulas. */
   val gCorrRegr: Entry = Entry("g_corr_regr",
     (s, d) => {
       val l = tbl(s, d, "lineitem")
@@ -360,8 +363,7 @@ object QueriesAggWindow {
         .rowsBetween(Window.unboundedPreceding, -1)
       val inv = ord(s, d).select(col("o_orderkey").as("file_id"),
         col("o_orderpriority").as("part"),
-        col("o_totalprice").cast(DecimalType(18, 2)).multiply(100)
-          .cast("long").as("bytes"))
+        CentsSum.cents(col("o_totalprice")).as("bytes"))
       val planned = inv
         .withColumn("before", coalesce(sum(col("bytes")).over(w), lit(0L)))
         .withColumn("bin", expr(s"before div $target"))
@@ -1200,8 +1202,7 @@ object QueriesAggWindow {
     (s, d) => {
       val k = 1000L
       val x = ord(s, d).select(col("o_orderkey"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("w"))
+          CentsSum.cents(col("o_totalprice")).as("w"))
         .withColumn("h", graft.functions.Feistel.key(col("o_orderkey")))
         .withColumn("bkt", shiftright(col("h"), 56))
         // the g_ks_drift lesson verbatim: the offs join infers
@@ -1995,8 +1996,7 @@ object QueriesAggWindow {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       ord(s, d)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("v"))
+          CentsSum.cents(col("o_totalprice")).as("v"))
         .withColumn("delta",
           when(col("o_orderkey") % 2 === 0, col("v")).otherwise(-col("v")))
         .withColumn("equity", sum(col("delta")).over(w))
@@ -2045,7 +2045,7 @@ object QueriesAggWindow {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       tbl(s, d, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+          (CentsSum.cents(col("value"))
             - 6000L).as("delta"))
         .withColumn("p", sum(col("delta")).over(w))
         .withColumn("cusum", col("p") - least(lit(0L), min(col("p")).over(w)))
@@ -2088,8 +2088,7 @@ object QueriesAggWindow {
     (s, d) => {
       val day = ord(s, d).select(
         expr("weekday(o_orderdate) + 1").cast("long").as("isodow"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+        CentsSum.cents(col("o_totalprice")).as("cents"))
         .groupBy("isodow")
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
       val all = Window.partitionBy()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, MultiModal}
+import graft.plans.CentsSum
 import graft.streaming.StreamingOps
 import Queries.Entry
 import Tables._
@@ -1335,8 +1336,7 @@ object QueriesStreaming {
       }
       val incoming = stagedBatches(s, stage)
         .select(col("user_id").cast("long"), col("event_id").cast("long"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long"),
+          CentsSum.cents(col("value")),
           (col("event_type") === "error").as("del"))
         .as[(Long, Long, Long, Boolean)]
       val out = incoming.groupByKey(_._1)

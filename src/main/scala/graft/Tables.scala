@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.plans.CentsSum
 
 /** Parquet table access + oracle-determinism helpers.
   *
@@ -15,8 +16,11 @@ import org.apache.spark.sql.types._
   * Oracle-determinism: the driver hash-compares our parquet output against
   * DuckDB running `SparkEntry.oracleSql` on the same tables. Double
   * aggregation is order-sensitive (parallel sums differ in last ulps), so:
-  *  - money/quantity style SUM/AVG go through exact DECIMAL arithmetic and
-  *    are cast back to DOUBLE at the end (exact: all magnitudes < 2^53);
+  *  - money/quantity style SUM/AVG take each value at its DECIMAL(18,2)
+  *    value and sum exactly ([[dsum]], [[davg]], [[dsumProd]]), so both
+  *    engines cast the same exact decimal back to DOUBLE at the end (the
+  *    same double for certain while the unscaled sum is below 2^53: the
+  *    cast is then one correctly rounded division in both);
   *  - per-row float math is rounded to 6 decimals (both engines see
   *    identical IEEE-754 inputs, so rounding is stable);
   *  - every query ORDER BYs a total (tie-broken) key.
@@ -224,27 +228,31 @@ object Tables {
       .foreach(deleteRecursively))
   }
 
-  /** Exact sum of a ~2-decimal double column: cast to DECIMAL (exact in
-    * both Spark and DuckDB for clean inputs), sum without float error,
-    * back to DOUBLE. `scale` must cover the data's true decimal scale. */
-  def dsum(c: Column, scale: Int = 2, prec: Int = 18): Column =
-    sum(c.cast(DecimalType(prec, scale))).cast("double")
+  /** Exact sum of a money or quantity double column. Each value counts
+    * as its DECIMAL(18,2) value (whole cents, HALF_UP from
+    * `Double.toString`; NaN, ±Inf and |x| ≥ 1e16 count as null),
+    * the sum is exact — `sum(CAST(c AS DECIMAL(18,2)))`, Decimal(28,2) —
+    * and one cast to DOUBLE rounds it. The kernel is
+    * [[graft.plans.CentsSum]]: the cents add in a long with an exact
+    * carry, no BigDecimal per row. */
+  def dsum(c: Column): Column = CentsSum.sum(c).cast("double")
 
   /** Exact avg built from dsum / count — final division is one IEEE op on
     * identical operands in both engines. */
-  def davg(c: Column, scale: Int = 2): Column =
-    (dsum(c, scale) / count(c)).cast("double")
+  def davg(c: Column): Column = (dsum(c) / count(c)).cast("double")
 
-  /** Exact sum of a product of two ~2-decimal doubles (scale 4 product). */
-  def dsumProd(a: Column, b: Column): Column =
-    sum(a.cast(DecimalType(18, 2)) * b.cast(DecimalType(18, 2))).cast("double")
+  /** Exact sum of the product of two money doubles: each operand at its
+    * DECIMAL(18,2) value, the products and their sum exact at scale 4 —
+    * `sum(CAST(a AS DECIMAL(18,2)) * CAST(b AS DECIMAL(18,2)))`,
+    * Decimal(38,4) — then one cast to DOUBLE. */
+  def dsumProd(a: Column, b: Column): Column = CentsSum.sum(a, b).cast("double")
 
   /** DuckDB SQL spellings of the same helpers (kept adjacent so the two
     * stay in sync). */
-  def sqlDsum(e: String, scale: Int = 2): String =
-    s"CAST(sum(CAST($e AS DECIMAL(18,$scale))) AS DOUBLE)"
-  def sqlDavg(e: String, scale: Int = 2): String =
-    s"(CAST(sum(CAST($e AS DECIMAL(18,$scale))) AS DOUBLE) / count($e))"
+  def sqlDsum(e: String): String =
+    s"CAST(sum(CAST($e AS DECIMAL(18,2))) AS DOUBLE)"
+  def sqlDavg(e: String): String =
+    s"(CAST(sum(CAST($e AS DECIMAL(18,2))) AS DOUBLE) / count($e))"
   def sqlDsumProd(a: String, b: String): String =
     s"CAST(sum(CAST($a AS DECIMAL(18,2)) * CAST($b AS DECIMAL(18,2))) AS DOUBLE)"
 }

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LocalTableScanExec, SortExec, UnsafeExternalRowSorter}
 
@@ -27,7 +27,12 @@ import org.apache.spark.sql.execution.{LocalTableScanExec, SortExec, UnsafeExter
   *    callback could land after the next entry starts and book its
   *    metrics to the wrong name. `LiveListenerBus.waitUntilEmpty` is
   *    the exact flush Spark's own test harness uses; it has no public
-  *    twin. Called OUTSIDE the timed window only. */
+  *    twin. Called OUTSIDE the timed window only.
+  *  - [[nativeColumn]]: a Column over a library Catalyst expression
+  *    ([[graft.plans.CentsSum]], [[graft.plans.Cents]]) without going
+  *    through `GraftExtensions`' function registry, so `Tables.dsum`
+  *    works in any session. Column ↔ Expression conversion has no
+  *    public API. */
 object GraftPlanBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
@@ -35,6 +40,9 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  def nativeColumn(inputs: Column*)(build: Seq[Expression] => Expression): Column =
+    classic.ExpressionUtils.column(build(inputs.map(classic.ExpressionUtils.expression)))
 
   def partitionSorter(output: Seq[Attribute],
       order: Seq[SortOrder]): UnsafeExternalRowSorter =
