@@ -189,8 +189,6 @@ object OracleLint {
     * compare times recorded — the empirical "provably cheap" bar. New
     * oracles get no entries here; they materialize at birth. */
   val Grandfathered: Set[(String, String)] = Set(
-    "a12_ten_crop" -> "f",
-    "a_native_tencrop" -> "f",
     "dd_components" -> "cbase", "dd_components" -> "w0",
     "dd_components" -> "corpus", "dd_components" -> "blk",
     "dd_components" -> "edges", "dd_components" -> "bid",

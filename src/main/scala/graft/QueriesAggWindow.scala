@@ -1611,7 +1611,7 @@ object QueriesAggWindow {
       def state(df: org.apache.spark.sql.DataFrame, tag: String) =
         df.groupBy(col("o_orderpriority").as("pri")).agg(
           count(lit(1)).as(s"n_$tag"),
-          sum(col("o_totalprice").cast(dec)).as(s"s_$tag"),
+          CentsSum.sum(col("o_totalprice")).as(s"s_$tag"),
           min(col("o_totalprice")).as(s"mn_$tag"),
           max(col("o_totalprice")).as(s"mx_$tag"))
       val cut = "1997-01-01"
@@ -2135,8 +2135,7 @@ object QueriesAggWindow {
       val wTot = Window.partitionBy()
       ord(s, d)
         .groupBy("o_custkey")
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("cents"))
+        .agg((CentsSum.sum(col("o_totalprice")) * 100).cast("long").as("cents"))
         .withColumn("cum", sum(col("cents")).over(wCum))
         .withColumn("tot", sum(col("cents")).over(wTot))
         // the share multiply runs in DECIMAL(38,0) (oracle: HUGEINT):

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayOps._
 import graft.functions.ImageGeometry
@@ -137,34 +139,29 @@ object QueriesArrays {
       |FROM e ORDER BY vec_id""".stripMargin))
 
   // ------------------------------------------------- A8/A11-A13 geometry
-  // The UDF family checked by generated index-arithmetic SQL. All crops/
-  // weights are exact integer index remaps; only the source floats and
-  // the final sums carry float math, in the same order in both engines.
+  // The UDF family checked by SQL from ImageGeometry's generators
+  // (sqlFlipH/sqlFlipV/sqlTenCropSums/sqlDraw/sqlResize/sqlAugmentFull).
+  // All crops/flips are exact integer index remaps; only the source
+  // floats and the final sums carry float math, in the same order in
+  // both engines.
 
-  /** DuckDB 1-based index of pixel (r,c) in the flat W-wide image. */
-  private def idx(r: Int, c: Int): Int = r * W + c + 1
-
-  /** SQL for the sum of a w×h crop at (x0,y0): concatenate the row
-    * slices then one list_sum, so the fold order over the w*h elements
-    * is bit-identical to Spark's arraySum over the crop array. */
-  private def cropSumSql(l: String, x0: Int, y0: Int, w: Int, h: Int): String =
-    (0 until h).map(r => s"$l[${idx(y0 + r, x0)}:${idx(y0 + r, x0 + w - 1)}]")
-      .mkString("list_sum(", " || ", ")")
-
-  /** SQL building the horizontally flipped list of an 8x8 image. */
-  private def flipSql(l: String): String =
-    s"list_transform(range(0, ${W * W}), i -> $l[(i // $W) * $W + ($W - (i % $W))])"
-
-  /** SQL building the vertically flipped (row-reversed) list of an
-    * 8x8 image — 1-based: output element i reads source row W-1-i//W. */
-  private def flipVSql(l: String): String =
-    s"list_transform(range(0, ${W * W}), i -> $l[($W - 1 - (i // $W)) * $W + (i % $W) + 1])"
+  /** Ten-crop oracle rows (id, crop_id, crop_sum) of the n×n image `img`
+    * in `src` with c×c crops. `f` carries the H-flipped image and is
+    * read by all ten crop rows, so it is materialized. */
+  private def sqlTenCropRows(src: String, id: String, img: String, n: Int, c: Int): String = {
+    val unions = ImageGeometry.sqlTenCropSums(img, "fl", n, n, c, c).zipWithIndex
+      .map { case (e, i) => s"SELECT $id, $i AS crop_id, round($e, 6) AS crop_sum FROM f" }
+      .mkString("\n UNION ALL ")
+    s"""WITH e AS ($src),
+       | f AS MATERIALIZED (SELECT $id, $img, ${ImageGeometry.sqlFlipH(img, n)} AS fl FROM e)
+       |$unions
+       |ORDER BY $id, crop_id""".stripMargin
+  }
 
   /** A12: ten-crop (4 corners + center) × {orig, flipped} of the 8×8
     * image, 4×4 crops; output (vec_id, crop_id, crop sum). */
   val a12TenCrop: Entry = {
     val cw = 4; val ch = 4
-    val offs = Seq((0, 0), (W - cw, 0), (0, W - ch), (W - cw, W - ch), ((W - cw) / 2, (W - ch) / 2))
     val sparkFn: Queries.Q = (s, d) => {
       val e = emb(s, d).select(col("vec_id"),
         posexplode(ImageGeometry.tenCropUdf(col("b1"), lit(W), lit(W), lit(cw), lit(ch)))
@@ -173,96 +170,57 @@ object QueriesArrays {
           round(arraySum(col("crop")), 6).as("crop_sum"))
         .orderBy("vec_id", "crop_id")
     }
-    val cropExprs =
-      offs.map { case (x0, y0) => cropSumSql("b1", x0, y0, cw, ch) } ++
-        offs.map { case (x0, y0) => cropSumSql("fl", x0, y0, cw, ch) }
-    val unions = cropExprs.zipWithIndex.map { case (e, i) =>
-      s"SELECT vec_id, $i AS crop_id, round($e, 6) AS crop_sum FROM f"
-    }.mkString("\n UNION ALL ")
-    Entry("a12_ten_crop", sparkFn,
-      Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings),
-        | f AS (SELECT vec_id, b1, ${flipSql("b1")} AS fl FROM e)
-        |$unions
-        |ORDER BY vec_id, crop_id""".stripMargin))
+    Entry("a12_ten_crop", sparkFn, Some(sqlTenCropRows(
+      s"SELECT vec_id, $B1 AS b1 FROM embeddings", "vec_id", "b1", W, cw)))
   }
 
-  /** A8: bilinear resize 8×8 → 4×4. With a clean 2× downscale every
-    * output pixel sits at dx=dy=0.5 → the four 0.25 weights; the oracle
-    * replays the same multiply-add order as the UDF inner loop. */
-  val a8Resize: Entry = {
-    val sparkFn: Queries.Q = (s, d) => emb(s, d).select(col("vec_id"),
+  /** A8: bilinear resize 8×8 → 4×4, replayed by the general resize
+    * generator (a clean 2× downscale: every weight is exactly 0.25). */
+  val a8Resize: Entry = Entry("a8_resize",
+    (s, d) => emb(s, d).select(col("vec_id"),
         round(arraySum(ImageGeometry.bilinear_resize(col("b1"), W, W, 4, 4)), 6).as("resized_sum"))
-      .orderBy("vec_id")
-    val terms = (for { r <- 0 until 4; c <- 0 until 4 } yield {
-      val p00 = idx(2 * r, 2 * c); val p01 = idx(2 * r, 2 * c + 1)
-      val p10 = idx(2 * r + 1, 2 * c); val p11 = idx(2 * r + 1, 2 * c + 1)
-      s"(b1[$p00] * 0.25 + b1[$p01] * 0.25 + b1[$p10] * 0.25 + b1[$p11] * 0.25)"
-    }).mkString("(", " + ", ")")
-    Entry("a8_resize", sparkFn,
-      Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings)
-        |SELECT vec_id, round($terms, 6) AS resized_sum
-        |FROM e ORDER BY vec_id""".stripMargin))
-  }
+      .orderBy("vec_id"),
+    Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings)
+      |SELECT vec_id, round(list_sum(${ImageGeometry.sqlResize("b1", W.toString, W.toString, 4, 4)}), 6)
+      |  AS resized_sum
+      |FROM e ORDER BY vec_id""".stripMargin))
 
-  /** A13: LCG-seeded deterministic flip augmentation (epoch 0). The
-    * position-weighted checksum distinguishes flipped from original
-    * (a plain sum would not — flip permutes, never changes, pixels). */
-  val a13Augment: Entry = {
+  /** A13 flip-decision entries: the augmented image's position-weighted
+    * checksum (a plain sum cannot see a flip — it permutes pixels) and
+    * `flipped` = 1 exactly where the kernel flipped. The oracle draws
+    * the same masked-LCG stream, applies `sqlFlip` where `sqlTaken`
+    * holds on the draw `l`, and replays the checksum. */
+  private def flipEntry(name: String, kernel: UserDefinedFunction, stream: Int,
+      taken: Column => Column, sqlTaken: String, sqlFlip: String => String): Entry = {
     val sparkFn: Queries.Q = (s, d) => {
-      val e = emb(s, d).withColumn("aug",
-        ImageGeometry.augmentFlipUdf(col("b1"), lit(W), col("vec_id"), lit(0)))
-      // mirror of ImageGeometry.lcg — overflow-free masked arithmetic
-      val seed = col("vec_id").bitwiseAND(lit(0xffffL)) * 131071L
-      val h = (seed.bitwiseAND(lit(0xffffffL)) * 1103515245L + 12345L)
-        .bitwiseAND(lit(0x7fffffffL))
+      val e = emb(s, d).withColumn("aug", kernel(col("b1"), lit(W), col("vec_id"), lit(0)))
       e.select(col("vec_id"),
-          (h % 2).cast("int").as("flipped"),
+          when(taken(ImageGeometry.draw(col("vec_id"), 0, stream)), 1).otherwise(0).as("flipped"),
           round(arraySum(zip_with(col("aug"),
             sequence(lit(1), size(col("aug"))).cast("array<double>"),
             (x, i) => x * i)), 6).as("wsum"))
         .orderBy("vec_id")
     }
-    Entry("a13_augment_flip", sparkFn,
+    Entry(name, sparkFn,
       Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1,
-        |   CAST(((((vec_id & 65535) * 131071) & 16777215) * 1103515245 + 12345) & 2147483647 AS INT) % 2 AS bit
-        |   FROM embeddings),
-        | f AS (SELECT vec_id, bit, CASE WHEN bit = 0 THEN ${flipSql("b1")} ELSE b1 END AS aug FROM e)
-        |SELECT vec_id, bit AS flipped,
-        | round(list_sum(list_transform(range(1, ${W * W + 1}), i -> aug[i] * CAST(i AS DOUBLE))), 6) AS wsum
-        |FROM f ORDER BY vec_id""".stripMargin))
-  }
-
-  /** A13: the VERTICAL-flip decision (main.py:150 vertical_flip=True —
-    * the reference draws H and V flips independently; this gates the V
-    * branch alone on augmentFull's stream-5 LCG draw). Same
-    * position-weighted-checksum distinguisher as a13_augment_flip: a
-    * plain sum cannot see a row permutation. */
-  val a13AugmentV: Entry = {
-    val sparkFn: Queries.Q = (s, d) => {
-      val e = emb(s, d).withColumn("aug",
-        ImageGeometry.augmentFlipVUdf(col("b1"), lit(W), col("vec_id"), lit(0)))
-      // mirror of ImageGeometry.lcg on stream 5 (epoch 0): masked,
-      // overflow-free — identical value under checked int64 arithmetic
-      val seed = col("vec_id").bitwiseAND(lit(0xffffL)) * 131071L + 5L
-      val h = (seed.bitwiseAND(lit(0xffffffL)) * 1103515245L + 12345L)
-        .bitwiseAND(lit(0x7fffffffL))
-      e.select(col("vec_id"),
-          when(h < 0x40000000L, 1).otherwise(0).as("flipped"),
-          round(arraySum(zip_with(col("aug"),
-            sequence(lit(1), size(col("aug"))).cast("array<double>"),
-            (x, i) => x * i)), 6).as("wsum"))
-        .orderBy("vec_id")
-    }
-    Entry("a13_augment_flipv", sparkFn,
-      Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1,
-        |   ((((vec_id & 65535) * 131071 + 5) & 16777215) * 1103515245 + 12345) & 2147483647 AS l5
-        |   FROM embeddings),
-        | f AS (SELECT vec_id, CASE WHEN l5 < 1073741824 THEN 1 ELSE 0 END AS flipped,
-        |   CASE WHEN l5 < 1073741824 THEN ${flipVSql("b1")} ELSE b1 END AS aug FROM e)
+        |   ${ImageGeometry.sqlDraw("vec_id", 0, stream)} AS l FROM embeddings),
+        | f AS (SELECT vec_id, CASE WHEN $sqlTaken THEN 1 ELSE 0 END AS flipped,
+        |   CASE WHEN $sqlTaken THEN ${sqlFlip("b1")} ELSE b1 END AS aug FROM e)
         |SELECT vec_id, flipped,
         | round(list_sum(list_transform(range(1, ${W * W + 1}), i -> aug[i] * CAST(i AS DOUBLE))), 6) AS wsum
         |FROM f ORDER BY vec_id""".stripMargin))
   }
+
+  /** A13: LCG-seeded deterministic H-flip augmentation (epoch 0):
+    * augmentFlip flips when the draw is even. */
+  val a13Augment: Entry = flipEntry("a13_augment_flip", ImageGeometry.augmentFlipUdf,
+    0, h => h % 2 === 0, "l % 2 = 0", ImageGeometry.sqlFlipH(_, W))
+
+  /** A13: the VERTICAL-flip decision (main.py:150 vertical_flip=True —
+    * the reference draws H and V flips independently; this gates the V
+    * branch alone on augmentFull's stream-5 draw, taken below 2^30). */
+  val a13AugmentV: Entry = flipEntry("a13_augment_flipv", ImageGeometry.augmentFlipVUdf,
+    5, h => h < 0x40000000L, "l < 1073741824", ImageGeometry.sqlFlipV(_, W))
 
   /** G10: TTA mean — per-image mean over the ten crop means
     * (10-crop.py:327-337's accumulate/÷10, as explode → groupBy avg).
@@ -271,7 +229,6 @@ object QueriesArrays {
     * oracle can replay it as a left-assoc sum in crop order. */
   val g10TtaMean: Entry = {
     val cw = 4; val ch = 4
-    val offs = Seq((0, 0), (W - cw, 0), (0, W - ch), (W - cw, W - ch), ((W - cw) / 2, (W - ch) / 2))
     val sparkFn: Queries.Q = (s, d) => {
       val e = emb(s, d).select(col("vec_id"),
         posexplode(ImageGeometry.tenCropUdf(col("b1"), lit(W), lit(W), lit(cw), lit(ch)))
@@ -280,77 +237,33 @@ object QueriesArrays {
         .groupBy("vec_id").agg(round(avg(col("m")), 6).as("tta_mean"))
         .orderBy("vec_id")
     }
-    val meanExprs =
-      (offs.map { case (x0, y0) => cropSumSql("b1", x0, y0, cw, ch) } ++
-        offs.map { case (x0, y0) => cropSumSql("fl", x0, y0, cw, ch) })
-        .map(cs => s"($cs / ${cw * ch})")
+    val meanExprs = ImageGeometry.sqlTenCropSums("b1", "fl", W, W, cw, ch)
+      .map(cs => s"($cs / ${cw * ch})")
     Entry("g10_tta_mean", sparkFn,
       Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings),
-        | f AS (SELECT vec_id, b1, ${flipSql("b1")} AS fl FROM e)
+        | f AS (SELECT vec_id, b1, ${ImageGeometry.sqlFlipH("b1", W)} AS fl FROM e)
         |SELECT vec_id, round((${meanExprs.mkString(" + ")}) / 10, 6) AS tta_mean
         |FROM f ORDER BY vec_id""".stripMargin))
   }
 
   /** A13 (full): flip + rotate + zoom + shift affine augmentation,
     * LCG-parameterized per (id, epoch). The oracle replays the ENTIRE
-    * pipeline in SQL with the identical operation order: the masked-LCG
-    * draw streams (exact integer arithmetic, the a13_augment_flip
-    * pattern), the flip decision, theta/zoom/shift derivation (the
-    * radians(30) factor is embedded as the exact JVM double literal),
-    * cos/sin of -theta (DuckDB's libm agrees with Math.cos/sin to the
-    * bit at round-6 granularity — verified 500/500), and the
-    * inverse-map bilinear sample per output pixel (floor → clamp →
-    * 4-term multiply-add in source order). Hash-green here means the
-    * full affine resampler — not just its flip branch — is checked. */
-  val a13Affine: Entry = {
-    // one masked-LCG draw per parameter stream (epoch 0): mirrors
-    // ImageGeometry.lcg/augmentFull exactly; all intermediates < 2^55
-    // so DuckDB's checked int64 arithmetic computes the JVM's values
-    def lcgSql(stream: Int): String =
-      s"((((vec_id & 65535) * 131071 + $stream) & 16777215) * 1103515245 + 12345) & 2147483647"
-    val rad30 = math.toRadians(30).toString
-    Entry("a13_affine",
-      (s, d) => emb(s, d).select(col("vec_id"),
-          round(arraySum(ImageGeometry.augmentFullUdf(
-            col("b1"), lit(W), col("vec_id"), lit(0))), 6).as("aug_sum"))
-        .orderBy("vec_id"),
-      Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings),
-        |d AS (SELECT vec_id, b1,
-        |  ${lcgSql(0)} AS l0, ${lcgSql(1)} AS l1, ${lcgSql(2)} AS l2,
-        |  ${lcgSql(3)} AS l3, ${lcgSql(4)} AS l4, ${lcgSql(5)} AS l5
-        | FROM e),
-        |parh AS (SELECT vec_id, l5,
-        |  CASE WHEN l0 < 1073741824 THEN ${flipSql("b1")} ELSE b1 END AS augh,
-        |  (CAST(l1 AS DOUBLE) / 2147483648.0 * 2 - 1) * $rad30 AS theta,
-        |  0.75 + CAST(l2 AS DOUBLE) / 2147483648.0 * 0.5 AS zoom,
-        |  (CAST(l3 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shx,
-        |  (CAST(l4 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shy
-        | FROM d),
-        |par AS (SELECT vec_id,
-        |  CASE WHEN l5 < 1073741824 THEN ${flipVSql("augh")} ELSE augh END AS aug,
-        |  theta, zoom, shx, shy
-        | FROM parh),
-        |pr AS (SELECT vec_id, aug, cos(-theta) AS ct, sin(-theta) AS st,
-        |  1.0 / zoom AS iz, shx, shy FROM par),
-        |sxy AS (SELECT vec_id, aug, list_transform(range(0, ${W * W}), i -> struct_pack(
-        |    px := ((CAST(i % $W AS DOUBLE) - 3.5 - shx * $W) * ct - (CAST(i // $W AS DOUBLE) - 3.5 - shy * $W) * st) * iz + 3.5,
-        |    py := ((CAST(i % $W AS DOUBLE) - 3.5 - shx * $W) * st + (CAST(i // $W AS DOUBLE) - 3.5 - shy * $W) * ct) * iz + 3.5)) AS sl
-        | FROM pr),
-        |g AS (SELECT vec_id, aug, list_transform(sl, s -> struct_pack(
-        |    x0 := greatest(0, least(7, CAST(floor(s.px) AS INT))),
-        |    y0 := greatest(0, least(7, CAST(floor(s.py) AS INT))),
-        |    x1 := least(7, greatest(0, least(7, CAST(floor(s.px) AS INT))) + 1),
-        |    y1 := least(7, greatest(0, least(7, CAST(floor(s.py) AS INT))) + 1),
-        |    fx := greatest(0.0, least(1.0, s.px - greatest(0, least(7, CAST(floor(s.px) AS INT))))),
-        |    fy := greatest(0.0, least(1.0, s.py - greatest(0, least(7, CAST(floor(s.py) AS INT)))))) ) AS gl
-        | FROM sxy)
-        |SELECT vec_id, round(list_sum(list_transform(gl, p ->
-        |  aug[p.y0 * $W + p.x0 + 1] * (1 - p.fx) * (1 - p.fy)
-        |  + aug[p.y0 * $W + p.x1 + 1] * p.fx * (1 - p.fy)
-        |  + aug[p.y1 * $W + p.x0 + 1] * (1 - p.fx) * p.fy
-        |  + aug[p.y1 * $W + p.x1 + 1] * p.fx * p.fy)), 6) AS aug_sum
-        |FROM g ORDER BY vec_id""".stripMargin))
-  }
+    * pipeline through `ImageGeometry.sqlAugmentFull`: the masked-LCG
+    * draw streams (exact integer arithmetic), both flip decisions,
+    * theta/zoom/shift, cos/sin of -theta (DuckDB's libm agrees with
+    * Math.cos/sin to the bit at round-6 granularity — verified 500/500;
+    * AffineSpec pins the floor-boundary margin), and the inverse-map
+    * bilinear sample per output pixel. Hash-green here means the full
+    * affine resampler — not just its flip branch — is checked. */
+  val a13Affine: Entry = Entry("a13_affine",
+    (s, d) => emb(s, d).select(col("vec_id"),
+        round(arraySum(ImageGeometry.augmentFullUdf(
+          col("b1"), lit(W), col("vec_id"), lit(0))), 6).as("aug_sum"))
+      .orderBy("vec_id"),
+    Some(s"""WITH e AS (SELECT vec_id, $B1 AS b1 FROM embeddings),
+      |${ImageGeometry.sqlAugmentFull("e", "b1", W, "vec_id")}
+      |SELECT vec_id, round(list_sum(aug), 6) AS aug_sum
+      |FROM ag ORDER BY vec_id""".stripMargin))
 
   /** The geometry family at the reference's NATIVE resolution: A7
     * normalize + A8 bilinear resize 75→38 + A9 iso mask over the
@@ -359,15 +272,13 @@ object QueriesArrays {
     * arithmetic is size-generic; this proves the same operators at
     * 5625-element arrays — allocation and codegen pressure included —
     * under a full DuckDB replay oracle. The resize oracle is the
-    * GENERAL inverse-map formula (one list_transform over the 1444
-    * output pixels, the a13_affine pattern), not per-pixel literals:
-    * sx/sy carry only *, /, +, − (no libm), and every sample
+    * general inverse-map generator over the 1444 output pixels: the
+    * coordinates carry only *, /, +, − (no libm), and every sample
     * coordinate (75(2k+1)−38)/76 sits ≥ 1/76 from an integer, so no
     * floor-boundary flake is possible at any size. */
   val aNative75: Entry = {
     val S = SarFixture.W      // 75
     val O = 38                // output side: the 75→38 downscale
-    val scale = (S.toDouble / O).toString // exact JVM double literal
     Entry("a_native_75",
       (s, d) => {
         SarFixture.ensure()
@@ -384,36 +295,20 @@ object QueriesArrays {
             size(filter(col("band_2"), x => x > col("thr"))).as("n_kept"))
           .orderBy("id")
       },
-      Some(s"""WITH e AS (SELECT id, band_1, band_2 FROM read_json('${SarFixture.path}',
-        |  columns = {id: 'VARCHAR', band_1: 'DOUBLE[]', band_2: 'DOUBLE[]',
-        |             inc_angle: 'VARCHAR', is_iceberg: 'INTEGER'})),
+      Some(s"""WITH e AS (SELECT id, band_1, band_2 FROM ${SarFixture.sqlRead}),
         |nm AS (SELECT *, list_min(band_1) AS mn, list_max(band_1) AS mx FROM e),
         |st AS (SELECT *, list_sum(band_2) AS sm,
         |  list_sum(list_transform(band_2, x -> x * x)) AS sq,
         |  CAST(len(band_2) AS DOUBLE) AS n FROM nm),
-        |th AS (SELECT *, sm / n + 2.0 * sqrt((sq - sm * sm / n) / n) AS thr FROM st),
-        |sxy AS (SELECT *, list_transform(range(0, ${O * O}), i -> struct_pack(
-        |    px := (CAST(i % $O AS DOUBLE) + 0.5) * $scale - 0.5,
-        |    py := (CAST(i // $O AS DOUBLE) + 0.5) * $scale - 0.5)) AS sl FROM th),
-        |g AS (SELECT *, list_transform(sl, s -> struct_pack(
-        |    x0 := greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))),
-        |    y0 := greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT))),
-        |    x1 := least(${S - 1}, greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))) + 1),
-        |    y1 := least(${S - 1}, greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT))) + 1),
-        |    fx := greatest(0.0, least(1.0, s.px - greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))))),
-        |    fy := greatest(0.0, least(1.0, s.py - greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT))))))) AS gl FROM sxy)
+        |th AS (SELECT *, sm / n + 2.0 * sqrt((sq - sm * sm / n) / n) AS thr FROM st)
         |SELECT id,
         | round(list_sum(list_transform(band_1,
         |   x -> CASE WHEN mx = mn THEN 0.0 ELSE (x - mn) / (mx - mn) END)), 6) AS norm_sum,
-        | round(list_sum(list_transform(gl, p ->
-        |   band_1[p.y0 * $S + p.x0 + 1] * (1 - p.fx) * (1 - p.fy)
-        |   + band_1[p.y0 * $S + p.x1 + 1] * p.fx * (1 - p.fy)
-        |   + band_1[p.y1 * $S + p.x0 + 1] * (1 - p.fx) * p.fy
-        |   + band_1[p.y1 * $S + p.x1 + 1] * p.fx * p.fy)), 6) AS resized_sum,
+        | round(list_sum(${ImageGeometry.sqlResize("band_1", S.toString, S.toString, O, O)}), 6) AS resized_sum,
         | round(list_sum(list_transform(band_2,
         |   x -> CASE WHEN x > thr THEN x ELSE 0.0 END)), 6) AS iso_sum,
         | CAST(len(list_filter(band_2, x -> x > thr)) AS INT) AS n_kept
-        |FROM g ORDER BY id""".stripMargin))
+        |FROM th ORDER BY id""".stripMargin))
   }
 
   /** A12 at the reference's NATIVE shape: ten-crop 75→64 over the SAR
@@ -426,17 +321,6 @@ object QueriesArrays {
   val aNativeTenCrop: Entry = {
     val S = SarFixture.W // 75
     val c = 64
-    val offs = Seq((0, 0), (S - c, 0), (0, S - c), (S - c, S - c), ((S - c) / 2, (S - c) / 2))
-    def idxS(r: Int, cc: Int) = r * S + cc + 1 // 1-based flat index
-    def cropSum(l: String, x0: Int, y0: Int): String =
-      (0 until c).map(r => s"$l[${idxS(y0 + r, x0)}:${idxS(y0 + r, x0 + c - 1)}]")
-        .mkString("list_sum(", " || ", ")")
-    val flip = s"list_transform(range(0, ${S * S}), i -> band_1[(i // $S) * $S + ($S - (i % $S))])"
-    val cropExprs = offs.map { case (x0, y0) => cropSum("band_1", x0, y0) } ++
-      offs.map { case (x0, y0) => cropSum("fl", x0, y0) }
-    val unions = cropExprs.zipWithIndex.map { case (e, i) =>
-      s"SELECT id, $i AS crop_id, round($e, 6) AS crop_sum FROM f"
-    }.mkString("\n UNION ALL ")
     Entry("a_native_tencrop",
       (s, d) => {
         SarFixture.ensure()
@@ -447,31 +331,19 @@ object QueriesArrays {
             round(arraySum(col("crop")), 6).as("crop_sum"))
           .orderBy("id", "crop_id")
       },
-      Some(s"""WITH e AS (SELECT id, band_1 FROM read_json('${SarFixture.path}',
-        |  columns = {id: 'VARCHAR', band_1: 'DOUBLE[]', band_2: 'DOUBLE[]',
-        |             inc_angle: 'VARCHAR', is_iceberg: 'INTEGER'})),
-        | f AS (SELECT id, band_1, $flip AS fl FROM e)
-        |$unions
-        |ORDER BY id, crop_id""".stripMargin))
+      Some(sqlTenCropRows(s"SELECT id, band_1 FROM ${SarFixture.sqlRead}",
+        "id", "band_1", S, c)))
   }
 
   /** A13 (full flip+rotate+zoom+shift) at NATIVE 75×75 resolution over
-    * the SAR fixture — the last geometry op still gated only at 8×8.
-    * Same oracle construction as a13_affine (masked-LCG draw streams,
-    * libm cos/sin, generalized inverse-map bilinear replay) at S=75,
+    * the SAR fixture. Same oracle generator as a13_affine at side 75,
     * center 37.0. Libm-drift safety at this scale is pinned by the
     * AffineSpec fixture-domain margin sweep (min distance of every
     * sample coordinate from a floor boundary > 1e-7 across all 40 ids
     * × 5625 px — the full-seed-domain guarantee cannot transfer to
     * 75×75, the fixture-domain one is what the oracle actually needs). */
   val aNativeAffine: Entry = {
-    val S = SarFixture.W          // 75
-    val c0 = (S - 1) / 2.0        // 37.0
-    def lcgSql(stream: Int): String =
-      s"((((vec_id & 65535) * 131071 + $stream) & 16777215) * 1103515245 + 12345) & 2147483647"
-    val rad30 = math.toRadians(30).toString
-    val flip = s"list_transform(range(0, ${S * S}), i -> b[(i // $S) * $S + ($S - (i % $S))])"
-    val flipV = s"list_transform(range(0, ${S * S}), i -> augh[($S - 1 - (i // $S)) * $S + (i % $S) + 1])"
+    val S = SarFixture.W // 75
     Entry("a_native_affine",
       (s, d) => {
         SarFixture.ensure()
@@ -483,44 +355,10 @@ object QueriesArrays {
           .orderBy("vec_id")
       },
       Some(s"""WITH e AS (SELECT CAST(substr(id, 2) AS BIGINT) AS vec_id, band_1 AS b
-        |  FROM read_json('${SarFixture.path}',
-        |  columns = {id: 'VARCHAR', band_1: 'DOUBLE[]', band_2: 'DOUBLE[]',
-        |             inc_angle: 'VARCHAR', is_iceberg: 'INTEGER'})),
-        |d AS (SELECT vec_id, b,
-        |  ${lcgSql(0)} AS l0, ${lcgSql(1)} AS l1, ${lcgSql(2)} AS l2,
-        |  ${lcgSql(3)} AS l3, ${lcgSql(4)} AS l4, ${lcgSql(5)} AS l5
-        | FROM e),
-        |parh AS (SELECT vec_id, l5,
-        |  CASE WHEN l0 < 1073741824 THEN $flip ELSE b END AS augh,
-        |  (CAST(l1 AS DOUBLE) / 2147483648.0 * 2 - 1) * $rad30 AS theta,
-        |  0.75 + CAST(l2 AS DOUBLE) / 2147483648.0 * 0.5 AS zoom,
-        |  (CAST(l3 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shx,
-        |  (CAST(l4 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shy
-        | FROM d),
-        |par AS (SELECT vec_id,
-        |  CASE WHEN l5 < 1073741824 THEN $flipV ELSE augh END AS aug,
-        |  theta, zoom, shx, shy
-        | FROM parh),
-        |pr AS (SELECT vec_id, aug, cos(-theta) AS ct, sin(-theta) AS st,
-        |  1.0 / zoom AS iz, shx, shy FROM par),
-        |sxy AS (SELECT vec_id, aug, list_transform(range(0, ${S * S}), i -> struct_pack(
-        |    px := ((CAST(i % $S AS DOUBLE) - $c0 - shx * $S) * ct - (CAST(i // $S AS DOUBLE) - $c0 - shy * $S) * st) * iz + $c0,
-        |    py := ((CAST(i % $S AS DOUBLE) - $c0 - shx * $S) * st + (CAST(i // $S AS DOUBLE) - $c0 - shy * $S) * ct) * iz + $c0)) AS sl
-        | FROM pr),
-        |g AS (SELECT vec_id, aug, list_transform(sl, s -> struct_pack(
-        |    x0 := greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))),
-        |    y0 := greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT))),
-        |    x1 := least(${S - 1}, greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))) + 1),
-        |    y1 := least(${S - 1}, greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT))) + 1),
-        |    fx := greatest(0.0, least(1.0, s.px - greatest(0, least(${S - 1}, CAST(floor(s.px) AS INT))))),
-        |    fy := greatest(0.0, least(1.0, s.py - greatest(0, least(${S - 1}, CAST(floor(s.py) AS INT)))))) ) AS gl
-        | FROM sxy)
-        |SELECT vec_id, round(list_sum(list_transform(gl, p ->
-        |  aug[p.y0 * $S + p.x0 + 1] * (1 - p.fx) * (1 - p.fy)
-        |  + aug[p.y0 * $S + p.x1 + 1] * p.fx * (1 - p.fy)
-        |  + aug[p.y1 * $S + p.x0 + 1] * (1 - p.fx) * p.fy
-        |  + aug[p.y1 * $S + p.x1 + 1] * p.fx * p.fy)), 6) AS aug_sum
-        |FROM g ORDER BY vec_id""".stripMargin))
+        |  FROM ${SarFixture.sqlRead}),
+        |${ImageGeometry.sqlAugmentFull("e", "b", S, "vec_id")}
+        |SELECT vec_id, round(list_sum(aug), 6) AS aug_sum
+        |FROM ag ORDER BY vec_id""".stripMargin))
   }
 
   val all: Seq[Entry] = Seq(

@@ -401,9 +401,7 @@ object QueriesEnsemble {
         | is_iceberg,
         | round(list_sum(band_1), 6) AS b1_sum,
         | round(list_sum(band_2), 6) AS b2_sum
-        |FROM read_json('$fixture', columns = {id: 'VARCHAR',
-        |  band_1: 'DOUBLE[]', band_2: 'DOUBLE[]', inc_angle: 'VARCHAR',
-        |  is_iceberg: 'INTEGER'})
+        |FROM ${SarFixture.sqlRead}
         |ORDER BY id""".stripMargin))
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AhoCorasick, Bpe, Components, Decontaminate, Dedup, HeavyHitters, MultiModal, Similarity, UnigramLm}
+import graft.functions.Lcg
 import Queries.Entry
 import Tables.tbl
 
@@ -1769,10 +1770,9 @@ object QueriesPipeline {
     * ImageGeometry's bilinear resampler (A8) at variable per-document
     * source dimensions, downsampling every image to 4×4. The oracle
     * regenerates the pixel ramp from the synthesis formula and replays
-    * the inverse-map bilinear sample per output pixel with the
-    * IDENTICAL operation order (half-pixel centers, floor → clamp →
-    * 4-term multiply-add — the a13_affine pattern generalized to
-    * per-row w/h columns; no libm, so no drift risk at all). The
+    * the resize through `ImageGeometry.sqlResize` with per-row w/h
+    * columns (half-pixel centers, floor → clamp → 4-term multiply-add;
+    * no libm, so no drift risk at all). The
     * position-weighted checksum makes output ORDER part of the hash.
     * Scale shape: decode+resize are per-row scan-stage functions. */
   val mmResize: Entry = Entry("mm_resize",
@@ -1793,30 +1793,16 @@ object QueriesPipeline {
             (x, i) => x * i)), 6).as("rz_wsum"))
         .orderBy("doc_id")
     },
-    Some("""WITH p AS (SELECT doc_id,
+    Some(s"""WITH p AS (SELECT doc_id,
       |  CAST(doc_id % 13 + 2 AS INT) AS w,
       |  CAST(doc_id % 9 + 2 AS INT) AS h FROM documents),
       |px AS (SELECT doc_id, w, h,
-      |  list_transform(range(0, w * h), i -> CAST((doc_id + i) % 256 AS DOUBLE)) AS a,
-      |  CAST(h AS DOUBLE) / 4 AS sy, CAST(w AS DOUBLE) / 4 AS sx FROM p),
-      |sm AS (SELECT doc_id, w, h, a, list_transform(range(0, 16), i -> struct_pack(
-      |    fy := (CAST(i // 4 AS DOUBLE) + 0.5) * sy - 0.5,
-      |    fx := (CAST(i % 4 AS DOUBLE) + 0.5) * sx - 0.5)) AS sl FROM px),
-      |g AS (SELECT doc_id, w, h, a, list_transform(sl, s -> struct_pack(
-      |    y0 := greatest(0, least(h - 1, CAST(floor(s.fy) AS INT))),
-      |    x0 := greatest(0, least(w - 1, CAST(floor(s.fx) AS INT))),
-      |    y1 := least(h - 1, greatest(0, least(h - 1, CAST(floor(s.fy) AS INT))) + 1),
-      |    x1 := least(w - 1, greatest(0, least(w - 1, CAST(floor(s.fx) AS INT))) + 1),
-      |    dy := greatest(0.0, least(1.0, s.fy - greatest(0, least(h - 1, CAST(floor(s.fy) AS INT))))),
-      |    dx := greatest(0.0, least(1.0, s.fx - greatest(0, least(w - 1, CAST(floor(s.fx) AS INT))))))) AS gl
-      | FROM sm)
-      |SELECT doc_id, w, h, round(list_sum(list_transform(range(0, 16), i ->
-      |  (a[gl[i + 1].y0 * w + gl[i + 1].x0 + 1] * (1 - gl[i + 1].dx) * (1 - gl[i + 1].dy)
-      |   + a[gl[i + 1].y0 * w + gl[i + 1].x1 + 1] * gl[i + 1].dx * (1 - gl[i + 1].dy)
-      |   + a[gl[i + 1].y1 * w + gl[i + 1].x0 + 1] * (1 - gl[i + 1].dx) * gl[i + 1].dy
-      |   + a[gl[i + 1].y1 * w + gl[i + 1].x1 + 1] * gl[i + 1].dx * gl[i + 1].dy)
-      |  * CAST(i + 1 AS DOUBLE))), 6) AS rz_wsum
-      |FROM g ORDER BY doc_id""".stripMargin))
+      |  list_transform(range(0, w * h), i -> CAST((doc_id + i) % 256 AS DOUBLE)) AS a FROM p),
+      |rz AS (SELECT doc_id, w, h,
+      |  ${graft.functions.ImageGeometry.sqlResize("a", "h", "w", 4, 4)} AS rz FROM px)
+      |SELECT doc_id, w, h, round(list_sum(list_transform(range(0, 16),
+      |  i -> rz[i + 1] * CAST(i + 1 AS DOUBLE))), 6) AS rz_wsum
+      |FROM rz ORDER BY doc_id""".stripMargin))
 
   /** Multimodal audio columns — the WAV sibling of [[mmDecode]]: a
     * spec-valid PCM16 mono file per document (sample rate / count /
@@ -2903,20 +2889,18 @@ object QueriesPipeline {
       docs(s, d).select(col("doc_id"), col("n_chars"),
           explode(sequence(lit(0L), lit(1L))).as("epoch"))
         .withColumn("skey",
-          graft.functions.Lcg.key(col("doc_id") + col("epoch") * 1000003L))
+          Lcg.key(col("doc_id") + col("epoch") * 1000003L))
         .withColumn("shard", pmod(col("skey"), lit(64L)))
         .select(col("epoch"), col("shard"), col("skey"),
           col("doc_id"), col("n_chars"))
         .orderBy("epoch", "skey", "doc_id")
     },
-    Some("""WITH e AS (SELECT doc_id, n_chars,
+    Some(s"""WITH e AS (SELECT doc_id, n_chars,
       |  unnest([CAST(0 AS BIGINT), CAST(1 AS BIGINT)]) AS epoch
       |  FROM documents),
       |k AS (SELECT epoch, doc_id, n_chars,
-      |  ((doc_id + epoch * 1000003) % 2147483648) * 1103515245 % 2147483648
-      |    AS mixed_raw FROM e)
-      |SELECT epoch, (mixed_raw + 12345) % 2147483648 % 64 AS shard,
-      |  (mixed_raw + 12345) % 2147483648 AS skey, doc_id, n_chars
+      |  ${Lcg.sqlKey("doc_id + epoch * 1000003")} AS skey FROM e)
+      |SELECT epoch, skey % 64 AS shard, skey, doc_id, n_chars
       |FROM k ORDER BY epoch, skey, doc_id""".stripMargin))
 
   /** The epoch shuffle at SPARSE 64-BIT id scale — the [[plEpochShard]]
@@ -2982,7 +2966,7 @@ object QueriesPipeline {
     (s, d) => {
       val cap = 15
       val keyed = docs(s, d).select(col("doc_id"), col("source"))
-        .withColumn("skey", graft.functions.Lcg.key(col("doc_id")))
+        .withColumn("skey", Lcg.key(col("doc_id")))
         .withColumn("salt", pmod(col("doc_id"), lit(16L)))
       val w1 = org.apache.spark.sql.expressions.Window
         .partitionBy("source", "salt").orderBy("skey", "doc_id")
@@ -2994,8 +2978,7 @@ object QueriesPipeline {
         .select(col("source"), col("rn"), col("doc_id"), col("skey"))
         .orderBy("source", "rn")
     },
-    Some("""WITH k AS (SELECT doc_id, source,
-      |  ((doc_id % 2147483648) * 1103515245 + 12345) % 2147483648 AS skey
+    Some(s"""WITH k AS (SELECT doc_id, source, ${Lcg.sqlKey("doc_id")} AS skey
       | FROM documents),
       |r AS (SELECT source, doc_id, skey,
       |  row_number() OVER (PARTITION BY source ORDER BY skey, doc_id) AS rn
@@ -3168,7 +3151,6 @@ object QueriesPipeline {
     * range-partitioned sort. */
   val plEndToEnd: Entry = Entry("pl_end_to_end",
     (s, d) => {
-      import graft.functions.Lcg
       val base = docs(s, d)
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       val corpus = base.unionByName(
@@ -3211,7 +3193,7 @@ object QueriesPipeline {
         .withColumn("shard", pmod(col("skey"), lit(64L)))
         .orderBy("shard", "skey", "doc_id", "copy_id")
     },
-    Some("""WITH corpus AS (
+    Some(s"""WITH corpus AS (
       | SELECT doc_id, text, lang, source, n_chars FROM documents
       | UNION ALL
       | SELECT doc_id + 100000, text, lang, source, n_chars
@@ -3220,8 +3202,7 @@ object QueriesPipeline {
       |  min(source) AS source, min(n_chars) AS n_chars
       | FROM corpus GROUP BY text HAVING min(n_chars) >= 100),
       |ranked AS (SELECT doc_id, lang, source, n_chars,
-      |  row_number() OVER (PARTITION BY source ORDER BY
-      |    ((doc_id % 2147483648) * 1103515245 + 12345) % 2147483648,
+      |  row_number() OVER (PARTITION BY source ORDER BY ${Lcg.sqlKey("doc_id")},
       |    doc_id) AS rn
       | FROM dedup),
       |capped AS (SELECT * FROM ranked WHERE rn <= 15),
@@ -3231,13 +3212,10 @@ object QueriesPipeline {
       |    CAST(max(chars) OVER () AS DOUBLE) / chars) AS BIGINT)) AS rep
       | FROM chars),
       |ex AS (SELECT doc_id, lang, source, CAST(rn AS INT) AS rn, rep,
-      |  unnest(range(rep)) AS copy_id FROM wts)
-      |SELECT doc_id, lang, source, rn, rep, copy_id,
-      |  (((doc_id + copy_id * 1000003) % 2147483648) * 1103515245 + 12345)
-      |    % 2147483648 AS skey,
-      |  ((((doc_id + copy_id * 1000003) % 2147483648) * 1103515245 + 12345)
-      |    % 2147483648) % 64 AS shard
-      |FROM ex ORDER BY shard, skey, doc_id, copy_id""".stripMargin))
+      |  unnest(range(rep)) AS copy_id FROM wts),
+      |k AS (SELECT *, ${Lcg.sqlKey("doc_id + copy_id * 1000003")} AS skey FROM ex)
+      |SELECT doc_id, lang, source, rn, rep, copy_id, skey, skey % 64 AS shard
+      |FROM k ORDER BY shard, skey, doc_id, copy_id""".stripMargin))
 
   /** C4-style LINE-level dedup (Raffel et al. 2020 §2.2: a line
     * occurring more than once in the corpus is kept exactly ONCE,
@@ -4075,7 +4053,7 @@ object QueriesPipeline {
     * doc_id). Folding to 2^20 trades key granularity, not correctness:
     * collisions sort adjacent under the tie-break (the Lcg wrap-scope
     * note). TIE-BREAK (r13): within a granule collision, ties order by
-    * [[graft.functions.Lcg.key2]] — a second, decorrelated full
+    * [[Lcg.key2]] — a second, decorrelated full
     * permutation — then doc_id; a raw doc_id tie-break preferentially
     * selected LOW ids inside every tied granule once the corpus
     * outgrows the 2^20 granule count (~1M docs), a selection bias the
@@ -4094,14 +4072,14 @@ object QueriesPipeline {
           size(expr("filter(split(coalesce(text, ''), ' '), t -> length(t) > 0)"))
             .cast("long").as("w"))
         .where(col("w") >= 1) // w=0 has no A-ES key (and no mass to sample)
-        .withColumn("k2", pmod(graft.functions.Lcg.key(col("doc_id")), lit(m2)))
+        .withColumn("k2", pmod(Lcg.key(col("doc_id")), lit(m2)))
         .withColumn("lnu",
           expr(s"""CAST(floor(1000000 * ln(CAST(k2 + 1 AS DOUBLE))) AS BIGINT)
             | - CAST(floor(1000000 * ln(CAST($m2 AS DOUBLE))) AS BIGINT)"""
             .stripMargin))
         .withColumn("skey",
           expr("(lnu * 1000000 - pmod(lnu * 1000000, w)) div w"))
-        .withColumn("tb", graft.functions.Lcg.key2(col("doc_id")))
+        .withColumn("tb", Lcg.key2(col("doc_id")))
         .orderBy(col("skey").desc, col("tb"), col("doc_id")).limit(200)
         .select(col("doc_id"), col("w"), col("skey"))
     },
@@ -4109,10 +4087,8 @@ object QueriesPipeline {
       |  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
       |    x -> x <> '')) AS BIGINT) AS w
       | FROM documents),
-      |f AS (SELECT doc_id, w,
-      |  ((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A} + ${graft.functions.Lcg.C}) % ${graft.functions.Lcg.M}
-      |    % ${1L << 20} AS k2,
-      |  ((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A2} + ${graft.functions.Lcg.C2}) % ${graft.functions.Lcg.M} AS tb
+      |f AS (SELECT doc_id, w, ${Lcg.sqlKey("doc_id")} % ${1L << 20} AS k2,
+      |  ${Lcg.sqlKey2("doc_id")} AS tb
       | FROM t WHERE w >= 1),
       |k AS (SELECT doc_id, w, tb,
       |  CAST(floor(1000000 * ln(CAST(k2 + 1 AS DOUBLE))) AS BIGINT)
@@ -4128,7 +4104,7 @@ object QueriesPipeline {
     * per-domain quota sampler that keeps a curated mix covering every
     * stratum regardless of corpus skew (the pl_domain_cap selection
     * discipline with weight-proportional instead of uniform draws).
-    * Same all-BIGINT key and the same [[graft.functions.Lcg.key2]]
+    * Same all-BIGINT key and the same [[Lcg.key2]]
     * permuted tie-break; the rank window is PARTITIONED by lang (a
     * bounded-cardinality key — never a global window), so the plan is
     * one scan + one lang exchange, and each stratum's quota fills by
@@ -4143,14 +4119,14 @@ object QueriesPipeline {
           size(expr("filter(split(coalesce(text, ''), ' '), t -> length(t) > 0)"))
             .cast("long").as("w"))
         .where(col("w") >= 1)
-        .withColumn("k2", pmod(graft.functions.Lcg.key(col("doc_id")), lit(m2)))
+        .withColumn("k2", pmod(Lcg.key(col("doc_id")), lit(m2)))
         .withColumn("lnu",
           expr(s"""CAST(floor(1000000 * ln(CAST(k2 + 1 AS DOUBLE))) AS BIGINT)
             | - CAST(floor(1000000 * ln(CAST($m2 AS DOUBLE))) AS BIGINT)"""
             .stripMargin))
         .withColumn("skey",
           expr("(lnu * 1000000 - pmod(lnu * 1000000, w)) div w"))
-        .withColumn("tb", graft.functions.Lcg.key2(col("doc_id")))
+        .withColumn("tb", Lcg.key2(col("doc_id")))
         .withColumn("rk", row_number().over(
           Window.partitionBy("lang")
             .orderBy(col("skey").desc, col("tb"), col("doc_id"))))
@@ -4163,12 +4139,8 @@ object QueriesPipeline {
       |  CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
       |    x -> x <> '')) AS BIGINT) AS w
       | FROM documents),
-      |f AS (SELECT doc_id, lang, w,
-      |  ((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A}
-      |    + ${graft.functions.Lcg.C}) % ${graft.functions.Lcg.M}
-      |    % ${1L << 20} AS k2,
-      |  ((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A2}
-      |    + ${graft.functions.Lcg.C2}) % ${graft.functions.Lcg.M} AS tb
+      |f AS (SELECT doc_id, lang, w, ${Lcg.sqlKey("doc_id")} % ${1L << 20} AS k2,
+      |  ${Lcg.sqlKey2("doc_id")} AS tb
       | FROM t WHERE w >= 1),
       |k AS (SELECT doc_id, lang, w, tb,
       |  CAST(floor(1000000 * ln(CAST(k2 + 1 AS DOUBLE))) AS BIGINT)

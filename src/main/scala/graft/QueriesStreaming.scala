@@ -494,6 +494,37 @@ object QueriesStreaming {
       |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
       |ORDER BY click_id, buy_id""".stripMargin))
 
+  /** The stream/batch parity census: per-side row counts taken BEFORE
+    * the reconciliation join (a doubled stream emission joined 2:1
+    * against its batch row would otherwise inflate both joined-side
+    * counts equally and slip through — independent counts make any
+    * multiplicity an n_stream ≠ n_batch red), the full-outer join on
+    * the complete output identity `keys` counting rows where
+    * `mismatch` holds, and [[withParityOk]]. */
+  private def parityCensus(streamRes: org.apache.spark.sql.DataFrame,
+      batchRes: org.apache.spark.sql.DataFrame, keys: Seq[String],
+      mismatch: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val nS = streamRes.agg(count(lit(1)).as("n_stream"))
+    val nB = batchRes.agg(count(lit(1)).as("n_batch"))
+    val mm = streamRes.join(batchRes, keys, "full_outer")
+      .agg(sum(when(mismatch, 1L).otherwise(0L)).as("n_mismatch"))
+    withParityOk(nS.crossJoin(nB).crossJoin(mm))
+  }
+
+  private def withParityOk(census: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    census.withColumn("parity_ok",
+      col("n_mismatch") === 0 && col("n_stream") === col("n_batch") && col("n_stream") > 0)
+
+  /** Oracle of a parity entry: `ctes` define the expected census, one
+    * row per output identity in `from`; both sides count it and the
+    * mismatch count is literally zero. */
+  private def sqlParity(ctes: String, from: String): String =
+    s"""WITH $ctes
+       |SELECT CAST(count(*) AS BIGINT) AS n_stream,
+       | CAST(count(*) AS BIGINT) AS n_batch,
+       | CAST(0 AS BIGINT) AS n_mismatch, TRUE AS parity_ok
+       |FROM $from""".stripMargin
+
   /** Stream-stream JOIN parity audit (r16, completing the parity
     * matrix beside st_batch_parity / st_batch_parity_session): the
     * interval click→purchase join run as a REAL 2+-micro-batch
@@ -528,30 +559,16 @@ object QueriesStreaming {
             col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
         .select(col("click_id"), col("buy_id"),
           col("user_id").as("user_b"), col("buy_value").as("val_b"))
-      // independent per-side counts (see st_batch_parity_session): a
-      // doubled stream emission must land as n_stream ≠ n_batch, not
-      // vanish into 2:1 join multiplicity
-      val nS = streamRes.agg(count(lit(1)).as("n_stream"))
-      val nB = batchRes.agg(count(lit(1)).as("n_batch"))
-      val mm = streamRes.join(batchRes, Seq("click_id", "buy_id"), "full_outer")
-        .agg(sum(when(col("user_s").isNull || col("user_b").isNull ||
-          col("user_s") =!= col("user_b") ||
-          col("val_s") =!= col("val_b"), 1L).otherwise(0L)).as("n_mismatch"))
-      nS.crossJoin(nB).crossJoin(mm)
-        .withColumn("parity_ok",
-          col("n_mismatch") === 0 && col("n_stream") === col("n_batch") &&
-            col("n_stream") > 0)
+      parityCensus(streamRes, batchRes, Seq("click_id", "buy_id"),
+        col("user_s").isNull || col("user_b").isNull ||
+          col("user_s") =!= col("user_b") || col("val_s") =!= col("val_b"))
     },
-    Some("""WITH j AS (
+    Some(sqlParity("""j AS (
       | SELECT c.event_id AS click_id, p.event_id AS buy_id
       | FROM events c JOIN events p
       |  ON c.user_id = p.user_id
       |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL '1 hour'
-      | WHERE c.event_type = 'click' AND p.event_type = 'purchase')
-      |SELECT CAST(count(*) AS BIGINT) AS n_stream,
-      | CAST(count(*) AS BIGINT) AS n_batch,
-      | CAST(0 AS BIGINT) AS n_mismatch, TRUE AS parity_ok
-      |FROM j""".stripMargin))
+      | WHERE c.event_type = 'click' AND p.event_type = 'purchase')""".stripMargin, "j")))
 
   /** CHECKPOINT RECOVERY under the oracle — the fault-tolerance
     * contract a production ingestion pipeline actually relies on: stop
@@ -776,26 +793,15 @@ object QueriesStreaming {
         .agg(min(col("ts")).as("ts0"))
         .select(col("doc_id"), (unix_timestamp(col("ts0")) * 1000).as("t_ms"),
           lit(1L).as("one_b"))
-      val nS = streamRes.agg(count(lit(1)).as("n_stream"))
-      val nB = batchRes.agg(count(lit(1)).as("n_batch"))
-      val mm = streamRes.join(batchRes, Seq("doc_id", "t_ms"), "full_outer")
-        .agg(sum(when(col("one_s").isNull || col("one_b").isNull, 1L)
-          .otherwise(0L)).as("n_mismatch"))
-      nS.crossJoin(nB).crossJoin(mm)
-        .withColumn("parity_ok",
-          col("n_mismatch") === 0 && col("n_stream") === col("n_batch") &&
-            col("n_stream") > 0)
+      parityCensus(streamRes, batchRes, Seq("doc_id", "t_ms"),
+        col("one_s").isNull || col("one_b").isNull)
     },
-    Some("""WITH out AS (
+    Some(sqlParity("""out AS (
       | SELECT doc_id FROM documents
       | UNION ALL
       | SELECT doc_id FROM documents WHERE doc_id % 7 = 0
       | UNION ALL
-      | SELECT -1 AS doc_id)
-      |SELECT CAST(count(*) AS BIGINT) AS n_stream,
-      | CAST(count(*) AS BIGINT) AS n_batch,
-      | CAST(0 AS BIGINT) AS n_mismatch, TRUE AS parity_ok
-      |FROM out""".stripMargin))
+      | SELECT -1 AS doc_id)""".stripMargin, "out")))
 
   /** The media-dedup corpus, head-capped at the audited 500k-doc slice
     * (r17, found AT the sf30 rung): pxMix content has 2^21 distinct
@@ -1215,22 +1221,10 @@ object QueriesStreaming {
         .agg(count(lit(1)).as("n_b"))
         .select(col("user_id"), col("session_window.start").as("ss"),
           col("session_window.end").as("se"), col("n_b"))
-      // per-side counts are taken BEFORE the reconciliation join: a
-      // doubled emission joined 2:1 against its batch row would
-      // otherwise inflate BOTH joined-side counts equally and slip
-      // through — independent counts make any multiplicity a
-      // n_stream ≠ n_batch red
-      val nS = streamRes.agg(count(lit(1)).as("n_stream"))
-      val nB = batchRes.agg(count(lit(1)).as("n_batch"))
-      val mm = streamRes.join(batchRes, Seq("user_id", "ss", "se"), "full_outer")
-        .agg(sum(when(col("n_s").isNull || col("n_b").isNull ||
-          col("n_s") =!= col("n_b"), 1L).otherwise(0L)).as("n_mismatch"))
-      nS.crossJoin(nB).crossJoin(mm)
-        .withColumn("parity_ok",
-          col("n_mismatch") === 0 && col("n_stream") === col("n_batch") &&
-            col("n_stream") > 0)
+      parityCensus(streamRes, batchRes, Seq("user_id", "ss", "se"),
+        col("n_s").isNull || col("n_b").isNull || col("n_s") =!= col("n_b"))
     },
-    Some("""WITH o AS (
+    Some(sqlParity("""o AS (
       | SELECT user_id, ts,
       |  CASE WHEN lag(ts) OVER w IS NULL
       |        OR date_diff('microsecond', lag(ts) OVER w, ts) >= 28800000000 THEN 1
@@ -1240,11 +1234,7 @@ object QueriesStreaming {
       |  sum(brk) OVER (PARTITION BY user_id ORDER BY ts
       |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
       | FROM o),
-      |g AS (SELECT user_id, sid FROM s GROUP BY user_id, sid)
-      |SELECT CAST(count(*) AS BIGINT) AS n_stream,
-      | CAST(count(*) AS BIGINT) AS n_batch,
-      | CAST(0 AS BIGINT) AS n_mismatch, TRUE AS parity_ok
-      |FROM g""".stripMargin))
+      |g AS (SELECT user_id, sid FROM s GROUP BY user_id, sid)""".stripMargin, "g")))
 
   /** Streaming per-key top-k under REAL micro-batch execution —
     * [[StreamingOps.topKPerKey]]: a SpaceSaving summary per language
@@ -1459,23 +1449,20 @@ object QueriesStreaming {
           col("event_type"), col("value"), "1 hour")
         .select(col("window.start").as("ws"), col("event_type"),
           col("n").as("n_b"), col("sum_v").as("sum_b"))
-      streamRes.join(batchRes, Seq("ws", "event_type"), "full_outer")
+      val census = streamRes.join(batchRes, Seq("ws", "event_type"), "full_outer")
         .agg(
           sum(when(col("n_s").isNotNull, 1L).otherwise(0L)).as("n_stream"),
           sum(when(col("n_b").isNotNull, 1L).otherwise(0L)).as("n_batch"),
           sum(when(col("n_s").isNull || col("n_b").isNull ||
             col("n_s") =!= col("n_b") || col("sum_s") =!= col("sum_b"), 1L)
             .otherwise(0L)).as("n_mismatch"))
-        .withColumn("parity_ok",
-          col("n_mismatch") === 0 && col("n_stream") === col("n_batch") &&
-            col("n_stream") > 0)
+      // post-join counts: counting before the join would re-run the
+      // batch aggregate; the oracle pins n_stream to the group count,
+      // so a doubled emission still fails the gate
+      withParityOk(census)
     },
-    Some("""WITH g AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS ws,
-      |  event_type FROM events GROUP BY 1, 2)
-      |SELECT CAST(count(*) AS BIGINT) AS n_stream,
-      | CAST(count(*) AS BIGINT) AS n_batch,
-      | CAST(0 AS BIGINT) AS n_mismatch, TRUE AS parity_ok
-      |FROM g""".stripMargin))
+    Some(sqlParity("""g AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS ws,
+      |  event_type FROM events GROUP BY 1, 2)""".stripMargin, "g")))
 
   val all: Seq[Entry] = Seq(stTumbling, stSliding, stSession, stSessionCustom,
     stStreamExec, stStreamSessionExec, stStreamDedup, stStreamJoin,

@@ -28,6 +28,12 @@ object SarFixture {
   val path: String =
     new java.io.File("target/tmp/sar_fixture_75.json").getAbsolutePath
 
+  /** The DuckDB table function reading the fixture with its explicit
+    * schema — the one spelling every oracle over it uses. */
+  val sqlRead: String =
+    s"""read_json('$path', columns = {id: 'VARCHAR', band_1: 'DOUBLE[]',
+       |  band_2: 'DOUBLE[]', inc_angle: 'VARCHAR', is_iceberg: 'INTEGER'})""".stripMargin
+
   /** Deterministic content: one-decimal band values so both JSON
     * parsers (Spark, DuckDB read_json) reconstruct identical doubles;
     * every 5th inc_angle is "na" starting at row 2 (row 1 stays

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{lit, udf}
 
 /** SURVEY.md §2.10: the array-geometry UDF family — the only reference
   * capability (A8 resize, A11 flip, A12 crop/ten-crop, A13 augmentation)
@@ -212,7 +212,108 @@ object ImageGeometry {
     udf((a: Array[Double], w: Int, id: Long, epoch: Int) => augmentFull(a, w, id, epoch))
 
   def bilinear_resize(a: Column, h0: Int, w0: Int, h1: Int, w1: Int): Column =
-    bilinearResizeUdf(a, org.apache.spark.sql.functions.lit(h0),
-      org.apache.spark.sql.functions.lit(w0), org.apache.spark.sql.functions.lit(h1),
-      org.apache.spark.sql.functions.lit(w1))
+    bilinearResizeUdf(a, lit(h0), lit(w0), lit(h1), lit(w1))
+
+  /** Column twin of the masked-LCG draw of [[augmentFull]]'s stream
+    * `stream` at `epoch`: lcg((id & 0xffff)·131071 + epoch·31 + stream).
+    * Stream 0 at epoch 0 adds no term, so it is also [[augmentFlip]]'s
+    * draw at epoch 0. */
+  def draw(id: Column, epoch: Int, stream: Int): Column = {
+    val base = id.bitwiseAND(lit(0xffffL)) * 131071L
+    val off = epoch * 31L + stream
+    val seed = if (off == 0) base else base + off
+    (seed.bitwiseAND(lit(0xffffffL)) * 1103515245L + 12345L).bitwiseAND(lit(0x7fffffffL))
+  }
+
+  // ------------------------------------- DuckDB replays for the oracles
+  // Each generator states its kernel's arithmetic in its own SQL
+  // literals — it reads none of the Scala code above, so an oracle built
+  // from it stays an independent check of the kernel. Images are DuckDB
+  // lists (1-based), row-major; sizes are the oracle's own arguments.
+
+  /** [[flipH]] of the n×n image list `l`. */
+  def sqlFlipH(l: String, n: Int): String =
+    s"list_transform(range(0, ${n * n}), i -> $l[(i // $n) * $n + ($n - (i % $n))])"
+
+  /** [[flipV]] of the n×n image list `l`: output row r reads row n−1−r. */
+  def sqlFlipV(l: String, n: Int): String =
+    s"list_transform(range(0, ${n * n}), i -> $l[($n - 1 - (i // $n)) * $n + (i % $n) + 1])"
+
+  /** The ten crop sums of [[tenCrop]] in its order, [TL, TR, BL, BR,
+    * center] over the image list `l`, then the same over its H-flip
+    * `flipped`. Each crop is its h row slices concatenated into ONE
+    * list_sum, so the fold runs over the w·h elements in the JVM's
+    * row-major crop order. */
+  def sqlTenCropSums(l: String, flipped: String, imgW: Int, imgH: Int,
+      w: Int, h: Int): Seq[String] = {
+    val offs = Seq((0, 0), (imgW - w, 0), (0, imgH - h), (imgW - w, imgH - h),
+      ((imgW - w) / 2, (imgH - h) / 2))
+    def at(r: Int, c: Int) = r * imgW + c + 1
+    for (img <- Seq(l, flipped); (x0, y0) <- offs) yield
+      (0 until h).map(r => s"$img[${at(y0 + r, x0)}:${at(y0 + r, x0 + w - 1)}]")
+        .mkString("list_sum(", " || ", ")")
+  }
+
+  /** The masked-LCG draw of [[draw]] over the BIGINT id expression `id`.
+    * Every intermediate stays below 2^55, so DuckDB's checked BIGINT
+    * arithmetic gives the JVM's value. */
+  def sqlDraw(id: String, epoch: Int, stream: Int): String =
+    s"(((($id & 65535) * 131071 + ${epoch * 31 + stream}) & 16777215) * 1103515245 + 12345) & 2147483647"
+
+  /** The bilinear sample of an h0×w0 image list `img` at each point of
+    * `coords`, a list of struct(px, py) source coordinates: floor →
+    * edge clamp → the 4-term multiply-add in the order of
+    * [[bilinearResize]] and [[affine]]. `h0`/`w0` are SQL expressions
+    * (a literal or a per-row column). */
+  def sqlBilinear(img: String, h0: String, w0: String, coords: String): String =
+    s"""list_transform(list_transform($coords, s -> struct_pack(
+       |    x0 := greatest(0, least($w0 - 1, CAST(floor(s.px) AS INT))),
+       |    y0 := greatest(0, least($h0 - 1, CAST(floor(s.py) AS INT))),
+       |    x1 := least($w0 - 1, greatest(0, least($w0 - 1, CAST(floor(s.px) AS INT))) + 1),
+       |    y1 := least($h0 - 1, greatest(0, least($h0 - 1, CAST(floor(s.py) AS INT))) + 1),
+       |    fx := greatest(0.0, least(1.0, s.px - greatest(0, least($w0 - 1, CAST(floor(s.px) AS INT))))),
+       |    fy := greatest(0.0, least(1.0, s.py - greatest(0, least($h0 - 1, CAST(floor(s.py) AS INT))))))),
+       |  p -> $img[p.y0 * $w0 + p.x0 + 1] * (1 - p.fx) * (1 - p.fy)
+       |    + $img[p.y0 * $w0 + p.x1 + 1] * p.fx * (1 - p.fy)
+       |    + $img[p.y1 * $w0 + p.x0 + 1] * (1 - p.fx) * p.fy
+       |    + $img[p.y1 * $w0 + p.x1 + 1] * p.fx * p.fy)""".stripMargin
+
+  /** [[bilinearResize]] h0×w0 → h1×w1 of `img`: half-pixel centers,
+    * scale h0/h1 as one IEEE division like the JVM's. */
+  def sqlResize(img: String, h0: String, w0: String, h1: Int, w1: Int): String =
+    sqlBilinear(img, h0, w0,
+      s"""list_transform(range(0, ${h1 * w1}), i -> struct_pack(
+         |    px := (CAST(i % $w1 AS DOUBLE) + 0.5) * (CAST($w0 AS DOUBLE) / $w1) - 0.5,
+         |    py := (CAST(i // $w1 AS DOUBLE) + 0.5) * (CAST($h0 AS DOUBLE) / $h1) - 0.5))""".stripMargin)
+
+  /** [[augmentFull]] at epoch 0 of the n×n image list `img`: CTEs
+    * over `from` (rows carrying `id` and `img`) ending in `ag`(id, aug),
+    * the augmented list. The chain in kernel order: the six draws, the
+    * H-flip (stream 0) then V-flip (stream 5), θ/zoom/shift (the 30°
+    * factor is the JVM double of toRadians(30) written out), cos/sin of
+    * −θ, the inverse-mapped coordinates about the center, and the
+    * bilinear sample. */
+  def sqlAugmentFull(from: String, img: String, n: Int, id: String): String = {
+    val c0 = (n - 1) / 2.0
+    val draws = (0 to 5).map(k => s"${sqlDraw(id, 0, k)} AS l$k").mkString(",\n  ")
+    s"""ad AS (SELECT $id, $img,
+       |  $draws
+       | FROM $from),
+       |ah AS (SELECT $id, l5,
+       |  CASE WHEN l0 < 1073741824 THEN ${sqlFlipH(img, n)} ELSE $img END AS augh,
+       |  (CAST(l1 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.5235987755982988 AS theta,
+       |  0.75 + CAST(l2 AS DOUBLE) / 2147483648.0 * 0.5 AS zoom,
+       |  (CAST(l3 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shx,
+       |  (CAST(l4 AS DOUBLE) / 2147483648.0 * 2 - 1) * 0.2 AS shy
+       | FROM ad),
+       |av AS (SELECT $id,
+       |  CASE WHEN l5 < 1073741824 THEN ${sqlFlipV("augh", n)} ELSE augh END AS src,
+       |  cos(-theta) AS ct, sin(-theta) AS st, 1.0 / zoom AS iz, shx, shy
+       | FROM ah),
+       |ag AS (SELECT $id, ${sqlBilinear("src", n.toString, n.toString,
+         s"""list_transform(range(0, ${n * n}), i -> struct_pack(
+            |    px := ((CAST(i % $n AS DOUBLE) - $c0 - shx * $n) * ct - (CAST(i // $n AS DOUBLE) - $c0 - shy * $n) * st) * iz + $c0,
+            |    py := ((CAST(i % $n AS DOUBLE) - $c0 - shx * $n) * st + (CAST(i // $n AS DOUBLE) - $c0 - shy * $n) * ct) * iz + $c0))""".stripMargin)} AS aug
+       | FROM av)""".stripMargin
+  }
 }

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *
   * All arithmetic stays exact in BIGINT — max product a·(m−1) ≈
   * 2.37e18 < 2^63 — and both Spark and DuckDB compute it
-  * bit-identically; the oracle SQL spells the same
-  * `((x % m) * a + c) % m` (constants must match this object).
+  * bit-identically; the oracles spell it through [[sqlKey]] and
+  * [[sqlKey2]], which write the constants out as their own literals.
   */
 object Lcg {
   val M: Long = 2147483648L // 2^31
@@ -65,4 +65,14 @@ object Lcg {
   /** Scala twin — keep in lockstep with [[key2]] (floorMod, see [[key]]). */
   def key2(x: Long): Long =
     Math.floorMod(Math.floorMod(x, M) * A2 + C2, M)
+
+  /** DuckDB replay of [[key]] over a non-negative BIGINT expression `x`
+    * (SQL `%` is `pmod` there). It reads none of the constants above, so
+    * an oracle built from it stays an independent check. */
+  def sqlKey(x: String): String =
+    s"((($x) % 2147483648) * 1103515245 + 12345) % 2147483648"
+
+  /** DuckDB replay of [[key2]], the same way as [[sqlKey]]. */
+  def sqlKey2(x: String): String =
+    s"((($x) % 2147483648) * 1664525 + 1013904223) % 2147483648"
 }

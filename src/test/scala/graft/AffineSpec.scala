@@ -56,7 +56,7 @@ class AffineSpec extends AnyFunSuite with Matchers {
     // from the nearest integer (empirical minimum: 5.9e-8), so no
     // sub-nanoscale libm disagreement can flip a floor. The parameter
     // and coordinate formulas mirror augmentFull/affine — the same
-    // contract the oracle SQL encodes (QueriesArrays.a13Affine).
+    // contract the oracle SQL encodes (ImageGeometry.sqlAugmentFull).
     val W = 8; val cx = 3.5; val cy = 3.5
     var minMargin = Double.MaxValue
     var id = 0L
