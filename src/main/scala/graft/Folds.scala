@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
   * Reference: StratifiedKFold(n_splits=K, shuffle=True, random_state=16)
   * (main.py:248-249). Exact sklearn membership is not reproducible (its
   * RNG); the preserved invariants are: folds are disjoint, cover all rows,
-  * and per-class fold sizes differ by ≤ 1. `rand(seed)` keeps OUR
-  * assignment deterministic run-to-run.
+  * and per-class fold sizes differ by ≤ 1. Ordering by a stable key
+  * keeps OUR assignment deterministic run-to-run (the `rand(seed)`
+  * spelling of the reference's shuffle lives in FoldsSpec).
   *
-  * Scale note: the row_number variants use one window partitioned by
+  * Scale note: the row_number variant uses one window partitioned by
   * the label — shuffles once by class, and a binary label means only 2
-  * partitions carry data. They preserve the reference's exact
+  * partitions carry data. It preserves the reference's exact
   * ≤1-imbalance guarantee and are the right tool at test scale; the
   * 100 TB default is [[addHashFold]] — a stateless per-row hash-mod
   * projection with no shuffle and no skew (oracle-checked as
@@ -22,14 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Folds {
 
-  def addStratifiedFold(df: DataFrame, labelCol: String, k: Int, seed: Long = 16): DataFrame = {
-    val w = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
-    df.withColumn("fold", ((row_number().over(w) - 1) % k).cast("int"))
-  }
-
-  /** Deterministic variant used by oracle-checked queries: same stratified
-    * round-robin but ordered by a stable key instead of rand — per-class
-    * fold SIZES are identical to the random variant. */
+  /** Stratified round-robin ordered by a stable key: deterministic, so
+    * oracle-checked entries can replay it. Per-class fold SIZES equal
+    * those of the reference's shuffled split. */
   def addStratifiedFoldByKey(df: DataFrame, labelCol: String, keyCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col(labelCol)).orderBy(col(keyCol))
     df.withColumn("fold", ((row_number().over(w) - 1) % k).cast("int"))
@@ -37,7 +33,7 @@ object Folds {
 
   /** The 100 TB default: stateless hash-mod fold assignment — a pure
     * per-row projection, so NO window, NO shuffle, NO skew regardless of
-    * label cardinality (the row_number variants above funnel each class
+    * label cardinality (the row_number variant above funnels each class
     * through one window partition, which is fine at test scale but a
     * single-task bottleneck when a binary label splits 100 TB in two).
     * Trade-off: per-class fold sizes are binomial (±√n) instead of the

@@ -45,18 +45,18 @@ object Model {
   case class CvResult(oof: DataFrame, test: DataFrame, models: Seq[PipelineModel])
 
   def crossValidate(train: DataFrame, test: DataFrame, featureCols: Seq[String], k: Int): CvResult = {
-    // Coalesce the training frame before caching: every LBFGS iteration
-    // is one Spark job whose task count = the frame's partition count,
-    // and K folds fit concurrently — at fixture scale (45k rows over
-    // the session's 32 shuffle partitions) that is 3 jobs × 32
-    // near-empty tasks × ~12 iterations of pure scheduling overhead,
-    // the measured source of ml_cv_logloss's 5-13 s run-to-run
-    // variance. 8 partitions keep every core busy at this row count;
-    // at 100 TB the partition sizing rule flips the same knob UP (the
-    // point is it is sized to the data, never defaulted). coalesce is
-    // narrow — no shuffle, it just unions scan splits.
-    val cached = train.coalesce(8).persist() // reused K times — the reference's pickle-cache analogue
-    cached.count() // materialize once before the concurrent fits race to build it
+    // Pin the training frame once: every fold's fit reads it once per
+    // LBFGS iteration, each read one job whose task count is the
+    // frame's partition count. Against a plan cache the pin moves two
+    // layers. Each fit task deserializes a one-RDD lineage instead of
+    // the scan + fold-window plan under an InMemoryRelation. And the
+    // partitioning AQE gave the frame (1 partition at sf0.01) carries
+    // into the fits, so a treeAggregate is one stage, not a 4-task
+    // stage plus a 1-task merge. coalesce(8) is the upper bound for
+    // sessions without AQE, where the fold window's exchange would
+    // hand the fits one task per shuffle partition; it is narrow (no
+    // shuffle).
+    val pinned = Graft.pin(train.coalesce(8))
     // Fold fits are independent Spark job sequences driven from the
     // driver — run them concurrently (the CrossValidator.parallelism
     // technique) so their many small jobs overlap on the cluster
@@ -70,8 +70,8 @@ object Model {
     val perFold = try {
       Await.result(Future.sequence((0 until k).map { j =>
         Future {
-          val m = pipeline(featureCols).fit(Folds.trainSplit(cached, j))
-          val oof = prob1(m.transform(Folds.holdoutSplit(cached, j)))
+          val m = pipeline(featureCols).fit(Folds.trainSplit(pinned, j))
+          val oof = prob1(m.transform(Folds.holdoutSplit(pinned, j)))
           val tst = prob1(m.transform(test)).withColumn("fold", lit(j))
           (m, oof, tst)
         }

@@ -164,26 +164,14 @@ object QueriesMl {
       import org.apache.spark.ml.Pipeline
       import org.apache.spark.ml.classification.GBTClassifier
       import org.apache.spark.ml.feature.VectorAssembler
-      // cache WITHOUT a later unpersist or checkpoint. History of this
-      // spot: a plain unpersist-before-return recomputed the frame twice
-      // at execution time (the returned plan runs after this fn returns,
-      // r3 verdict #2); the r4 fix (eager localCheckpoint, then
-      // unpersist) pinned a fresh checkpoint RDD in executor storage per
-      // invocation — repeated bench passes accumulate blocks until
-      // ContextCleaner GC (r4 advice). Leaving the cache in place does
-      // neither: Spark's CacheManager keys entries by CANONICALIZED plan,
-      // so every invocation (bench pass, verify run) maps to the SAME
-      // single cached relation — O(1) storage for a frame of a few MB —
-      // and the returned plan's LR/GBT transforms re-score over the
-      // still-live cache (scoring is cheap; the fits below stay eager).
-      // coalesce(8) BEFORE the cache, the Model.crossValidate sizing
-      // rule (r9 verdict #3): every LBFGS/GBT iteration is one Spark
-      // job whose task count = the frame's partition count, and the
-      // two fits below run ~20 such jobs — at the session-wide 32 that
-      // is pure scheduling overhead on near-empty tasks at fixture
-      // scale (at 100 TB the same knob is sized UP to the data)
-      val frame = featureFrame(s, d).coalesce(8).cache()
-      frame.count() // materialize once before the concurrent fits race
+      // Pin the fit frame (the Model.crossValidate technique): every
+      // LR/GBT iteration below is one job over it, and each task then
+      // ships a one-RDD lineage, not the scan plan. The returned plan's
+      // transforms re-score the same pinned blocks after this fn
+      // returns; the ContextCleaner frees them once that frame is
+      // garbage. coalesce bounds each job's task count for sessions
+      // without AQE (at 100 TB the same knob is sized UP to the data)
+      val frame = Graft.pin(featureFrame(s, d).coalesce(8))
       // the two model-family fits are independent driver-side job
       // sequences — overlap them (the crossValidate technique) instead
       // of serializing their scheduling latency

@@ -32,12 +32,6 @@ object Verify {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
       org.apache.logging.log4j.Level.ERROR)
-    // "Asked to cache already cached data" IS the ml_stack/ml_cv design:
-    // repeated invocations dedup through CacheManager's canonicalized
-    // plans instead of accumulating checkpoints (QueriesMl rationale)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
     // "The state for version N doesn't exist in loadedMaps ... Note
     // that this is normal for the first batch of starting query" — the
     // message adjudicates itself: every isolated stream session's first

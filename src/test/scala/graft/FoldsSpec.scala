@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** G1/J4 stratified-fold invariants (SURVEY.md §5.3): folds disjoint,
@@ -7,6 +9,7 @@ import org.apache.spark.sql.functions._
   * StratifiedKFold guarantee, main.py:248-249). */
 class FoldsSpec extends SparkSpec {
   import spark.implicits._
+  import FoldsSpec.addStratifiedFold
 
   private val k = 4
   private lazy val df = {
@@ -16,7 +19,7 @@ class FoldsSpec extends SparkSpec {
   }
 
   test("random variant: disjoint cover + per-class balance <= 1") {
-    val folded = Folds.addStratifiedFold(df, "label", k).cache()
+    val folded = addStratifiedFold(df, "label", k).cache()
     folded.count() shouldBe 40 // cover: every row got exactly one fold
     folded.where(col("fold") < 0 || col("fold") >= k).count() shouldBe 0
     val sizes = folded.groupBy("label", "fold").count()
@@ -30,9 +33,9 @@ class FoldsSpec extends SparkSpec {
   }
 
   test("random variant is deterministic for a fixed seed") {
-    val a = Folds.addStratifiedFold(df, "label", k, seed = 16)
+    val a = addStratifiedFold(df, "label", k, seed = 16)
       .orderBy("id").select("fold").as[Int].collect().toSeq
-    val b = Folds.addStratifiedFold(df, "label", k, seed = 16)
+    val b = addStratifiedFold(df, "label", k, seed = 16)
       .orderBy("id").select("fold").as[Int].collect().toSeq
     a shouldBe b
   }
@@ -53,5 +56,15 @@ class FoldsSpec extends SparkSpec {
     (tr + ho) shouldBe 40
     Folds.holdoutSplit(folded, 1).join(Folds.trainSplit(folded, 1), "id").count() shouldBe 0
     folded.unpersist()
+  }
+}
+
+object FoldsSpec {
+  /** The reference's shuffled StratifiedKFold spelled with `rand(seed)`:
+    * the same round-robin as [[Folds.addStratifiedFoldByKey]], ordered
+    * by a seeded random draw instead of a key. No entry uses it. */
+  def addStratifiedFold(df: DataFrame, labelCol: String, k: Int, seed: Long = 16): DataFrame = {
+    val w = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
+    df.withColumn("fold", ((row_number().over(w) - 1) % k).cast("int"))
   }
 }

@@ -76,4 +76,24 @@ class MlPipelineSpec extends SparkSpec {
     row.getAs[Long]("n") shouldBe 150L
     row.getAs[Long]("n_mismatch") shouldBe 0L
   }
+
+  test("crossValidate fits and scores a pinned frame") {
+    // The fits and the OOF scoring read a lineage pin of the coalesced
+    // training frame: every leaf under the OOF plan is the pinned RDD,
+    // never the parquet scan or a plan-cache relation, and no
+    // CacheManager entry outlives the call.
+    import org.apache.spark.sql.execution.LogicalRDD
+    val k = 3
+    val feats = QueriesMl.featureCols
+    val fold = Folds.addStratifiedFoldByKey(
+      QueriesMl.featureFrame(spark, "/root/testdata/sf0.001"), "label", "id", k)
+    val cv = Model.crossValidate(fold, fold.select("id", feats: _*), feats, k)
+    // an InMemoryRelation or a file LogicalRelation leaf fails here
+    val leaves = cv.oof.queryExecution.optimizedPlan.collectLeaves()
+    leaves should not be empty
+    leaves.filterNot(_.isInstanceOf[LogicalRDD]) shouldBe empty
+    val coalesced = fold.coalesce(8).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    spark.sharedState.cacheManager.lookupCachedData(coalesced) shouldBe None
+    cv.oof.count() shouldBe 150L
+  }
 }
