@@ -194,7 +194,7 @@ object Queries {
         .select(col("day"), coalesce(col("n_orders"), lit(0L)).as("n_orders"))
         .orderBy("day")
     },
-    Some("""WITH o AS (SELECT CAST(o_orderdate AS DATE) AS day FROM orders
+    Some("""WITH o AS MATERIALIZED (SELECT CAST(o_orderdate AS DATE) AS day FROM orders
       |  WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1995-03-01' AND DATE '1995-03-31'),
       |b AS (SELECT min(day) AS lo, max(day) AS hi FROM o),
       |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS day FROM b),
@@ -335,7 +335,7 @@ object Queries {
           coalesce(col("sum_v"), lit(0.0)).as("click_value_sum"))
         .orderBy("event_id")
     },
-    Some(s"""WITH e AS (SELECT event_id, user_id,
+    Some(s"""WITH e AS MATERIALIZED (SELECT event_id, user_id,
       |  epoch_us(CAST(ts AS TIMESTAMP)) AS t_us, event_type, value FROM events),
       |s AS (SELECT event_id, user_id, t_us AS lo, t_us + 7200000000 AS hi
       | FROM e WHERE event_type = 'signup'),
@@ -554,7 +554,7 @@ object Queries {
         .select(col("id_a").as("akey"), col("id_b").as("bkey"), col("dist"))
         .orderBy("akey", "bkey")
     },
-    Some(s"""WITH c AS (SELECT c_custkey, c_name FROM customer
+    Some(s"""WITH c AS MATERIALIZED (SELECT c_custkey, c_name FROM customer
       | WHERE c_custkey % ((SELECT (count(*) + ${FuzzyOracleCap - 1})
       |                     // $FuzzyOracleCap FROM customer)) = 0)
       |SELECT a.c_custkey AS akey, b.c_custkey AS bkey,

@@ -198,7 +198,7 @@ object QueriesAggWindow {
     },
     Some("""WITH lift AS (
       | SELECT 1000000 * (max(c_custkey) // 1000000 + 1) AS k FROM customer),
-      |changes AS (
+      |changes AS MATERIALIZED (
       | SELECT c_custkey, c_name, round(c_acctbal + 100, 2) AS acctbal
       | FROM customer WHERE c_custkey % 10 = 0
       | UNION ALL
@@ -293,9 +293,9 @@ object QueriesAggWindow {
         .groupBy("key").agg(max(col("cnt")).as("cnt"), min(col("s")).as("cms_est"))
         .orderBy("key")
     },
-    Some("""WITH c AS (SELECT o_custkey AS key, count(*) AS cnt
+    Some("""WITH c AS MATERIALIZED (SELECT o_custkey AS key, count(*) AS cnt
       |  FROM orders GROUP BY 1),
-      |e AS (SELECT key, cnt, j,
+      |e AS MATERIALIZED (SELECT key, cnt, j,
       |  CAST((key * a + b) % 2147483647 % 1024 AS BIGINT) AS h
       | FROM c, (VALUES (0, 1103515245, 12345), (1, 22695477, 1),
       |   (2, 69069, 5)) t(j, a, b)),
@@ -648,26 +648,23 @@ object QueriesAggWindow {
           col("min_price"), col("max_price")))
         .orderBy("column_name")
     },
-    Some("""WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-      |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_cust,
-      |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_cust,
-      |  CAST(min(o_custkey) AS DOUBLE) AS min_cust,
-      |  CAST(max(o_custkey) AS DOUBLE) AS max_cust,
-      |  CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_price,
-      |  CAST(count(DISTINCT o_totalprice) AS BIGINT) AS nd_price,
-      |  round(min(o_totalprice), 2) AS min_price,
-      |  round(max(o_totalprice), 2) AS max_price,
-      |  CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_pri,
-      |  CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS nd_pri
-      | FROM orders)
-      |SELECT 'o_custkey' AS column_name, n_rows, nn_cust AS n_null,
-      |  nd_cust AS n_distinct, min_cust AS min_num, max_cust AS max_num FROM a
+    Some("""SELECT 'o_custkey' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
+      |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+      |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_distinct,
+      |  CAST(min(o_custkey) AS DOUBLE) AS min_num, CAST(max(o_custkey) AS DOUBLE) AS max_num
+      | FROM orders
       |UNION ALL
-      |SELECT 'o_orderpriority', n_rows, nn_pri, nd_pri,
-      |  CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE) FROM a
+      |SELECT 'o_orderpriority', CAST(count(*) AS BIGINT),
+      |  CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+      |  CAST(count(DISTINCT o_orderpriority) AS BIGINT),
+      |  CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
+      | FROM orders
       |UNION ALL
-      |SELECT 'o_totalprice', n_rows, nn_price, nd_price,
-      |  min_price, max_price FROM a
+      |SELECT 'o_totalprice', CAST(count(*) AS BIGINT),
+      |  CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+      |  CAST(count(DISTINCT o_totalprice) AS BIGINT),
+      |  round(min(o_totalprice), 2), round(max(o_totalprice), 2)
+      | FROM orders
       |ORDER BY column_name""".stripMargin))
 
   /** Partition-skew audit — the diagnostics pass an ops team runs
@@ -701,7 +698,7 @@ object QueriesAggWindow {
         .orderBy(col("cnt").desc, col("key"))
         .limit(10)
     },
-    Some("""WITH c AS (SELECT l_suppkey AS key, count(*) AS cnt
+    Some("""WITH c AS MATERIALIZED (SELECT l_suppkey AS key, count(*) AS cnt
       | FROM lineitem GROUP BY 1),
       |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
       |  count(*) AS n_keys, max(cnt) AS max_cnt FROM c)
@@ -1229,7 +1226,7 @@ object QueriesAggWindow {
         .select(col("o_orderkey"), col("w"), col("cum"))
         .orderBy("o_orderkey")
     },
-    Some(s"""WITH x AS (SELECT o_orderkey,
+    Some(s"""WITH x AS MATERIALIZED (SELECT o_orderkey,
       |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS w,
       |  ${graft.functions.Feistel.keySql("o_orderkey")} AS h
       | FROM orders),
@@ -1810,7 +1807,7 @@ object QueriesAggWindow {
         .agg(count(lit(1)).as("n_users"))
         .orderBy("cohort", "week_no")
     },
-    Some("""WITH e AS (SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS wk
+    Some("""WITH e AS MATERIALIZED (SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS wk
       |  FROM events),
       |f AS (SELECT user_id, min(wk) AS cohort FROM e GROUP BY user_id),
       |a AS (SELECT DISTINCT user_id, wk FROM e)
@@ -1887,7 +1884,7 @@ object QueriesAggWindow {
           .as("ks_stat"))
         .select(col("ks_stat"), col("n_a"), col("n_b"))
     },
-    Some("""WITH x AS (SELECT value,
+    Some("""WITH x AS MATERIALIZED (SELECT value,
       |  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ia
       | FROM events WHERE event_type IN ('click', 'purchase')
       |   AND value IS NOT NULL),
@@ -1956,11 +1953,11 @@ object QueriesAggWindow {
            (countDistinct(col("event_type")) - 1)).as("dof"))
         .select(col("chi2"), col("dof"), col("n"))
     },
-    Some("""WITH c0 AS (SELECT event_type,
+    Some("""WITH c0 AS MATERIALIZED (SELECT event_type,
       |  CAST(sum(CASE WHEN day(ts) % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS o0,
       |  CAST(sum(CASE WHEN day(ts) % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS o1
       | FROM events GROUP BY 1),
-      |cells AS (SELECT event_type, 0 AS period, o0 AS o FROM c0
+      |cells AS MATERIALIZED (SELECT event_type, 0 AS period, o0 AS o FROM c0
       | UNION ALL SELECT event_type, 1 AS period, o1 FROM c0),
       |r AS (SELECT period, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1),
       |c AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1),

@@ -22,7 +22,7 @@ object QueriesGraph {
     * derive the identical scale from their own counts (the r7 advisor
     * flagged the old fixed 10^12: at ~10^5 nodes 85·csum wraps). */
   private val sqlScale: String =
-    """sc AS (SELECT max(pw) AS scale
+    """sc AS MATERIALIZED (SELECT max(pw) AS scale
       | FROM (VALUES (CAST(10000 AS BIGINT)), (100000), (1000000),
       |   (10000000), (100000000), (1000000000), (10000000000),
       |   (100000000000), (1000000000000)) t(pw)
@@ -226,13 +226,13 @@ object QueriesGraph {
         .orderBy(col("n_members").desc, col("community"))
         .limit(20)
     },
-    Some(s"""WITH e0 AS (SELECT DISTINCT o_custkey AS a,
+    Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o_custkey AS a,
       |  l_suppkey + $SuppOffset AS b
       | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       | WHERE l_quantity > 45),
-      |e AS (SELECT a AS src, b AS dst FROM e0
+      |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
       |      UNION ALL SELECT b, a FROM e0),
-      |n AS (SELECT DISTINCT src AS node FROM e),
+      |n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e),
       |r0 AS (SELECT node, node AS label FROM n)
       |${(1 to LpRounds).map(lpIter).mkString("\n")}
       |SELECT label AS community, count(*) AS n_members
@@ -255,14 +255,14 @@ object QueriesGraph {
         .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
         .orderBy("dist")
     },
-    Some(s"""WITH e0 AS (SELECT DISTINCT o_custkey AS a,
+    Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o_custkey AS a,
       |  l_suppkey + $SuppOffset AS b
       | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       | WHERE l_quantity > 45),
-      |e AS (SELECT a AS src, b AS dst FROM e0
+      |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
       |      UNION ALL SELECT b, a FROM e0),
-      |n AS (SELECT DISTINCT src AS node FROM e),
-      |d0 AS (SELECT min(node) AS node, 0 AS dist FROM n)
+      |n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e),
+      |d0 AS MATERIALIZED (SELECT min(node) AS node, 0 AS dist FROM n)
       |${(1 to Hops).map(bfsIter).mkString("\n")}
       |SELECT CAST(coalesce(d.dist, -1) AS BIGINT) AS dist,
       | count(*) AS n_nodes
@@ -319,12 +319,12 @@ object QueriesGraph {
             .stripMargin).as("lift_ppm"))
         .orderBy(col("n_pair").desc, col("p1"), col("p2"))
     },
-    Some("""WITH a AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+    Some("""WITH a AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
       |  FROM lineitem),
       |pr AS (SELECT x.p AS p1, y.p AS p2, count(*) AS n_pair
       |  FROM a x JOIN a y ON x.ok = y.ok AND x.p < y.p GROUP BY 1, 2),
       |top AS (SELECT * FROM pr ORDER BY n_pair DESC, p1, p2 LIMIT 20),
-      |m AS (SELECT p, count(*) AS n_p FROM a GROUP BY 1),
+      |m AS MATERIALIZED (SELECT p, count(*) AS n_p FROM a GROUP BY 1),
       |t AS (SELECT count(*) AS n_orders FROM (SELECT DISTINCT ok FROM a))
       |SELECT p1, p2, n_pair, m1.n_p AS n_p1, m2.n_p AS n_p2, n_orders,
       | CAST(CAST(n_pair AS HUGEINT) * n_orders * 1000000

@@ -91,6 +91,14 @@ object QueriesPipeline {
     }
   }
 
+  /** DuckDB spelling of [[minhashBaseDocs]]: (id, text) of the
+    * documents under the same head sample. */
+  private[graft] val sqlBaseDocs: String =
+    s"""SELECT doc_id AS id, text FROM documents
+      | WHERE doc_id <= (SELECT max(doc_id) FROM
+      |   (SELECT doc_id FROM documents ORDER BY doc_id
+      |    LIMIT $MinhashOracleCap))""".stripMargin
+
   private def nearDupCorpus(s: SparkSession, d: String): DataFrame = {
     val base = minhashBaseDocs(s, d)
     base.unionByName(nearDupVariants(base))
@@ -103,26 +111,19 @@ object QueriesPipeline {
     * serves both (a copy would let a plant/threshold change de-couple
     * them silently). */
   private[graft] val minhashLshOracle: String =
-    s"""WITH basedocs AS (
-      | SELECT doc_id, text FROM documents
-      | WHERE doc_id <= (SELECT max(doc_id) FROM
-      |   (SELECT doc_id FROM documents ORDER BY doc_id
-      |    LIMIT $MinhashOracleCap))),
+    s"""WITH basedocs AS MATERIALIZED ($sqlBaseDocs),
       |corpus AS (
-      | SELECT doc_id AS id, text FROM basedocs
+      | SELECT id, text FROM basedocs
       | UNION ALL
-      | SELECT doc_id + 100000 AS id, text || ' qq17' AS text
-      | FROM basedocs WHERE doc_id % 11 = 0),
+      | SELECT id + 100000 AS id, text || ' qq17' AS text
+      | FROM basedocs WHERE id % 11 = 0),
       |sh AS (
       | SELECT id, ${Dedup.sqlShingles3("w")} AS s
       | FROM (SELECT id, string_split(text, ' ') AS w FROM corpus)
-      | WHERE len(w) >= 3),
-      |p AS (
-      | SELECT a.id AS id_a, b.id AS id_b,
-      |   1.0 - ${Dedup.sqlJaccard("a.s", "b.s")} AS dist
-      | FROM sh a JOIN sh b ON a.id < b.id)
+      | WHERE len(w) >= 3)
       |SELECT id_a, id_b, round(dist, 6) AS jaccard_dist
-      |FROM p WHERE dist <= 0.4 ORDER BY id_a, id_b""".stripMargin
+      |FROM (${Dedup.sqlJaccardPairs("sh", "sh")}) p
+      |WHERE dist <= 0.4 ORDER BY id_a, id_b""".stripMargin
 
   /** documents ∪ planted word-order-REVERSED variants: different text,
     * identical token multiset — the planted case whose SimHash recovery
@@ -299,11 +300,7 @@ object QueriesPipeline {
             col("n_caught").cast("double") >= col("n_truth") * lit(0.93))
             .as("recall_ok"))
     },
-    Some(s"""WITH basedocs AS (
-      | SELECT doc_id AS id, text FROM documents
-      | WHERE doc_id <= (SELECT max(doc_id) FROM
-      |   (SELECT doc_id FROM documents ORDER BY doc_id
-      |    LIMIT $MinhashOracleCap))),
+    Some(s"""WITH basedocs AS ($sqlBaseDocs),
       |pl AS (
       | SELECT id, string_split(text, ' ') AS w,
       |   string_split(text || array_to_string(
@@ -382,11 +379,11 @@ object QueriesPipeline {
     * trade here precisely because the delta is small relative to the
     * indexed base: candidate volume scales with the increment, while
     * a silent drop poisons the corpus forever.
-    * Oracle recomputes the per-delta ledger by exact all-pairs
-    * Jaccard over the capped base (the minhashLshOracle contract;
-    * MATERIALIZED CTEs per the sf10 adjudication). Base corpus and
-    * cap are [[minhashBaseDocs]]'s, so rehearsal SFs head-sample back
-    * to the audited sf0.1 corpus. */
+    * Oracle recomputes the per-delta ledger by exact Jaccard over
+    * every (delta, base) pair that shares a shingle
+    * ([[Dedup.sqlJaccardPairs]], the minhashLshOracle contract). Base
+    * corpus and cap are [[minhashBaseDocs]]'s ([[sqlBaseDocs]]), so
+    * rehearsal SFs head-sample back to the audited sf0.1 corpus. */
   val ddIncrementalMinhash: Entry = Entry("dd_incremental_minhash",
     (s, d) => {
       val base = minhashBaseDocs(s, d)
@@ -400,11 +397,7 @@ object QueriesPipeline {
         Dedup.minHashPairsAgainst(delta, base, threshold = 0.4,
           bands = 9, rowsPerBand = 2))
     },
-    Some(s"""WITH basedocs AS MATERIALIZED (
-      | SELECT doc_id AS id, text FROM documents
-      | WHERE doc_id <= (SELECT max(doc_id) FROM
-      |   (SELECT doc_id FROM documents ORDER BY doc_id
-      |    LIMIT $MinhashOracleCap))),
+    Some(s"""WITH basedocs AS MATERIALIZED ($sqlBaseDocs),
       |delta AS MATERIALIZED (
       | SELECT id + 400000 AS new_id, text || ' inc42' AS text
       | FROM basedocs WHERE id % 7 = 0
@@ -417,13 +410,13 @@ object QueriesPipeline {
       | FROM (SELECT id, string_split(text, ' ') AS w FROM basedocs)
       | WHERE len(w) >= 3),
       |shd AS MATERIALIZED (
-      | SELECT new_id, ${Dedup.sqlShingles3("w")} AS s
+      | SELECT new_id AS id, ${Dedup.sqlShingles3("w")} AS s
       | FROM (SELECT new_id, string_split(text, ' ') AS w FROM delta)
       | WHERE len(w) >= 3),
       |cnt AS (
-      | SELECT d.new_id, count(*) AS n FROM shd d JOIN shb b
-      |   ON 1.0 - ${Dedup.sqlJaccard("d.s", "b.s")} <= 0.4
-      | GROUP BY d.new_id)
+      | SELECT id_a AS new_id, count(*) AS n
+      | FROM (${Dedup.sqlJaccardPairs("shd", "shb")}) p
+      | WHERE dist <= 0.4 GROUP BY id_a)
       |SELECT new_id, CAST(coalesce(n, 0) AS BIGINT) AS n_base_dups,
       | CASE WHEN coalesce(n, 0) > 0 THEN 'dropped' ELSE 'kept' END AS status
       |FROM delta LEFT JOIN cnt USING (new_id)
@@ -526,13 +519,13 @@ object QueriesPipeline {
   /** Shared oracle CTE chain: corpus → blocking → verify → recursive
     * closure → per-id component map (`comp`). Consumers append either a
     * final SELECT (dd_components) or further CTEs (pl_canonical_docs). */
-  private val componentsOracleCte: String = s"""WITH RECURSIVE cbase AS (
+  private val componentsOracleCte: String = s"""WITH RECURSIVE cbase AS MATERIALIZED (
         | SELECT doc_id, text FROM documents
         | WHERE doc_id % ((SELECT (count(*) + ${ComponentsOracleCap - 1})
         |                  // $ComponentsOracleCap FROM documents)) = 0),
-        |w0 AS (
+        |w0 AS MATERIALIZED (
         | SELECT doc_id, text, string_split(text, ' ') AS w FROM cbase),
-        |corpus AS (
+        |corpus AS MATERIALIZED (
         | SELECT doc_id AS id, text FROM cbase
         | UNION ALL
         | SELECT doc_id + 100000, ${sqlPrefix("w")} FROM w0 WHERE doc_id % 7 = 0
@@ -540,7 +533,7 @@ object QueriesPipeline {
         | SELECT doc_id + 200000, ${sqlPrefix("a")}
         | FROM (SELECT doc_id, string_split(${sqlPrefix("w")}, ' ') AS a FROM w0)
         | WHERE doc_id % 14 = 0),
-        |blk AS (SELECT id, text,
+        |blk AS MATERIALIZED (SELECT id, text,
         |  array_to_string((string_split(text, ' '))[1:2], ' ') AS b FROM corpus),
         |cand AS (SELECT x.id AS ia, y.id AS ib,
         |  string_split(x.text, ' ') AS wa, string_split(y.text, ' ') AS wb
@@ -549,9 +542,9 @@ object QueriesPipeline {
         |  ${Dedup.sqlShingles3("wa")} AS sa,
         |  ${Dedup.sqlShingles3("wb")} AS sb
         | FROM cand),
-        |edges AS (SELECT ia AS u, ib AS v FROM sh
+        |edges AS MATERIALIZED (SELECT ia AS u, ib AS v FROM sh
         | WHERE ${Dedup.sqlJaccard("sa", "sb")} >= 0.55),
-        |bid AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
+        |bid AS MATERIALIZED (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
         |reach(u, r) AS (
         | SELECT u, v FROM bid
         | UNION
@@ -740,7 +733,7 @@ object QueriesPipeline {
         .select(col("w").as("word"), col("cnt"), col("n_total"))
         .orderBy("word")
     },
-    Some("""WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
+    Some("""WITH w AS MATERIALIZED (SELECT unnest(string_split(text, ' ')) AS word
       |  FROM documents),
       |t AS (SELECT count(*) AS n_total FROM w),
       |c AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1)
@@ -857,7 +850,7 @@ object QueriesPipeline {
     },
     Some("""WITH tok AS (
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |t AS (SELECT doc_id, term, count(*) AS tf
+      |t AS MATERIALIZED (SELECT doc_id, term, count(*) AS tf
       |  FROM tok WHERE term <> '' GROUP BY 1, 2),
       |f AS (SELECT term, count(*) AS df FROM t GROUP BY 1),
       |n AS (SELECT count(*) AS n_docs FROM documents),
@@ -1042,7 +1035,7 @@ object QueriesPipeline {
       | SELECT doc_id, text FROM documents
       | UNION ALL
       | SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0),
-      |k AS (SELECT min(doc_id) AS doc_id, text FROM all_docs GROUP BY text),
+      |k AS MATERIALIZED (SELECT min(doc_id) AS doc_id, text FROM all_docs GROUP BY text),
       |w AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word FROM k),
       |c AS (SELECT doc_id, word, count(*) AS cnt FROM w GROUP BY 1, 2),
       |t AS (SELECT doc_id, max(cnt) AS top_cnt, sum(cnt) AS n_words FROM c GROUP BY 1),
@@ -1068,7 +1061,7 @@ object QueriesPipeline {
     // values are IDENTICAL — the only bitwise divergence on any
     // shipped corpus is the self-pair (lambda 1+2ulp vs native 1.0),
     // absorbed by round(,6) before any ordering or compare.
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    Some("""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       | p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
       | c AS (SELECT vec_id,
       |   round(list_cosine_similarity(v, pv), 6) AS cos
@@ -1102,11 +1095,11 @@ object QueriesPipeline {
     * around probe vec 0 over the embeddings plus 12 planted neighbors
     * (ids idBase + j, the probe + j·off on every component). */
   private def plantedTop10Sql(idBase: Int, off: String): String =
-    s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH base AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |planted AS (
       | SELECT $idBase + t.j AS vec_id, list_transform(p.v, x -> x + t.j * $off) AS v
       | FROM base p, range(1, 13) t(j) WHERE p.vec_id = 0),
-      |e AS (SELECT vec_id, v FROM base UNION ALL SELECT vec_id, v FROM planted),
+      |e AS MATERIALIZED (SELECT vec_id, v FROM base UNION ALL SELECT vec_id, v FROM planted),
       |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
       |c AS (SELECT vec_id,
       |  round(sqrt(${Similarity.sqlL2Sq("v", "pv")}), 6) AS dist
@@ -1154,7 +1147,7 @@ object QueriesPipeline {
     * probe `p` (vec 0), the codebook and coarse centroids `cb` (the 16
     * lowest vec_ids), and with `ivf` the IVF-pruned vectors `ce`. */
   private def pqOracleInputs(ivf: Boolean): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |p AS MATERIALIZED (SELECT v AS pv FROM e WHERE vec_id = 0),
       |cb AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16)""".stripMargin +
       (if (!ivf) "" else s""",
@@ -1254,7 +1247,7 @@ object QueriesPipeline {
         .orderBy("method")
     },
     Some(s"""${pqOracleInputs(ivf = true)},
-      |truth AS (SELECT vec_id FROM (
+      |truth AS MATERIALIZED (SELECT vec_id FROM (
       |  SELECT vec_id, round(sqrt(${Similarity.sqlL2Sq("v", "pv")}), 6) AS dist
       |  FROM e, p) ORDER BY dist, vec_id LIMIT 10),
       |${Similarity.sqlPqAdc("", "e", "p", "cb")},
@@ -1287,7 +1280,7 @@ object QueriesPipeline {
           graft.functions.ArrayOps.asDouble(col("embedding")).as("cv"))
       Similarity.kmeansAssign(e, centroids).orderBy("vec_id")
     },
-    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    Some(s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
       |r AS ${Similarity.sqlNearest("e", "c")}
       |SELECT vec_id, cluster, round(sqrt(d2), 6) AS dist
@@ -1641,7 +1634,7 @@ object QueriesPipeline {
           col("r_vec"), col("r_lex"))
         .orderBy(col("rrf").desc, col("id")).limit(20)
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    Some("""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       | FROM embeddings),
       |p AS (SELECT v AS pv FROM e WHERE vec_id = 0),
       |vc AS (SELECT vec_id AS id,
@@ -1650,7 +1643,7 @@ object QueriesPipeline {
       |vt AS (SELECT id, cs FROM vc ORDER BY cs DESC, id LIMIT 100),
       |vr AS (SELECT id, CAST(row_number() OVER (ORDER BY cs DESC, id)
       |   AS BIGINT) AS r_vec FROM vt),
-      |tok AS (SELECT doc_id, t FROM (SELECT doc_id,
+      |tok AS MATERIALIZED (SELECT doc_id, t FROM (SELECT doc_id,
       |   unnest(list_filter(string_split(coalesce(text, ''), ' '),
       |     x -> x <> '')) AS t FROM documents)
       | WHERE t IN ('hash', 'join')),
@@ -2286,13 +2279,13 @@ object QueriesPipeline {
           "doc_id", "text", evalGrams, n = 8)
         .orderBy("doc_id")
     },
-    Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |ev AS (SELECT DISTINCT array_to_string(w[4:11], ' ') AS gram
-      |  FROM w WHERE doc_id % 13 = 0 AND len(w) >= 11),
+    Some("""WITH ev AS (SELECT DISTINCT array_to_string(w[4:11], ' ') AS gram
+      |  FROM (SELECT string_split(text, ' ') AS w FROM documents WHERE doc_id % 13 = 0)
+      |  WHERE len(w) >= 11),
       |g AS (SELECT doc_id, unnest(list_transform(
       |    range(1, greatest(len(w) - 6, 1)),
       |    i -> array_to_string(w[CAST(i AS INT):CAST(i + 7 AS INT)], ' '))) AS gram
-      |  FROM w),
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
       |hit AS (SELECT DISTINCT doc_id FROM g JOIN ev USING (gram))
       |SELECT d.doc_id,
       | CAST(CASE WHEN hit.doc_id IS NULL THEN 0 ELSE 1 END AS INT) AS contaminated
@@ -2403,7 +2396,7 @@ object QueriesPipeline {
   val txBigramLm: Entry = {
     Entry("tx_bigram_lm",
       (s, d) => bigramFamiliarityScan(docs(s, d)).orderBy("doc_id"),
-      Some("""WITH bg AS (SELECT doc_id,
+      Some("""WITH bg AS MATERIALIZED (SELECT doc_id,
         |  unnest(list_transform(range(1, greatest(length(text), 1)),
         |    i -> substr(text, CAST(i AS INT), 2))) AS bg
         | FROM documents),
@@ -2599,7 +2592,7 @@ object QueriesPipeline {
     // never contains — so converged rounds rewrite nothing, matching
     // Spark's absent rounds exactly.
     def pairCte(k: Int, src: String) =
-      s"p$k AS (SELECT a, b FROM (" +
+      s"p$k AS MATERIALIZED (SELECT a, b FROM (" +
         s"SELECT lst[i] AS a, lst[i + 1] AS b, sum(freq) AS c " +
         s"FROM (SELECT string_split(syms, ' ') AS lst, freq FROM $src) t, " +
         s"unnest(range(1, len(lst))) AS r(i) GROUP BY 1, 2 " +
@@ -2608,7 +2601,7 @@ object QueriesPipeline {
     val train = (1 to n).flatMap { k =>
       val src = if (k == 1) "s0" else s"s${k - 1}"
       Seq(pairCte(k, src)) ++
-        (if (k < n) Seq(s"s$k AS (SELECT freq, ${rewrite(src, s"p$k")} AS syms FROM $src, p$k)")
+        (if (k < n) Seq(s"s$k AS MATERIALIZED (SELECT freq, ${rewrite(src, s"p$k")} AS syms FROM $src, p$k)")
          else Nil)
     }
     val encode = (1 to n).map { k =>
@@ -2617,9 +2610,9 @@ object QueriesPipeline {
     }
     (Seq(
       "WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents)",
-      "wf AS (SELECT word, count(*) AS freq FROM w0 WHERE regexp_matches(word, '^[a-z]+$') GROUP BY 1)",
+      "wf AS MATERIALIZED (SELECT word, count(*) AS freq FROM w0 WHERE regexp_matches(word, '^[a-z]+$') GROUP BY 1)",
       "basis AS (SELECT word, freq FROM wf ORDER BY freq DESC, word LIMIT 32)",
-      s"s0 AS (SELECT freq, $init AS syms FROM basis)") ++ train ++
+      s"s0 AS MATERIALIZED (SELECT freq, $init AS syms FROM basis)") ++ train ++
       Seq(s"v0 AS (SELECT word, freq, $init AS syms FROM wf)") ++ encode)
       .mkString("", ",\n", "\n") +
       s"SELECT word, freq, syms AS encoded, CAST(len(string_split(syms, ' ')) AS BIGINT) AS n_sub " +
@@ -2696,7 +2689,7 @@ object QueriesPipeline {
            |  CAST(${(1 to L).map(st => s"CASE WHEN piece$st IS NULL THEN 0 ELSE 1 END").mkString(" + ")}
            |    AS BIGINT) AS n_pieces FROM k${r}_$L)""".stripMargin
       else
-        s"""n$r AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+        s"""n$r AS MATERIALIZED (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
            |  $unions
            | ) WHERE piece IS NOT NULL GROUP BY 1)""".stripMargin
     s"""g$r AS MATERIALIZED (SELECT w.word, w.freq, len(w.word) AS l, tc.tt AS tt,
@@ -2716,25 +2709,25 @@ object QueriesPipeline {
     * leaving `n2` = the final trained census. Kept as ONE generator so
     * the train and encode oracles can never drift apart. */
   private def ulmTrainSql: String =
-    s"""WITH wf AS (SELECT word, CAST(count(*) AS BIGINT) AS freq
+    s"""WITH wf AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS freq
       | FROM (SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
       |       FROM documents)
       | WHERE len(word) <= ${UnigramLm.MaxWordLen} GROUP BY 1),
-      |pc AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+      |pc AS MATERIALIZED (SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
       |  SELECT freq, substring(word, CAST(t.i AS INT), 1) AS piece
       |   FROM wf, range(1, ${UnigramLm.MaxWordLen + 1}) t(i) WHERE t.i <= len(word)
       |  UNION ALL
       |  SELECT freq, substring(word, CAST(t.i AS INT), 2) AS piece
       |   FROM wf, range(1, ${UnigramLm.MaxWordLen}) t(i) WHERE t.i <= len(word) - 1
       | ) GROUP BY 1),
-      |sc1 AS (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM pc),
+      |sc1 AS MATERIALIZED (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM pc),
       |tc1 AS (SELECT CAST(floor(1000000 * ln(CAST(sum(cnt) AS DOUBLE))) AS BIGINT) AS tt FROM pc),
       |${ulmRoundSql(1, "sc1", "tc1")},
-      |b2base AS (SELECT p.piece, greatest(coalesce(c.cnt, 0), 1) AS cnt
+      |b2base AS MATERIALIZED (SELECT p.piece, greatest(coalesce(c.cnt, 0), 1) AS cnt
       | FROM (SELECT piece FROM pc WHERE len(piece) = 1) p
       | LEFT JOIN n1 c USING (piece)
       | UNION ALL SELECT piece, cnt FROM n1 WHERE len(piece) = 2),
-      |sc2 AS (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM b2base),
+      |sc2 AS MATERIALIZED (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM b2base),
       |tc2 AS (SELECT CAST(floor(1000000 * ln(CAST(sum(cnt) AS DOUBLE))) AS BIGINT) AS tt FROM b2base),
       |${ulmRoundSql(2, "sc2", "tc2")}""".stripMargin
 
@@ -2819,11 +2812,11 @@ object QueriesPipeline {
         .orderBy("word")
     },
     Some(s"""$ulmTrainSql,
-      |b3base AS (SELECT p.piece, greatest(coalesce(c.cnt, 0), 1) AS cnt
+      |b3base AS MATERIALIZED (SELECT p.piece, greatest(coalesce(c.cnt, 0), 1) AS cnt
       | FROM (SELECT piece FROM pc WHERE len(piece) = 1) p
       | LEFT JOIN n2 c USING (piece)
       | UNION ALL SELECT piece, cnt FROM n2 WHERE len(piece) = 2),
-      |sc3 AS (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM b3base),
+      |sc3 AS MATERIALIZED (SELECT piece, CAST(floor(1000000 * ln(CAST(cnt AS DOUBLE))) AS BIGINT) AS lp FROM b3base),
       |tc3 AS (SELECT CAST(floor(1000000 * ln(CAST(sum(cnt) AS DOUBLE))) AS BIGINT) AS tt FROM b3base),
       |${ulmRoundSql(3, "sc3", "tc3", encode = true)}
       |SELECT word, freq, encoded, n_pieces FROM e3 ORDER BY word""".stripMargin))
@@ -2855,7 +2848,7 @@ object QueriesPipeline {
           explode(sequence(lit(0L), col("rep") - 1)).as("copy_id"))
         .orderBy("doc_id", "copy_id")
     },
-    Some("""WITH t AS (SELECT lang, CAST(sum(n_chars) AS BIGINT) AS chars
+    Some("""WITH t AS MATERIALIZED (SELECT lang, CAST(sum(n_chars) AS BIGINT) AS chars
       |  FROM documents GROUP BY lang),
       |m AS (SELECT max(chars) AS mx FROM t),
       |w AS (SELECT lang,
@@ -3118,9 +3111,9 @@ object QueriesPipeline {
       val (corpus, eval_) = deconSemanticFrames(s, d)
       deconSemanticScan(corpus, eval_).orderBy("vec_id")
     },
-    Some("""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    Some("""WITH base AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings),
-      |ev AS (SELECT vec_id AS eval_id, v AS ev FROM base WHERE vec_id % 50 = 0),
+      |ev AS MATERIALIZED (SELECT vec_id AS eval_id, v AS ev FROM base WHERE vec_id % 50 = 0),
       |planted AS (SELECT 300000 + e.eval_id * 10 + t.j AS vec_id,
       |  list_transform(e.ev, x -> x + t.j * 0.003) AS v
       | FROM ev e, range(1, 4) t(j)),
@@ -3330,12 +3323,12 @@ object QueriesPipeline {
           (col("familiarity") >= col("t1") - eps).cast("int").as("kept"))
         .orderBy("doc_id")
     },
-    Some("""WITH bg AS (SELECT doc_id,
+    Some("""WITH bg AS MATERIALIZED (SELECT doc_id,
       |  unnest(list_transform(range(1, greatest(length(text), 1)),
       |    i -> substr(text, CAST(i AS INT), 2))) AS bg
       | FROM documents),
       |lm AS (SELECT bg, count(*) AS cnt FROM bg GROUP BY 1),
-      |f AS (SELECT doc_id, round(CAST(sum(cnt) AS DOUBLE) / count(*), 6) AS familiarity
+      |f AS MATERIALIZED (SELECT doc_id, round(CAST(sum(cnt) AS DOUBLE) / count(*), 6) AS familiarity
       |  FROM bg JOIN lm USING (bg) GROUP BY doc_id),
       |t AS (SELECT quantile_cont(familiarity, 1.0/3) AS t1,
       |             quantile_cont(familiarity, 2.0/3) AS t2 FROM f)
@@ -3543,7 +3536,7 @@ object QueriesPipeline {
       | UNION ALL
       | SELECT doc_id + 200000 AS doc_id, text || ' $SuffixBoiler' AS text
       | FROM documents WHERE doc_id % 11 = 0),
-      |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM all_docs),
+      |w AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM all_docs),
       |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
       |   array_to_string(ws[CAST(i AS INT):CAST(i + 15 AS INT)], ' ') AS gram
       |  FROM w, unnest(range(1, len(ws) - 14)) AS t(i)),
@@ -4195,12 +4188,12 @@ object QueriesPipeline {
     },
     Some("""WITH tok AS (SELECT doc_id, lang,
       |  unnest(string_split(text, ' ')) AS t FROM documents),
-      |f AS (SELECT doc_id, lang,
+      |f AS MATERIALIZED (SELECT doc_id, lang,
       |  (CAST(length(t) * 961 + ascii(substr(t, 1, 1)) * 31
       |        + ascii(substr(t, length(t), 1)) AS BIGINT)
       |   % 1000003 * 2654435761) % 1000003 % 1024 AS b
       | FROM tok WHERE t <> ''),
-      |st AS (SELECT b, CAST(count(*) AS BIGINT) AS cr,
+      |st AS MATERIALIZED (SELECT b, CAST(count(*) AS BIGINT) AS cr,
       |  CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT) AS ct
       | FROM f GROUP BY 1),
       |tot AS (SELECT CAST(sum(cr) AS BIGINT) AS totr,
@@ -4413,7 +4406,7 @@ object QueriesPipeline {
         .select(col("new_id"), col("tlen"))
         .orderBy("new_id")
     },
-    Some("""WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
+    Some("""WITH base AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
       |incr AS (SELECT doc_id + 200000 AS new_id, text FROM documents
       |   WHERE doc_id % 10 = 9
       | UNION ALL
@@ -4458,7 +4451,7 @@ object QueriesPipeline {
         .groupBy("change").agg(count(lit(1)).as("n"))
         .orderBy("change")
     },
-    Some("""WITH v1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
+    Some("""WITH v1 AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
       |v2 AS (SELECT doc_id,
       |   CASE WHEN doc_id % 17 = 0 THEN text || ' rev2' ELSE text END AS text
       |  FROM v1 WHERE doc_id % 13 <> 0
@@ -4515,7 +4508,7 @@ object QueriesPipeline {
         .withColumn("shift_ppm", col("share_v2_ppm") - col("share_v1_ppm"))
         .orderBy("bucket")
     },
-    Some("""WITH v1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
+    Some("""WITH v1 AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 9),
       |v2 AS (SELECT doc_id,
       |   CASE WHEN doc_id % 17 = 0 THEN text || ' rev2' ELSE text END AS text
       |  FROM v1 WHERE doc_id % 13 <> 0
@@ -4528,7 +4521,7 @@ object QueriesPipeline {
       | UNION ALL
       | SELECT least(CAST(floor(len(string_split(text, ' ')) / 16) AS BIGINT),
       |   15) AS bucket, 2 AS tag FROM v2),
-      |hist AS (SELECT bucket,
+      |hist AS MATERIALIZED (SELECT bucket,
       |  CAST(sum(CASE WHEN tag = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_v1,
       |  CAST(sum(CASE WHEN tag = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_v2
       | FROM tagged GROUP BY bucket),
@@ -4610,7 +4603,7 @@ object QueriesPipeline {
           (col("r.violations") === 0L).as("ok"))
         .orderBy("check_name")
     },
-    Some("""WITH scan AS (SELECT
+    Some("""WITH scan AS MATERIALIZED (SELECT
       |  sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS c_ship,
       |  sum(CASE WHEN l_returnflag IS NULL
       |        OR l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) AS c_flag,

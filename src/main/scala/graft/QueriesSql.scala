@@ -146,8 +146,8 @@ object QueriesSql {
         .groupBy("p_brand").agg(count(lit(1)).as("n_distinct"))
       unionAll.join(unionDistinct, "p_brand").orderBy("p_brand")
     },
-    Some("""WITH hi AS (SELECT p_brand FROM part WHERE p_retailprice > 1500.0),
-      | lo AS (SELECT p_brand FROM part WHERE p_retailprice < 1000.0),
+    Some("""WITH hi AS MATERIALIZED (SELECT p_brand FROM part WHERE p_retailprice > 1500.0),
+      | lo AS MATERIALIZED (SELECT p_brand FROM part WHERE p_retailprice < 1000.0),
       | ua AS (SELECT p_brand, count(*) AS n_all FROM (SELECT * FROM hi UNION ALL SELECT * FROM lo) GROUP BY p_brand),
       | ud AS (SELECT p_brand, count(*) AS n_distinct FROM (SELECT * FROM hi UNION SELECT * FROM lo) GROUP BY p_brand)
       |SELECT p_brand, CAST(n_all AS BIGINT) AS n_all, CAST(n_distinct AS BIGINT) AS n_distinct

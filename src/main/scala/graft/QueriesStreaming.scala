@@ -288,7 +288,7 @@ object QueriesStreaming {
       |  count(*) AS n FROM s GROUP BY user_id, sid),
       |l AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY start_ms DESC) AS rn
       | FROM g),
-      |mx AS (SELECT max(m) AS maxm FROM e)
+      |mx AS (SELECT max(epoch_ms(ts)) AS maxm FROM events)
       |SELECT user_id, start_ms, end_ms, n FROM l, mx
       |WHERE rn > 1 OR end_ms < maxm
       |ORDER BY user_id, start_ms""".stripMargin))
@@ -1286,7 +1286,7 @@ object QueriesStreaming {
           col("col.top_sources").as("source"), col("col.top_cnts").as("cnt"))
         .orderBy("lang", "rank")
     },
-    Some("""WITH c AS (SELECT lang, source, count(*) AS cnt
+    Some("""WITH c AS MATERIALIZED (SELECT lang, source, count(*) AS cnt
       |  FROM documents GROUP BY 1, 2),
       |t AS (SELECT lang, CAST(sum(cnt) AS BIGINT) AS n_seen FROM c GROUP BY 1),
       |r AS (SELECT lang, source, cnt,

@@ -110,6 +110,28 @@ object Dedup {
     s"coalesce(CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
       s"len(list_distinct(list_concat($a, $b))), 0.0)"
 
+  /** DuckDB query of (id_a, id_b, dist = 1 − [[sqlJaccard]]) over the
+    * pairs of rows of tables `a` and `b`, each (id, s) with `s` a
+    * distinct shingle list, that share a shingle; `a == b` gives each
+    * unordered pair once, id_a < id_b. Each list unnests to (id, n,
+    * shingle) rows and a join on the shingle counts k = |A∩B| per
+    * pair, so na + nb − k is the integer |A∪B| and the division is
+    * [[sqlJaccard]]'s. A pair sharing no shingle is at dist 1.0, so a
+    * threshold below 1 keeps the same pairs as the all-pairs
+    * [[sqlJaccard]], without scoring every pair. */
+  def sqlJaccardPairs(a: String, b: String): String = {
+    def rows(t: String) = s"(SELECT id, len(s) AS n, unnest(s) AS g FROM $t)"
+    val (prefix, join) =
+      if (a == b) (s"WITH u AS MATERIALIZED ${rows(a)}\n",
+        "u x JOIN u y ON x.g = y.g AND x.id < y.id")
+      else ("", s"${rows(a)} x JOIN ${rows(b)} y ON x.g = y.g")
+    prefix +
+      s"""SELECT x.id AS id_a, y.id AS id_b,
+         |  1.0 - CAST(count(*) AS DOUBLE) / (x.n + y.n - count(*)) AS dist
+         |FROM $join
+         |GROUP BY x.id, y.id, x.n, y.n""".stripMargin
+  }
+
   /** n minhashes of a shingle set. One base hash per shingle, then n
     * cheap avalanche mixes — the standard trick. A UDF rather than
     * aggregate/zip_with builtins: higher-order-function lambdas

@@ -3,9 +3,10 @@ package graft
 import graft.functions.ImageGeometry
 import org.apache.spark.sql.functions._
 
-/** The image-geometry and LCG oracle generators: the flip entries label
-  * the rows their kernel flipped, the Column draw is the kernel's draw,
-  * and no oracle outside the generators restates their arithmetic. */
+/** The image-geometry, LCG and minhash head-sample oracle generators:
+  * the flip entries label the rows their kernel flipped, the Column draw
+  * is the kernel's draw, and no oracle outside the generators restates
+  * their arithmetic. */
 class OracleGeneratorSpec extends SparkSpec {
   import OracleGeneratorSpec._
 
@@ -84,7 +85,8 @@ object OracleGeneratorSpec {
     "masked draw" -> """\*\s*131071(L|\b)""".r,
     "LCG multiplier in SQL" -> """1103515245(?!L)""".r,
     "SAR fixture read" -> """read_json\(""".r,
-    "Lcg constant in an oracle" -> """\$\{[^}]*Lcg\.(M|A|C|A2|C2)\b""".r)
+    "Lcg constant in an oracle" -> """\$\{[^}]*Lcg\.(M|A|C|A2|C2)\b""".r,
+    "minhash head sample" -> """LIMIT\s+\$MinhashOracleCap""".r)
 
   /** The files that hold each spelling's kernel and generator. */
   val homes: Map[String, Set[String]] = Map(
@@ -92,15 +94,25 @@ object OracleGeneratorSpec {
     "masked draw" -> Set("ImageGeometry.scala"),
     "LCG multiplier in SQL" -> Set("ImageGeometry.scala", "Lcg.scala"),
     "SAR fixture read" -> Set("SarFixture.scala"),
-    "Lcg constant in an oracle" -> Set.empty)
+    "Lcg constant in an oracle" -> Set.empty,
+    "minhash head sample" -> Set.empty)
 
   /** g_cms_sketch's hash-parameter VALUES list carries 1103515245 as one
     * of three count-min hash multipliers: a different kernel that only
-    * shares the constant with the LCG. */
-  def exempt(rule: String, before: String): Boolean =
-    rule == "LCG multiplier in SQL" &&
-      """Entry\("([a-z0-9_]+)"""".r.findAllMatchIn(before).toSeq.lastOption
-        .exists(_.group(1) == "g_cms_sketch")
+    * shares the constant with the LCG. The head sample's home is one
+    * generator, `QueriesPipeline.sqlBaseDocs`, not a whole file: its
+    * copies sat in the same file. */
+  def exempt(rule: String, before: String): Boolean = {
+    def last(re: scala.util.matching.Regex) =
+      re.findAllMatchIn(before).toSeq.lastOption.map(_.group(1))
+    rule match {
+      case "LCG multiplier in SQL" =>
+        last("""Entry\("([a-z0-9_]+)"""".r).contains("g_cms_sketch")
+      case "minhash head sample" =>
+        last("""\b(?:val|def) (\w+)""".r).contains("sqlBaseDocs")
+      case _ => false
+    }
+  }
 
   val planted: Seq[(String, String)] = Seq(
     "bilinear clamp" -> "x0 := greatest(0, least(7, CAST(floor(s.px) AS INT)))",
@@ -108,5 +120,6 @@ object OracleGeneratorSpec {
     "masked draw" -> """col("vec_id").bitwiseAND(lit(0xffffL)) * 131071L""",
     "LCG multiplier in SQL" -> "((doc_id % 2147483648) * 1103515245 + 12345) % 2147483648",
     "SAR fixture read" -> "FROM read_json('/x/sar.json', columns = {id: 'VARCHAR'})",
-    "Lcg constant in an oracle" -> "((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A}")
+    "Lcg constant in an oracle" -> "((doc_id % ${graft.functions.Lcg.M}) * ${graft.functions.Lcg.A}",
+    "minhash head sample" -> "(SELECT doc_id FROM documents ORDER BY doc_id\n  LIMIT $MinhashOracleCap)")
 }

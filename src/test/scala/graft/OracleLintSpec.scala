@@ -76,17 +76,10 @@ class OracleLintSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$out/${OracleLint.GuardKey}").exists())
   }
 
-  test("shipped oracle map: zero un-allowlisted violations, zero stale pairs") {
-    val oracles = SparkEntry.oracleSql
-    val v = OracleLint.violations(oracles)
+  test("shipped oracle map: zero violations") {
+    val v = OracleLint.violations(SparkEntry.oracleSql)
     assert(v.isEmpty,
-      "new multiply-referenced CTEs must be AS MATERIALIZED at birth " +
-        "(sf10 adjudication; do NOT extend Grandfathered):\n" +
+      "multiply-referenced CTEs must be AS MATERIALIZED:\n" +
         v.map(x => s"  ${x.entry}.${x.cte} (${x.refs} refs)").mkString("\n"))
-    val stale = OracleLint.staleAllowlist(oracles)
-    assert(stale.isEmpty,
-      "allowlist pairs no longer violating — delete them so the " +
-        "grandfather set only shrinks:\n" +
-        stale.toSeq.sorted.map(p => s"  $p").mkString("\n"))
   }
 }
