@@ -803,28 +803,6 @@ object QueriesStreaming {
       | UNION ALL
       | SELECT -1 AS doc_id)""".stripMargin, "out")))
 
-  /** The media-dedup corpus, head-capped at the audited 500k-doc slice
-    * (r17, found AT the sf30 rung): pxMix content has 2^21 distinct
-    * images per geometry — `t1 = (seed·7919 + …) mod 2^21` — so past
-    * ~1M docs the SYNTHETIC fixture mathematically mass-duplicates
-    * (sf30 measured ~67k identical-image pairs via the copy-stride
-    * congruence (i−j)·12589 ≡ m (mod 2^14), |m| ≤ 39), and which of N
-    * same-fingerprint docs survives `dropDuplicates` WITHIN a
-    * micro-batch is task-order arbitrary — un-oracle-able. The head
-    * slice is the [[QueriesPipeline.minhashBaseDocs]] pattern: at any
-    * rehearsal SF it reproduces exactly the doc_id set two full sf10
-    * passes proved fingerprint-collision-free (mm entries derive
-    * content from doc_id alone), so first-wins needs no arrival-order
-    * modeling. Real 100 TB growth adds NEW content identities — the
-    * saturation is a fixture artifact, not a production regime; the
-    * fully-replayed mm_near_dup family keeps uncapped corpora because
-    * its oracles replay collisions identically on both sides. */
-  private def mmCorpusDocs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    QueriesPipeline.mmCorpusDocs(s, d)
-
-  private val sqlMmCorpusDocs: String = QueriesPipeline.sqlMmCorpusDocs
-
   /** STREAMING MEDIA-FINGERPRINT dedup — the streaming tier of the
     * two-tier media-dedup architecture (exact fingerprint dedup at
     * ingest; banded near-dup LSH in batch — mm_near_dup): documents
@@ -838,10 +816,11 @@ object QueriesStreaming {
     * division of labor a 100 TB crawl ingest runs. State is 8 bytes
     * per distinct fingerprint, never payloads.
     *
-    * Census determinism: the corpus is [[mmCorpusDocs]] (head-capped
-    * at the audited 500k slice — see its scaladoc for the sf30 pxMix
-    * saturation find); within it batch 0 carries every original (all
-    * fingerprints distinct — mm_near_dup's zero non-planted pairs at
+    * Census determinism: the corpus is
+    * [[QueriesPipeline.mmCorpusDocs]] (head-capped at the audited 500k
+    * slice — see its scaladoc for the sf30 pxMix saturation find);
+    * within it batch 0 carries every original (all fingerprints
+    * distinct — mm_near_dup's zero non-planted pairs at
     * Hamming ≤ 6 proves no exact collisions, re-proven at sf10);
     * batch 1 carries exact copies (% 11 slice — all dropped by state
     * from batch 0) and perturbed copies (disjoint % 7 slice — each
@@ -861,7 +840,7 @@ object QueriesStreaming {
   private def mmDedupStage(outer: org.apache.spark.sql.SparkSession,
       d: String): String =
     stageBatchFiles("stream_mmdd", d, "documents", "v2") {
-      val base = mmCorpusDocs(outer, d).select(col("doc_id"),
+      val base = QueriesPipeline.mmCorpusDocs(outer, d).select(col("doc_id"),
         (col("doc_id") % 8 + 16).cast("int").as("w"))
       Seq(
         "b0" -> base.select(col("doc_id").as("id"),
@@ -887,7 +866,7 @@ object QueriesStreaming {
       runToMemory(s, "st_mmdd", out, "append", minDataBatches = 2)
         .orderBy("id")
     },
-    Some(s"""WITH $sqlMmCorpusDocs,
+    Some(s"""WITH ${QueriesPipeline.sqlMmCorpusDocs},
       |corpus AS (
       | SELECT doc_id AS id, doc_id AS src, FALSE AS pert, 0 AS bt FROM mmdocs
       | UNION ALL
@@ -927,11 +906,11 @@ object QueriesStreaming {
     * b0 — the exact-copy slice recomputes to its original's
     * fingerprint, so it drops without modeling arrival order), then
     * banding, candidate join, and Hamming verify over the survivors.
-    * Corpus is [[mmCorpusDocs]] (head-capped at the audited 500k
-    * slice): first-wins within a batch is task-order arbitrary, so
+    * Corpus is [[QueriesPipeline.mmCorpusDocs]] (head-capped at the
+    * audited 500k slice): first-wins within a batch is task-order arbitrary, so
     * the oracle needs intra-b0 fingerprints distinct — true on the
     * capped slice, violated past pxMix's 2^21 content states (the
-    * sf30 find in mmCorpusDocs' scaladoc).
+    * sf30 find in QueriesPipeline.mmCorpusDocs' scaladoc).
     * Scale shape: payloads never leave the scan stage in either tier;
     * the streaming state is 8 bytes per distinct fingerprint; the
     * batch exchange carries (id, int64) band rows; the ledger joins
@@ -962,7 +941,7 @@ object QueriesStreaming {
             .otherwise(col("id")).cast("long").as("canon"))
         .orderBy("id")
     },
-    Some(s"""WITH $sqlMmCorpusDocs,
+    Some(s"""WITH ${QueriesPipeline.sqlMmCorpusDocs},
       |corpus AS MATERIALIZED (
       | SELECT doc_id AS id, doc_id AS src, FALSE AS pert, 0 AS bt FROM mmdocs
       | UNION ALL

@@ -33,12 +33,6 @@ object Decontaminate {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct word n-grams of `textCol`, one row per gram ("gram"). */
-  def wordGrams(df: DataFrame, textCol: String, n: Int): DataFrame =
-    df.select(split(col(textCol), " ").as("w"))
-      .select(explode(gramArray(n)).as("gram"))
-      .distinct()
-
   /** Scan-stage contamination flag (r19, guide §2): the gram-explode
     * spelling below generates every corpus n-gram as an interpreted
     * transform + array_join STRING (7.5M gram rows at the sf3 rung)

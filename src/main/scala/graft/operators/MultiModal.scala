@@ -6,20 +6,22 @@ import org.apache.spark.sql.functions._
   * opaque BINARY columns with a typed metadata struct; decode /
   * feature-extract / frame-sample are per-row functions over the bytes.
   *
-  * The codecs here are REAL pure-JVM parsers for the two uncompressed
-  * container formats that need no media library: 24-bit BMP
-  * (BITMAPFILEHEADER + BITMAPINFOHEADER + bottom-up padded pixel rows)
-  * and PCM16 WAV (RIFF chunk walk). Encode synthesizes a spec-valid
-  * file from deterministic per-doc parameters; decode parses the BYTES
-  * — magic, little-endian header fields, row stride/padding, chunk
-  * alignment — so a framing bug anywhere (offset arithmetic,
-  * endianness, bottom-up row order, word-aligned chunks) changes the
-  * decoded fields and fails the oracle. Video is covered by a third
-  * real format: YUV4MPEG2 (the mjpegtools/ffmpeg raw-video container —
-  * plain-text parameter header, "FRAME"-delimited uncompressed planes;
-  * `Cmono` = one 8-bit luma plane per frame), whose decoder doubles as
-  * the FRAME SAMPLER (walk every frame's marker, sum every k-th
-  * frame's plane). Compressed codecs (JPEG/PNG, MP3, H.264) would slot
+  * The codecs here are REAL pure-JVM parsers for the three uncompressed
+  * container formats that need no media library, each spelled as one
+  * writer and one walker that every public encoder and decoder of the
+  * format calls: 24-bit BMP (BITMAPFILEHEADER + BITMAPINFOHEADER +
+  * bottom-up padded pixel rows; [[encodeBmpWith]], [[Bmp]]), PCM16 mono
+  * WAV (RIFF chunks; [[encodePcm16]], [[walkWav]]) and YUV4MPEG2, the
+  * mjpegtools/ffmpeg raw-video container (plain-text parameter line,
+  * "FRAME"-delimited planes, `Cmono` = one 8-bit luma plane per frame;
+  * [[encodeCmono]], [[walkY4m]]). Encode synthesizes a spec-valid file
+  * from deterministic per-doc parameters; decode parses the BYTES —
+  * magic, little-endian header fields, row stride/padding, chunk
+  * alignment, frame markers — so a framing bug anywhere (offset
+  * arithmetic, endianness, bottom-up row order, word-aligned chunks,
+  * frame stride) changes the decoded fields and fails the oracle. The
+  * image and video fingerprints share one 8×9 dHash grid,
+  * [[dHashGrid]]. Compressed codecs (JPEG/PNG, MP3, H.264) would slot
   * in behind the same decode→struct signatures but need libraries this
   * container doesn't have.
   *
@@ -40,7 +42,7 @@ import org.apache.spark.sql.functions._
   */
 object MultiModal {
 
-  // ---- little-endian byte helpers (shared by both codecs) ----
+  // ---- little-endian byte helpers (shared by all three codecs) ----
   private def le16(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
     o.write(v & 0xff); o.write((v >> 8) & 0xff)
   }
@@ -67,6 +69,8 @@ object MultiModal {
   def encodeBmp(docId: Long, w: Int, h: Int): Array[Byte] =
     encodeBmpWith(w, h, p => px(docId, p))
 
+  /** The BMP writer: `content(p)` is the gray value of top-down
+    * row-major pixel p. */
   private def encodeBmpWith(w: Int, h: Int, content: Long => Int): Array[Byte] = {
     val stride = (w * 3 + 3) & ~3
     val dataSize = stride * h
@@ -90,6 +94,25 @@ object MultiModal {
       r -= 1
     }
     o.toByteArray
+  }
+
+  /** A BMP whose header passed validation — magic, BITMAPINFOHEADER,
+    * uncompressed 24-bit, bottom-up, pixel array within the file — with
+    * its pixels read in place. */
+  private final class Bmp(b: Array[Byte]) {
+    require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
+    private val dataOff = rd32(b, 10)
+    require(rd32(b, 14) >= 40, "BITMAPINFOHEADER required")
+    val w: Int = rd32(b, 18)
+    val h: Int = rd32(b, 22)
+    require(rd16(b, 28) == 24 && rd32(b, 30) == 0, "only uncompressed 24-bit supported")
+    require(w > 0 && h > 0, "top-down/degenerate BMPs unsupported")
+    private val stride = (w * 3 + 3) & ~3
+    require(b.length >= dataOff + stride * h, "truncated pixel array")
+
+    /** R of the BGR triple at TOP-DOWN row-major pixel p (the file
+      * stores rows bottom-up). */
+    def red(p: Int): Int = b(dataOff + (h - 1 - p / w) * stride + p % w * 3 + 2) & 0xff
   }
 
   // ------------------------------------------------- perceptual hash
@@ -134,23 +157,23 @@ object MultiModal {
       if (p == pp) (pxMix(docId, p) + 128) % 256 else pxMix(docId, p))
   }
 
-  /** 64-bit difference hash (dHash) of a decoded grayscale image: an
-    * 8-row × 9-column nearest-neighbor sample grid (sy = y·h/8,
-    * sx = x·w/9), bit (y,x) = 1 iff sample(y,x+1) > sample(y,x).
-    * Pure integer pipeline — decode → downsample → threshold → pack —
-    * so the oracle can replay it bit-for-bit in SQL. Unlike aHash,
-    * no global mean: a perturbed pixel can only flip the ≤2 bits that
-    * compare against it, which is what makes the planted-pair Hamming
-    * bound provable. */
-  def dHash64(px: Array[Double], h: Int, w: Int): Long = {
+  /** The 8×9 dHash sample grid over `at`, the pixel at top-down
+    * row-major index p of an h×w grayscale image: nearest-neighbor
+    * samples sy = y·h/8, sx = x·w/9, bit (y,x) = 1 iff
+    * sample(y,x+1) > sample(y,x) — 72 reads, whatever the image size.
+    * Pure integer pipeline, so the oracle replays it bit-for-bit in
+    * SQL. Unlike aHash, no global mean: a perturbed pixel can only flip
+    * the ≤2 bits that compare against it, which is what makes the
+    * planted-pair Hamming bound provable. */
+  private def dHashGrid(h: Int, w: Int, at: Int => Double): Long = {
     var bits = 0L
     var y = 0
     while (y < 8) {
-      val sy = y * h / 8
-      var prev = px(sy * w + 0 * w / 9)
+      val row = y * h / 8 * w
+      var prev = at(row)
       var x = 0
       while (x < 8) {
-        val cur = px(sy * w + (x + 1) * w / 9)
+        val cur = at(row + (x + 1) * w / 9)
         if (cur > prev) bits |= 1L << (y * 8 + x)
         prev = cur
         x += 1
@@ -160,6 +183,16 @@ object MultiModal {
     bits
   }
 
+  /** 64-bit difference hash (dHash) of a decoded grayscale image. */
+  def dHash64(px: Array[Double], h: Int, w: Int): Long = dHashGrid(h, w, px(_))
+
+  /** [[dHash64]] of a BMP's R channel, sampled straight from the
+    * validated file bytes. */
+  private[graft] def bmpDHash64(b: Array[Byte]): Long = {
+    val m = new Bmp(b)
+    dHashGrid(m.h, m.w, m.red(_))
+  }
+
   /** Decoded BMP header fields + the sum of the R channel in TOP-DOWN
     * row-major order (proves the bottom-up de-interleave, not just the
     * header offsets — though a sum is row-order-invariant, the stride
@@ -167,25 +200,20 @@ object MultiModal {
   case class BmpInfo(width: Int, height: Int, bpp: Int, pxSum: Long)
 
   def decodeBmp(b: Array[Byte]): BmpInfo = {
-    require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
-    val dataOff = rd32(b, 10)
-    require(rd32(b, 14) >= 40, "BITMAPINFOHEADER required")
-    val w = rd32(b, 18)
-    val h = rd32(b, 22)
-    val bpp = rd16(b, 28)
-    require(bpp == 24 && rd32(b, 30) == 0, "only uncompressed 24-bit supported")
-    require(w > 0 && h > 0, "top-down/degenerate BMPs unsupported")
-    val stride = (w * 3 + 3) & ~3
-    require(b.length >= dataOff + stride * h, "truncated pixel array")
+    val m = new Bmp(b)
     var sum = 0L
-    var r = 0
-    while (r < h) {
-      val rowOff = dataOff + (h - 1 - r) * stride // undo bottom-up storage
-      var c = 0
-      while (c < w) { sum += (b(rowOff + c * 3 + 2) & 0xff); c += 1 } // +2 = R of BGR
-      r += 1
-    }
-    BmpInfo(w, h, bpp, sum)
+    var p = 0
+    while (p < m.w * m.h) { sum += m.red(p); p += 1 }
+    BmpInfo(m.w, m.h, 24, sum)
+  }
+
+  /** Full pixel decode: the R channel as a top-down row-major
+    * Array[Double] — the bridge from the binary media column into the
+    * ImageGeometry family (resize/crop/augment run on exactly this
+    * layout). Same header validation as [[decodeBmp]]. */
+  def decodeBmpPixels(b: Array[Byte]): Array[Double] = {
+    val m = new Bmp(b)
+    Array.tabulate(m.w * m.h)(m.red(_).toDouble)
   }
 
   // ------------------------------------------------------------- WAV
@@ -195,10 +223,10 @@ object MultiModal {
   @inline private def sample(docId: Long, i: Long): Int =
     ((docId * 31L + i * 7L) % 2003L).toInt - 1001
 
-  /** Synthesize a spec-valid PCM16 mono WAV: RIFF header, fmt chunk
-    * (PCM, 1 channel, 16-bit), data chunk of n little-endian signed
-    * samples. */
-  def encodeWav(docId: Long, sampleRate: Int, n: Int): Array[Byte] = {
+  /** The WAV writer: a spec-valid PCM16 mono file — RIFF header, fmt
+    * chunk (PCM, 1 channel, 16-bit), data chunk of n little-endian
+    * signed samples `sample(i)`. */
+  private def encodePcm16(rate: Int, n: Int, sample: Int => Int): Array[Byte] = {
     val dataSize = n * 2
     val o = new java.io.ByteArrayOutputStream(44 + dataSize)
     o.write('R'); o.write('I'); o.write('F'); o.write('F')
@@ -206,77 +234,68 @@ object MultiModal {
     o.write('W'); o.write('A'); o.write('V'); o.write('E')
     o.write('f'); o.write('m'); o.write('t'); o.write(' ')
     le32(o, 16); le16(o, 1); le16(o, 1) // fmt size, PCM, mono
-    le32(o, sampleRate); le32(o, sampleRate * 2) // byte rate = rate * block align
+    le32(o, rate); le32(o, rate * 2)    // byte rate = rate * block align
     le16(o, 2); le16(o, 16)             // block align, bits
     o.write('d'); o.write('a'); o.write('t'); o.write('a')
     le32(o, dataSize)
     var i = 0
-    while (i < n) { le16(o, sample(docId, i) & 0xffff); i += 1 }
+    while (i < n) { le16(o, sample(i) & 0xffff); i += 1 }
     o.toByteArray
   }
 
-  /** Decoded WAV fields + the exact sum of the signed samples. The
-    * decoder WALKS the RIFF chunks (8-byte headers, word-aligned
-    * payloads) instead of assuming the canonical 44-byte layout, so
-    * files with extra chunks (LIST/INFO metadata) decode too. */
-  case class WavInfo(sampleRate: Int, channels: Int, bits: Int,
-      nSamples: Int, sampleSum: Long)
+  def encodeWav(docId: Long, sampleRate: Int, n: Int): Array[Byte] =
+    encodePcm16(sampleRate, n, i => sample(docId, i))
 
-  def decodeWav(b: Array[Byte]): WavInfo = {
+  /** Payload offsets of a walked PCM16 WAV: the fmt chunk's, the data
+    * chunk's, and the data chunk's sample count. */
+  private final case class Pcm16(fmt: Int, data: Int, nSamples: Int)
+
+  /** The RIFF/WAVE chunk walk: checks the magic, then WALKS the chunks
+    * (8-byte headers, word-aligned payloads, each within the file)
+    * instead of assuming the canonical 44-byte layout, so files with
+    * extra chunks (LIST/INFO metadata) decode too. A fmt chunk must be
+    * PCM 16-bit and precede data; both must appear — a truncated tail
+    * would drop the data chunk silently otherwise. When a chunk kind
+    * repeats, the last one counts. */
+  private def walkWav(b: Array[Byte]): Pcm16 = {
     require(b.length >= 12 &&
       b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E', "not a RIFF/WAVE")
     var off = 12
-    var rate = 0; var ch = 0; var bits = 0
-    var nSamples = 0; var sum = 0L; var fmtSeen = false; var dataSeen = false
+    var fmt = -1; var data = -1; var nSamples = 0
     while (off + 8 <= b.length) {
       val id = new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
       val size = rd32(b, off + 4)
       require(size >= 0 && off + 8 + size <= b.length, s"truncated chunk $id")
       if (id == "fmt ") {
         require(rd16(b, off + 8) == 1, "only PCM supported")
-        ch = rd16(b, off + 10)
-        rate = rd32(b, off + 12)
-        bits = rd16(b, off + 22)
-        require(bits == 16, "only 16-bit supported")
-        fmtSeen = true
+        require(rd16(b, off + 22) == 16, "only 16-bit supported")
+        fmt = off + 8
       } else if (id == "data") {
-        require(fmtSeen, "data chunk before fmt")
-        dataSeen = true
+        require(fmt >= 0, "data chunk before fmt")
+        data = off + 8
         nSamples = size / 2
-        var i = 0
-        while (i < nSamples) {
-          sum += rd16(b, off + 8 + i * 2).toShort // sign-extend int16
-          i += 1
-        }
       }
       off += 8 + size + (size & 1) // RIFF chunks are word-aligned
     }
-    require(fmtSeen, "no fmt chunk")
-    require(dataSeen, "no data chunk") // a truncated tail drops it silently otherwise
-    WavInfo(rate, ch, bits, nSamples, sum)
+    require(fmt >= 0, "no fmt chunk")
+    require(data >= 0, "no data chunk")
+    Pcm16(fmt, data, nSamples)
   }
 
-  /** Full pixel decode: the R channel as a top-down row-major
-    * Array[Double] — the bridge from the binary media column into the
-    * ImageGeometry family (resize/crop/augment run on exactly this
-    * layout). Same header validation as [[decodeBmp]]. */
-  def decodeBmpPixels(b: Array[Byte]): Array[Double] = {
-    val info = decodeBmp(b) // validates magic/bpp/compression/truncation
-    val dataOff = rd32(b, 10)
-    val stride = (info.width * 3 + 3) & ~3
-    val out = new Array[Double](info.width * info.height)
-    var r = 0
-    while (r < info.height) {
-      val rowOff = dataOff + (info.height - 1 - r) * stride
-      var c = 0
-      while (c < info.width) {
-        out(r * info.width + c) = (b(rowOff + c * 3 + 2) & 0xff).toDouble
-        c += 1
-      }
-      r += 1
+  /** Decoded WAV fields + the exact sum of the signed samples. */
+  case class WavInfo(sampleRate: Int, channels: Int, bits: Int,
+      nSamples: Int, sampleSum: Long)
+
+  def decodeWav(b: Array[Byte]): WavInfo = {
+    val pcm = walkWav(b)
+    var sum = 0L
+    var i = 0
+    while (i < pcm.nSamples) {
+      sum += rd16(b, pcm.data + i * 2).toShort // sign-extend int16
+      i += 1
     }
-    out
+    WavInfo(rd32(b, pcm.fmt + 4), rd16(b, pcm.fmt + 2), 16, pcm.nSamples, sum)
   }
 
   // ---- Column wrappers ----
@@ -285,10 +304,7 @@ object MultiModal {
     encodeBmpMixed(docId, w, h, perturb))
   val decodeBmpUdf = udf((b: Array[Byte]) => decodeBmp(b))
   val decodeBmpPixelsUdf = udf((b: Array[Byte]) => decodeBmpPixels(b))
-  val dHash64Udf = udf((b: Array[Byte]) => {
-    val info = decodeBmp(b)
-    dHash64(decodeBmpPixels(b), info.height, info.width)
-  })
+  val dHash64Udf = udf((b: Array[Byte]) => bmpDHash64(b))
   val encodeWavUdf = udf((docId: Long, rate: Int, n: Int) => encodeWav(docId, rate, n))
   val decodeWavUdf = udf((b: Array[Byte]) => decodeWav(b))
 
@@ -298,11 +314,12 @@ object MultiModal {
   @inline private def luma(docId: Long, f: Int, p: Int): Int =
     ((docId * 11L + f * 17L + p) % 256L).toInt
 
-  /** Synthesize a spec-valid YUV4MPEG2 stream: the plain-text parameter
-    * line (`YUV4MPEG2 W<w> H<h> F25:1 Ip A1:1 Cmono\n`), then per frame
-    * a `FRAME\n` marker followed by the raw w×h luma plane (Cmono = no
-    * chroma planes). */
-  def encodeY4m(docId: Long, w: Int, h: Int, nFrames: Int): Array[Byte] = {
+  /** The YUV4MPEG2 writer: the plain-text parameter line
+    * (`YUV4MPEG2 W<w> H<h> F25:1 Ip A1:1 Cmono\n`), then per frame f a
+    * `FRAME\n` marker followed by the raw w×h luma plane `luma(f, p)`
+    * (Cmono = no chroma planes). */
+  private def encodeCmono(w: Int, h: Int, nFrames: Int,
+      luma: (Int, Int) => Int): Array[Byte] = {
     val header = s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 Cmono\n"
     val o = new java.io.ByteArrayOutputStream(
       header.length + nFrames * (6 + w * h))
@@ -312,24 +329,28 @@ object MultiModal {
       o.write('F'); o.write('R'); o.write('A'); o.write('M'); o.write('E'); o.write('\n')
       val n = w * h
       var p = 0
-      while (p < n) { o.write(luma(docId, f, p)); p += 1 }
+      while (p < n) { o.write(luma(f, p)); p += 1 }
       f += 1
     }
     o.toByteArray
   }
 
-  /** Decoded stream parameters + per-SAMPLED-frame luma sums — the real
-    * frame sampler: PARSE the parameter line (tagged tokens, order
-    * not fixed by the spec), then walk the `FRAME` markers — each may
-    * carry its own parameters up to its newline — counting every frame
-    * and summing the plane of every k-th. A framing bug (marker offset,
-    * header-length arithmetic, frame stride) shifts the byte windows
-    * and changes the sums. */
-  case class Y4mInfo(width: Int, height: Int, fpsNum: Int, fpsDen: Int,
-      nFrames: Int, sampleSums: Array[Long])
+  def encodeY4m(docId: Long, w: Int, h: Int, nFrames: Int): Array[Byte] =
+    encodeCmono(w, h, nFrames, (f, p) => luma(docId, f, p))
 
-  def decodeY4mSampled(b: Array[Byte], k: Int): Y4mInfo = {
-    require(k >= 1, "sample stride must be >= 1")
+  /** A walked Cmono stream: its parameters and each frame's plane
+    * offset, in file order. */
+  private final case class Y4m(w: Int, h: Int, fpsNum: Int, fpsDen: Int,
+      planes: Array[Int])
+
+  /** The YUV4MPEG2 walk: PARSE the parameter line (tagged tokens, order
+    * not fixed by the spec; only Cmono is accepted), then walk the
+    * `FRAME` markers — each may carry its own parameters up to its
+    * newline — and check every w×h plane lies within the file. A
+    * framing bug (marker offset, header-length arithmetic, frame
+    * stride) shifts the plane offsets and changes every caller's
+    * result. */
+  private def walkY4m(b: Array[Byte]): Y4m = {
     var eol = 0
     while (eol < b.length && b(eol) != '\n') eol += 1
     require(eol < b.length, "no parameter-line terminator")
@@ -350,7 +371,7 @@ object MultiModal {
     require(w > 0 && h > 0, "missing/invalid W or H parameter")
     require(cs == "mono", "only Cmono (single 8-bit luma plane) supported")
     val frameBytes = w * h
-    val sums = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val planes = Array.newBuilder[Int]
     var off = eol + 1
     var f = 0
     while (off < b.length) {
@@ -362,16 +383,30 @@ object MultiModal {
       require(fe < b.length, "unterminated FRAME parameter line")
       off = fe + 1
       require(off + frameBytes <= b.length, s"truncated frame $f")
-      if (f % k == 0) {
-        var sum = 0L
-        var p = 0
-        while (p < frameBytes) { sum += (b(off + p) & 0xff); p += 1 }
-        sums += sum
-      }
+      planes += off
       off += frameBytes
       f += 1
     }
-    Y4mInfo(w, h, fn, fd, f, sums.toArray)
+    Y4m(w, h, fn, fd, planes.result())
+  }
+
+  /** Decoded stream parameters + per-SAMPLED-frame luma sums — the real
+    * frame sampler: [[walkY4m]] counts every frame, and the plane of
+    * every k-th is summed. */
+  case class Y4mInfo(width: Int, height: Int, fpsNum: Int, fpsDen: Int,
+      nFrames: Int, sampleSums: Array[Long])
+
+  def decodeY4mSampled(b: Array[Byte], k: Int): Y4mInfo = {
+    require(k >= 1, "sample stride must be >= 1")
+    val s = walkY4m(b)
+    val sums = s.planes.indices.by(k).map { f =>
+      var sum = 0L
+      var p = s.planes(f)
+      val end = p + s.w * s.h
+      while (p < end) { sum += (b(p) & 0xff); p += 1 }
+      sum
+    }
+    Y4mInfo(s.w, s.h, s.fpsNum, s.fpsDen, s.planes.length, sums.toArray)
   }
 
   val encodeY4mUdf = udf((docId: Long, w: Int, h: Int, nF: Int) =>
@@ -398,85 +433,21 @@ object MultiModal {
     * spec-valid Cmono container as [[encodeY4m]]. */
   def encodeY4mMixed(docId: Long, w: Int, h: Int, nFrames: Int,
       perturb: Boolean): Array[Byte] = {
-    val header = s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 Cmono\n"
-    val o = new java.io.ByteArrayOutputStream(
-      header.length + nFrames * (6 + w * h))
-    o.write(header.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, header.length)
     val pp = if (perturb) perturbIndex(w, h) else -1L
-    var f = 0
-    while (f < nFrames) {
-      o.write('F'); o.write('R'); o.write('A'); o.write('M'); o.write('E'); o.write('\n')
-      val seed = frameSeed(docId, f)
-      val n = w * h
-      var p = 0
-      while (p < n) {
-        val v = pxMix(seed, p)
-        o.write(if (perturb && f == 0 && p == pp) (v + 128) % 256 else v)
-        p += 1
-      }
-      f += 1
-    }
-    o.toByteArray
+    encodeCmono(w, h, nFrames, (f, p) => {
+      val v = pxMix(frameSeed(docId, f), p)
+      if (f == 0 && p == pp) (v + 128) % 256 else v
+    })
   }
 
   /** Decode a Cmono YUV4MPEG2 stream to one [[dHash64]] per frame —
-    * the video fingerprint sequence. Same parameter-line grammar and
-    * FRAME-walk validation as [[decodeY4mSampled]] (a framing bug
-    * shifts the byte windows and changes every downstream hash); the
-    * per-frame work is the 8×9 dHash sample grid, so decode+hash is
+    * the video fingerprint sequence: [[walkY4m]]'s frames, each hashed
+    * by [[dHashGrid]] straight off the plane bytes, so decode+hash is
     * O(frames) header walks + O(72) reads per frame, not a full-plane
     * pass. */
   def decodeY4mFrameHashes(b: Array[Byte]): Array[Long] = {
-    var eol = 0
-    while (eol < b.length && b(eol) != '\n') eol += 1
-    require(eol < b.length, "no parameter-line terminator")
-    val toks = new String(b, 0, eol,
-      java.nio.charset.StandardCharsets.US_ASCII).split(" ")
-    require(toks(0) == "YUV4MPEG2", "not a YUV4MPEG2 stream")
-    var w = -1; var h = -1
-    var cs = "420jpeg"
-    for (t <- toks.drop(1); if t.nonEmpty) t.charAt(0) match {
-      case 'W' => w = t.substring(1).toInt
-      case 'H' => h = t.substring(1).toInt
-      case 'C' => cs = t.substring(1)
-      case _ => ()
-    }
-    require(w > 0 && h > 0, "missing/invalid W or H parameter")
-    require(cs == "mono", "only Cmono (single 8-bit luma plane) supported")
-    val frameBytes = w * h
-    val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var off = eol + 1
-    var f = 0
-    while (off < b.length) {
-      require(off + 5 <= b.length && b(off) == 'F' && b(off + 1) == 'R' &&
-        b(off + 2) == 'A' && b(off + 3) == 'M' && b(off + 4) == 'E',
-        s"missing FRAME marker at offset $off")
-      var fe = off + 5
-      while (fe < b.length && b(fe) != '\n') fe += 1
-      require(fe < b.length, "unterminated FRAME parameter line")
-      off = fe + 1
-      require(off + frameBytes <= b.length, s"truncated frame $f")
-      // dHash directly off the plane bytes — the sample grid of
-      // dHash64, inlined over the unsigned byte reads
-      var bits = 0L
-      var y = 0
-      while (y < 8) {
-        val sy = y * h / 8
-        var prev = b(off + sy * w + 0 * w / 9) & 0xff
-        var x = 0
-        while (x < 8) {
-          val cur = b(off + sy * w + (x + 1) * w / 9) & 0xff
-          if (cur > prev) bits |= 1L << (y * 8 + x)
-          prev = cur
-          x += 1
-        }
-        y += 1
-      }
-      hashes += bits
-      off += frameBytes
-      f += 1
-    }
-    hashes.toArray
+    val s = walkY4m(b)
+    s.planes.map(off => dHashGrid(s.h, s.w, p => b(off + p) & 0xff))
   }
 
   val encodeY4mMixedUdf = udf((docId: Long, w: Int, h: Int, nF: Int,
@@ -505,69 +476,32 @@ object MultiModal {
     * ≤ 1 bit while every other window is bit-identical. Same
     * spec-valid RIFF container as [[encodeWav]], rate 8000. */
   def encodeWavMixed(docId: Long, winLen: Int, perturb: Boolean): Array[Byte] = {
-    val n = AudioWindows * winLen
-    val dataSize = n * 2
-    val o = new java.io.ByteArrayOutputStream(44 + dataSize)
-    o.write('R'); o.write('I'); o.write('F'); o.write('F')
-    le32(o, 36 + dataSize)
-    o.write('W'); o.write('A'); o.write('V'); o.write('E')
-    o.write('f'); o.write('m'); o.write('t'); o.write(' ')
-    le32(o, 16); le16(o, 1); le16(o, 1)
-    le32(o, 8000); le32(o, 8000 * 2)
-    le16(o, 2); le16(o, 16)
-    o.write('d'); o.write('a'); o.write('t'); o.write('a')
-    le32(o, dataSize)
     val seed = audioSeed(docId)
-    var i = 0
-    while (i < n) {
+    encodePcm16(8000, AudioWindows * winLen, i => {
       val base = pxMix(seed, i.toLong) - 128
-      val v = if (perturb && i < winLen) base + 64 else base
-      le16(o, v & 0xffff)
-      i += 1
-    }
-    o.toByteArray
+      if (perturb && i < winLen) base + 64 else base
+    })
   }
 
   /** 64-bit energy-envelope fingerprint of a PCM16 mono WAV — the
-    * audio analogue of [[dHash64]]: split the samples into
-    * [[AudioWindows]] equal windows, window energy = Σ s² (exact
+    * audio analogue of [[dHash64]]: split [[walkWav]]'s data chunk
+    * into [[AudioWindows]] equal windows, window energy = Σ s² (exact
     * BIGINTs: |s| ≤ 32767 so each term ≤ 2^30 and any realistic
     * window sum stays far under 2^63), bit x = 1 iff
     * E(x+1) > E(x). Pure integer pipeline, so the SQL oracle replays
-    * it bit-for-bit. Same RIFF chunk-walk validation as
-    * [[decodeWav]] (word-aligned chunks, fmt-before-data, PCM16). */
+    * it bit-for-bit. */
   def wavEnergyHash64(b: Array[Byte]): Long = {
-    require(b.length >= 12 &&
-      b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-      b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E', "not a RIFF/WAVE")
-    var off = 12
-    var fmtSeen = false
-    var energies: Array[Long] = null
-    while (off + 8 <= b.length) {
-      val id = new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = rd32(b, off + 4)
-      require(size >= 0 && off + 8 + size <= b.length, s"truncated chunk $id")
-      if (id == "fmt ") {
-        require(rd16(b, off + 8) == 1, "only PCM supported")
-        require(rd16(b, off + 22) == 16, "only 16-bit supported")
-        fmtSeen = true
-      } else if (id == "data") {
-        require(fmtSeen, "data chunk before fmt")
-        val nSamples = size / 2
-        require(nSamples % AudioWindows == 0,
-          s"sample count $nSamples not divisible into $AudioWindows windows")
-        val m = nSamples / AudioWindows
-        energies = new Array[Long](AudioWindows)
-        var i = 0
-        while (i < nSamples) {
-          val s = rd16(b, off + 8 + i * 2).toShort.toLong
-          energies(i / m) += s * s
-          i += 1
-        }
-      }
-      off += 8 + size + (size & 1)
+    val pcm = walkWav(b)
+    require(pcm.nSamples % AudioWindows == 0,
+      s"sample count ${pcm.nSamples} not divisible into $AudioWindows windows")
+    val m = pcm.nSamples / AudioWindows
+    val energies = new Array[Long](AudioWindows)
+    var i = 0
+    while (i < pcm.nSamples) {
+      val s = rd16(b, pcm.data + i * 2).toShort.toLong
+      energies(i / m) += s * s
+      i += 1
     }
-    require(energies != null, "no data chunk")
     var bits = 0L
     var x = 0
     while (x < 64) {

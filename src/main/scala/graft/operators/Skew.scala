@@ -1,35 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for 100 TB-scale shuffles (the brief's "salting for
   * skew" requirement; AQE's skew-join handles sort-merge join skew at
-  * runtime, these handle the cases it does not: skewed AGGREGATION keys
-  * and skewed shuffle-join keys against a non-broadcastable-but-small
-  * side).
+  * runtime, this handles a case it does not: skewed shuffle-join keys
+  * against a non-broadcastable-but-small side).
   *
   * Correctness note: the salt only has to SPREAD rows, not be stable —
-  * partial aggregates are associative/commutative, so any assignment
-  * yields the same final result.
+  * the small side carries every salt, so any assignment yields the
+  * same joined rows.
   */
 object Skew {
-
-  /** Two-stage salted sum/count: groupBy(key, salt) partial-aggregates
-    * a hot key across `saltBuckets` reducers, then a second (tiny)
-    * aggregation merges the per-salt partials. Identical result to a
-    * direct groupBy, but the widest shuffle spreads each hot key over
-    * saltBuckets tasks instead of one. */
-  def saltedSumCount(df: DataFrame, key: Column, value: Column,
-      saltBuckets: Int): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(saltBuckets.toLong)))
-    salted
-      .groupBy(key.as("k"), col("__salt"))
-      .agg(sum(value).as("__s"), count(value).as("__n"))
-      .groupBy(col("k"))
-      .agg(sum(col("__s")).as("sum_v"), sum(col("__n")).as("n"))
-  }
 
   /** Salted equi-join for a skewed big side against a small-but-not-
     * broadcastable side: the big side draws a salt in [0, s), the small

@@ -136,17 +136,6 @@ object StreamingOps {
       }
   }
 
-  /** The streaming flagship: watermarked tumbling counts — the shape a
-    * production pipeline runs 24/7. `readStream`-driven; late rows
-    * beyond the watermark are dropped from state. */
-  def streamingTumblingCounts(stream: DataFrame, tsCol: String, keyCol: String,
-      width: String, watermark: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col(keyCol), col("n"))
-
   /** Incrementally-maintained per-key quantiles: the
     * [[graft.operators.KllSketch]] compactor ladder held as
     * mapGroupsWithState state, updated micro-batch by micro-batch —

@@ -107,13 +107,6 @@ class FunnelDeconSpec extends SparkSpec {
     runE(Decontaminate.flagContaminatedScan) shouldBe runE(Decontaminate.flagContaminated)
   }
 
-  test("decontaminate: wordGrams emits every n-gram once, none for short docs") {
-    val df = Seq(Tuple1("a b c d"), Tuple1("a b")).toDF("text")
-    val grams = Decontaminate.wordGrams(df, "text", 3)
-      .collect().map(_.getString(0)).sorted
-    grams shouldBe Array("a b c", "b c d")
-  }
-
   // ------------------------------------------------- 100 TB plan shapes
   test("funnel plan: both windows and the aggregate share ONE exchange") {
     val df = Seq((1L, ts(0), 1L, "view"), (2L, ts(1), 2L, "click"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** The image-geometry, LCG and minhash head-sample oracle generators:
   * the flip entries label the rows their kernel flipped, the Column draw
   * is the kernel's draw, and no oracle outside the generators restates
-  * their arithmetic. */
+  * their arithmetic. The same kind of source guard keeps the media
+  * codecs to one writer and one walker per container format. */
 class OracleGeneratorSpec extends SparkSpec {
   import OracleGeneratorSpec._
 
@@ -64,21 +65,58 @@ class OracleGeneratorSpec extends SparkSpec {
     planted.foreach { case (rule, text) =>
       withClue(rule) { patterns(rule).findFirstIn(text) should not be empty }
     }
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val hits = for {
-      f <- walk(new java.io.File("src/main/scala"))
-      text = java.nio.file.Files.readString(f.toPath)
+      (f, text) <- mainSources
       (rule, re) <- patterns
       m <- re.findAllMatchIn(text)
       if !homes(rule)(f.getName) && !exempt(rule, text.take(m.start))
     } yield s"$rule at ${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}"
     hits shouldBe empty
   }
+
+  test("source guard: one writer and one walker per media container, one dHash grid") {
+    singletons.foreach { case (rule, (re, plant)) =>
+      withClue(rule) { re.findFirstIn(plant) should not be empty }
+    }
+    val repeated = for {
+      (rule, (re, _)) <- singletons.toSeq
+      where = for ((f, text) <- mainSources; m <- re.findAllMatchIn(text))
+        yield s"${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}"
+      if where.size > 1
+    } yield s"$rule at ${where.mkString(", ")}"
+    repeated shouldBe empty
+  }
 }
 
 object OracleGeneratorSpec {
+  /** Every main source file with its text. */
+  lazy val mainSources: Seq[(java.io.File, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(new java.io.File("src/main/scala"))
+      .map(f => f -> java.nio.file.Files.readString(f.toPath))
+  }
+
+  /** Spellings `src/main` may hold at most once, by rule name, each
+    * with a planted line it must match: the media containers' writers,
+    * walkers and header checks, and the dHash sample grid. */
+  val singletons: Map[String, (scala.util.matching.Regex, String)] = Map(
+    "RIFF writer" -> ("""write\('R'\);\s*o\.write\('I'\)""".r,
+      "o.write('R'); o.write('I'); o.write('F'); o.write('F')"),
+    "RIFF magic" -> ("""'R'\s*&&\s*b\(1\)\s*==\s*'I'""".r,
+      "b(0) == 'R' && b(1) == 'I' && b(2) == 'F'"),
+    "Y4M writer" -> ("""write\('F'\);\s*o\.write\('R'\)""".r,
+      "o.write('F'); o.write('R'); o.write('A'); o.write('M')"),
+    "Y4M parameter line" -> ("""toks\(0\)\s*==\s*"YUV4MPEG2"""".r,
+      """require(toks(0) == "YUV4MPEG2", "not a YUV4MPEG2 stream")"""),
+    "Y4M FRAME marker" -> ("""b\(off\)\s*==\s*'F'""".r,
+      "off + 5 <= b.length && b(off) == 'F' && b(off + 1) == 'R'"),
+    "BMP magic" -> ("""b\(0\)\s*==\s*'B'""".r,
+      "b.length >= 54 && b(0) == 'B' && b(1) == 'M'"),
+    "dHash sample index" -> ("""\(x\s*\+\s*1\)\s*\*\s*w\s*/\s*9""".r,
+      "val cur = px(sy * w + (x + 1) * w / 9)"))
+
   /** Each replayed spelling, by rule name. */
   val patterns: Map[String, scala.util.matching.Regex] = Map(
     "bilinear clamp" -> """CAST\(floor\(s\.""".r,

@@ -15,15 +15,6 @@ class ScaleOpsSpec extends SparkSpec {
     (if (i % 10 == 0) s"key$i" else "HOT", i.toDouble)
   }.toDF("k", "v").repartition(8)
 
-  test("saltedSumCount equals direct groupBy on a skewed key") {
-    val direct = skewed.groupBy("k")
-      .agg(sum("v").as("sum_v"), count("v").as("n"))
-      .orderBy("k").collect().toSeq
-    val salted = Skew.saltedSumCount(skewed, col("k"), col("v"), 16)
-      .orderBy("k").collect().toSeq
-    salted shouldBe direct
-  }
-
   test("saltedJoin equals plain join (row multiset) on a skewed key") {
     val small = Seq(("HOT", 1), ("key10", 2), ("key20", 3)).toDF("k", "w")
     val plain = skewed.join(small, "k")

@@ -18,8 +18,10 @@ class StreamingSpec extends SparkSpec {
   test("watermarked tumbling counts emit finalized windows; late row dropped") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String)]
-    val out = StreamingOps.streamingTumblingCounts(
-      mem.toDF().toDF("ts", "k"), "ts", "k", "1 hour", "30 minutes")
+    val out = StreamingOps.tumbling(
+        mem.toDF().toDF("ts", "k").withWatermark("ts", "30 minutes"),
+        col("ts"), col("k"), lit(0.0), "1 hour")
+      .select(col("window.start").as("window_start"), col("k"), col("n"))
 
     val q = out.writeStream.format("memory").queryName("tumbling_test")
       .outputMode(OutputMode.Append()).start()
