@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayOps._
 
 /** SURVEY.md §2.2/§2.5 ensemble stacking — the 6 modes of sub_stacking.py
   * (sub_stacking.py:41-81) re-expressed over an array column of per-model
-  * predictions (P5), plus the fold-ensemble accumulate/mean (G2/G3).
+  * predictions (P5). The fold-ensemble mean (G2/G3) is one projection
+  * in [[Model.crossValidate]].
   *
   * Input contract: a DataFrame with key column `id` and an
   * array<double> column `preds` (one element per stacked model), built by
@@ -52,11 +53,4 @@ object Ensemble {
         .otherwise(base)
     case m => throw new IllegalArgumentException(s"unknown stacking mode: $m")
   }
-
-  /** G2/G3: union of per-fold prediction frames → mean per id. Partial
-    * aggregation makes this one exchange regardless of fold count. */
-  def foldMean(folds: Seq[DataFrame], idCol: String, predCol: String): DataFrame =
-    folds.reduce(_ unionByName _)
-      .groupBy(col(idCol))
-      .agg(avg(col(predCol)).as(predCol))
 }

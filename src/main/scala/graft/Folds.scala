@@ -49,7 +49,7 @@ object Folds {
       pmod(shiftright(col(keyCol).cast("long").bitwiseAND(lit(0x7fffffffL))
         * lit(2654435761L), 15), lit(k.toLong)).cast("int"))
 
-  /** J4: fold membership split (X[train_idx] / X[test_idx], main.py:253-262). */
+  /** J4: a fold's training rows (X[train_idx], main.py:253-262). The
+    * holdout rows are scored in place by [[Model.crossValidate]]. */
   def trainSplit(df: DataFrame, fold: Int): DataFrame = df.where(col("fold") =!= fold)
-  def holdoutSplit(df: DataFrame, fold: Int): DataFrame = df.where(col("fold") === fold)
 }

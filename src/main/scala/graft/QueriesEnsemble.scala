@@ -168,7 +168,7 @@ object QueriesEnsemble {
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp.toString)
       }
-      s.read.parquet(out)
+      Tables.readFixture(s, out)
         .where(col("o_orderpriority") === "1-URGENT")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),

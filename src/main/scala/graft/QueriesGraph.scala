@@ -61,7 +61,7 @@ object QueriesGraph {
     * derived tables a production graph stack keeps next to its facts. */
   private def parquetFixture(s: org.apache.spark.sql.SparkSession, d: String,
       family: String, tables: Seq[String])(compute: => org.apache.spark.sql.DataFrame) =
-    s.read.parquet(Tables.fixture(family, d, tables, "") { tmp =>
+    Tables.readFixture(s, Tables.fixture(family, d, tables, "") { tmp =>
       compute.write.mode("overwrite").parquet(tmp.toString)
     })
 
@@ -242,12 +242,12 @@ object QueriesGraph {
   val grBfsHops: Entry = Entry("gr_bfs_hops",
     (s, d) => {
       val pairs = sparsePairs(s, d)
-      // pin the bidirected edge set once: it feeds hopDistances' own
-      // pin, the node census, AND the seed agg — unpinned, each of
+      // pin the bidirected (long, long) edge set once: it feeds every
+      // BFS round, the node census AND the seed agg — unpinned, each of
       // those re-scans the fixture and re-runs the union
       val edges = Graft.pin(
-        pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst"))))
+        pairs.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
+        .union(pairs.select(col("b").cast("long").as("src"), col("a").cast("long").as("dst"))))
       val nodes = edges.select(col("src").as("node")).distinct()
       val seed = nodes.agg(min(col("node")).as("node"))
       nodes.join(operators.Bfs.hopDistances(edges, seed, Hops), Seq("node"), "left")

@@ -101,7 +101,7 @@ object QueriesMl {
 
   /** The 10-crop TTA inference pipeline (10-crop.py §3.2): train on
     * whole-image features, explode ten crops per image, score each
-    * crop, average per id (G10 via Ensemble.foldMean). The 3-level
+    * crop, average per id (G10: a `groupBy(id)` avg). The 3-level
     * Python loop collapses into one plan per model. */
   val mlTta: Entry = Entry("ml_tta",
     (s, d) => {
@@ -121,12 +121,11 @@ object QueriesMl {
         posexplode(ImageGeometry.tenCropUdf(col("img"), lit(8), lit(8), lit(4), lit(4)))
           .as(Seq("crop_id", "crop")))
       val cropFeats = crops.select(col("id") +: feats(col("crop")): _*)
-      val preds = Model.prob1(m.transform(cropFeats)).select(col("id"), col("pred"))
+      val preds = cropFeats.select(col("id"), Model.score(m).as("pred"))
       // G10 mean plus the crop-pred envelope for the in-result gate
       val tta = preds.groupBy("id").agg(avg(col("pred")).as("tta"),
         min(col("pred")).as("cmin"), max(col("pred")).as("cmax"))
-      val whole = Model.prob1(m.transform(train))
-        .select(col("id"), col("pred").as("whole_pred"))
+      val whole = train.select(col("id"), Model.score(m).as("whole_pred"))
       // ORACLE-GREEN since r11 via the gate-literal pattern (see
       // mlCvLogloss): the model-dependent tta_pred folds into the
       // per-id gate; the hashed result is one (id, quality_ok) row per
@@ -166,8 +165,8 @@ object QueriesMl {
       import org.apache.spark.ml.feature.VectorAssembler
       // Pin the fit frame (the Model.crossValidate technique): every
       // LR/GBT iteration below is one job over it, and each task then
-      // ships a one-RDD lineage, not the scan plan. The returned plan's
-      // transforms re-score the same pinned blocks after this fn
+      // ships a one-RDD lineage, not the scan plan. The returned plan
+      // re-scores the same pinned blocks after this fn
       // returns; the ContextCleaner frees them once that frame is
       // garbage. coalesce bounds each job's task count for sessions
       // without AQE (at 100 TB the same knob is sized UP to the data)
@@ -181,8 +180,7 @@ object QueriesMl {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val (lrPred, gbtPred) = try {
         val lrF = Future {
-          Model.prob1(Model.pipeline(featureCols).fit(frame).transform(frame))
-            .select(col("id"), col("pred").as("m_lr"))
+          frame.select(col("id"), Model.score(Model.pipeline(featureCols).fit(frame)).as("m_lr"))
         }
         val gbtF = Future {
           val asm = new VectorAssembler().setInputCols(featureCols.toArray)

@@ -508,7 +508,7 @@ object QueriesPipeline {
     * pipeline reads its previous stage's output. The leading `g2`
     * bumps on any change to chainCorpus/dupEdges/assignment. */
   private def componentAssignCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Tables.fixture("comp_assign", d, Seq("documents"),
+    Tables.readFixture(s, Tables.fixture("comp_assign", d, Seq("documents"),
         s"g2;blk=2w;tau=0.55;chain=7_14;pfx=7_10;cap=$ComponentsOracleCap") {
       out => componentAssign(s, d).write.mode("overwrite").parquet(out.toString)
     })

@@ -212,7 +212,7 @@ object QueriesStreaming {
       java.nio.file.Files.copy(src, tmp.resolve("events.parquet")): Unit
     }
     val raw = s.readStream
-      .schema(s.read.parquet(src.toString).schema)
+      .schema(Tables.tblSchema(s, d, "events"))
       .parquet(new java.io.File(stage).getAbsolutePath)
     Tables.normalizeTs(raw)
   }
@@ -341,7 +341,7 @@ object QueriesStreaming {
   private def stagedBatches(s: org.apache.spark.sql.SparkSession, stage: String,
       first: String = "b0"): org.apache.spark.sql.DataFrame =
     s.readStream
-      .schema(s.read.parquet(s"$stage/$first.parquet").schema)
+      .schema(Tables.readFixture(s, s"$stage/$first.parquet").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stage)
 
@@ -628,8 +628,8 @@ object QueriesStreaming {
         java.nio.file.Files.copy(
           java.nio.file.Paths.get(partsDir, s"$nm.parquet"),
           srcDir.resolve(s"$nm.parquet")): Unit
-      val schema = s.read.parquet(s"$partsDir/b0.parquet").schema
-      val b1Rows = s.read.parquet(s"$partsDir/b1.parquet").count()
+      val schema = Tables.readFixture(s, s"$partsDir/b0.parquet").schema
+      val b1Rows = Tables.readFixture(s, s"$partsDir/b1.parquet").count()
       def startQuery() = s.readStream
         .schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(srcDir.toString)
@@ -788,7 +788,7 @@ object QueriesStreaming {
       val stage = stagedWmDedupFixture(outer, d)
       val streamRes = runStreamWmDedup(s, stage, "st_parity_wmdd")
         .select(col("doc_id"), col("t_ms"), lit(1L).as("one_s"))
-      val batchRes = s.read.parquet(stage)
+      val batchRes = Tables.readFixture(s, stage)
         .groupBy(session_window(col("ts"), "1 hour"), col("doc_id"))
         .agg(min(col("ts")).as("ts0"))
         .select(col("doc_id"), (unix_timestamp(col("ts0")) * 1000).as("t_ms"),
@@ -928,7 +928,7 @@ object QueriesStreaming {
         .select(col("id"), col("ph"))
       val nearDrops = Dedup.hammingBandPairs(survivors, maxHamming = 6)
         .groupBy(col("id_b").as("id")).agg(min(col("id_a")).as("nd_canon"))
-      val allIds = s.read.parquet(stage).select(col("id"))
+      val allIds = Tables.readFixture(s, stage).select(col("id"))
       allIds
         .join(survivors.select(col("id"), lit(1).as("surv")), Seq("id"), "left")
         .join(nearDrops, Seq("id"), "left")
@@ -1020,7 +1020,7 @@ object QueriesStreaming {
         .dropDuplicates("doc_id")
       // >= 2 data batches: cross-batch admission state
       val scored = runToMemory(s, "st_qgate", out, "append", minDataBatches = 2)
-      val stagedN = s.read.parquet(stage).agg(count(lit(1)).as("n_staged"))
+      val stagedN = Tables.readFixture(s, stage).agg(count(lit(1)).as("n_staged"))
       val agg = scored.agg(count(lit(1)).as("n_unique"),
         sum(when(col("pred") >= 0.5, 1L).otherwise(0L)).as("n_admitted"),
         sum(when((col("pred") >= 0.5) === (col("label") >= 0.5), 1L)

@@ -79,12 +79,15 @@ object Tables {
   private val tblSchemaCache = new VersionedMemo[(String, String), StructType]
 
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = tblSchemaCache((dir, name), dataVer(dir, name))(
-      spark.read.parquet(path).schema)
-    val df = spark.read.schema(schema).parquet(path)
+    val df = spark.read.schema(tblSchema(spark, dir, name)).parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
+
+  /** A base table's file schema, before [[normalizeTs]]: what a stream
+    * over a byte copy of the table reads. */
+  private[graft] def tblSchema(spark: SparkSession, dir: String, name: String): StructType =
+    tblSchemaCache((dir, name), dataVer(dir, name))(
+      spark.read.parquet(s"$dir/$name.parquet").schema)
 
   /** sf-conditional oracle-tractability sample (VERDICT r11 #2): the
     * three entries whose DuckDB ORACLE is O(N²) — dd_minhash_lsh,
@@ -186,7 +189,37 @@ object Tables {
       catch { case e: Throwable => deleteRecursively(tmp.toFile); throw e }
       publish(tmp, dst)
     }
+    published.put(fam, name)
     out
+  }
+
+  /** The fixture dir [[fixture]] last returned per family prefix (the
+    * `<family>_<dirslug>_` part of its name) in this JVM. */
+  private val published = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Inferred schemas of paths inside published fixtures, keyed (family
+    * prefix, path inside the fixture dir): the [[tblSchemaCache]]
+    * discipline, with the fixture dir's name as the version, so a
+    * formula bump or a testdata regen replaces the entry. */
+  private val fixtureSchemaCache = new VersionedMemo[(String, String), StructType]
+
+  /** Read parquet at `path`, a published [[fixture]] dir or a file or
+    * dir inside one, inferring its schema only on the first read. A
+    * fixture is immutable once published (a pure function of its
+    * name), so its schema is too; `spark.read.parquet` would otherwise
+    * run one footer job per call to infer it again. Any other path is
+    * refused: a per-run output (a stream sink, a recovery dir) changes
+    * under the same path and must never be memoized. */
+  def readFixture(spark: SparkSession, path: String): DataFrame = {
+    val root = java.nio.file.Paths.get("target/tmp").toAbsolutePath.normalize
+    val rel = root.relativize(java.nio.file.Paths.get(path).toAbsolutePath.normalize)
+    val name = rel.getName(0).toString
+    val fam = name.take(name.lastIndexOf('_') + 1)
+    require(!rel.startsWith("..") && fam.nonEmpty && published.get(fam) == name,
+      s"readFixture: $path is not inside a published Tables.fixture dir")
+    val inside = if (rel.getNameCount > 1) rel.subpath(1, rel.getNameCount).toString else ""
+    val schema = fixtureSchemaCache((fam, inside), name)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Publish a finished `tmp` (file or directory) at `dst` in one atomic

@@ -28,12 +28,14 @@ object Bfs {
     * exact hop count (seeds at 0). Nodes further than `maxHops` are
     * absent — callers left-join and coalesce to their unreached
     * sentinel. `edges` is directed (src, dst); pass both directions
-    * for an undirected traversal. */
+    * for an undirected traversal. Every round joins `edges` again, so a
+    * caller whose edge set is a plan (not a pin or a local relation)
+    * pins it first — once, where it also feeds the caller's own node
+    * census. The seed frame is not pinned: round 1's pin materializes
+    * it with the first relaxation. */
   def hopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val e = graft.Graft.pin(edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")))
-    var dist = graft.Graft.pin(seeds.select(col("node").cast("long").as("node"), lit(0).as("dist"))
-      .distinct())
+    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+    var dist = seeds.select(col("node").cast("long").as("node"), lit(0).as("dist")).distinct()
     for (_ <- 1 to maxHops) {
       val relaxed = e.join(dist, e("src") === dist("node"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))

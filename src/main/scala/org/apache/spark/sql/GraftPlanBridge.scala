@@ -29,10 +29,10 @@ import org.apache.spark.sql.execution.{LocalTableScanExec, SortExec, UnsafeExter
   *    the exact flush Spark's own test harness uses; it has no public
   *    twin. Called OUTSIDE the timed window only.
   *  - [[nativeColumn]]: a Column over a library Catalyst expression
-  *    ([[graft.plans.CentsSum]], [[graft.plans.Cents]]) without going
-  *    through `GraftExtensions`' function registry, so `Tables.dsum`
-  *    works in any session. Column ↔ Expression conversion has no
-  *    public API. */
+  *    ([[graft.plans.CentsSum]], [[graft.plans.Cents]], the JDK calls
+  *    and assembler inputs of `Model.score`) without going through
+  *    `GraftExtensions`' function registry, so `Tables.dsum` works in
+  *    any session. Column ↔ Expression conversion has no public API. */
 object GraftPlanBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

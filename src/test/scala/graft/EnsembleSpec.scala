@@ -54,12 +54,4 @@ class EnsembleSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy
       Ensemble.stack("nope", col("preds"), col("base"))
   }
-
-  test("G2/G3 foldMean: union -> per-id mean") {
-    val f0 = Seq(("a", 0.2), ("b", 0.4)).toDF("id", "pred")
-    val f1 = Seq(("a", 0.4), ("b", 0.8)).toDF("id", "pred")
-    val m = Ensemble.foldMean(Seq(f0, f1), "id", "pred")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    approx(m("a"), 0.3); approx(m("b"), 0.6)
-  }
 }

@@ -110,6 +110,50 @@ class FixtureStoreSpec extends SparkSpec {
     }
   }
 
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftPlanBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.sql.GraftPlanBridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("readFixture infers a fixture's schema once and refuses any other path") {
+    withFamily("read") { family =>
+      val d = dataDir().getPath
+      def load(formula: String) = Tables.fixture(family, d, Seq("src"), formula) { tmp =>
+        Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+      }
+      val p = load("r1")
+      val part = new java.io.File(p).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+      // the dir and a file inside it: one inference each, then none
+      jobsDuring(Tables.readFixture(spark, p)) should be > 0
+      jobsDuring(Tables.readFixture(spark, p)) shouldBe 0
+      jobsDuring(Tables.readFixture(spark, part)) should be > 0
+      jobsDuring(Tables.readFixture(spark, new java.io.File(part).getAbsolutePath)) shouldBe 0
+      Tables.readFixture(spark, p).as[(Int, String)].collect().toSet shouldBe
+        Set((1, "a"), (2, "b"))
+      // a superseded fixture and a file in it, a temp sibling, the
+      // store root, a path outside it and a non-fixture dir under it
+      val p2 = load("r2")
+      p2 should not be p
+      val outside = Files.createTempDirectory("fxout").toString
+      val refused = Seq(p, part, s"$p2.tmp.1_1", "target/tmp", outside,
+        "target/tmp/test-warehouse", s"$p2/../${family}_x")
+      refused.foreach { path =>
+        withClue(path) { an[IllegalArgumentException] should be thrownBy Tables.readFixture(spark, path) }
+      }
+    }
+  }
+
   test("publish of a single file keeps an existing destination's bytes") {
     val dir = Files.createTempDirectory("fxpub")
     def file(name: String, text: String): Path = Files.writeString(dir.resolve(name), text)

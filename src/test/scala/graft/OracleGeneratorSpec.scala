@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * the flip entries label the rows their kernel flipped, the Column draw
   * is the kernel's draw, and no oracle outside the generators restates
   * their arithmetic. The same kind of source guard keeps the media
-  * codecs to one writer and one walker per container format. */
+  * codecs to one writer and one walker per container format, and
+  * fixture reads to the one schema-memoizing reader. */
 class OracleGeneratorSpec extends SparkSpec {
   import OracleGeneratorSpec._
 
@@ -86,6 +87,25 @@ class OracleGeneratorSpec extends SparkSpec {
     } yield s"$rule at ${where.mkString(", ")}"
     repeated shouldBe empty
   }
+
+  test("source guard: fixture and stage parquet is read through Tables.readFixture") {
+    parquetRead.findFirstIn("""s.read.parquet(s"$stage/$first.parquet").schema""") should not be empty
+    parquetRead.findFirstIn("s.read\n        .parquet(stage)") should not be empty
+    val reads = for {
+      (f, text) <- mainSources if f.getName != "Tables.scala"
+      m <- parquetRead.findAllMatchIn(text)
+    } yield (f, text, m.start)
+    def allowed(f: java.io.File, text: String, at: Int) = perRunReads.exists {
+      case ((file, call), _) => f.getName == file && text.startsWith(call, at)
+    }
+    val hits = for ((f, text, at) <- reads if !allowed(f, text, at))
+      yield s"${f.getPath}:${text.take(at).count(_ == '\n') + 1}"
+    hits shouldBe empty
+    // every allow-list entry still names a live read
+    perRunReads.keySet.filterNot { case (file, call) =>
+      reads.exists { case (f, text, at) => f.getName == file && text.startsWith(call, at) }
+    } shouldBe empty
+  }
 }
 
 object OracleGeneratorSpec {
@@ -97,6 +117,18 @@ object OracleGeneratorSpec {
     walk(new java.io.File("src/main/scala"))
       .map(f => f -> java.nio.file.Files.readString(f.toPath))
   }
+
+  /** A parquet read that infers its schema from the files' footers:
+    * one Spark job per call. Outside `Tables` (whose `tbl` and
+    * `readFixture` memoize the schema), `src/main` may spell it only on
+    * a per-run output, listed in [[perRunReads]]. */
+  val parquetRead: scala.util.matching.Regex = """\bread\s*\.\s*parquet\(""".r
+
+  /** The per-run outputs `src/main` reads with a plain parquet read, by
+    * (file, call text from `read`), each with its reason. */
+  val perRunReads: Map[(String, String), String] = Map(
+    ("QueriesStreaming.scala", "read.parquet(outDir.toString)") ->
+      "st_stream_recovery reads back its own stream sink, written afresh in every run")
 
   /** Spellings `src/main` may hold at most once, by rule name, each
     * with a planted line it must match: the media containers' writers,
